@@ -1,50 +1,50 @@
-"""The Spark dataflow: image rows → tile assignment → tile assembly →
-halo exchange → vectorized shading → PNG tile sink.
+"""The Spark dataflow: image rows → tile assignment → one exchange keyed
+by destination tile → assembly + halo padding + vectorized shading →
+PNG tile sink.
 
 This is the idiomatic-Spark re-expression of Demeton's ``shade``
-lifecycle (/root/reference/Demeton/Commands/ShadeCommand.fs:555-614),
-with the reference's sequential per-tile fold replaced by one task per
-tile and its implicit 1-px over-fetch replaced by an explicit halo
-exchange (SURVEY.md §2.3 J3):
-
-Production path (ONE full-data shuffle — see SCALE.md):
+lifecycle (Demeton/Commands/ShadeCommand.fs:555-614), with the
+reference's sequential per-tile fold replaced by one task per tile and
+its implicit 1-px over-fetch replaced by explicit halo strips keyed by
+the tile that needs them (SURVEY.md §2.3 J3).  There is one tile path,
+with ONE full-data shuffle (see SCALE.md):
 
   1. ``parse_caption``      — pure Column expressions recover the
                               block's tile + block coords from the
                               caption (equi-join key construction, J1).
-  2. ``emit_block_strips``  — narrow map over the Catalyst-filtered
-                              border blocks cuts the k-px halo slabs
-                              each neighbor needs (k = 1 + prefilter
-                              steps).
-  3. ``hillshade_parts``    — union of raw (still-compressed) blocks
-                              and strips, keyed by DESTINATION tile.
-  4. ``shade_unified``      — one groupBy(tile).applyInPandas task per
-                              tile: stitch (J2, deterministic overwrite
-                              order §4.3), pad to (ts+2k)² with
-                              DEM_HEIGHT_NONE at world edges
-                              (extract-fill, Dem/Funcs.fs:395-416),
-                              optional blur/sharpen prefilters, Horn
-                              p/q, shading-script evaluation,
+  2. ``hillshade_parts``    — the only parts emitter: raw (still-
+                              compressed) blocks plus the k-px halo
+                              strips ``emit_block_strips`` cuts from
+                              border blocks (k = 1 + prefilter steps),
+                              all keyed by DESTINATION tile.
+  3. ``compose_padded``     — the only stitch: winner-only decode in
+                              deterministic overwrite order (J2, §4.3)
+                              plus strip placement into the (ts+2k)²
+                              array, DEM_HEIGHT_NONE at world edges
+                              (extract-fill, Dem/Funcs.fs:395-416).
+  4. ``render_tile``        — the only maker of output rows: optional
+                              blur/sharpen prefilters, Horn p/q,
+                              shading-script evaluation,
                               point-in-polygon clip, Y-flip, RGBA PNG
                               encode (Hillshading.fs:81-157 vectorized).
-  5. ``run_hillshade``      — end-to-end with optional resumable
-                              checkpointing (anti-join against a
-                              per-tile manifest — Srtm/Fetch.fs
+  5. ``run_hillshade``      — end-to-end: one groupBy(tile) task runs
+                              3 + 4 per tile (``shade_unified``), with
+                              resumable checkpointing (anti-join against
+                              a per-tile manifest — Srtm/Fetch.fs
                               negative-cache semantics), bbox pruning
                               for clip polygons, 1-tile-per-task
                               shuffle granularity, and pixel-count
                               metrics.
 
-The two-stage topology (``assemble_parts``/``assemble_parts_salted`` →
-``shade_parts``) remains for pathological per-tile skew, where salted
-partial mosaics need their own exchange; ``assemble_tiles``/
-``exchange_halo``/``shade_tiles`` are the unfused building blocks used
-by the pyramid/water/streaming paths and tests.
+XTH tile-shade (``run_tile_shade``), plain mosaics (``assemble_tiles``,
+k = 0) and the streaming twin (``streaming.streaming_hillshade``) reuse
+the same emitter, compose and render.
 
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
-Skewed (land-heavy) tiles are handled by AQE skew splitting, the
-1-tile-per-task granularity, and the salted path for extremes.
+Skewed (land-heavy) tiles are handled by winner-only decode, the
+optional pre-shuffle ``local_dedup``, the 1-tile-per-task granularity
+and AQE skew splitting.
 """
 
 from __future__ import annotations
@@ -54,7 +54,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec, kernels, pipeline
@@ -108,12 +109,50 @@ def parse_caption(images: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2. tile assembly (J2 mosaic)
+# 2. the parts stream: blocks + halo strips keyed by destination tile (J3)
 # ---------------------------------------------------------------------------
 
-ASSEMBLED_SCHEMA = (
-    "tile_x int, tile_y int, heights binary, n_blocks int, missing_px long"
+PART_SCHEMA = (
+    "tile_x int, tile_y int, part string, bx int, by int, image_id string, "
+    "w int, h int, fmt string, data binary"
 )
+_PART_COLUMNS = tuple(f.split()[0] for f in PART_SCHEMA.split(", "))
+
+#: the 8 halo strips: destination-tile offset (dx, dy) from the sender,
+#: keyed by where the cells land in the receiver's padded array (a
+#: tile's north edge is its north neighbor's south pad).  Any other
+#: part ("B") is the receiver's own block, at offset (0, 0).
+_HALO_PARTS = {
+    "S": (0, 1), "N": (0, -1), "W": (1, 0), "E": (-1, 0),
+    "SW": (1, 1), "SE": (-1, 1), "NW": (1, -1), "NE": (-1, -1),
+}
+
+
+def _on_edge(d: int, i: int, n: int) -> bool:
+    """Along one axis: does block ``i`` of ``n`` face the neighbor at
+    offset ``d``?"""
+    return i == n - 1 if d == 1 else i == 0 if d == -1 else True
+
+
+def _cut(d: int, size: int, k: int) -> slice:
+    """Along one axis: the k-px slab of a block sent to the neighbor at
+    offset ``d`` (the whole axis for d = 0)."""
+    if d == 1:
+        return slice(size - k, size)
+    if d == -1:
+        return slice(0, k)
+    return slice(0, size)
+
+
+def _place(d: int, i: int, size: int, ts: int, k: int) -> slice:
+    """Along one axis: where cells from offset ``d`` land in the
+    receiver's (ts+2k) padded axis — its low pad, its high pad, or
+    block ``i``'s span of the interior."""
+    if d == 1:
+        return slice(0, k)
+    if d == -1:
+        return slice(ts + k, ts + 2 * k)
+    return slice(k + i * size, k + (i + 1) * size)
 
 
 def _decode_block(fmt: str, payload: bytes, block_size: int) -> np.ndarray:
@@ -121,431 +160,47 @@ def _decode_block(fmt: str, payload: bytes, block_size: int) -> np.ndarray:
         return codec.decode_heights_png(bytes(payload))
     if fmt == "hgt":
         return codec.decode_hgt(bytes(payload), block_size)
+    if fmt == "raw":  # int16 LE cells, row-major, block_size wide
+        return np.frombuffer(payload, dtype="<i2").reshape(-1, block_size)
     raise ValueError(f"unknown block format {fmt!r}")
 
 
-def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
-    """Stitch image blocks into one int16 raster per tile.
-
-    Later blocks overwrite earlier ones in deterministic ``(by, bx,
-    image_id)`` order — Spark group order is nondeterministic, the sort
-    re-establishes the reference's merge semantics (Dem/Funcs.fs:357-388,
-    §4.3 "merge overwrite order").
-    """
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        pdf = pdf.sort_values(["by", "bx", "image_id"])
-        for fmt, payload, w, h, bx, by in zip(
-            pdf["fmt"], pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"]
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = int(by) * int(h), int(bx) * int(w)
-            tile[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        missing = int(np.count_nonzero(tile == DEM_HEIGHT_NONE))
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "heights": [tile.tobytes()],
-                "n_blocks": [len(pdf)],
-                "missing_px": [missing],
-            }
-        )
-
-    return assigned.groupBy("tile_x", "tile_y").applyInPandas(
-        stitch, schema=ASSEMBLED_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. halo exchange (J3 — the explicit stencil join)
-# ---------------------------------------------------------------------------
-
-HALO_PART_SCHEMA = "tile_x int, tile_y int, part string, data binary"
-PADDED_SCHEMA = "tile_x int, tile_y int, padded binary"
-
-#: strip emitted from a tile → (dest offset, part name at destination,
-#: k-slab slice of the sender's TILE).  Part names say where the data
-#: lands in the receiver's padded array; k = halo width.
-_STRIP_SPEC = [
-    ((0, 1), "S", lambda t, k: t[-k:, :]),   # my north edge = N nbr's south pad
-    ((0, -1), "N", lambda t, k: t[:k, :]),   # my south edge = S nbr's north pad
-    ((1, 0), "W", lambda t, k: t[:, -k:]),   # my east edge = E nbr's west pad
-    ((-1, 0), "E", lambda t, k: t[:, :k]),   # my west edge = W nbr's east pad
-    ((1, 1), "SW", lambda t, k: t[-k:, -k:]),
-    ((-1, 1), "SE", lambda t, k: t[-k:, :k]),
-    ((1, -1), "NW", lambda t, k: t[:k, -k:]),
-    ((-1, -1), "NE", lambda t, k: t[:k, :k]),
-]
-
-
-def exchange_halo(tiles: DataFrame, tile_size: int) -> DataFrame:
-    """Pad every tile to (ts+2)² using its 8 neighbors' edge strips.
-
-    One narrow map emits the strips (~4·ts cells per tile, ≈0.1% of the
-    tile), one shuffle groups strips with their destination tile.
-    Missing neighbors (world edge) pad with DEM_HEIGHT_NONE, matching
-    ``extract``'s out-of-bounds fill (Dem/Funcs.fs:395-416).
-    """
-
-    def emit_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one traversal emits the center AND its 8 strips — a union of two
-        # branches over the same upstream would recompute tile assembly
-        # twice (Spark does not CSE across union arms)
-        for pdf in batches:
-            out: dict[str, list] = {"tile_x": [], "tile_y": [], "part": [], "data": []}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["part"].append("C")
-                out["data"].append(buf)
-                tile = np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-                for (dx, dy), part, cut in _STRIP_SPEC:
-                    out["tile_x"].append(int(tx) + dx)
-                    out["tile_y"].append(int(ty) + dy)
-                    out["part"].append(part)
-                    out["data"].append(
-                        np.ascontiguousarray(cut(tile, 1)).tobytes()
-                    )
-            yield pd.DataFrame(out)
-
-    parts_df = tiles.mapInPandas(emit_parts, schema=HALO_PART_SCHEMA)
-
-    def pad(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = dict(zip(pdf["part"], pdf["data"]))
-        if "C" not in parts:  # strips sent into empty space (no such tile)
-            return pd.DataFrame(columns=["tile_x", "tile_y", "padded"])
-        ts = tile_size
-        padded = np.full((ts + 2, ts + 2), DEM_HEIGHT_NONE, dtype=np.int16)
-        padded[1:-1, 1:-1] = np.frombuffer(parts["C"], dtype="<i2").reshape(ts, ts)
-
-        def strip(name: str, shape: tuple[int, int]) -> np.ndarray | None:
-            if name not in parts:
-                return None
-            return np.frombuffer(parts[name], dtype="<i2").reshape(shape)
-
-        s = strip("S", (1, ts))
-        if s is not None:
-            padded[0, 1:-1] = s[0]
-        n = strip("N", (1, ts))
-        if n is not None:
-            padded[-1, 1:-1] = n[0]
-        w = strip("W", (ts, 1))
-        if w is not None:
-            padded[1:-1, 0] = w[:, 0]
-        e = strip("E", (ts, 1))
-        if e is not None:
-            padded[1:-1, -1] = e[:, 0]
-        for corner, (yy, xx) in [
-            ("SW", (0, 0)),
-            ("SE", (0, ts + 1)),
-            ("NW", (ts + 1, 0)),
-            ("NE", (ts + 1, ts + 1)),
-        ]:
-            c = strip(corner, (1, 1))
-            if c is not None:
-                padded[yy, xx] = c[0, 0]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf["tile_x"].iloc[0])],
-                "tile_y": [int(pdf["tile_y"].iloc[0])],
-                "padded": [padded.tobytes()],
-            }
-        )
-
-    return parts_df.groupBy("tile_x", "tile_y").applyInPandas(
-        pad, schema=PADDED_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# fused two-shuffle pipeline (the production path)
-# ---------------------------------------------------------------------------
-
-HALO_PART_LINEAGE_SCHEMA = HALO_PART_SCHEMA + ", n_blocks int"
-
-
-def _emit_center_and_strips(
-    tile: np.ndarray, tile_x: int, tile_y: int, n_blocks: int,
-    halo: int = 1,
-) -> pd.DataFrame:
-    out: dict[str, list] = {"tile_x": [tile_x], "tile_y": [tile_y],
-                            "part": ["C"], "data": [tile.tobytes()],
-                            "n_blocks": [n_blocks]}
-    for (dx, dy), part, cut in _STRIP_SPEC:
-        out["tile_x"].append(tile_x + dx)
-        out["tile_y"].append(tile_y + dy)
-        out["part"].append(part)
-        out["data"].append(np.ascontiguousarray(cut(tile, halo)).tobytes())
-        out["n_blocks"].append(0)
+def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
+    """Image rows → the k-px strip rows (PART_SCHEMA, fmt='raw') their
+    border blocks donate to neighbor tiles.  Strip rows keep the
+    sender's ``(by, bx, image_id)`` so the receiver can replay the
+    deterministic overwrite order (§4.3)."""
+    out: dict[str, list] = {c: [] for c in _PART_COLUMNS}
+    for tx, ty, iid, fmt, payload, w, h, bx, by in zip(
+        pdf["tile_x"], pdf["tile_y"], pdf["image_id"], pdf["fmt"],
+        pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"],
+    ):
+        w, h, bx, by = int(w), int(h), int(bx), int(by)
+        if halo > min(w, h):
+            raise ValueError(f"halo {halo} exceeds block size {w}x{h}")
+        nx, ny = tile_size // w, tile_size // h
+        block = None
+        for part, (dx, dy) in _HALO_PARTS.items():
+            if not (_on_edge(dx, bx, nx) and _on_edge(dy, by, ny)):
+                continue
+            if block is None:
+                block = _decode_block(fmt, payload, w)
+            strip = block[_cut(dy, h, halo), _cut(dx, w, halo)]
+            row = (int(tx) + dx, int(ty) + dy, part, bx, by, iid, w, h,
+                   "raw", strip.tobytes())
+            for col, v in zip(_PART_COLUMNS, row):
+                out[col].append(v)
     return pd.DataFrame(out)
-
-
-def assemble_parts(assigned: DataFrame, tile_size: int) -> DataFrame:
-    """Fused stage A: blocks → stitched tile, emitted as its center row
-    plus the 8 edge strips keyed by the neighbors that need them.
-
-    One shuffle (blocks → tile) and one Python pass replace the separate
-    assemble + strip-emission stages: tile-sized blobs cross the Arrow
-    boundary once instead of twice.  The center row carries ``n_blocks``
-    (input-row lineage surfaced into the shaded output).
-    """
-
-    def stitch_and_split(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        pdf = pdf.sort_values(["by", "bx", "image_id"])
-        for fmt, payload, w, h, bx, by in zip(
-            pdf["fmt"], pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"]
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = int(by) * int(h), int(bx) * int(w)
-            tile[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        return _emit_center_and_strips(tile, tile_x, tile_y, len(pdf))
-
-    return assigned.groupBy("tile_x", "tile_y").applyInPandas(
-        stitch_and_split, schema=HALO_PART_LINEAGE_SCHEMA
-    )
-
-
-def assemble_parts_salted(
-    assigned: DataFrame, tile_size: int, salt_buckets: int,
-    halo: int = 1,
-) -> DataFrame:
-    """Salted two-phase assembly for skewed tiles (SURVEY.md §7.4 risk 3;
-    the north-rule "salted repartitioning handles land/ocean tile skew").
-
-    Heavy tiles (duplicate-dense "land" tiles — the synthetic skew knob
-    makes some tiles 8× denser) turn the single groupBy(tile) task into a
-    straggler.  Salting by BLOCK POSITION splits one hot tile across
-    ``salt_buckets`` tasks:
-
-      stage 1: groupBy(tile, salt) with salt = (by·bpts + bx) % buckets —
-               all duplicates of one block position share a salt, so the
-               deterministic (by, bx, image_id) overwrite order is
-               preserved within the only group that writes that position;
-      stage 2: groupBy(tile) merges the partial mosaics — positions are
-               disjoint across salts by construction, so the merge is
-               order-free row copying, and the partial payload per task
-               is ~1/buckets of the tile.
-
-    Identical output to :func:`assemble_parts` (tested), at the cost of
-    one extra narrow shuffle of tile-sized partials — worth it only for
-    genuinely skewed inputs; AQE skew-split handles mild skew upstream.
-    """
-    bpts = None  # inferred per group from block size
-
-    salted = assigned.withColumn(
-        "salt",
-        F.pmod(
-            F.col("by") * F.lit(10_000) + F.col("bx"), F.lit(salt_buckets)
-        ).cast("int"),
-    )
-
-    partial_schema = (
-        "tile_x int, tile_y int, salt int, partial binary, n_blocks int"
-    )
-
-    def partial_stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        pdf = pdf.sort_values(["by", "bx", "image_id"])
-        for fmt, payload, w, h, bx, by in zip(
-            pdf["fmt"], pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"]
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = int(by) * int(h), int(bx) * int(w)
-            tile[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf["tile_x"].iloc[0])],
-                "tile_y": [int(pdf["tile_y"].iloc[0])],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "partial": [tile.tobytes()],
-                "n_blocks": [len(pdf)],
-            }
-        )
-
-    partials = salted.groupBy("tile_x", "tile_y", "salt").applyInPandas(
-        partial_stitch, schema=partial_schema
-    )
-
-    def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        n_blocks = 0
-        for buf, nb in zip(pdf["partial"], pdf["n_blocks"]):
-            part = np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-            # positions are disjoint across salts: copy where the partial
-            # wrote anything — a position covered with an all-NONE block
-            # is indistinguishable from uncovered, which is safe because
-            # the base canvas is also NONE (identical result either way)
-            written = part != DEM_HEIGHT_NONE
-            tile[written] = part[written]
-            n_blocks += int(nb)
-        return _emit_center_and_strips(
-            tile, int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
-            n_blocks, halo,
-        )
-
-    return partials.groupBy("tile_x", "tile_y").applyInPandas(
-        merge_partials, schema=HALO_PART_LINEAGE_SCHEMA
-    )
-
-
-def shade_parts(
-    parts: DataFrame, tile_size: int, script: str,
-    clip_poly: np.ndarray | None = None,
-    halo: int = 1,
-    prefilter: str | None = None,
-    png_level: int | None = None,
-) -> DataFrame:
-    """Fused stage B: halo-pad + optional prefilters + Horn + shaders +
-    PNG encode in one applyInPandas (one shuffle keyed by destination
-    tile).  ``halo`` must be 1 + number of prefilter steps."""
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
-    # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
-    pre_steps = pipeline.parse_script(prefilter) if prefilter else []
-    if halo != 1 + len(pre_steps):
-        raise ValueError(
-            f"halo {halo} must be 1 + number of prefilter steps "
-            f"({len(pre_steps)})"
-        )
-
-    def pad_and_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts_map = dict(zip(pdf["part"], pdf["data"]))
-        if "C" not in parts_map:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "tile_name", "width", "height",
-                         "png", "shaded_px", "total_px", "n_blocks"]
-            )
-        ts = tile_size
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        # lineage: input-row count travels on the center part row
-        n_blocks = (
-            int(pdf.loc[pdf["part"] == "C", "n_blocks"].iloc[0])
-            if "n_blocks" in pdf.columns
-            else 0
-        )
-        padded = _pad_from_parts(parts_map, ts, halo=halo)
-        if pre_steps:
-            padded = apply_prefilters(padded, pre_steps)
-        rgba, shaded = shade_padded_block(
-            padded, tile_x, tile_y, ts, steps, clip_poly=clip_poly,
-            registry=registry,
-        )
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "tile_name": [_tile_name(0, tile_x, tile_y)],
-                "width": [ts],
-                "height": [ts],
-                "png": [codec.encode_rgba_png(rgba, lvl)],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [n_blocks],
-            }
-        )
-
-    return parts.groupBy("tile_x", "tile_y").applyInPandas(
-        pad_and_shade, schema=SHADED_SCHEMA
-    )
-
-
-def _pad_from_parts(
-    parts_map: dict, ts: int, fill: int = DEM_HEIGHT_NONE, halo: int = 1
-) -> np.ndarray:
-    """Assemble the (ts+2k)² halo-padded block from center + k-slab
-    strip parts.
-
-    ``fill`` is the missing-neighbor value: DEM_HEIGHT_NONE for plain
-    height tiles, 0 for XTH-packed tiles (offset 0 decodes to missing
-    and carries no water bit)."""
-    k = halo
-    padded = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.int16)
-    padded[k:-k, k:-k] = np.frombuffer(
-        parts_map["C"], dtype="<i2"
-    ).reshape(ts, ts)
-    mid = slice(k, ts + k)
-    hi = slice(ts + k, ts + 2 * k)
-    lo = slice(0, k)
-    edges = [
-        ("S", (k, ts), (lo, mid)),
-        ("N", (k, ts), (hi, mid)),
-        ("W", (ts, k), (mid, lo)),
-        ("E", (ts, k), (mid, hi)),
-        ("SW", (k, k), (lo, lo)),
-        ("SE", (k, k), (lo, hi)),
-        ("NW", (k, k), (hi, lo)),
-        ("NE", (k, k), (hi, hi)),
-    ]
-    for name, shape, (ys, xs) in edges:
-        if name in parts_map:
-            padded[ys, xs] = np.frombuffer(
-                parts_map[name], dtype="<i2"
-            ).reshape(shape)
-    return padded
-
-
-# ---------------------------------------------------------------------------
-# single-shuffle fused pipeline (the production path)
-# ---------------------------------------------------------------------------
-#
-# assemble_parts → shade_parts moves every assembled tile (uncompressed
-# int16, ~26 MB at 3600²) through a second exchange + two extra Arrow
-# crossings.  The fused topology below cuts the halo strips from the
-# EDGE BLOCKS before any shuffle (narrow map over ~the border fraction
-# of input rows), unions them with the raw block stream, and lets ONE
-# groupBy(destination tile) bring together everything a tile needs:
-# its own blocks (still source-compressed) plus its neighbors' 1-px
-# edge contributions.  Assembly, halo padding, shading and PNG encode
-# then run in a single task — one full-data shuffle end-to-end, and
-# the bytes that cross it stay compressed.
-
-UNIFIED_PART_SCHEMA = (
-    "tile_x int, tile_y int, part string, bx int, by int, image_id string, "
-    "w int, h int, fmt string, data binary"
-)
-
-#: (edge predicate, dest offset, part name, cut of the decoded block
-#: given halo width k) — block-level version of _STRIP_SPEC: a block on
-#: its tile's border contributes the k-px slab the neighbor needs for
-#: halo padding (k=1 for plain Horn; k=2 when a prefilter consumes a
-#: ring first — Roadmap.md low/high-pass filters).
-_BLOCK_STRIP_SPEC = [
-    (lambda bx, by, nx, ny: by == ny - 1, (0, 1), "S",
-     lambda b, k: b[-k:, :]),
-    (lambda bx, by, nx, ny: by == 0, (0, -1), "N", lambda b, k: b[:k, :]),
-    (lambda bx, by, nx, ny: bx == nx - 1, (1, 0), "W",
-     lambda b, k: b[:, -k:]),
-    (lambda bx, by, nx, ny: bx == 0, (-1, 0), "E", lambda b, k: b[:, :k]),
-    (lambda bx, by, nx, ny: bx == nx - 1 and by == ny - 1, (1, 1), "SW",
-     lambda b, k: b[-k:, -k:]),
-    (lambda bx, by, nx, ny: bx == 0 and by == ny - 1, (-1, 1), "SE",
-     lambda b, k: b[-k:, :k]),
-    (lambda bx, by, nx, ny: bx == nx - 1 and by == 0, (1, -1), "NW",
-     lambda b, k: b[:k, -k:]),
-    (lambda bx, by, nx, ny: bx == 0 and by == 0, (-1, -1), "NE",
-     lambda b, k: b[:k, :k]),
-]
 
 
 def emit_block_strips(
     assigned: DataFrame, tile_size: int, halo: int = 1
 ) -> DataFrame:
-    """Narrow stage: border blocks → 1-px strip rows keyed by the
-    neighbor tile that needs them (fmt='raw', int16 LE cells).
+    """Narrow stage: border blocks → k-px strip rows keyed by the
+    neighbor tile that needs them (:func:`block_strips`).
 
     The Catalyst filter keeps interior blocks out of the Python worker
     entirely; only the border fraction of the input is decoded twice.
-    Strip rows keep the sender's ``(by, bx, image_id)`` so the receiver
-    can replay the deterministic overwrite order (§4.3).
     """
     edge = assigned.where(
         (F.col("bx") == 0)
@@ -555,41 +210,10 @@ def emit_block_strips(
     )
 
     def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("tile_x", "tile_y", "part", "bx", "by", "image_id",
-                "w", "h", "fmt", "data")
         for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for tx, ty, iid, fmt, payload, w, h, bx, by in zip(
-                pdf["tile_x"], pdf["tile_y"], pdf["image_id"], pdf["fmt"],
-                pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"],
-            ):
-                w, h, bx, by = int(w), int(h), int(bx), int(by)
-                if halo > min(w, h):
-                    raise ValueError(
-                        f"halo {halo} exceeds block size {w}x{h}"
-                    )
-                nx, ny = tile_size // w, tile_size // h
-                block = None
-                for on_edge, (dx, dy), part, strip_cut in _BLOCK_STRIP_SPEC:
-                    if not on_edge(bx, by, nx, ny):
-                        continue
-                    if block is None:
-                        block = _decode_block(fmt, payload, w)
-                    out["tile_x"].append(int(tx) + dx)
-                    out["tile_y"].append(int(ty) + dy)
-                    out["part"].append(part)
-                    out["bx"].append(bx)
-                    out["by"].append(by)
-                    out["image_id"].append(iid)
-                    out["w"].append(w)
-                    out["h"].append(h)
-                    out["fmt"].append("raw")
-                    out["data"].append(
-                        np.ascontiguousarray(strip_cut(block, halo)).tobytes()
-                    )
-            yield pd.DataFrame(out)
+            yield block_strips(pdf, tile_size, halo)
 
-    return edge.mapInPandas(cut, schema=UNIFIED_PART_SCHEMA)
+    return edge.mapInPandas(cut, schema=PART_SCHEMA)
 
 
 def dedup_duplicate_blocks(assigned: DataFrame) -> DataFrame:
@@ -620,170 +244,106 @@ def dedup_duplicate_blocks(assigned: DataFrame) -> DataFrame:
     return assigned.mapInPandas(dedup, schema=schema)
 
 
+def _block_parts(assigned: DataFrame) -> DataFrame:
+    """Every image row as a "B" part of its own tile (PART_SCHEMA)."""
+    return assigned.select(
+        "tile_x", "tile_y", F.lit("B").alias("part"), "bx", "by",
+        "image_id", "w", "h", "fmt", F.col("bytes").alias("data"),
+    )
+
+
 def hillshade_parts(
     assigned: DataFrame, tile_size: int, halo: int = 1
 ) -> DataFrame:
     """Blocks + their neighbors' strip contributions, keyed by the
-    destination tile — the single-shuffle input of :func:`shade_unified`."""
-    blocks = assigned.select(
-        "tile_x", "tile_y", F.lit("B").alias("part"), "bx", "by",
-        "image_id", "w", "h", "fmt", F.col("bytes").alias("data"),
-    )
-    return blocks.unionByName(emit_block_strips(assigned, tile_size, halo))
-
-
-#: placement of a received strip slab into the (ts+2k)² padded array
-def _place_strip(padded: np.ndarray, part: str, cells: np.ndarray,
-                 bx: int, by: int, w: int, h: int, ts: int,
-                 k: int = 1) -> None:
-    x0, y0 = k + bx * w, k + by * h
-    if part == "S":
-        padded[0:k, x0 : x0 + w] = cells.reshape(k, w)
-    elif part == "N":
-        padded[ts + k : ts + 2 * k, x0 : x0 + w] = cells.reshape(k, w)
-    elif part == "W":
-        padded[y0 : y0 + h, 0:k] = cells.reshape(h, k)
-    elif part == "E":
-        padded[y0 : y0 + h, ts + k : ts + 2 * k] = cells.reshape(h, k)
-    elif part == "SW":
-        padded[0:k, 0:k] = cells.reshape(k, k)
-    elif part == "SE":
-        padded[0:k, ts + k : ts + 2 * k] = cells.reshape(k, k)
-    elif part == "NW":
-        padded[ts + k : ts + 2 * k, 0:k] = cells.reshape(k, k)
-    elif part == "NE":
-        padded[ts + k : ts + 2 * k, ts + k : ts + 2 * k] = cells.reshape(k, k)
-
-
-def apply_prefilters(padded: np.ndarray, steps) -> np.ndarray:
-    """Run prefilter steps (kernels.PREFILTERS) over an int16 padded
-    block; each consumes one halo ring.  Output rounds back to int16
-    (heights stay 1 m-quantized end-to-end, the storage discipline of
-    §1.2), missing stays missing."""
-    f = kernels.heights_to_float(padded, dtype=np.float32)
-    for st in steps:
-        fn = kernels.PREFILTERS[st.name]
-        params = {k: float(v) for k, v in st.params.items()}
-        f = fn(f, **params)
-    return kernels.float_to_heights(f)
-
-
-def shade_unified(
-    parts: DataFrame, tile_size: int, script: str,
-    fill: int = DEM_HEIGHT_NONE,
-    clip_poly: np.ndarray | None = None,
-    halo: int = 1,
-    prefilter: str | None = None,
-    png_level: int | None = None,
-) -> DataFrame:
-    """One grouped task per tile: stitch blocks, apply neighbor strips
-    into the k-px halo, optional height prefilters, Horn + shaders, PNG
-    encode.  ``parts`` comes from :func:`hillshade_parts` (same halo);
-    groups with no center blocks (strips sent past the world edge)
-    produce nothing.  ``prefilter`` is a step script over
-    kernels.PREFILTERS (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``);
-    each step consumes one halo ring, so halo must be 1 + n_steps."""
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
-    # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
-    pre_steps = pipeline.parse_script(prefilter) if prefilter else []
-    if halo != 1 + len(pre_steps):
-        raise ValueError(
-            f"halo {halo} must be 1 + number of prefilter steps "
-            f"({len(pre_steps)})"
-        )
-
-    def assemble_pad_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _eos
-        import time as _etime
-
-        # in-UDF phase profiling (set DEMETON_PROF_DIR to a directory):
-        # splits worker time into assemble/shade/encode so harness
-        # overhead (Arrow, scheduling) is measurable as task_time minus
-        # the sum of these — the attribution tool behind SCALE.md's
-        # core-scaling analysis.  Off (falsy) on every normal run.
-        prof = _eos.environ.get("DEMETON_PROF_DIR")
-        t0 = _etime.perf_counter() if prof else 0.0
-        is_block = pdf["part"] == "B"
-        blocks = pdf[is_block]
-        if blocks.empty:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "tile_name", "width", "height",
-                         "png", "shaded_px", "total_px", "n_blocks"]
-            )
-        ts, k = tile_size, halo
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        padded = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.int16)
-        n_blocks_in = int(is_block.sum())  # lineage: rows consumed
-        # overwrite-order dedup: in (by, bx, image_id) order only the
-        # LAST block per position is ever visible, so decode just the
-        # winners — duplicate-heavy ("land") tiles cost one decode per
-        # position no matter how many copies arrived (the skew defense
-        # that makes salting unnecessary short of cluster-scale
-        # hotspots; output byte-identical, tested)
-        blocks = blocks.sort_values(["by", "bx", "image_id"]).drop_duplicates(
-            ["bx", "by"], keep="last"
-        )
-        for fmt, payload, w, h, bx, by in zip(
-            blocks["fmt"], blocks["data"], blocks["w"], blocks["h"],
-            blocks["bx"], blocks["by"],
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = k + int(by) * int(h), k + int(bx) * int(w)
-            padded[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        strips = pdf[~is_block]
-        if not strips.empty:
-            # same overwrite-order winner selection per strip position:
-            # duplicate edge blocks resolve identically on both sides
-            # of the tile boundary
-            strips = strips.sort_values(
-                ["by", "bx", "image_id"]
-            ).drop_duplicates(["part", "bx", "by"], keep="last")
-            for part, payload, w, h, bx, by in zip(
-                strips["part"], strips["data"], strips["w"], strips["h"],
-                strips["bx"], strips["by"],
-            ):
-                cells = np.frombuffer(payload, dtype="<i2")
-                _place_strip(padded, part, cells, int(bx), int(by),
-                             int(w), int(h), ts, k)
-        if pre_steps:
-            padded = apply_prefilters(padded, pre_steps)
-        t1 = _etime.perf_counter() if prof else 0.0
-        rgba, shaded = shade_padded_block(
-            padded, tile_x, tile_y, ts, steps, clip_poly=clip_poly,
-            registry=registry,
-        )
-        t2 = _etime.perf_counter() if prof else 0.0
-        png = codec.encode_rgba_png(rgba, lvl)
-        if prof:
-            t3 = _etime.perf_counter()
-            with open(
-                f"{prof}/udf_{_eos.getpid()}.txt", "a"
-            ) as fh:  # per-worker file: no cross-process lock needed
-                fh.write(f"{t1 - t0:.4f} {t2 - t1:.4f} {t3 - t2:.4f}\n")
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "tile_name": [_tile_name(0, tile_x, tile_y)],
-                "width": [ts],
-                "height": [ts],
-                "png": [png],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [n_blocks_in],
-            }
-        )
-
-    return parts.groupBy("tile_x", "tile_y").applyInPandas(
-        assemble_pad_shade, schema=SHADED_SCHEMA
+    destination tile — the single-shuffle input of :func:`shade_unified`
+    and of every other tile path."""
+    return _block_parts(assigned).unionByName(
+        emit_block_strips(assigned, tile_size, halo)
     )
 
 
 # ---------------------------------------------------------------------------
-# 4. shading (W1-W3 + §2.8 shaders, vectorized per tile)
+# 3. compose: the one stitch + strip placement (J2 mosaic)
+# ---------------------------------------------------------------------------
+
+def compose_padded(
+    parts: pd.DataFrame, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
+) -> tuple[np.ndarray | None, int]:
+    """One tile's parts (PART_SCHEMA rows) → ``(padded, n_blocks)``: the
+    (ts+2k)² int16 array with its blocks stitched into the interior and
+    its neighbors' strips in the k-px halo.
+
+    Parts overwrite in deterministic ``(by, bx, image_id)`` order —
+    Spark group order is nondeterministic, the sort re-establishes the
+    reference's merge semantics (Dem/Funcs.fs:357-388, §4.3).  In that
+    order only the LAST part per position is ever visible, so only the
+    winners are decoded: duplicate-heavy ("land") tiles cost one decode
+    per position however many copies arrived, and duplicate edge blocks
+    resolve identically on both sides of a tile boundary.  ``n_blocks``
+    counts every block row received (input lineage); a group with none
+    (strips sent past the world edge) gives ``(None, 0)``.  ``fill`` is
+    the missing-neighbor value: DEM_HEIGHT_NONE for heights, 0 for
+    XTH-packed tiles (offset 0 decodes to missing, with no water bit).
+    """
+    n_blocks = int((parts["part"] == "B").sum())
+    if n_blocks == 0:
+        return None, 0
+    padded = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.int16)
+    winners = parts.sort_values(["by", "bx", "image_id"]).drop_duplicates(
+        ["part", "bx", "by"], keep="last"
+    )
+    for part, fmt, payload, w, h, bx, by in zip(
+        winners["part"], winners["fmt"], winners["data"], winners["w"],
+        winners["h"], winners["bx"], winners["by"],
+    ):
+        w, h, bx, by = int(w), int(h), int(bx), int(by)
+        dx, dy = _HALO_PARTS.get(part, (0, 0))
+        region = padded[_place(dy, by, h, ts, k), _place(dx, bx, w, ts, k)]
+        cells = (_decode_block(fmt, payload, w) if part == "B"
+                 else np.frombuffer(payload, dtype="<i2"))
+        region[...] = cells.reshape(region.shape)
+    return padded, n_blocks
+
+
+ASSEMBLED_SCHEMA = (
+    "tile_x int, tile_y int, heights binary, n_blocks int, missing_px long"
+)
+
+
+def assembled_row(
+    tile_x: int, tile_y: int, tile: np.ndarray, n_blocks: int
+) -> pd.DataFrame:
+    """One ASSEMBLED_SCHEMA row for a stitched tile."""
+    return pd.DataFrame(
+        {
+            "tile_x": [tile_x],
+            "tile_y": [tile_y],
+            "heights": [tile.tobytes()],
+            "n_blocks": [n_blocks],
+            "missing_px": [int(np.count_nonzero(tile == DEM_HEIGHT_NONE))],
+        }
+    )
+
+
+def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
+    """Stitch image blocks into one int16 raster per tile
+    (:func:`compose_padded` with no halo)."""
+
+    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
+        tile, n_blocks = compose_padded(pdf, tile_size, 0)
+        return assembled_row(
+            int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
+            tile, n_blocks,
+        )
+
+    return _block_parts(assigned).groupBy("tile_x", "tile_y").applyInPandas(
+        stitch, schema=ASSEMBLED_SCHEMA
+    )
+
+
+# ---------------------------------------------------------------------------
+# 4. render (W1-W3 + §2.8 shaders, vectorized per tile)
 # ---------------------------------------------------------------------------
 
 SHADED_SCHEMA = (
@@ -872,45 +432,103 @@ def shade_padded_block(
     return out[::-1, :, :], shaded  # Y-flip to bitmap orientation
 
 
-def shade_tiles(
-    padded_tiles: DataFrame, tile_size: int,
-    script: str = pipeline.DEFAULT_SCRIPT,
+def apply_prefilters(padded: np.ndarray, steps) -> np.ndarray:
+    """Run prefilter steps (kernels.PREFILTERS) over an int16 padded
+    block; each consumes one halo ring.  Output rounds back to int16
+    (heights stay 1 m-quantized end-to-end, the storage discipline of
+    §1.2), missing stays missing."""
+    f = kernels.heights_to_float(padded, dtype=np.float32)
+    for st in steps:
+        fn = kernels.PREFILTERS[st.name]
+        params = {k: float(v) for k, v in st.params.items()}
+        f = fn(f, **params)
+    return kernels.float_to_heights(f)
+
+
+def render_setup(
+    script: str, png_level: int | None = None, prefilter: str | None = None
+) -> tuple[list, dict, int, list]:
+    """Parse the render arguments once, before the job runs, into
+    ``(steps, registry, lvl, pre_steps)`` for :func:`render_tile`.  The
+    registry is a snapshot: custom shaders registered in the submitting
+    process ride the closure to executor processes."""
+    return (
+        pipeline.parse_script(script),
+        dict(pipeline.SHADER_REGISTRY),
+        codec.RGBA_PNG_LEVEL if png_level is None else png_level,
+        pipeline.parse_script(prefilter) if prefilter else [],
+    )
+
+
+#: what a group with no blocks of its own renders to
+_NO_TILES = pd.DataFrame(
+    columns=[c.split()[0] for c in SHADED_SCHEMA.split(", ")]
+)
+
+
+def render_tile(
+    padded: np.ndarray, tile_x: int, tile_y: int, ts: int, steps,
+    registry: dict, lvl: int, *, pre_steps=(),
+    clip_poly: np.ndarray | None = None, water: np.ndarray | None = None,
+    n_blocks: int = 0,
+) -> pd.DataFrame:
+    """The one place a SHADED_SCHEMA row is made: height prefilters (each
+    consumes one halo ring of ``padded``), Horn + shaders + clip
+    (:func:`shade_padded_block`), RGBA PNG encode at level ``lvl``."""
+    if pre_steps:
+        padded = apply_prefilters(padded, pre_steps)
+    rgba, shaded = shade_padded_block(
+        padded, tile_x, tile_y, ts, steps, water=water, clip_poly=clip_poly,
+        registry=registry,
+    )
+    return pd.DataFrame(
+        {
+            "tile_x": [tile_x],
+            "tile_y": [tile_y],
+            "tile_name": [_tile_name(0, tile_x, tile_y)],
+            "width": [ts],
+            "height": [ts],
+            "png": [codec.encode_rgba_png(rgba, lvl)],
+            "shaded_px": [shaded],
+            "total_px": [ts * ts],
+            "n_blocks": [n_blocks],
+        }
+    )
+
+
+def shade_unified(
+    parts: DataFrame, tile_size: int, script: str,
+    clip_poly: np.ndarray | None = None,
+    halo: int = 1,
+    prefilter: str | None = None,
     png_level: int | None = None,
 ) -> DataFrame:
-    """Run the shading pipeline over halo-padded tiles (one task per tile)."""
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
-    # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
+    """One grouped task per tile: :func:`compose_padded` then
+    :func:`render_tile`.  ``parts`` comes from :func:`hillshade_parts`
+    (same halo); groups with no center blocks (strips sent past the
+    world edge) produce nothing.  ``prefilter`` is a step script over
+    kernels.PREFILTERS (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``);
+    each step consumes one halo ring, so halo must be 1 + n_steps."""
+    steps, registry, lvl, pre_steps = render_setup(script, png_level, prefilter)
+    if halo != 1 + len(pre_steps):
+        raise ValueError(
+            f"halo {halo} must be 1 + number of prefilter steps "
+            f"({len(pre_steps)})"
+        )
 
-    def shade(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "tile_x", "tile_y", "tile_name", "width", "height",
-                "png", "shaded_px", "total_px", "n_blocks",
-            )}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["padded"]):
-                padded = np.frombuffer(buf, dtype="<i2").reshape(
-                    tile_size + 2, tile_size + 2
-                )
-                rgba, shaded = shade_padded_block(
-                    padded, int(tx), int(ty), tile_size, steps,
-                    registry=registry,
-                )
-                from .tiles import tile_name as _tname
+    def assemble_pad_shade(pdf: pd.DataFrame) -> pd.DataFrame:
+        padded, n_blocks = compose_padded(pdf, tile_size, halo)
+        if padded is None:
+            return _NO_TILES
+        return render_tile(
+            padded, int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
+            tile_size, steps, registry, lvl, pre_steps=pre_steps,
+            clip_poly=clip_poly, n_blocks=n_blocks,
+        )
 
-                rows["tile_x"].append(int(tx))
-                rows["tile_y"].append(int(ty))
-                rows["tile_name"].append(_tname(0, int(tx), int(ty)))
-                rows["width"].append(tile_size)
-                rows["height"].append(tile_size)
-                rows["png"].append(codec.encode_rgba_png(rgba, lvl))
-                rows["shaded_px"].append(shaded)
-                rows["total_px"].append(tile_size * tile_size)
-                rows["n_blocks"].append(0)  # unfused path: no lineage carry
-            yield pd.DataFrame(rows)
-
-    return padded_tiles.mapInPandas(shade, schema=SHADED_SCHEMA)
+    return parts.groupBy("tile_x", "tile_y").applyInPandas(
+        assemble_pad_shade, schema=SHADED_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -936,75 +554,72 @@ def run_tile_shade(
     """XTH-packed tiles (heights + water bit) → shaded PNG tiles.
 
     Input rows: ``(tile_x, tile_y, xth binary)`` — the packed uint16
-    encoding of codec.encode_xth.  The packed values ride the same halo
-    strip machinery as plain heights (missing-neighbor fill is 0, which
-    decodes to missing-with-no-water); decode happens once per padded
-    tile at shade time, and the water mask feeds the water/wateroutline
-    shader steps.
+    encoding of codec.encode_xth.  Each tile is one ts×ts ``raw`` block
+    at (0, 0), so the packed values ride the same parts emitter and
+    compose as plain heights (missing-neighbor fill is 0, which decodes
+    to missing-with-no-water); decode happens once per padded tile at
+    shade time, and the water mask feeds the water/wateroutline shader
+    steps.
     """
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
-    # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ts = tile_size
-        for pdf in batches:
-            frames = []
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["xth"]):
-                packed = np.frombuffer(buf, dtype="<i2").reshape(ts, ts)
-                frames.append(
-                    _emit_center_and_strips(packed, int(tx), int(ty), 1)
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {k: [] for k in ("tile_x", "tile_y", "part", "data", "n_blocks")}
-            )
-
-    parts = xth_tiles.mapInPandas(emit, schema=HALO_PART_LINEAGE_SCHEMA)
+    steps, registry, lvl, _ = render_setup(script, png_level)
+    blocks = xth_tiles.select(
+        "tile_x", "tile_y", F.lit(0).alias("bx"), F.lit(0).alias("by"),
+        F.lit("").alias("image_id"), F.lit(tile_size).alias("w"),
+        F.lit(tile_size).alias("h"), F.lit("raw").alias("fmt"),
+        F.col("xth").alias("bytes"),
+    )
 
     def pad_and_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts_map = dict(zip(pdf["part"], pdf["data"]))
-        if "C" not in parts_map:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "tile_name", "width", "height",
-                         "png", "shaded_px", "total_px", "n_blocks"]
-            )
-        ts = tile_size
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        padded_packed = _pad_from_parts(parts_map, ts, fill=0)
-        packed_u = padded_packed.view(np.uint16)
-        water_pad = (packed_u >> 15).astype(bool)
+        packed, n_blocks = compose_padded(pdf, tile_size, 1, fill=0)
+        if packed is None:
+            return _NO_TILES
+        packed_u = packed.view(np.uint16)
         offs = (packed_u & 0x7FFF).astype(np.int32)
         heights = np.where(
             offs == 0, DEM_HEIGHT_NONE, offs + codec._XTH_MIN_HEIGHT
         ).astype(np.int16)
-        rgba, shaded = shade_padded_block(
-            heights, tile_x, tile_y, ts, steps, water=water_pad[1:-1, 1:-1],
-            registry=registry,
-        )
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "tile_name": [_tile_name(0, tile_x, tile_y)],
-                "width": [ts],
-                "height": [ts],
-                "png": [codec.encode_rgba_png(rgba, lvl)],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [1],
-            }
+        return render_tile(
+            heights, int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
+            tile_size, steps, registry, lvl,
+            water=(packed_u[1:-1, 1:-1] >> 15).astype(bool), n_blocks=n_blocks,
         )
 
-    return parts.groupBy("tile_x", "tile_y").applyInPandas(
-        pad_and_shade, schema=SHADED_SCHEMA
-    )
+    return hillshade_parts(blocks, tile_size).groupBy(
+        "tile_x", "tile_y"
+    ).applyInPandas(pad_and_shade, schema=SHADED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # 5. end-to-end job with resumable checkpoints + metrics
 # ---------------------------------------------------------------------------
+
+def clip_cover(clip_polygon) -> tuple[np.ndarray | None, tuple | None]:
+    """Validate a ``(lon, lat)`` clip polygon; return it as an array
+    with its bbox tile cover ``(tx0, ty0, tx1, ty1)`` (inclusive,
+    floor/ceil−1 rule, Dem/Funcs.fs:284-298), or ``(None, None)``.
+
+    Validation runs before any work is scheduled: a self-intersecting
+    polygon would silently mis-clip under the crossing-number rule
+    (PolygonSelfIntersection.fs sweep semantics)."""
+    if clip_polygon is None:
+        return None, None
+    from .geometry import polygon_self_intersects
+
+    poly = np.asarray(clip_polygon, dtype=np.float64)
+    status = polygon_self_intersects(poly)
+    if status != "non_intersecting":
+        raise ValueError(f"clip_polygon rejected: {status}")
+    return poly, (
+        int(math.floor(poly[:, 0].min())), int(math.floor(poly[:, 1].min())),
+        int(math.ceil(poly[:, 0].max())) - 1,
+        int(math.ceil(poly[:, 1].max())) - 1,
+    )
+
+
+def in_tiles(tx0: int, ty0: int, tx1: int, ty1: int) -> Column:
+    """Catalyst predicate: the row's tile lies in the inclusive box."""
+    return F.col("tile_x").between(tx0, tx1) & F.col("tile_y").between(ty0, ty1)
+
 
 def run_hillshade(
     spark: SparkSession,
@@ -1013,7 +628,6 @@ def run_hillshade(
     script: str = pipeline.DEFAULT_SCRIPT,
     output_dir: str | None = None,
     resume: bool = True,
-    salt_buckets: int | None = None,
     clip_polygon=None,
     shade_partitions: int | None = None,
     prefilter: str | None = None,
@@ -1026,110 +640,75 @@ def run_hillshade(
     read back from the sink (the checkpoint manifest) and anti-joined
     out of the input — re-running after a failure only shades the
     missing tiles (ImportSrtmTilesCommand.fs:110-124 semantics).
-    ``salt_buckets`` switches to two-phase salted assembly for inputs
-    with heavy per-tile skew (see :func:`assemble_parts_salted`).
     ``clip_polygon`` — sequence of (lon, lat) vertices: tiles outside
     the polygon's bbox are pruned with a Catalyst predicate before the
-    shuffle (floor/ceil−1 cover rule, Dem/Funcs.fs:284-298) and pixels
-    outside the polygon render transparent (per-band vectorized
-    point-in-polygon clip, SURVEY.md §2.3 J9).
+    shuffle (:func:`clip_cover`) and pixels outside the polygon render
+    transparent (per-band vectorized point-in-polygon clip, SURVEY.md
+    §2.3 J9).
     ``prefilter`` — height low/high-pass step script (``"blur"``,
     ``"sharpen(amount=…)"``; Roadmap.md filters) applied before the
     Horn gradient; widens the halo exchange by one ring per step.
+    ``local_dedup`` collapses losing duplicate blocks before anything
+    is emitted or shuffled (:func:`dedup_duplicate_blocks`).
     """
-    clip_poly = None
-    if clip_polygon is not None:
-        clip_poly = np.asarray(clip_polygon, dtype=np.float64)
-        # validate before any work is scheduled: a self-intersecting clip
-        # polygon would silently mis-clip under the crossing-number rule
-        # (PolygonSelfIntersection.fs sweep semantics)
-        from .geometry import polygon_self_intersects
-
-        status = polygon_self_intersects(clip_poly)
-        if status != "non_intersecting":
-            raise ValueError(f"clip_polygon rejected: {status}")
+    clip_poly, cover = clip_cover(clip_polygon)
     halo = 1 + (len(pipeline.parse_script(prefilter)) if prefilter else 0)
     assigned = parse_caption(images)
     if local_dedup:
-        # duplicate-heavy sources: collapse losing duplicate blocks
-        # before anything is emitted or shuffled (byte-identical output)
         assigned = dedup_duplicate_blocks(assigned)
-    if salt_buckets and salt_buckets > 1:
-        # two-phase salted assembly for pathological per-tile skew keeps
-        # the two-stage topology (partial mosaics need their own shuffle)
-        parts = assemble_parts_salted(
-            assigned, tile_size, salt_buckets, halo=halo
-        )
-        if clip_poly is not None:
-            tx0 = int(math.floor(clip_poly[:, 0].min()))
-            tx1 = int(math.ceil(clip_poly[:, 0].max())) - 1
-            ty0 = int(math.floor(clip_poly[:, 1].min()))
-            ty1 = int(math.ceil(clip_poly[:, 1].max())) - 1
-            parts = parts.where(
-                (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1)
-                & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
+    parts = hillshade_parts(assigned, tile_size, halo)
+    if cover is not None:
+        # prune DESTINATION tiles to the polygon's bbox cover.  The filter
+        # sits above the block/strip union: it pushes down to the scan on
+        # the block arm (the full-data one), while strips donated by
+        # just-outside tiles into kept boundary tiles survive — the
+        # clipped result stays pixel-identical to clipping the unpruned
+        # output.
+        parts = parts.where(in_tiles(*cover))
+    if output_dir is not None and resume:
+        done = _read_manifest(spark, output_dir)
+        if done is not None:
+            # anti-join on the DESTINATION tile key, after strip
+            # emission: completed tiles still contribute halo strips
+            # to incomplete neighbors (dropping them earlier would
+            # corrupt resumed edges)
+            parts = parts.join(
+                F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
             )
-        if output_dir is not None and resume:
-            done = _read_manifest(spark, output_dir)
-            if done is not None:
-                parts = parts.join(
-                    F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
-                )
-        shaded = shade_parts(
-            parts, tile_size, script, clip_poly=clip_poly,
-            halo=halo, prefilter=prefilter, png_level=png_level,
-        )
-    else:
-        parts = hillshade_parts(assigned, tile_size, halo)
-        if clip_poly is not None:
-            # prune DESTINATION tiles to the polygon's bbox cover
-            # (floor/ceil−1 rule, Dem/Funcs.fs:284-298).  The filter sits
-            # above the block/strip union: it pushes down to the scan on
-            # the block arm (the full-data one), while strips donated by
-            # just-outside tiles into kept boundary tiles survive — the
-            # clipped result stays pixel-identical to clipping the
-            # unpruned output.
-            tx0 = int(math.floor(clip_poly[:, 0].min()))
-            tx1 = int(math.ceil(clip_poly[:, 0].max())) - 1
-            ty0 = int(math.floor(clip_poly[:, 1].min()))
-            ty1 = int(math.ceil(clip_poly[:, 1].max())) - 1
-            parts = parts.where(
-                (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1)
-                & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
-            )
-        if output_dir is not None and resume:
-            done = _read_manifest(spark, output_dir)
-            if done is not None:
-                # anti-join on the DESTINATION tile key, after strip
-                # emission: completed tiles still contribute halo strips
-                # to incomplete neighbors (dropping them earlier would
-                # corrupt resumed edges)
-                parts = parts.join(
-                    F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
-                )
-        # pre-partition the one full-data exchange on the tile key at
-        # finer granularity than spark.sql.shuffle.partitions: the shade
-        # stage is CPU-bound per TILE, so ~1 tile/task bounds straggler
-        # cost to one tile (measured +15% at sf0.1/local[32]).  The
-        # following groupBy reuses this hash partitioning — no second
-        # exchange.  Callers with a known tile count should pass it.
-        n_parts = shade_partitions or spark.sparkContext.defaultParallelism * 4
-        parts = parts.repartition(n_parts, "tile_x", "tile_y")
-        shaded = shade_unified(
-            parts, tile_size, script, clip_poly=clip_poly,
-            halo=halo, prefilter=prefilter, png_level=png_level,
-        )
+    # pre-partition the one full-data exchange on the tile key at
+    # finer granularity than spark.sql.shuffle.partitions: the shade
+    # stage is CPU-bound per TILE, so ~1 tile/task bounds straggler
+    # cost to one tile (measured +15% at sf0.1/local[32]).  The
+    # following groupBy reuses this hash partitioning — no second
+    # exchange.  Callers with a known tile count should pass it.
+    n_parts = shade_partitions or spark.sparkContext.defaultParallelism * 4
+    parts = parts.repartition(n_parts, "tile_x", "tile_y")
+    shaded = shade_unified(
+        parts, tile_size, script, clip_poly=clip_poly,
+        halo=halo, prefilter=prefilter, png_level=png_level,
+    )
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)
         return spark.read.parquet(output_dir)
     return shaded
 
 
+#: sink read failures that mean "nothing shaded yet": the directory is
+#: absent, or holds no parquet files
+_NO_MANIFEST = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def _read_manifest(spark: SparkSession, output_dir: str) -> DataFrame | None:
+    """Completed tile keys in the sink, or None before the first commit.
+    Any other read failure (e.g. a corrupt part file) propagates:
+    reading it as "no manifest" would reshade every tile and append
+    duplicates."""
     try:
         return spark.read.parquet(output_dir).select("tile_x", "tile_y").distinct()
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _NO_MANIFEST:
+            return None
+        raise
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ live stream.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -260,13 +261,33 @@ IMAGES_SCHEMA = (
     "caption string, phash long"
 )
 
-ASSEMBLED_STREAM_SCHEMA = (
-    "tile_x int, tile_y int, heights binary, n_blocks int"
+#: a tile's buffered parts (engine.PART_SCHEMA columns as arrays, in
+#: _BUFFER_COLUMNS order) plus the tombstone set once it was emitted
+_PARTS_STATE_SCHEMA = (
+    "done boolean, parts array<string>, bxs array<int>, bys array<int>, "
+    "ids array<string>, ws array<int>, hs array<int>, fmts array<string>, "
+    "blobs array<binary>"
 )
-_TILE_STATE_SCHEMA = (
-    "done boolean, bxs array<int>, bys array<int>, ids array<string>, "
-    "fmts array<string>, ws array<int>, hs array<int>, blobs array<binary>"
-)
+_BUFFER_COLUMNS = ("part", "bx", "by", "image_id", "w", "h", "fmt", "data")
+_TOMBSTONE = (True, *([] for _ in _BUFFER_COLUMNS))
+
+
+def _buffered_parts(pdfs, state) -> pd.DataFrame | None:
+    """One tile's parts so far: those buffered in its state plus this
+    micro-batch's.  None once the tile was emitted (late duplicates
+    drop — the reference's negative-cache/idempotent import, §2.11)."""
+    frames = [pdf[list(_BUFFER_COLUMNS)] for pdf in pdfs]
+    if state.exists:
+        done, *cols = state.get
+        if done:
+            return None
+        frames.insert(0, pd.DataFrame(dict(zip(_BUFFER_COLUMNS, cols))))
+    frames = [f for f in frames if len(f)]
+    return pd.concat(frames, ignore_index=True) if frames else None
+
+
+def _keep_buffering(state, parts: pd.DataFrame) -> None:
+    state.update((False, *(parts[c].tolist() for c in _BUFFER_COLUMNS)))
 
 
 def read_images_stream(
@@ -291,80 +312,42 @@ def streaming_assemble_tiles(images: DataFrame, tile_size: int) -> DataFrame:
     §2.3 J2) — the batch engine's ``assemble_tiles`` needs all blocks
     of a tile in one task; here Spark's state store provides the
     cross-batch buffer, checkpointed and exactly-once.  The assembled
-    heights are byte-identical to the batch path: the same
-    ``(by, bx, image_id)`` overwrite order replays once the tile
-    completes (§4.3 merge semantics).  Late duplicates arriving after
-    completion are dropped (the reference's negative-cache/idempotent
-    import semantics); per-tile state is a few compressed blocks,
-    bounded by tile size, and clears to a tombstone on emit.
+    tile comes from the same ``engine.compose_padded`` as the batch
+    path, so heights are byte-identical.  Late duplicates arriving
+    after completion are dropped; per-tile state is a few compressed
+    blocks, bounded by tile size, and clears to a tombstone on emit.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .engine import parse_caption, _decode_block
-    from .tiles import DEM_HEIGHT_NONE
+    from .engine import (
+        ASSEMBLED_SCHEMA,
+        _block_parts,
+        assembled_row,
+        compose_padded,
+        parse_caption,
+    )
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            done, bxs, bys, ids, fmts, ws, hs, blobs = state.get
-            bxs, bys, ids = list(bxs), list(bys), list(ids)
-            fmts, ws, hs, blobs = list(fmts), list(ws), list(hs), list(blobs)
-        else:
-            done, bxs, bys, ids, fmts, ws, hs, blobs = (
-                False, [], [], [], [], [], [], []
-            )
-        if done:  # tombstone: tile already emitted, drop late duplicates
+    def update(key, pdfs, state):
+        parts = _buffered_parts(pdfs, state)
+        if parts is None:
             return
-        for pdf in pdfs:
-            bxs.extend(int(v) for v in pdf["bx"])
-            bys.extend(int(v) for v in pdf["by"])
-            ids.extend(str(v) for v in pdf["image_id"])
-            fmts.extend(str(v) for v in pdf["fmt"])
-            ws.extend(int(v) for v in pdf["w"])
-            hs.extend(int(v) for v in pdf["h"])
-            blobs.extend(bytes(v) for v in pdf["bytes"])
-        if not ws:
+        nx = tile_size // int(parts["w"].iloc[0])
+        ny = tile_size // int(parts["h"].iloc[0])
+        if len(set(zip(parts["bx"], parts["by"]))) < nx * ny:
+            _keep_buffering(state, parts)  # still incomplete
             return
-        expected = (tile_size // ws[0]) * (tile_size // hs[0])
-        if len(set(zip(bxs, bys))) < expected:  # still incomplete: buffer
-            state.update((False, bxs, bys, ids, fmts, ws, hs, blobs))
-            return
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        order = sorted(range(len(ids)), key=lambda i: (bys[i], bxs[i], ids[i]))
-        for i in order:
-            block = _decode_block(fmts[i], blobs[i], ws[i])
-            y0, x0 = bys[i] * hs[i], bxs[i] * ws[i]
-            tile[y0 : y0 + hs[i], x0 : x0 + ws[i]] = block
-        state.update((True, [], [], [], [], [], [], []))
-        yield pd.DataFrame(
-            {
-                "tile_x": [int(key[0])],
-                "tile_y": [int(key[1])],
-                "heights": [tile.tobytes()],
-                "n_blocks": [len(order)],
-            }
-        )
+        tile, n_blocks = compose_padded(parts, tile_size, 0)
+        state.update(_TOMBSTONE)
+        yield assembled_row(int(key[0]), int(key[1]), tile, n_blocks)
 
-    assigned = parse_caption(images)
-    return assigned.groupBy("tile_x", "tile_y").applyInPandasWithState(
+    blocks = _block_parts(parse_caption(images))
+    return blocks.groupBy("tile_x", "tile_y").applyInPandasWithState(
         update,
-        outputStructType=ASSEMBLED_STREAM_SCHEMA,
-        stateStructType=_TILE_STATE_SCHEMA,
+        outputStructType=ASSEMBLED_SCHEMA,
+        stateStructType=_PARTS_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-SHADED_STREAM_SCHEMA = (
-    "tile_x int, tile_y int, tile_name string, png binary, "
-    "shaded_px long, total_px long, n_blocks int"
-)
-_SHADE_STATE_SCHEMA = (
-    "done boolean, parts array<string>, bxs array<int>, bys array<int>, "
-    "ids array<string>, fmts array<string>, ws array<int>, hs array<int>, "
-    "blobs array<binary>"
-)
 
 
 def streaming_hillshade(
@@ -376,217 +359,98 @@ def streaming_hillshade(
     prefilter: str | None = None,
     png_level: int | None = None,
 ) -> DataFrame:
-    """Streaming twin of the fused batch topology: incremental
-    hillshade with cross-batch halo exchange, one stateful operator.
+    """Streaming twin of the batch tile path: incremental hillshade with
+    cross-batch halo exchange, one stateful operator.
 
-    A narrow ``mapInPandas`` turns each micro-batch of image rows into
-    the same destination-keyed parts stream as the batch
-    :func:`demeton_spark.engine.hillshade_parts` (raw blocks + 1-px
-    strips cut from border blocks).  One ``applyInPandasWithState``
-    keyed by destination tile buffers parts across micro-batches and
-    shades the tile EXACTLY ONCE when both its own block grid and every
-    halo strip an existing neighbor will ever send are present —
-    ``world_bounds`` (min tile_x, min tile_y, max tile_x, max tile_y,
-    inclusive) makes completeness decidable without timeouts, the
-    streaming analogue of the reference's known tile list
-    (ShadeCommand.fs:371-400).  Output pixels are byte-identical to the
-    batch pipeline (tested); late duplicates after emission drop
-    (idempotent-import semantics, §2.11).  ``clip_polygon`` and
-    ``prefilter`` behave as in the batch run_hillshade: clipped-out
-    destination tiles are filtered from the parts stream (state never
-    accumulates for them) and prefilters widen the buffered strips to
-    k px.
+    Each micro-batch of image rows goes through the batch
+    :func:`demeton_spark.engine.hillshade_parts` (raw blocks + k-px
+    strips cut from border blocks, keyed by destination tile).  One
+    ``applyInPandasWithState`` keyed by destination tile buffers parts
+    across micro-batches and shades the tile EXACTLY ONCE, through the
+    batch ``compose_padded`` and ``render_tile``, when both its own
+    block grid and every halo strip an existing neighbor will ever send
+    are present — ``world_bounds`` (min tile_x, min tile_y, max tile_x,
+    max tile_y, inclusive) makes completeness decidable without
+    timeouts, the streaming analogue of the reference's known tile list
+    (ShadeCommand.fs:371-400).  Output rows (engine.SHADED_SCHEMA) are
+    byte-identical to the batch pipeline (tested); late duplicates
+    after emission drop (idempotent-import semantics, §2.11).
+    ``clip_polygon`` and ``prefilter`` behave as in the batch
+    run_hillshade: clipped-out destination tiles are filtered from the
+    parts stream (state never accumulates for them) and prefilters
+    widen the buffered strips to k px.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from .engine import (
-        _BLOCK_STRIP_SPEC,
-        _decode_block,
-        _place_strip,
-        _tile_name,
-        shade_padded_block,
+        _HALO_PARTS,
+        SHADED_SCHEMA,
+        _on_edge,
+        clip_cover,
+        compose_padded,
+        hillshade_parts,
+        in_tiles,
+        parse_caption,
+        render_setup,
+        render_tile,
     )
-    from .pipeline import parse_script
-    from .tiles import DEM_HEIGHT_NONE
 
-    steps = parse_script(script)
-    from .pipeline import SHADER_REGISTRY
-
-    registry = dict(SHADER_REGISTRY)  # driver snapshot for executors
-    from . import codec as _codec
-    lvl = _codec.RGBA_PNG_LEVEL if png_level is None else png_level
-    pre_steps = parse_script(prefilter) if prefilter else []
+    steps, registry, lvl, pre_steps = render_setup(script, png_level, prefilter)
     halo = 1 + len(pre_steps)
-    clip_poly = None
-    if clip_polygon is not None:
-        clip_poly = np.asarray(clip_polygon, dtype=np.float64)
-        # validate before any work is scheduled: a self-intersecting clip
-        # polygon would silently mis-clip under the crossing-number rule
-        # (PolygonSelfIntersection.fs sweep semantics)
-        from .geometry import polygon_self_intersects
-
-        status = polygon_self_intersects(clip_poly)
-        if status != "non_intersecting":
-            raise ValueError(f"clip_polygon rejected: {status}")
+    clip_poly, cover = clip_cover(clip_polygon)
     wx0, wy0, wx1, wy1 = world_bounds  # sender existence universe
     tx0, ty0, tx1, ty1 = world_bounds  # destination (kept-tile) universe
-    if clip_poly is not None:
-        import math as _math
-
+    if cover is not None:
         # destinations shrink to the polygon's bbox cover (state never
         # accumulates for clipped-out tiles) but SENDERS keep the full
         # world bounds: a tile just outside the clip cover still donates
         # halo strips to kept boundary tiles, exactly like the batch
         # path's destination-only filter — completeness must wait for
         # those strips or boundary pixels would shade nondeterministically
-        tx0 = max(tx0, int(_math.floor(clip_poly[:, 0].min())))
-        tx1 = min(tx1, int(_math.ceil(clip_poly[:, 0].max())) - 1)
-        ty0 = max(ty0, int(_math.floor(clip_poly[:, 1].min())))
-        ty1 = min(ty1, int(_math.ceil(clip_poly[:, 1].max())) - 1)
-
-    def emit_parts(batches):
-        cols = ("tile_x", "tile_y", "part", "bx", "by", "image_id",
-                "w", "h", "fmt", "data")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-
-            def push(tx, ty, part, bx, by, iid, w, h, fmt, data):
-                out["tile_x"].append(tx)
-                out["tile_y"].append(ty)
-                out["part"].append(part)
-                out["bx"].append(bx)
-                out["by"].append(by)
-                out["image_id"].append(iid)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["data"].append(data)
-
-            for r in pdf.itertuples():
-                w, h, bx, by = int(r.w), int(r.h), int(r.bx), int(r.by)
-                if tx0 <= int(r.tile_x) <= tx1 and ty0 <= int(r.tile_y) <= ty1:
-                    push(int(r.tile_x), int(r.tile_y), "B", bx, by,
-                         str(r.image_id), w, h, str(r.fmt), bytes(r.bytes))
-                nx, ny = tile_size // w, tile_size // h
-                block = None
-                for on_edge, (dx, dy), part, cut in _BLOCK_STRIP_SPEC:
-                    if not on_edge(bx, by, nx, ny):
-                        continue
-                    dtx, dty = int(r.tile_x) + dx, int(r.tile_y) + dy
-                    if not (tx0 <= dtx <= tx1 and ty0 <= dty <= ty1):
-                        continue  # strips past the world/clip edge
-                    if block is None:
-                        block = _decode_block(str(r.fmt), bytes(r.bytes), w)
-                    push(dtx, dty, part, bx, by, str(r.image_id), w, h,
-                         "raw",
-                         np.ascontiguousarray(cut(block, halo)).tobytes())
-            yield pd.DataFrame(out)
-
-    from .engine import parse_caption
-
-    parts = parse_caption(images).mapInPandas(
-        emit_parts,
-        schema=("tile_x int, tile_y int, part string, bx int, by int, "
-                "image_id string, w int, h int, fmt string, data binary"),
+        tx0, ty0 = max(tx0, cover[0]), max(ty0, cover[1])
+        tx1, ty1 = min(tx1, cover[2]), min(ty1, cover[3])
+    parts = hillshade_parts(parse_caption(images), tile_size, halo).where(
+        in_tiles(tx0, ty0, tx1, ty1)
     )
 
     def expected_strips(tx: int, ty: int, nx: int, ny: int) -> set:
-        """(part, bx, by) triples this tile will eventually receive,
-        given which neighbors exist inside world_bounds."""
-        exp = set()
-        for on_edge, (dx, dy), part, _cut in _BLOCK_STRIP_SPEC:
-            # sender is the neighbor at (tx-dx, ty-dy); existence is
-            # judged against the WORLD bounds, not the clip cover
-            sx, sy = tx - dx, ty - dy
-            if not (wx0 <= sx <= wx1 and wy0 <= sy <= wy1):
-                continue
-            for by in range(ny):
-                for bx in range(nx):
-                    if on_edge(bx, by, nx, ny):
-                        exp.add((part, bx, by))
-        return exp
+        """(part, bx, by) triples this tile will eventually receive:
+        the sender at (tx-dx, ty-dy) exists inside the WORLD bounds
+        (not the clip cover), and its block faces this tile."""
+        return {
+            (part, bx, by)
+            for part, (dx, dy) in _HALO_PARTS.items()
+            if wx0 <= tx - dx <= wx1 and wy0 <= ty - dy <= wy1
+            for by in range(ny) if _on_edge(dy, by, ny)
+            for bx in range(nx) if _on_edge(dx, bx, nx)
+        }
 
-    def _shade_update(key, pdfs, state: GroupState):
-        if state.exists:
-            st = state.get
-            done = st[0]
-            parts_l = list(st[1]); bxs = list(st[2]); bys = list(st[3])
-            ids = list(st[4]); fmts = list(st[5])
-            ws = list(st[6]); hs = list(st[7]); blobs = list(st[8])
-        else:
-            done = False
-            parts_l, bxs, bys, ids, fmts, ws, hs, blobs = ([] for _ in range(8))
-        if done:
+    def update(key, pdfs, state):
+        parts = _buffered_parts(pdfs, state)
+        if parts is None:
             return
-        for pdf in pdfs:
-            parts_l.extend(str(v) for v in pdf["part"])
-            bxs.extend(int(v) for v in pdf["bx"])
-            bys.extend(int(v) for v in pdf["by"])
-            ids.extend(str(v) for v in pdf["image_id"])
-            fmts.extend(str(v) for v in pdf["fmt"])
-            ws.extend(int(v) for v in pdf["w"])
-            hs.extend(int(v) for v in pdf["h"])
-            blobs.extend(bytes(v) for v in pdf["data"])
-        if not ws:
-            return
-        ts = tile_size
-        nx, ny = ts // ws[0], ts // hs[0]
-        have_blocks = {(bxs[i], bys[i]) for i in range(len(parts_l))
-                       if parts_l[i] == "B"}
-        have_strips = {(parts_l[i], bxs[i], bys[i])
-                       for i in range(len(parts_l)) if parts_l[i] != "B"}
         tx, ty = int(key[0]), int(key[1])
+        nx = tile_size // int(parts["w"].iloc[0])
+        ny = tile_size // int(parts["h"].iloc[0])
+        is_block = parts["part"] == "B"
+        blocks, strips = parts[is_block], parts[~is_block]
+        have_blocks = set(zip(blocks["bx"], blocks["by"]))
+        have_strips = set(zip(strips["part"], strips["bx"], strips["by"]))
         if (len(have_blocks) < nx * ny
                 or not expected_strips(tx, ty, nx, ny) <= have_strips):
-            state.update((False, parts_l, bxs, bys, ids, fmts, ws, hs, blobs))
+            _keep_buffering(state, parts)
             return
-        k = halo
-        padded = np.full((ts + 2 * k, ts + 2 * k), DEM_HEIGHT_NONE,
-                         dtype=np.int16)
-        order = sorted(range(len(parts_l)),
-                       key=lambda i: (bys[i], bxs[i], ids[i]))
-        n_blocks = 0
-        for i in order:
-            if parts_l[i] != "B":
-                continue
-            block = _decode_block(fmts[i], blobs[i], ws[i])
-            y0, x0 = k + bys[i] * hs[i], k + bxs[i] * ws[i]
-            padded[y0 : y0 + hs[i], x0 : x0 + ws[i]] = block
-            n_blocks += 1
-        for i in order:
-            if parts_l[i] == "B":
-                continue
-            cells = np.frombuffer(blobs[i], dtype="<i2")
-            _place_strip(padded, parts_l[i], cells, bxs[i], bys[i],
-                         ws[i], hs[i], ts, k)
-        if pre_steps:
-            from .engine import apply_prefilters
-
-            padded = apply_prefilters(padded, pre_steps)
-        from . import codec
-
-        rgba, shaded = shade_padded_block(padded, tx, ty, ts, steps,
-                                          clip_poly=clip_poly,
-                                          registry=registry)
-        state.update((True, [], [], [], [], [], [], [], []))
-        yield pd.DataFrame(
-            {
-                "tile_x": [tx],
-                "tile_y": [ty],
-                "tile_name": [_tile_name(0, tx, ty)],
-                "png": [codec.encode_rgba_png(rgba, lvl)],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [n_blocks],
-            }
+        padded, n_blocks = compose_padded(parts, tile_size, halo)
+        state.update(_TOMBSTONE)
+        yield render_tile(
+            padded, tx, ty, tile_size, steps, registry, lvl,
+            pre_steps=pre_steps, clip_poly=clip_poly, n_blocks=n_blocks,
         )
 
     return parts.groupBy("tile_x", "tile_y").applyInPandasWithState(
-        _shade_update,
-        outputStructType=SHADED_STREAM_SCHEMA,
-        stateStructType=_SHADE_STATE_SCHEMA,
+        update,
+        outputStructType=SHADED_SCHEMA,
+        stateStructType=_PARTS_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

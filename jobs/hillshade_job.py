@@ -9,13 +9,14 @@ Run on a cluster (the package ships as a zip via --py-files):
         jobs/hillshade_job.py \
         --input  s3://…/images_parquet \
         --output s3://…/shaded_tiles \
-        --tile-size 3600 --script 'elecolor|+igor' \
-        --salt-buckets 8
+        --tile-size 3600 --script 'elecolor|+igor'
 
 The job is idempotent/resumable: completed tile keys in --output are
 anti-joined out on restart (per-tile checkpoint manifest), and the run
 summary prints per-partition lineage metrics (tiles, blocks consumed,
-shaded/total pixels).
+shaded/total pixels).  Duplicate-heavy (skewed) tiles need no flag:
+each tile task decodes only the winning block per position, every tile
+gets its own shade task, and AQE splits skewed shuffle partitions.
 
 Locally (no cluster in this sandbox) the same file runs under
 ``python jobs/hillshade_job.py --synthetic sf0.01`` using the
@@ -39,8 +40,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="shaded-tile sink path")
     ap.add_argument("--tile-size", type=int, default=3600)
     ap.add_argument("--script", default="elecolor|+igor")
-    ap.add_argument("--salt-buckets", type=int, default=0,
-                    help=">1 enables two-phase salted assembly for skew")
     ap.add_argument("--clip-polygon", default=None,
                     help="lon1,lat1;lon2,lat2;... — clip the raster to "
                          "this polygon (bbox tile pruning + per-pixel PIP)")
@@ -96,7 +95,6 @@ def main() -> None:
         script=args.script,
         output_dir=args.output,
         resume=not args.no_resume,
-        salt_buckets=args.salt_buckets or None,
         clip_polygon=clip,
         prefilter=args.prefilter,
         shade_partitions=args.shade_partitions or None,

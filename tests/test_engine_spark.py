@@ -6,7 +6,10 @@ single merged array (the reference's merged-HeightsArray path,
 /root/reference/Demeton/Commands/ShadeCommand.fs:450-497).
 """
 
+import re
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from demeton_spark import codec, engine, synth
@@ -58,22 +61,66 @@ def test_assembled_tiles_match_numpy_oracle(spark, images):
         )
 
 
-def test_halo_exchange_pads_with_neighbors(spark, images):
-    tiles = engine.assemble_tiles(engine.parse_caption(images), SPEC.tile_size)
-    padded = {(r["tile_x"], r["tile_y"]): r for r in
-              engine.exchange_halo(tiles, SPEC.tile_size).collect()}
-    assert len(padded) == 4
+def _world_parts(spec: WorldSpec, k: int) -> pd.DataFrame:
+    """Every block of ``spec``'s world as a raw int16 "B" part plus the
+    k-px strips the engine's strip cutter emits from them."""
+    world = synth.expected_world_heights(spec)
+    ts, bs = spec.tile_size, spec.block_size
+    rows = []
+    for ty in range(spec.n_tiles_y):
+        for tx in range(spec.n_tiles_x):
+            for by in range(ts // bs):
+                for bx in range(ts // bs):
+                    y0, x0 = ty * ts + by * bs, tx * ts + bx * bs
+                    rows.append({
+                        "tile_x": spec.lon0 + tx, "tile_y": spec.lat0 + ty,
+                        "bx": bx, "by": by, "image_id": f"img{len(rows):04d}",
+                        "w": bs, "h": bs, "fmt": "raw",
+                        "bytes": world[y0 : y0 + bs, x0 : x0 + bs].tobytes(),
+                    })
+    blocks = pd.DataFrame(rows)
+    return pd.concat(
+        [blocks.rename(columns={"bytes": "data"}).assign(part="B"),
+         engine.block_strips(blocks, ts, k)],
+        ignore_index=True,
+    )
+
+
+@pytest.mark.parametrize(
+    "k,fill", [(1, DEM_HEIGHT_NONE), (2, DEM_HEIGHT_NONE), (1, 0)],
+    ids=["halo1", "halo2", "halo1-fill0"],
+)
+def test_compose_padded_pads_with_neighbors(k, fill):
+    """Blocks + neighbor strips compose into the (ts+2k)² padded tile:
+    halo from the neighbors where they exist, ``fill`` past the world
+    edge.  Spark-free: the strips come from the engine's own cutter."""
+    parts = _world_parts(SPEC, k)
     ts = SPEC.tile_size
     world = synth.expected_world_heights(SPEC)
-    # tile (13,45) is the SW tile: its north pad row must equal the
-    # south edge row of tile (13,46); its west pad must be missing.
-    p = np.frombuffer(padded[(13, 45)]["padded"], dtype="<i2").reshape(ts + 2, ts + 2)
-    assert np.array_equal(p[1:-1, 1:-1], world[:ts, :ts])
-    assert np.array_equal(p[-1, 1:-1], world[ts, :ts])  # north halo row
-    assert np.array_equal(p[1:-1, -1], world[:ts, ts])  # east halo col
-    assert np.all(p[0, :] == DEM_HEIGHT_NONE)  # world edge: south
-    assert np.all(p[:, 0] == DEM_HEIGHT_NONE)  # world edge: west
-    assert p[-1, -1] == world[ts, ts]  # NE corner from diagonal neighbor
+    # tile (13,45) is the SW tile: its north pad rows must equal the
+    # south edge rows of tile (13,46); its west pad must be fill.
+    sw = parts[(parts["tile_x"] == 13) & (parts["tile_y"] == 45)]
+    p, n_blocks = engine.compose_padded(sw, ts, k, fill)
+    assert p.shape == (ts + 2 * k, ts + 2 * k)
+    assert n_blocks == SPEC.blocks_per_tile
+    assert np.array_equal(p[k:-k, k:-k], world[:ts, :ts])
+    assert np.array_equal(p[-k:, k:-k], world[ts : ts + k, :ts])  # north halo
+    assert np.array_equal(p[k:-k, -k:], world[:ts, ts : ts + k])  # east halo
+    assert np.all(p[:k, :] == fill)  # world edge: south
+    assert np.all(p[:, :k] == fill)  # world edge: west
+    # NE corner from the diagonal neighbor
+    assert np.array_equal(p[-k:, -k:], world[ts : ts + k, ts : ts + k])
+    # a losing duplicate (earlier image_id) is never visible
+    loser = sw[sw["part"] == "B"].iloc[[0]].assign(
+        image_id="img",
+        data=np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes(),
+    )
+    p2, n2 = engine.compose_padded(pd.concat([sw, loser]), ts, k, fill)
+    assert np.array_equal(p2, p) and n2 == n_blocks + 1
+    # strips sent past the world edge compose to nothing
+    west = parts[parts["tile_x"] == 12]
+    assert len(west) > 0
+    assert engine.compose_padded(west, ts, k, fill) == (None, 0)
 
 
 def test_tiled_shading_equals_untiled_oracle(spark, images):
@@ -167,29 +214,76 @@ def test_resume_preserves_halo_correctness(spark, images, tmp_path):
     assert np.array_equal(rgba, oracle[y0 : y0 + ts, ts : 2 * ts])
 
 
-def test_salted_assembly_matches_unsalted(spark):
-    """Two-phase salted assembly (skew path) must be byte-identical to
-    the plain groupBy(tile) stitch, including lineage counts."""
+def test_resume_sink_fails_loudly_when_unreadable(spark, images, tmp_path):
+    """Only an absent or empty sink reads as "nothing shaded yet".  A
+    sink holding a non-parquet part file must fail the job instead of
+    reshading every tile and appending duplicates."""
+    absent = str(tmp_path / "absent")
+    assert engine.run_hillshade(
+        spark, images, SPEC.tile_size, output_dir=absent
+    ).count() == 4
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert engine.run_hillshade(
+        spark, images, SPEC.tile_size, output_dir=str(empty)
+    ).count() == 4
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        engine.run_hillshade(
+            spark, images, SPEC.tile_size, output_dir=str(corrupt)
+        )
+    assert [f.name for f in corrupt.iterdir()] == ["part-0.parquet"]
+
+
+def _exchanges(df) -> list[str]:
+    """The Exchange operators of ``df``'s executed plan (under AQE, the
+    final plan of an actual run), without expression ids."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return [re.sub(r"#\d+", "", m) for m in
+            re.findall(r"\bExchange (\w+(?:\([^)]*\))?)", plan.toString())]
+
+
+def test_tile_paths_run_one_exchange(spark):
+    """The engine's defining property: blocks and halo strips reach
+    their tile through ONE exchange, hash-partitioned on the
+    destination tile key, in the default run_hillshade and in
+    run_tile_shade alike."""
+    shaded = engine.run_hillshade(
+        spark, synth.images_df(spark, SPEC), SPEC.tile_size
+    )
+    ts = 20
+    xth = spark.createDataFrame(
+        [(tx, ty, bytearray(codec.encode_xth(
+            np.full((ts, ts), 100, np.int16), np.zeros((ts, ts), bool))))
+         for tx in range(2) for ty in range(2)],
+        "tile_x int, tile_y int, xth binary",
+    )
+    for df in (shaded, engine.run_tile_shade(spark, xth, ts)):
+        (exchange,) = _exchanges(df)
+        assert exchange.startswith("hashpartitioning(tile_x, tile_y, ")
+
+
+def test_fused_lineage_counts_duplicate_blocks(spark):
+    """The shaded output's ``n_blocks`` counts every input row of its
+    tile, duplicates included: skewed tiles carry their 8x duplicate
+    rows in the lineage count although only the winners are decoded."""
     skewed = synth.WorldSpec(
         lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2,
         tile_size=30, block_size=10, skew_factor=8, skew_every=2,
     )
     images_sk = synth.images_df(spark, skewed, num_partitions=4)
-    plain = engine.run_hillshade(spark, images_sk, skewed.tile_size)
-    salted = engine.run_hillshade(
-        spark, images_sk, skewed.tile_size, salt_buckets=4
-    )
-    canon = lambda df: {  # noqa: E731
-        (r["tile_x"], r["tile_y"]): (
-            bytes(r["png"]), r["shaded_px"], r["n_blocks"]
-        )
-        for r in df.collect()
+    n_blocks = {
+        (r["tile_x"], r["tile_y"]): r["n_blocks"]
+        for r in engine.run_hillshade(
+            spark, images_sk, skewed.tile_size
+        ).collect()
     }
-    a, b = canon(plain), canon(salted)
-    assert a.keys() == b.keys() and len(a) == 4
-    assert a == b
-    # skewed tiles really carry the duplicate rows in their lineage count
-    n_blocks = {k: v[2] for k, v in a.items()}
+    assert len(n_blocks) == 4
     assert max(n_blocks.values()) == 8 * skewed.blocks_per_tile
     assert min(n_blocks.values()) == skewed.blocks_per_tile
 
@@ -299,31 +393,6 @@ def test_polygon_clip_tiled_equals_untiled_oracle(spark, images):
         )
         total_visible += r["shaded_px"]
     assert 0 < total_visible < 2 * ts * ts  # genuinely clipped
-
-
-def test_polygon_clip_salted_path_matches_fused(spark, images):
-    """clip_polygon must behave identically through the salted two-phase
-    assembly topology."""
-    poly = [(13.1, 45.2), (13.9, 45.4), (13.3, 46.7)]
-    fused = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            clip_polygon=poly,
-        ).collect()
-    }
-    salted = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            clip_polygon=poly, salt_buckets=3,
-        ).collect()
-    }
-    assert set(fused) == set(salted)
-    for k in fused:
-        assert codec.decode_rgba_png(fused[k][0]).tobytes() == \
-            codec.decode_rgba_png(salted[k][0]).tobytes()
-        assert fused[k][1] == salted[k][1]
 
 
 def test_blur_prefilter_tiled_equals_untiled(spark, images):
@@ -495,30 +564,6 @@ def test_empty_input_produces_no_tiles(spark):
         "caption string, phash long",
     )
     assert engine.run_hillshade(spark, empty, 30).count() == 0
-
-
-def test_prefilter_salted_path_matches_fused(spark, images):
-    """blur prefilter (2-px halo) through the salted two-phase topology
-    must be pixel-identical to the fused single-shuffle path."""
-    fused = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            prefilter="blur",
-        ).collect()
-    }
-    salted = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            prefilter="blur", salt_buckets=3,
-        ).collect()
-    }
-    assert set(fused) == set(salted)
-    for k in fused:
-        assert codec.decode_rgba_png(fused[k][0]).tobytes() == \
-            codec.decode_rgba_png(salted[k][0]).tobytes()
-        assert fused[k][1] == salted[k][1]
 
 
 def test_local_dedup_byte_identical_and_collapses(spark):
