@@ -783,7 +783,7 @@ def write_baseline_md(sf: float) -> None:
             best_round_line += (
                 f"  {be:.3f} / {ceil} kernel ceiling = {be / ceil:.0%} "
                 f"of the hardware's own 8→32 scaling.\n")
-        except OSError:
+        except (OSError, KeyError):  # no 8→32 leg recorded
             best_round_line += "\n"
     window_md = f"""### Every window ever measured (same build lineage — none discarded)
 
@@ -870,7 +870,7 @@ Any Spark 8→32 number must be read against this ceiling: the plan's
 efficiency-of-ceiling is (Spark 8→32) / (kernel 8→32).
 
 """
-    except OSError:
+    except (OSError, KeyError):  # a record without the 8/32 legs
         pass
     weak = _load_weak_scaling_artifact()
     weak_md = ""

@@ -22,6 +22,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .tiles import DEM_HEIGHT_NONE
+
 TRANSPARENT = (0, 0, 0, 0)
 
 
@@ -143,45 +145,48 @@ class ColorScale:
             out[:, ch] = np.trunc(np.interp(flat, hs, chans[:, ch])).astype(np.uint8)
         return out
 
-    def int16_lut(self) -> np.ndarray:
-        """(65536, 4) uint8 color table over the whole int16 height
-        domain, built with the identical interp formula — heights in the
-        tile pipeline are int16-exact, so a single gather replaces the
-        per-pixel piecewise interpolation (~5× on the elecolor step).
-        Cached per scale instance."""
-        lut = getattr(self, "_lut", None)
+    def lut32(self) -> np.ndarray:
+        """(65536,) uint32 table of RGBA pixels (bytes in R,G,B,A order)
+        over the whole int16 height domain, indexed by the height's bits
+        with the sign flipped (``uint16(h) ^ 0x8000``).  Built with the
+        identical interp formula; the ``DEM_HEIGHT_NONE`` slot (index 0)
+        holds the none color.  Cached per scale instance."""
+        lut = getattr(self, "_lut32", None)
         if lut is None:
-            lut = self._interp_rgba(np.arange(-32768, 32768, dtype=np.float64))
-            object.__setattr__(self, "_lut", lut)  # frozen dataclass cache
+            rgba = self._interp_rgba(np.arange(-32768, 32768, dtype=np.float64))
+            rgba[DEM_HEIGHT_NONE + 32768] = self.none_color
+            lut = rgba.view(np.uint32).ravel()
+            object.__setattr__(self, "_lut32", lut)  # frozen dataclass cache
         return lut
 
-    def colorize(
-        self,
-        heights: np.ndarray,
-        missing_mask: np.ndarray,
-        assume_int16: bool = False,
-    ) -> np.ndarray:
+    def colorize_dem(self, dem: np.ndarray) -> np.ndarray:
+        """int16 heights with the ``DEM_HEIGHT_NONE`` sentinel (H,W) →
+        RGBA (H,W,4) uint8 in one gather from :meth:`lut32` — no float
+        conversion and no missing-mask pass (the tile pipeline's case)."""
+        idx = dem.view(np.uint16) ^ np.uint16(0x8000)
+        return self.lut32()[idx].view(np.uint8).reshape(dem.shape + (4,))
+
+    def colorize(self, heights: np.ndarray, missing_mask: np.ndarray) -> np.ndarray:
         """Vectorized lookup: float heights (H,W) → RGBA (H,W,4) uint8.
 
-        Integral int16-range heights (the tile pipeline's case) gather
-        from the cached LUT; anything else falls back to np.interp per
-        channel.  Both paths reproduce the clamped piecewise-linear
-        lookup with mixColors' truncating byte cast.  ``assume_int16``
-        skips the integrality scan when the caller guarantees the
-        heights came straight from an int16 grid (engine tile path).
+        Integral heights inside the int16 domain gather from the cached
+        LUT (:meth:`colorize_dem`); anything else falls back to np.interp
+        per channel.  Both paths reproduce the clamped piecewise-linear
+        lookup with mixColors' truncating byte cast.
         """
-        flat = np.nan_to_num(heights, nan=0.0).ravel()
+        flat = np.nan_to_num(heights, nan=0.0)
         fi = flat.astype(np.int32)
-        if assume_int16 or (
+        if (
             flat.size
             and flat.dtype.kind == "f"
             and np.array_equal(fi, flat)
-            and fi.min() >= -32768
+            and fi.min() > DEM_HEIGHT_NONE
             and fi.max() < 32768
         ):
-            out = self.int16_lut()[fi + 32768]
-        else:
-            out = self._interp_rgba(flat.astype(np.float64))
+            dem = fi.astype(np.int16)
+            dem[missing_mask] = DEM_HEIGHT_NONE
+            return self.colorize_dem(dem)
+        out = self._interp_rgba(flat.astype(np.float64).ravel())
         out = out.reshape(heights.shape + (4,))
         out[missing_mask] = np.array(self.none_color, dtype=np.uint8)
         return out

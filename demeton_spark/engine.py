@@ -354,13 +354,10 @@ SHADED_SCHEMA = (
 
 #: row-band height for chunked shading: bounds the per-task float32
 #: working set (~band·width·4B per temporary ≈ 0.9MB at 1800 wide) so the
-#: kernel stays cache-resident and 32 concurrent Python workers don't
-#: fight for memory bandwidth (measured: band=128 doubles 32-way
-#: throughput vs band=256, 10× vs whole-tile).  Env-overridable for
-#: cluster tuning (workers read the executor environment at import).
-import os as _os
-
-SHADE_BAND_ROWS = int(_os.environ.get("DEMETON_SHADE_BAND_ROWS", "128"))
+#: kernel stays cache-resident while one Python worker per core shares
+#: the memory bandwidth (measured on a 32-vCPU host: band=128 doubled
+#: 32-way throughput vs band=256, 10× vs whole-tile).
+SHADE_BAND_ROWS = 128
 
 
 def shade_padded_block(
@@ -392,8 +389,8 @@ def shade_padded_block(
         r1 = min(r0 + SHADE_BAND_ROWS, h)
         # float32 end-to-end in the band kernels: int16 heights are exact
         # in f32, slope/aspect precision stays ~1e-7 relative (sub-LSB
-        # after the uint8 quantization), and the halved bandwidth is what
-        # keeps 32 concurrent workers off the memory wall
+        # after the uint8 quantization), and the halved bandwidth keeps
+        # concurrent workers off the memory wall
         f = kernels.heights_to_float(padded[r0 : r1 + 2, :], dtype=np.float32)
         rows = np.arange(r0, r1, dtype=np.float64) + min_cell_y
         lat_deg = rows / cpd
@@ -409,7 +406,7 @@ def shade_padded_block(
             slope=slope,
             aspect=aspect,
             water=None if water is None else water[r0:r1, :],
-            heights_are_int16=True,  # straight from the int16 grid
+            dem=padded[r0 + 1 : r1 + 1, 1:-1],
         )
         rgba = pipeline.evaluate_steps(steps, ctx, registry=registry)
         if clip_poly is not None:

@@ -132,14 +132,14 @@ def slope_and_aspect(p: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarr
 # pixel shaders: (height, slope, aspect) arrays → RGBA (H, W, 4) uint8
 # ---------------------------------------------------------------------------
 
-def shade_igor(
+def igor_alpha(
     slope: np.ndarray,
     aspect: np.ndarray,
     sun_azimuth_rad: float = math.radians(DEFAULT_SUN_AZIMUTH_DEG),
-    shading_color: tuple[int, int, int, int] = (0, 0, 0, 0),
     intensity: float = 1.0,
 ) -> np.ndarray:
-    """Igor hillshading (IgorHillshader.fs:28-46). NaN aspect → transparent.
+    """Igor darkness (IgorHillshader.fs:28-46) as a bare uint8 alpha
+    plane, NaN aspect → 0.
 
     ``aspect`` is expected already normalized to [0, 2π) (the
     slope_and_aspect contract), so the circular difference needs no fmod.
@@ -154,57 +154,58 @@ def shade_igor(
     aspect_diff = np.where(diff > math.pi, two_pi - diff, diff)
     # keep the reference's exact operation order for bit parity
     darkness = (slope / (math.pi / 2.0)) * (aspect_diff / math.pi) * intensity
-    alpha = ratio_to_byte(np.where(valid, darkness, 0.0))
-    out = np.zeros(slope.shape + (4,), dtype=np.uint8)
-    if any(shading_color[:3]):
-        out[..., 0] = np.where(valid, shading_color[0], 0)
-        out[..., 1] = np.where(valid, shading_color[1], 0)
-        out[..., 2] = np.where(valid, shading_color[2], 0)
-    out[..., 3] = np.where(valid, alpha, 0)
-    return out
-
-
-def igor_alpha(
-    slope: np.ndarray,
-    aspect: np.ndarray,
-    sun_azimuth_rad: float = math.radians(DEFAULT_SUN_AZIMUTH_DEG),
-    intensity: float = 1.0,
-) -> np.ndarray:
-    """Igor darkness as a bare uint8 alpha plane (NaN aspect → 0).
-
-    Exactly the alpha channel :func:`shade_igor` would produce — the
-    fused igor-over-opaque path uses it to skip materializing the RGBA
-    layer (the RGB is constant black there).
-    """
-    valid = ~np.isnan(aspect)
-    two_pi = math.pi * 2.0
-    saz = float(normalize_angle(sun_azimuth_rad, two_pi))
-    aspect_n = aspect - two_pi * np.floor(aspect / two_pi)
-    diff = np.abs(aspect_n - saz)
-    aspect_diff = np.where(diff > math.pi, two_pi - diff, diff)
-    darkness = (slope / (math.pi / 2.0)) * (aspect_diff / math.pi) * intensity
     return ratio_to_byte(np.where(valid, darkness, 0.0))
 
 
-def _rdiv255(x: np.ndarray) -> np.ndarray:
-    """Exact rint(x/255) for non-negative integer x: (2x+255)//510.
-    x/255 never lands on .5 (255 is odd), so half-up == half-even ==
-    this pure-integer form — and numpy's constant integer division is
-    ~17× faster than the float multiply + rint it replaces."""
-    return (2 * x + 255) // 510
+def shade_igor(
+    slope: np.ndarray,
+    aspect: np.ndarray,
+    sun_azimuth_rad: float = math.radians(DEFAULT_SUN_AZIMUTH_DEG),
+    shading_color: tuple[int, int, int, int] = (0, 0, 0, 0),
+    intensity: float = 1.0,
+) -> np.ndarray:
+    """Igor hillshading as an RGBA layer: the shading color's RGB with
+    :func:`igor_alpha` as alpha; NaN aspect → transparent black."""
+    out = np.zeros(slope.shape + (4,), dtype=np.uint8)
+    if any(shading_color[:3]):
+        out[~np.isnan(aspect), :3] = shading_color[:3]
+    out[..., 3] = igor_alpha(slope, aspect, sun_azimuth_rad, intensity)
+    return out
 
 
-def darken_opaque_by_alpha(dest: np.ndarray, alpha: np.ndarray) -> np.ndarray:
-    """Composite a black source with the given alpha over a fully
-    opaque destination: out_rgb = rint(dst·(255−α)/255), out_α = 255 —
-    byte-identical to composite_over's black-source fast path without
-    ever building the source RGBA."""
-    inv = (255 - alpha.astype(np.uint32))[..., None]
+def _rdiv255(t: np.ndarray) -> np.ndarray:
+    """In place on a uint16 array of integers x ≤ 65025 (a byte × byte
+    product or a sum of two weighted by α and 255−α): rint(x/255).
+
+    With t = x + 128, ``(t + (t >> 8)) >> 8`` is exactly rint(x/255) on
+    that whole range and never overflows uint16 (x/255 never lands on
+    .5 since 255 is odd, so half-up == half-even)."""
+    t += 128
+    t += t >> 8
+    t >>= 8
+    return t
+
+
+def over_black(alpha: np.ndarray, dest: np.ndarray) -> np.ndarray:
+    """Composite a black layer of per-pixel ``alpha`` "over" ``dest``
+    whose alphas are all 0 or 255 — byte-identical to
+    :func:`composite_over` with a black source, without building it.
+
+    Opaque base: rgb = rint(dst·(255−α)/255), alpha 255.  Transparent
+    base (αd=0): the layer's own pixel (0,0,0,α) where α > 0, the base
+    unchanged where α = 0.
+    """
     out = np.empty_like(dest)
-    out[..., :3] = _rdiv255(
-        dest[..., :3].astype(np.uint32) * inv
-    ).astype(np.uint8)
+    inv = (255 - alpha).astype(np.uint16)
+    for c in range(3):  # one plane at a time: long inner loops, no (…,3) broadcast
+        out[..., c] = _rdiv255(dest[..., c] * inv)
     out[..., 3] = 255
+    holes = dest[..., 3] == 0
+    if holes.any():
+        a = alpha[holes]
+        src = np.zeros((a.size, 4), dtype=np.uint8)
+        src[:, 3] = a
+        out[holes] = np.where((a > 0)[:, None], src, dest[holes])
     return out
 
 
@@ -275,12 +276,14 @@ def shade_aspect(
     return out
 
 
-def shade_elevation(
-    heights: np.ndarray, scale: ColorScale, assume_int16: bool = False
-) -> np.ndarray:
-    """Elevation coloring over a float block, NaN → none-color
-    (ElevationColoring.fs:143-181)."""
-    return scale.colorize(heights, np.isnan(heights), assume_int16=assume_int16)
+def shade_elevation(heights: np.ndarray, scale: ColorScale) -> np.ndarray:
+    """Elevation coloring, missing → none-color (ElevationColoring.fs:143-181).
+
+    ``heights`` is an int16 block with the ``DEM_HEIGHT_NONE`` sentinel
+    (one LUT gather) or a float block with NaN = missing."""
+    if heights.dtype == np.int16:
+        return scale.colorize_dem(heights)
+    return scale.colorize(heights, np.isnan(heights))
 
 
 def solid_background(
@@ -306,37 +309,32 @@ def composite_over(source: np.ndarray, dest: np.ndarray) -> np.ndarray:
     A = sa·255 + da·(255−sa)  (all ≤ 3.3e7 → int32; this is the exact
     rational value of the reference's float formula, and the float32
     division is byte-identical to float64 over the full sampled domain).
-    The hot path runs on 128-row bands — int32/float32 keeps the
-    temporaries cache-resident, which is what lets 32 concurrent workers
-    scale (float64 triples the bandwidth per band).
+    An opaque destination makes A constant, and the blend runs in uint16
+    (see :func:`_rdiv255`); int32/float32 elsewhere keeps the 128-row
+    band temporaries cache-resident (float64 triples the bandwidth).
     """
-    sa8 = source[..., 3].astype(np.int32)
+    sa = source[..., 3]
     da8 = dest[..., 3]
     if (da8 == 255).all():
         # opaque destination (the dominant case: shading over an opaque
         # base layer): A is the constant 65025, so the division becomes
         # rgb = rint((src·sa + dst·(255−sa)) / 255) with a constant
         # divisor — exact, since x/255 never lands on .5 for integer x
-        inv = (255 - sa8)[..., None].astype(np.uint32)
-        out = np.empty_like(source)
         if not source[..., :3].any():
             # black source (igor/lambert/slope default shading color):
-            # the src·sa term vanishes — out = rint(dst·(255−sa)/255),
-            # one multiply instead of two multiplies + add, and the
-            # sa=255 short-circuit is already exact (rgb 0, alpha 255)
-            num = dest[..., :3].astype(np.uint32) * inv
-            out[..., :3] = _rdiv255(num).astype(np.uint8)
-            out[..., 3] = 255
-            return out
-        num = (
-            source[..., :3].astype(np.uint32)
-            * sa8[..., None].astype(np.uint32)
-            + dest[..., :3].astype(np.uint32) * inv
-        )
-        out[..., :3] = _rdiv255(num).astype(np.uint8)
+            # the src·sa term vanishes — the fused igor path's kernel
+            return over_black(sa, dest)
+        num = source[..., :3].astype(np.uint16)
+        num *= sa[..., None]
+        t = dest[..., :3].astype(np.uint16)
+        t *= (255 - sa)[..., None]
+        num += t
+        out = np.empty_like(source)
+        out[..., :3] = _rdiv255(num)
         out[..., 3] = 255
-        np.copyto(out, source, where=(sa8 == 255)[..., None])
+        np.copyto(out, source, where=(sa == 255)[..., None])
         return out
+    sa8 = sa.astype(np.int32)
     da8 = da8.astype(np.int32)
     inv = 255 - sa8
     da_inv = da8 * inv

@@ -100,29 +100,37 @@ class ShadeContext:
     slope/aspect in radians, NaN where any 3×3 neighbor was missing.
     ``water`` is an optional bool mask for the water shaders (the
     reference wires these as CustomShading steps over the XTH water bit,
-    TileShadeCommand.fs:428-494).  ``heights_are_int16`` lets elecolor
-    take the LUT-gather path without an integrality scan (true on the
-    tile-grid path, false for bilinear projected heights).
+    TileShadeCommand.fs:428-494).  ``dem`` is the int16 grid the heights
+    came from (``DEM_HEIGHT_NONE`` = missing), when there is one: the
+    tile path passes a view of its padded block and elecolor colors it
+    with one LUT gather; float-only callers (bilinear projected heights)
+    leave it None.
     """
 
     heights: np.ndarray
     slope: np.ndarray
     aspect: np.ndarray
     water: np.ndarray | None = None
-    heights_are_int16: bool = False
+    dem: np.ndarray | None = None
 
 
 def _color(params: dict, key: str, default):
     return parse_hex(params[key]) if key in params else default
 
 
+def _igor_args(params: dict) -> dict:
+    return {
+        "sun_azimuth_rad": math.radians(float(params.get("sunaz", -45.0))),
+        "intensity": float(params.get("intensity", 1.0)),
+    }
+
+
 def _shade_igor(ctx: ShadeContext, params: dict) -> np.ndarray:
     return kernels.shade_igor(
         ctx.slope,
         ctx.aspect,
-        sun_azimuth_rad=math.radians(float(params.get("sunaz", -45.0))),
         shading_color=_color(params, "shadcol", (0, 0, 0, 0)),
-        intensity=float(params.get("intensity", 1.0)),
+        **_igor_args(params),
     )
 
 
@@ -161,7 +169,7 @@ def _shade_elecolor(ctx: ShadeContext, params: dict) -> np.ndarray:
         parse_color_scale(params["scale"]) if "scale" in params else MAPERITIVE_SCALE
     )
     return kernels.shade_elevation(
-        ctx.heights, scale, assume_int16=ctx.heights_are_int16
+        ctx.heights if ctx.dem is None else ctx.dem, scale
     )
 
 
@@ -231,6 +239,14 @@ def register_shader(name: str, func) -> None:
     SHADER_REGISTRY[name] = func
 
 
+def _alpha_is_binary(alpha: np.ndarray) -> bool:
+    """Every alpha is 0 or 255 (an opaque base with transparent voids)."""
+    return (
+        np.count_nonzero(alpha == 255) + np.count_nonzero(alpha == 0)
+        == alpha.size
+    )
+
+
 def evaluate_steps(
     steps: list[Step], ctx: ShadeContext, registry: dict | None = None
 ) -> np.ndarray:
@@ -246,6 +262,16 @@ def evaluate_steps(
     shaders registered at runtime (register_shader) travel to executor
     processes with the task (a worker's freshly imported module never
     sees driver-side mutations).
+
+    Fused igor: a built-in ``igor`` with a black shading color composited
+    "over" a base whose alphas are all 0 or 255 (an opaque elecolor with
+    voids) never builds its RGBA layer — its RGB is constant black, so
+    :func:`kernels.over_black` applies the bare :func:`kernels.igor_alpha`
+    plane.  Opaque base pixels darken; a transparent base pixel becomes
+    (0,0,0,α) where α > 0 (Horn skips the centre cell, so an isolated
+    void still gets an aspect) and stays as it was where α = 0.  The
+    bytes equal shade_igor + composite_over's; a base with any alpha in
+    1..254 takes that general path.
     """
     reg = SHADER_REGISTRY if registry is None else registry
     image: np.ndarray | None = None
@@ -260,22 +286,12 @@ def evaluate_steps(
             and reg.get("igor") is _shade_igor
             and step.params.get("compose", "over") == "over"
             and _color(step.params, "shadcol", (0, 0, 0, 0))[:3] == (0, 0, 0)
-            and bool((image[..., 3] == 255).all())
+            and _alpha_is_binary(image[..., 3])
         ):
-            # fused igor-over-opaque: the layer's RGB is constant black,
-            # so only its alpha matters — skip materializing the RGBA
-            # layer and darken the base directly (byte-identical to
-            # shade_igor + composite_over's black-source path; the
-            # identity is pinned by a dedicated test)
             alpha = kernels.igor_alpha(
-                ctx.slope,
-                ctx.aspect,
-                sun_azimuth_rad=math.radians(
-                    float(step.params.get("sunaz", -45.0))
-                ),
-                intensity=float(step.params.get("intensity", 1.0)),
+                ctx.slope, ctx.aspect, **_igor_args(step.params)
             )
-            image = kernels.darken_opaque_by_alpha(image, alpha)
+            image = kernels.over_black(alpha, image)
             continue
         layer = reg[step.name](ctx, step.params)
         if image is None:

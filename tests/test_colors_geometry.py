@@ -79,6 +79,23 @@ def test_colorize_matches_scalar():
             assert tuple(out[y, x]) == expected
 
 
+def test_colorize_dem_matches_float_colorize():
+    """The int16 gather equals the float path over the whole int16
+    domain; the DEM_HEIGHT_NONE sentinel takes the none color."""
+    from demeton_spark.tiles import DEM_HEIGHT_NONE
+
+    scale = colors.parse_color_scale("-100:#102030;0:#ccf3ff;"
+                                     "2500:#f2ebd2;none:#40ff8000")
+    dem = np.arange(-32768, 32768, dtype=np.int64).astype(np.int16)
+    dem = dem.reshape(256, 256)
+    f = dem.astype(np.float64)
+    f[dem == DEM_HEIGHT_NONE] = np.nan
+    out = scale.colorize_dem(dem)
+    assert np.array_equal(out, scale.colorize(f, np.isnan(f)))
+    assert tuple(out[0, 0]) == scale.none_color
+    assert np.array_equal(out[::5, 1::3], scale.colorize_dem(dem[::5, 1::3]))
+
+
 def test_normalize_angle():
     assert geometry.normalize_angle(-math.pi / 2, 2 * math.pi) == pytest.approx(
         3 * math.pi / 2

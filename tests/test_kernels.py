@@ -307,6 +307,102 @@ def test_fused_igor_over_opaque_identical_to_unfused():
     assert np.array_equal(fused, kernels.composite_over(layer, base))
 
 
+def test_over_black_exhaustive_against_composite_over():
+    """Every dst byte × igor alpha 0..255 × base alpha 0 and 255: the
+    fused kernel equals composite_over with a black source (the mixed
+    base alphas route composite_over through its general blend) and the
+    exact rint(dst·(255−α)/255) on the opaque half."""
+    d, a = (g.ravel() for g in np.meshgrid(
+        np.arange(256, dtype=np.uint8), np.arange(256, dtype=np.uint8)))
+    dest = np.zeros((2, d.size, 4), dtype=np.uint8)
+    dest[..., 0] = d
+    dest[..., 1] = 255 - d
+    dest[..., 2] = d // 3
+    dest[0, :, 3] = 255
+    dest[1, :, 3] = 0
+    alpha = np.broadcast_to(a, (2, a.size))
+    src = np.zeros_like(dest)
+    src[..., 3] = alpha
+
+    fused = kernels.over_black(alpha, dest)
+    assert np.array_equal(fused, kernels.composite_over(src, dest))
+    exact = np.rint(dest[0, :, :3] * (255.0 - a[:, None]) / 255.0)
+    assert np.array_equal(fused[0, :, :3], exact.astype(np.uint8))
+    assert (fused[0, :, 3] == 255).all()
+    # transparent base: (0,0,0,α) where α > 0, the base itself where α = 0
+    hole = fused[1]
+    assert np.array_equal(hole[a == 0], dest[1][a == 0])
+    assert (hole[a > 0, :3] == 0).all() and np.array_equal(hole[a > 0, 3], a[a > 0])
+
+
+def test_fused_igor_over_voids_and_half_transparent_base():
+    """A base with transparent voids takes the fused branch, a base with
+    alpha 128 the general one; both equal shade_igor + composite_over."""
+    import math
+
+    from demeton_spark import pipeline as P
+    from demeton_spark.colors import parse_color_scale
+
+    rng = np.random.default_rng(11)
+    h, w = 48, 48
+    heights = rng.uniform(0, 3000, (h, w))
+    heights[::7, ::5] = np.nan  # isolated voids: Horn still finds an aspect
+    ctx = P.ShadeContext(
+        heights=heights,
+        slope=rng.uniform(0, math.pi / 2, (h, w)),
+        aspect=rng.uniform(0, 2 * math.pi, (h, w)),
+    )
+    ctx.slope[:4, :4] = 0.0  # igor alpha 0 over some voids
+    voids = np.isnan(heights)
+    marks = "0:#ccf3ff;1:#8ed48e;700:#f5fac4;3500:#ffffff;"
+    layer = kernels.shade_igor(ctx.slope, ctx.aspect)
+    for none, base_alpha in (("#00000000", 0), ("#00ff0000", 0),
+                             ("#80336699", 128)):
+        scale = marks + "none:" + none
+        steps = [P.Step("elecolor", {"scale": scale}), P.Step("igor", {})]
+        base = kernels.shade_elevation(heights, parse_color_scale(scale))
+        ref = kernels.composite_over(layer, base)
+        assert (ref[voids, 3] != base_alpha).any()  # some voids got shaded
+        assert np.array_equal(P.evaluate_steps(steps, ctx), ref), none
+
+
+def test_fused_igor_on_hole_tile_matches_general_path(monkeypatch):
+    """On a synthetic tile with hole blocks the engine's shade (fused
+    igor, elecolor gathered from the int16 band) is byte-identical to the
+    general path: a wrapped igor defeats the fusion check and elecolor
+    sees a ShadeContext without the int16 band."""
+    import dataclasses
+
+    from demeton_spark import engine, pipeline as P, synth
+
+    ts = 1800  # steep enough per cell that isolated voids get shaded
+    spec = synth.WorldSpec(lon0=13, lat0=45, n_tiles_x=1, n_tiles_y=1,
+                           tile_size=ts, block_size=300)
+    world = synth.expected_world_heights(spec)
+    voids = (world == DEM_HEIGHT_NONE)[::-1]  # bitmap orientation
+    assert voids.any()  # the hole blocks are in
+    padded = np.full((ts + 2, ts + 2), DEM_HEIGHT_NONE, dtype=np.int16)
+    padded[1:-1, 1:-1] = world
+    steps = P.parse_script("elecolor|+igor")
+    general = dict(P.SHADER_REGISTRY)
+    general["igor"] = lambda ctx, params: P._shade_igor(ctx, params)
+    general["elecolor"] = lambda ctx, params: P._shade_elecolor(
+        dataclasses.replace(ctx, dem=None), params)
+
+    blends = []
+    over = kernels.composite_over
+    monkeypatch.setitem(kernels.COMPOSITING_FUNCS, "over",
+                        lambda s, d: blends.append(1) or over(s, d))
+    fast, n_fast = engine.shade_padded_block(padded, 13, 45, ts, steps)
+    assert blends == []  # every band fused, the hole bands included
+    slow, n_slow = engine.shade_padded_block(padded, 13, 45, ts, steps,
+                                             registry=general)
+    assert len(blends) == -(-ts // engine.SHADE_BAND_ROWS)
+    assert np.array_equal(fast, slow) and n_fast == n_slow
+    # voids under igor alpha 0 stay transparent, the others go (0,0,0,α)
+    assert 0 < np.count_nonzero(fast[voids, 3]) < voids.sum()
+
+
 def test_igor_override_beats_fusion():
     """register_shader('igor', custom) must win even when the base layer
     is fully opaque and shadcol is black — the fused fast path only

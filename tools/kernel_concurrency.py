@@ -3,18 +3,18 @@
 Runs the exact per-tile kernel the hillshade pipeline executes on every
 task — ``engine.shade_padded_block`` (band-looped float32 Horn +
 elecolor|+igor shaders) followed by ``codec.encode_rgba_png`` at the
-bench sink level — across N independent OS processes, on the same
-deterministic 1800² synthetic tile.  This isolates the numpy/zlib
-compute from Spark's scheduling, Arrow transfer and shuffle, so the
-core-scaling bench (bench.py --scaling) can be read against a measured
-per-process ceiling instead of an assumed one: if local[32]/local[8]
-efficiency in the Spark job is below the kernel's own 8→32 ratio, the
-gap is harness overhead; if it matches, it is the platform memory wall.
+bench sink level — in 1 and in ``nproc`` independent OS processes, on
+the same deterministic 1800² synthetic tile (hole blocks included).
+This isolates the numpy/zlib compute from Spark's scheduling, Arrow
+transfer and shuffle: the 1-process leg gives the per-tile shade and
+encode times, the nproc leg the host's kernel ceiling for a
+``local[nproc]`` Spark job (no leg oversubscribes the host's cores).
 
-Writes BENCH/KERNEL_CONCURRENCY.json and prints one JSON line.
+Usage: ``python tools/kernel_concurrency.py``.  Writes
+BENCH/KERNEL_CONCURRENCY.json and prints one JSON line.
 
 Methodology notes:
-  - trials are INTERLEAVED across process counts (1,8,32 then again,
+  - trials are INTERLEAVED across process counts (1, nproc, then again,
     ...) so hypervisor-steal drift hits every level equally;
   - per-level value = median across rounds of the mean per-process
     tile time;
@@ -37,14 +37,12 @@ TILE = 1800
 MPX_PER_TILE = TILE * TILE / 1e6
 
 
-def _work(args: tuple[int, int]) -> tuple[float, float, float]:
-    n_tiles, band = args
+def _work(n_tiles: int) -> tuple[float, float, float]:
     import numpy as np
 
     from demeton_spark import codec, engine, pipeline
     from demeton_spark.synth import WorldSpec, expected_world_heights
 
-    engine.SHADE_BAND_ROWS = band
     spec = WorldSpec(lon0=0, lat0=40, n_tiles_x=1, n_tiles_y=1,
                      tile_size=TILE, block_size=300)
     world = expected_world_heights(spec)
@@ -68,8 +66,10 @@ def _work(args: tuple[int, int]) -> tuple[float, float, float]:
 def main() -> None:
     from bench import probe_steal
 
-    band = int(os.environ.get("DEMETON_SHADE_BAND_ROWS", "128"))
-    levels = (1, 8, 32)
+    from demeton_spark.engine import SHADE_BAND_ROWS
+
+    nproc = len(os.sched_getaffinity(0))
+    levels = sorted({1, nproc})
     rounds = 3
     tiles_per_proc = 4
     steal_before = probe_steal()
@@ -78,7 +78,7 @@ def main() -> None:
     for _ in range(rounds):
         for n in levels:
             with ctx.Pool(n) as pool:
-                res = pool.map(_work, [(tiles_per_proc, band)] * n)
+                res = pool.map(_work, [tiles_per_proc] * n)
             tot = sum(r[0] for r in res) / n
             per_level[n].append({
                 "per_tile_sec": tot,
@@ -93,7 +93,8 @@ def main() -> None:
 
     out = {
         "metric": "shade-kernel concurrency ceiling (no Spark)",
-        "band_rows": band,
+        "band_rows": SHADE_BAND_ROWS,
+        "nproc": nproc,
         "tile_px": TILE,
         "rounds": rounds,
         "steal_probe": {"before": steal_before, "after": steal_after},
@@ -110,14 +111,10 @@ def main() -> None:
             for n in levels
         },
     }
-    # 1→8 is an 8× width step, so divide the speedup by 8 (not the
-    # N→4N convention's 4 — that mislabeled 0.837 as 1.674 in r4)
-    e18 = out["levels"]["8"]["agg_mpx_per_sec"] / (
-        8.0 * out["levels"]["1"]["agg_mpx_per_sec"])
-    e832 = out["levels"]["32"]["agg_mpx_per_sec"] / (
-        4.0 * out["levels"]["8"]["agg_mpx_per_sec"])
-    out["kernel_efficiency_1_to_8"] = round(e18, 3)
-    out["kernel_efficiency_8_to_32"] = round(e832, 3)
+    # scaling efficiency 1 → nproc: aggregate speedup over the width step
+    out["kernel_efficiency_1_to_n"] = round(
+        out["levels"][str(levels[-1])]["agg_mpx_per_sec"]
+        / (levels[-1] * out["levels"]["1"]["agg_mpx_per_sec"]), 3)
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "KERNEL_CONCURRENCY.json"), "w") as f:
         json.dump(out, f, indent=1)
