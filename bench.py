@@ -857,13 +857,11 @@ Arrow.  Interleaved rounds, steal probed
   the hardware's own ceiling for this compute at 32-way (per-tile time
   inflates {kc['levels']['32']['per_tile_sec'] / kc['levels']['8']['per_tile_sec']:.2f}×
   with zero framework involved: memory bandwidth, not Spark).
-- The ceiling itself moves with co-tenant weather: an r4 run of the
-  same tool measured 8→32 = 0.691 (level-1 rounds spread 4.7–8.8
-  Mpx/s — a contended window); the r5 clean-window run above reads
-  0.852.  Spark-vs-ceiling comparisons are only valid within matching
-  weather, and in any weather some of the Spark 8→32 gap below the
-  clean ceiling is harness cost (shuffle fetch + Arrow + scheduling),
-  not hardware.
+- The ceiling itself moves with co-tenant weather; this run reads
+  8→32 = {kc['kernel_efficiency_8_to_32']}.  Spark-vs-ceiling comparisons are only
+  valid within matching weather, and in any weather some of the Spark
+  8→32 gap below the ceiling is harness cost (shuffle fetch + Arrow +
+  scheduling), not hardware.
 - Artifact: `BENCH/KERNEL_CONCURRENCY.json`.
 
 Any Spark 8→32 number must be read against this ceiling: the plan's

@@ -5,6 +5,15 @@ splitting), Arrow transfer for pandas UDFs, shuffle partitions sized to
 the core count (tiles are coarse units — a few per core is enough), and
 generous Arrow batch limits because one assembled tile row is a multi-MB
 binary blob.
+
+Local masters (``local``, ``local[N]``) start their Python workers through
+``demeton_spark.pyworker``: Spark puts its own pyspark.zip, py4j zip and
+spark-core jar on every worker's path, and each task's
+``importlib.invalidate_caches()`` then re-reads those archives (0.1-0.26
+CPU-s per task).  Local workers inherit this process's environment, where
+pyspark is installed and ``demeton_spark`` is importable (every UDF here
+needs it).  Cluster masters keep Spark's own daemon: their workers may not
+see ``demeton_spark`` until ``--py-files`` are added, after the daemon starts.
 """
 
 from __future__ import annotations
@@ -35,7 +44,7 @@ def build_session(
     for k, v in worker_env.items():
         os.environ.setdefault(k, v)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     # parse local[N] for partition sizing; cluster masters fall back to cpus
     if master.startswith("local[") and master[6:-1].isdigit():
@@ -70,6 +79,9 @@ def build_session(
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config("spark.python.daemon.module",
+                                 "demeton_spark.pyworker")
     for k, v in worker_env.items():  # cluster mode: ship to executors too
         builder = builder.config(f"spark.executorEnv.{k}", v)
     for k, v in (extra_conf or {}).items():
