@@ -1,4 +1,6 @@
-"""Binary codecs: 16-bit grayscale PNG, RGBA8 PNG, HGT, XTH.
+"""Binary codecs: 16-bit grayscale PNG, RGBA8 PNG, HGT, XTH, gray16 TIFF,
+and :func:`decode_block`, the one reader of the image table's block
+formats.
 
 Parity with the reference is at the **decoded-pixel** level (SURVEY.md
 §2.1 S4/S5): we use zlib + numpy instead of re-implementing Demeton's
@@ -13,6 +15,7 @@ Reference semantics (file:line in /root/reference):
   - HGT big-endian, north-first rows, 1-px overlap skip:
                                          Demeton/Dem/Hgt.fs:14-129
   - XTH little-endian + water-bit packing: Demeton/Dem/Xth.fs:19-200
+  - AW3D GeoTIFF strips, south-up rows:  Demeton/Aw3d/Funcs.fs:180-261
 """
 
 from __future__ import annotations
@@ -612,418 +615,36 @@ def encode_tiff_gray16(
     return bytes(out)
 
 
+# --- image-table block formats --------------------------------------------
+
+def decode_block(fmt: str, payload: bytes, width: int) -> np.ndarray:
+    """One image-table payload → its int16 block, row 0 = south.
+
+    ``png16``, ``hgt`` and ``tiff`` are the reference's three DEM
+    encodings (Srtm/Png.fs:29-70, Dem/Hgt.fs:14-92, Aw3d/Funcs.fs:
+    180-261); ``raw`` is the engine's own little-endian int16 strip
+    payload, ``width`` cells wide.  An unknown format or a malformed
+    payload raises ``ValueError``, so one ``except`` quarantines a bad
+    row whatever layer of the decoder it broke.
+    """
+    payload = bytes(payload)
+    try:
+        if fmt == "png16":
+            return decode_heights_png(payload)
+        if fmt == "hgt":
+            return decode_hgt(payload, width)
+        if fmt == "tiff":
+            return decode_tiff_gray16(payload)
+        if fmt == "raw":
+            return np.frombuffer(payload, dtype="<i2").reshape(-1, width)
+    except (struct.error, zlib.error, KeyError, IndexError) as e:
+        raise ValueError(f"malformed {fmt} payload: {e!r}") from e
+    raise ValueError(f"unknown block format {fmt!r}")
+
+
 def psnr(a: np.ndarray, b: np.ndarray, peak: float = 65535.0) -> float:
     """Peak signal-to-noise ratio in dB (∞ for identical arrays)."""
     mse = float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))
     if mse == 0.0:
         return float("inf")
     return 10.0 * np.log10(peak * peak / mse)
-
-
-# ---------------------------------------------------------------------------
-# BMP (Windows DIB): 8-bpp paletted gray + 24-bpp BGR, BI_RGB only.
-# No reference counterpart (the reference decodes PNG/TIFF/HGT only) —
-# this is multimodal-extras surface: web-corpus image tables carry BMP
-# rows and the engine must decode them without a codec library.
-# ---------------------------------------------------------------------------
-
-def decode_bmp(data: bytes) -> np.ndarray:
-    """BMP bytes → uint8 array: ``(h, w)`` for 8-bpp gray-paletted,
-    ``(h, w, 3)`` RGB for 24-bpp.  Uncompressed (BI_RGB) BITMAPINFOHEADER
-    (or later, e.g. V4/V5 — header size ≥ 40) only; rows are 4-byte
-    padded, bottom-up unless height is negative.  Raises ``ValueError``
-    on corrupt/unsupported input (→ multimodal quarantine)."""
-    if len(data) < 54 or data[:2] != b"BM":
-        raise ValueError("not a BMP stream")
-    pix_off = struct.unpack_from("<I", data, 10)[0]
-    hdr_size = struct.unpack_from("<I", data, 14)[0]
-    if hdr_size < 40:
-        raise ValueError(f"unsupported BMP header size {hdr_size}")
-    w, h = struct.unpack_from("<ii", data, 18)
-    planes, bpp = struct.unpack_from("<HH", data, 26)
-    compression = struct.unpack_from("<I", data, 30)[0]
-    if planes != 1 or compression != 0:
-        raise ValueError("only uncompressed (BI_RGB) BMP is supported")
-    if w <= 0 or h == 0:
-        raise ValueError("bad BMP dimensions")
-    bottom_up = h > 0
-    h = abs(h)
-    if bpp == 8:
-        n_colors = struct.unpack_from("<I", data, 46)[0] or 256
-        pal_off = 14 + hdr_size
-        pal = np.frombuffer(
-            data[pal_off : pal_off + 4 * n_colors], np.uint8
-        ).reshape(-1, 4)  # BGRX
-        if len(pal) < n_colors:
-            raise ValueError("truncated BMP palette")
-        stride = (w + 3) & ~3
-        need = stride * h
-        raw = np.frombuffer(data[pix_off : pix_off + need], np.uint8)
-        if len(raw) < need:
-            raise ValueError("truncated BMP pixel data")
-        idx = raw.reshape(h, stride)[:, :w]
-        # ITU-R 601 luma over the BGRX palette, rounded
-        luma = np.round(
-            0.114 * pal[:, 0] + 0.587 * pal[:, 1] + 0.299 * pal[:, 2]
-        ).astype(np.uint8)
-        img = luma[idx]
-    elif bpp == 24:
-        stride = (3 * w + 3) & ~3
-        need = stride * h
-        raw = np.frombuffer(data[pix_off : pix_off + need], np.uint8)
-        if len(raw) < need:
-            raise ValueError("truncated BMP pixel data")
-        img = raw.reshape(h, stride)[:, : 3 * w].reshape(h, w, 3)[..., ::-1]
-    else:
-        raise ValueError(f"unsupported BMP bit depth {bpp}")
-    return img[::-1].copy() if bottom_up else img.copy()
-
-
-def encode_bmp_gray8(img: np.ndarray) -> bytes:
-    """uint8 ``(h, w)`` → 8-bpp BMP with an identity gray palette."""
-    h, w = img.shape
-    stride = (w + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, :w] = img
-    payload = rows[::-1].tobytes()  # bottom-up
-    pal = bytearray()
-    for i in range(256):
-        pal += bytes((i, i, i, 0))  # BGRX
-    pix_off = 14 + 40 + len(pal)
-    header = b"BM" + struct.pack(
-        "<IHHI", pix_off + len(payload), 0, 0, pix_off
-    ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 0, len(payload),
-                    2835, 2835, 256, 0)
-    return header + bytes(pal) + payload
-
-
-def encode_bmp_rgb24(img: np.ndarray) -> bytes:
-    """uint8 ``(h, w, 3)`` RGB → 24-bpp BMP."""
-    h, w, _ = img.shape
-    stride = (3 * w + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : 3 * w] = img[..., ::-1].reshape(h, 3 * w)  # RGB → BGR
-    payload = rows[::-1].tobytes()
-    pix_off = 14 + 40
-    header = b"BM" + struct.pack(
-        "<IHHI", pix_off + len(payload), 0, 0, pix_off
-    ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(payload),
-                    2835, 2835, 0, 0)
-    return header + payload
-
-
-# ---------------------------------------------------------------------------
-# GIF 87a/89a: variable-width LSB-first LZW (distinct from the TIFF
-# variant above: LSB packing, dynamic min-code-size, no early change),
-# global/local palettes, interlace, extension skipping.  First frame only
-# (animation frames are rows in the videos table, not one payload).
-# ---------------------------------------------------------------------------
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> bytearray:
-    """GIF-variant LZW: LSB-first, width = mcs+1 growing to 12 bits
-    (bump AFTER the table fills 2^width, no early change), Clear =
-    2^mcs, EOI = 2^mcs + 1."""
-    if not 2 <= min_code_size <= 8:
-        raise ValueError(f"bad GIF LZW min code size {min_code_size}")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    table: list[bytes] = []
-    prev: bytes | None = None
-    out = bytearray()
-    acc = 0
-    nacc = 0
-    for byte in data:
-        acc |= byte << nacc
-        nacc += 8
-        while nacc >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nacc -= width
-            if code == eoi:
-                return out
-            if code == clear:
-                table = [bytes([i]) for i in range(clear)] + [b"", b""]
-                width = min_code_size + 1
-                prev = None
-                continue
-            if prev is None:
-                if not table:
-                    raise ValueError("GIF LZW stream must start with Clear")
-                if code >= len(table):
-                    raise ValueError("corrupt GIF LZW: first code not literal")
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise ValueError("corrupt GIF LZW: code beyond table")
-            out += entry
-            if len(out) >= max_pixels:
-                return out
-            prev = entry
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-    return out
-
-
-def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """Inverse of :func:`_gif_lzw_decode` (greedy longest-match)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nacc = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nacc
-        acc |= code << nacc
-        nacc += width
-        while nacc >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-
-    width = min_code_size + 1
-    emit(clear, width)
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    run = b""
-    for b in indices:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], width)
-        table[cand] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << width) and width < 12:
-            width += 1
-        if next_code == (1 << 12):
-            emit(clear, width)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        run = bytes([b])
-    if run:
-        emit(table[run], width)
-    emit(eoi, width)
-    if nacc:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _gif_frames(data: bytes):
-    """Yield composited full-canvas uint8 ``(sh, sw, 3)`` RGB frames.
-
-    Walks the 89a/87a block structure: logical screen descriptor +
-    optional global color table, Graphic Control Extensions honoured
-    (transparency index skipped during compositing; disposal methods
-    1 leave / 2 restore-background / 3 restore-previous), local
-    palettes and interlacing honoured, other extensions skipped.
-    Raises ``ValueError`` on corrupt streams."""
-    if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF stream")
-    sw, sh, flags, bg_idx = struct.unpack_from("<HHBB", data, 6)
-    pos = 13
-    global_pal = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        global_pal = np.frombuffer(data[pos : pos + 3 * n], np.uint8)
-        if len(global_pal) < 3 * n:
-            raise ValueError("truncated GIF global color table")
-        global_pal = global_pal.reshape(n, 3)
-        pos += 3 * n
-
-    bg_rgb = (
-        global_pal[bg_idx]
-        if global_pal is not None and bg_idx < len(global_pal)
-        else np.zeros(3, np.uint8)
-    )
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).copy()
-    # GCE state for the NEXT image descriptor
-    transparent = -1
-    disposal = 0
-
-    def skip_subblocks(p: int) -> int:
-        while True:
-            if p >= len(data):
-                raise ValueError("truncated GIF sub-blocks")
-            size = data[p]
-            p += 1
-            if size == 0:
-                return p
-            p += size
-
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            return
-        if block == 0x21:  # extension
-            if pos >= len(data):
-                raise ValueError("truncated GIF extension")
-            label = data[pos]
-            if label == 0xF9 and pos + 6 <= len(data) and data[pos + 1] == 4:
-                gflags = data[pos + 2]
-                disposal = (gflags >> 2) & 7
-                transparent = data[pos + 5] if gflags & 1 else -1
-            pos = skip_subblocks(pos + 1)
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        if pos + 9 > len(data):
-            raise ValueError("truncated GIF image descriptor")
-        ix, iy, iw, ih, iflags = struct.unpack_from("<HHHHB", data, pos)
-        pos += 9
-        if ix + iw > sw or iy + ih > sh:
-            raise ValueError("GIF frame outside logical screen")
-        pal = global_pal
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            pal = np.frombuffer(data[pos : pos + 3 * n], np.uint8)
-            if len(pal) < 3 * n:
-                raise ValueError("truncated GIF local color table")
-            pal = pal.reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image with no color table")
-        if pos >= len(data):
-            raise ValueError("truncated GIF image data")
-        mcs = data[pos]
-        pos += 1
-        chunks = []
-        while True:
-            if pos >= len(data):
-                raise ValueError("truncated GIF sub-blocks")
-            size = data[pos]
-            pos += 1
-            if size == 0:
-                break
-            chunks.append(data[pos : pos + size])
-            if len(chunks[-1]) < size:
-                raise ValueError("truncated GIF sub-block")
-            pos += size
-        idx = _gif_lzw_decode(b"".join(chunks), mcs, iw * ih)
-        if len(idx) < iw * ih:
-            raise ValueError("GIF pixel data underrun")
-        grid = np.frombuffer(bytes(idx[: iw * ih]), np.uint8).reshape(ih, iw)
-        if iflags & 0x40:  # interlaced: rows arrive in 4 passes
-            out_rows = np.empty_like(grid)
-            src = 0
-            for start, step in _GIF_INTERLACE_PASSES:
-                n_rows = len(range(start, ih, step))
-                out_rows[start::step] = grid[src : src + n_rows]
-                src += n_rows
-            grid = out_rows
-        opaque = grid != transparent if transparent >= 0 else slice(None)
-        if int(grid[opaque].max(initial=0)) >= len(pal):
-            raise ValueError("GIF index beyond palette")
-        prev = canvas.copy() if disposal == 3 else None
-        rect = canvas[iy : iy + ih, ix : ix + iw]
-        if transparent >= 0:
-            rect[opaque] = pal[grid[opaque]]
-        else:
-            rect[:] = pal[grid]
-        yield canvas.copy()
-        if disposal == 2:  # restore rect to background
-            canvas[iy : iy + ih, ix : ix + iw] = bg_rgb
-        elif disposal == 3:  # restore to pre-frame canvas
-            canvas = prev
-        transparent, disposal = -1, 0
-    raise ValueError("GIF stream missing trailer")
-
-
-def decode_gif(data: bytes) -> np.ndarray:
-    """GIF bytes → uint8 ``(h, w, 3)`` RGB (first composited frame)."""
-    for frame in _gif_frames(data):
-        return frame
-    raise ValueError("GIF stream has no image descriptor")
-
-
-def decode_gif_frames(data: bytes) -> list[np.ndarray]:
-    """Animated GIF bytes → every composited uint8 ``(h, w, 3)`` frame.
-
-    Animated GIF is the one real video container decodable from public
-    spec without a codec library; this backs the engine's video
-    frame-sampling path (multimodal.frame_sample fmt='gif')."""
-    frames = list(_gif_frames(data))
-    if not frames:
-        raise ValueError("GIF stream has no image descriptor")
-    return frames
-
-
-def encode_gif_gray(img: np.ndarray, interlace: bool = False) -> bytes:
-    """uint8 ``(h, w)`` → single-frame GIF89a with a 256-gray global
-    palette (test/fixture generator for the decoder above)."""
-    h, w = img.shape
-    pal = bytearray()
-    for i in range(256):
-        pal += bytes((i, i, i))
-    grid = img
-    if interlace:
-        rows = []
-        for start, step in _GIF_INTERLACE_PASSES:
-            rows.append(img[start::step])
-        grid = np.concatenate(rows, axis=0)
-    lzw = _gif_lzw_encode(grid.tobytes(), 8)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | 7, 0, 0)  # global pal, 256
-    out += pal
-    out += b"\x2c" + struct.pack(
-        "<HHHHB", 0, 0, w, h, 0x40 if interlace else 0
-    )
-    out.append(8)  # LZW min code size
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def encode_gif_anim(
-    frames: list,
-    rects: list | None = None,
-    disposals: list | None = None,
-    transparent: int = -1,
-    bg_index: int = 0,
-) -> bytes:
-    """Animated GIF89a fixture generator for :func:`decode_gif_frames`.
-
-    ``frames`` are uint8 gray arrays (256-gray global palette).  Frame
-    ``k > 0`` may be a sub-rectangle placed at ``rects[k] = (ix, iy)``;
-    ``disposals[k]`` is the GCE disposal method applied AFTER frame k
-    (0/1 leave, 2 restore-background, 3 restore-previous); pixels equal
-    to ``transparent`` are transparent in frames > 0."""
-    h, w = frames[0].shape
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | 7, bg_index, 0)
-    for i in range(256):
-        out += bytes((i, i, i))
-    for k, frame in enumerate(frames):
-        ix, iy = (rects[k] if rects and rects[k] else (0, 0))
-        disposal = disposals[k] if disposals else 0
-        gflags = (disposal & 7) << 2
-        tr = 0
-        if transparent >= 0 and k > 0:
-            gflags |= 1
-            tr = transparent
-        out += b"\x21\xf9\x04" + bytes((gflags, 0, 0, tr)) + b"\x00"
-        fh, fw = frame.shape
-        out += b"\x2c" + struct.pack("<HHHHB", ix, iy, fw, fh, 0)
-        out.append(8)
-        lzw = _gif_lzw_encode(frame.tobytes(), 8)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)

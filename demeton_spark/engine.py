@@ -155,16 +155,6 @@ def _place(d: int, i: int, size: int, ts: int, k: int) -> slice:
     return slice(k + i * size, k + (i + 1) * size)
 
 
-def _decode_block(fmt: str, payload: bytes, block_size: int) -> np.ndarray:
-    if fmt == "png16":
-        return codec.decode_heights_png(bytes(payload))
-    if fmt == "hgt":
-        return codec.decode_hgt(bytes(payload), block_size)
-    if fmt == "raw":  # int16 LE cells, row-major, block_size wide
-        return np.frombuffer(payload, dtype="<i2").reshape(-1, block_size)
-    raise ValueError(f"unknown block format {fmt!r}")
-
-
 def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
     """Image rows → the k-px strip rows (PART_SCHEMA, fmt='raw') their
     border blocks donate to neighbor tiles.  Strip rows keep the
@@ -184,7 +174,7 @@ def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
             if not (_on_edge(dx, bx, nx) and _on_edge(dy, by, ny)):
                 continue
             if block is None:
-                block = _decode_block(fmt, payload, w)
+                block = codec.decode_block(fmt, payload, w)
             strip = block[_cut(dy, h, halo), _cut(dx, w, halo)]
             row = (int(tx) + dx, int(ty) + dy, part, bx, by, iid, w, h,
                    "raw", strip.tobytes())
@@ -300,7 +290,7 @@ def compose_padded(
         w, h, bx, by = int(w), int(h), int(bx), int(by)
         dx, dy = _HALO_PARTS.get(part, (0, 0))
         region = padded[_place(dy, by, h, ts, k), _place(dx, bx, w, ts, k)]
-        cells = (_decode_block(fmt, payload, w) if part == "B"
+        cells = (codec.decode_block(fmt, payload, w) if part == "B"
                  else np.frombuffer(payload, dtype="<i2"))
         region[...] = cells.reshape(region.shape)
     return padded, n_blocks

@@ -1,31 +1,20 @@
-"""Multimodal column operators: decode / verify / resize / feature-
-extract / frame-sample over opaque ``binary`` payloads with typed
-metadata — all Arrow-batched ``mapInPandas``, no per-row Python UDFs.
+"""Multimodal column operators over opaque ``binary`` payloads with
+typed metadata — all Arrow-batched ``mapInPandas``, no per-row Python
+UDFs.
 
-The image formats the engine owns decode for real: ``png16`` 16-bit
-grayscale PNG and ``hgt`` big-endian int16 (the reference's two DEM
-encodings, /root/reference/Demeton/Srtm/Png.fs:29-70 and
-Dem/Hgt.fs:14-92), ``tiff`` gray16 (the AW3D GeoTIFF shape,
-Aw3d/Funcs.fs:180-261) via :mod:`demeton_spark.codec`, and baseline
-``jpeg`` via the from-scratch pure-numpy codec in
-:mod:`demeton_spark.jpeg` (mirroring the reference's from-scratch PNG
-ethos, Png/Chunks.fs:21-213), and lossless ``webp`` via the
-from-scratch VP8L bitstream codec in :mod:`demeton_spark.vp8l`.
-Audio decodes for real too: WAV/PCM via the from-scratch RIFF codec
-in :mod:`demeton_spark.audio`; video via animated GIF
-(:func:`demeton_spark.codec.decode_gif_frames` under
-:func:`frame_sample`).  Only compressed-audio (mp3/aac) and
-compressed-video (h264/vp9) bitstreams remain out of scope — no
-decoder library exists in this environment and those are
-patent-thickets rather than ~1k-LoC specs; such rows route to the
-quarantine path.  The
-Spark-side contract — schemas, batch shapes, quarantine routing,
-partitioning — is real and tested.
+Images: ``decode_images`` and ``verify_images`` read the image table's
+block formats through :func:`demeton_spark.codec.decode_block` — the
+reference's three DEM encodings (``png16``, ``hgt``, AW3D ``tiff``)
+plus the engine's ``raw`` strips — the same decoder the tile engine
+uses.  Audio: ``audio_features`` decodes WAV/PCM via the from-scratch
+RIFF codec in :mod:`demeton_spark.audio`.  Any other format, and any
+malformed payload, raises ``ValueError``, which ``on_error='skip'``
+turns into a dropped row.
 
 ``verify_images`` implements the per-row invariant from the build
 target: decoded pixels must hash to the row's ``phash`` (allclose/
-PSNR≥40dB reduces to exact equality for the lossless formats we own)
-and the caption must parse.
+PSNR≥40dB reduces to exact equality for these lossless formats) and
+the caption must parse.
 """
 
 from __future__ import annotations
@@ -33,68 +22,15 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from . import codec, kernels
+from . import codec
 
 DECODED_SCHEMA = (
     "image_id string, w int, h int, fmt string, pixels binary, "
     "caption string, phash long"
 )
-
-
-def _decode_payload(fmt: str, payload: bytes, w: int, h: int) -> np.ndarray:
-    """Binary → int16 (h, w) block.  Real for png16/hgt/tiff/jpeg/bmp/
-    gif/webp (baseline JPEG, BMP, GIF-LZW and VP8L WebP decoded from
-    scratch: :mod:`demeton_spark.jpeg`, :mod:`demeton_spark.codec`,
-    :mod:`demeton_spark.vp8l`); color decodes to ITU-R 601 luma (the
-    engine's rasters are gray).  Corrupt payloads raise ``ValueError``
-    → the ``on_error='skip'`` quarantine path."""
-    if fmt == "png16":
-        return codec.decode_heights_png(bytes(payload))
-    if fmt == "hgt":
-        return codec.decode_hgt(bytes(payload), w)
-    if fmt == "tiff":
-        return codec.decode_tiff_gray16(bytes(payload))
-    if fmt == "jpeg":
-        from . import jpeg
-
-        decoded = jpeg.decode_jpeg(bytes(payload))
-        if decoded.ndim == 3:  # color → luma (the engine's rasters are gray)
-            decoded = np.round(
-                0.299 * decoded[..., 0]
-                + 0.587 * decoded[..., 1]
-                + 0.114 * decoded[..., 2]
-            )
-        return decoded.astype(np.int16)
-    if fmt == "bmp":
-        decoded = codec.decode_bmp(bytes(payload))
-        if decoded.ndim == 3:
-            decoded = np.round(
-                0.299 * decoded[..., 0]
-                + 0.587 * decoded[..., 1]
-                + 0.114 * decoded[..., 2]
-            )
-        return decoded.astype(np.int16)
-    if fmt == "gif":
-        decoded = codec.decode_gif(bytes(payload))
-        return np.round(
-            0.299 * decoded[..., 0]
-            + 0.587 * decoded[..., 1]
-            + 0.114 * decoded[..., 2]
-        ).astype(np.int16)
-    if fmt == "webp":
-        from . import vp8l
-
-        decoded = vp8l.decode_webp(bytes(payload))  # uint8 RGBA (h, w, 4)
-        return np.round(
-            0.299 * decoded[..., 0].astype(np.float64)
-            + 0.587 * decoded[..., 1]
-            + 0.114 * decoded[..., 2]
-        ).astype(np.int16)
-    raise NotImplementedError(f"no decoder for format {fmt!r}")
 
 
 def decode_images(
@@ -113,8 +49,8 @@ def decode_images(
                 "image_id", "w", "h", "fmt", "pixels", "caption", "phash")}
             for r in pdf.itertuples():
                 try:
-                    block = _decode_payload(r.fmt, r.bytes, int(r.w), int(r.h))
-                except (NotImplementedError, ValueError):
+                    block = codec.decode_block(r.fmt, r.bytes, int(r.w))
+                except ValueError:
                     # unknown format or corrupt payload: at 10^12-row
                     # scale one poison row must not kill the job
                     if on_error == "skip":
@@ -150,7 +86,7 @@ def verify_images(images: DataFrame) -> DataFrame:
         for pdf in batches:
             ids, p_ok, c_ok = [], [], []
             for r in pdf.itertuples():
-                block = _decode_payload(r.fmt, r.bytes, int(r.w), int(r.h))
+                block = codec.decode_block(r.fmt, r.bytes, int(r.w))
                 got = int.from_bytes(
                     hashlib.sha256(block.tobytes()).digest()[:8],
                     "big",
@@ -164,151 +100,6 @@ def verify_images(images: DataFrame) -> DataFrame:
             )
 
     return images.mapInPandas(run, schema=VERIFY_SCHEMA)
-
-
-RESIZED_SCHEMA = "image_id string, w int, h int, pixels binary"
-
-
-def resize_images(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Area-weighted resample of every decoded block (A2 kernel,
-    Dem/Funcs.fs:561-624 semantics incl. missing-height masking)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, pix = [], []
-            for r in pdf.itertuples():
-                block = np.frombuffer(r.pixels, dtype=np.int16).reshape(
-                    int(r.h), int(r.w)
-                )
-                resized = kernels.resample_area_weighted(block, out_h, out_w)
-                ids.append(r.image_id)
-                pix.append(resized.tobytes())
-            yield pd.DataFrame(
-                {"image_id": ids, "w": out_w, "h": out_h, "pixels": pix}
-            )
-
-    return decoded.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FEATURES_SCHEMA = (
-    "image_id string, min_h int, max_h int, mean_h double, std_h double, "
-    "missing_px long, grad_energy double"
-)
-
-
-def image_features(decoded: DataFrame) -> DataFrame:
-    """Per-image feature vector: height stats + missing count + mean
-    squared gradient magnitude (texture proxy via the Horn kernel)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "image_id", "min_h", "max_h", "mean_h", "std_h",
-                "missing_px", "grad_energy")}
-            for r in pdf.itertuples():
-                block = np.frombuffer(r.pixels, dtype=np.int16).reshape(
-                    int(r.h), int(r.w)
-                )
-                f = kernels.heights_to_float(block)
-                valid = ~np.isnan(f)
-                rows["image_id"].append(r.image_id)
-                rows["min_h"].append(
-                    int(np.min(block[valid])) if valid.any() else 0
-                )
-                rows["max_h"].append(
-                    int(np.max(block[valid])) if valid.any() else 0
-                )
-                rows["mean_h"].append(
-                    float(np.mean(f[valid])) if valid.any() else float("nan")
-                )
-                rows["std_h"].append(
-                    float(np.std(f[valid])) if valid.any() else float("nan")
-                )
-                rows["missing_px"].append(int((~valid).sum()))
-                p, q = kernels.horn_pq(
-                    np.pad(f, 1, constant_values=np.nan), 1.0, 1.0
-                )
-                g = p * p + q * q
-                rows["grad_energy"].append(
-                    float(np.nanmean(g)) if np.isfinite(g).any() else 0.0
-                )
-            yield pd.DataFrame(rows)
-
-    return decoded.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-FRAMES_SCHEMA = "video_id string, frame_idx int, frame binary"
-
-
-def frame_sample(
-    videos: DataFrame,
-    frame_w: int,
-    frame_h: int,
-    every_k: int = 2,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Sample every k-th frame of a video payload.
-
-    Two container formats: ``fmt='gif'`` rows are REAL video — animated
-    GIF decoded frame-by-frame by the from-scratch decoder
-    (:func:`demeton_spark.codec.decode_gif_frames`, GCE disposal and
-    transparency composited) with each frame reduced to ITU-R 601 luma
-    int16; rows without a ``fmt`` column (or ``fmt='rawi16'``) are a
-    flat concatenation of int16 (frame_h, frame_w) frames — the shape
-    compressed-video rows take after an out-of-band transcode.  The
-    Spark plumbing (explode one row → many frame rows inside
-    mapInPandas, stable frame indices) is shared.  Expects columns
-    (video_id, bytes[, fmt]); ``on_error='skip'`` quarantines corrupt
-    containers.
-    """
-    frame_px = frame_w * frame_h
-    has_fmt = "fmt" in videos.columns
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids, idxs, frames = [], [], []
-            for r in pdf.itertuples():
-                fmt = getattr(r, "fmt", "rawi16") if has_fmt else "rawi16"
-                try:
-                    if fmt == "gif":
-                        decoded = codec.decode_gif_frames(bytes(r.bytes))
-                        lumas = [
-                            np.round(
-                                0.299 * f[..., 0].astype(np.float64)
-                                + 0.587 * f[..., 1]
-                                + 0.114 * f[..., 2]
-                            ).astype(np.int16)
-                            for f in decoded
-                        ]
-                        if lumas and lumas[0].shape != (frame_h, frame_w):
-                            raise ValueError(
-                                f"gif canvas {lumas[0].shape} != "
-                                f"({frame_h}, {frame_w})"
-                            )
-                    elif fmt == "rawi16":
-                        buf = np.frombuffer(r.bytes, dtype=np.int16)
-                        n_frames = len(buf) // frame_px
-                        lumas = [
-                            buf[i * frame_px : (i + 1) * frame_px]
-                            for i in range(n_frames)
-                        ]
-                    else:
-                        raise NotImplementedError(
-                            f"no video decoder for format {fmt!r}"
-                        )
-                except Exception:
-                    if on_error == "skip":
-                        continue
-                    raise
-                for i in range(0, len(lumas), every_k):
-                    vids.append(r.video_id)
-                    idxs.append(i)
-                    frames.append(lumas[i].tobytes())
-            yield pd.DataFrame(
-                {"video_id": vids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return videos.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (

@@ -2838,7 +2838,7 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    from demeton_spark.codec import decode_heights_png, decode_hgt
+    from demeton_spark.codec import decode_block
 
     imgs = _contract_images(spark, sf_dir).select("image_id", "bytes", "fmt", "w")
 
@@ -2850,10 +2850,7 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for iid, blob, fmt, w in zip(
                 pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"]
             ):
-                if fmt == "hgt":
-                    grid = decode_hgt(bytes(blob), int(w))
-                else:
-                    grid = decode_heights_png(bytes(blob))
+                grid = decode_block(fmt, blob, int(w))
                 s = grid.astype(np.int64).reshape(5, 4, 5, 4).sum(axis=(1, 3))
                 val = 0
                 for idx, b in enumerate((s[:, :-1] > s[:, 1:]).ravel()):

@@ -8,6 +8,8 @@ Sources:
   - HGT read/write: /root/reference/Demeton.Tests/Dem/Reading and writing HGT files.fs
 """
 
+import struct
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -263,211 +265,51 @@ def test_packbits_packet_semantics():
         assert codec._packbits_decode(codec._packbits_encode(blob)) == blob
 
 
-# --- BMP -------------------------------------------------------------------
+def _without_chunk(png: bytes, ctype: bytes, zero: bool = False) -> bytes:
+    """``png`` with one chunk's body zeroed, or the whole chunk dropped."""
+    i = png.index(ctype) - 4
+    (n,) = struct.unpack_from(">I", png, i)
+    if zero:
+        return png[: i + 8] + bytes(n) + png[i + 8 + n :]
+    return png[:i] + png[i + 12 + n :]
 
 
-def test_bmp_gray8_round_trip():
-    """8-bpp paletted BMP with an identity gray palette decodes back to
-    the source bytes, including 4-byte row padding at odd widths."""
-    rng = np.random.default_rng(31)
-    for w, h in ((1, 1), (3, 2), (13, 7), (64, 64)):
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        assert np.array_equal(codec.decode_bmp(codec.encode_bmp_gray8(img)), img)
+_BLOCK = np.arange(-50, 50, dtype=np.int16).reshape(10, 10)
+_BLOCK[3, 4] = DEM_HEIGHT_NONE
 
 
-def test_bmp_rgb24_round_trip():
-    """24-bpp BGR BMP round-trips RGB pixel-exactly (BGR swap + bottom-up
-    row order + stride padding all honoured)."""
-    rng = np.random.default_rng(32)
-    for w, h in ((1, 1), (2, 3), (11, 5)):
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        got = codec.decode_bmp(codec.encode_bmp_rgb24(img))
-        assert got.shape == (h, w, 3)
-        assert np.array_equal(got, img)
+def test_decode_block_reads_every_engine_format():
+    """png16, hgt, tiff (plain and deflate + predictor 2) and raw all
+    decode to the same south-up block; other formats are rejected."""
+    payloads = {
+        "png16": codec.encode_heights_png(_BLOCK),
+        "hgt": codec.encode_hgt(_BLOCK),
+        "tiff": codec.encode_tiff_gray16(_BLOCK),
+        "raw": _BLOCK.astype("<i2").tobytes(),
+    }
+    for fmt, payload in payloads.items():
+        got = codec.decode_block(fmt, bytearray(payload), 10)
+        assert np.array_equal(got, _BLOCK), fmt
+    deflated = codec.encode_tiff_gray16(_BLOCK, compression=8, predictor=2)
+    assert np.array_equal(codec.decode_block("tiff", deflated, 10), _BLOCK)
+    for fmt in ("jpeg", "webp", "PNG16"):
+        with pytest.raises(ValueError, match="unknown block format"):
+            codec.decode_block(fmt, payloads["png16"], 10)
 
 
-def test_bmp_top_down_and_palette_luma():
-    """Negative height = top-down row order; non-gray palettes map
-    through ITU-R 601 luma."""
-    img = np.arange(12, dtype=np.uint8).reshape(3, 4)
-    data = bytearray(codec.encode_bmp_gray8(img))
-    # flip to top-down: negate height and un-reverse the stored rows
-    h = 3
-    struct_h = int.from_bytes(data[22:26], "little", signed=True)
-    assert struct_h == h
-    data[22:26] = (-h).to_bytes(4, "little", signed=True)
-    pix_off = int.from_bytes(data[10:14], "little")
-    stride = 4
-    rows = bytes(data[pix_off:])
-    flipped = b"".join(
-        rows[i * stride : (i + 1) * stride] for i in range(h - 1, -1, -1)
-    )
-    data[pix_off:] = flipped
-    assert np.array_equal(codec.decode_bmp(bytes(data)), img)
-    # pure-red palette entry 0 → luma 76 (round(0.299*255))
-    red = bytearray(codec.encode_bmp_gray8(np.zeros((1, 1), np.uint8)))
-    pal_off = 14 + 40
-    red[pal_off : pal_off + 4] = bytes((0, 0, 255, 0))  # BGRX
-    assert codec.decode_bmp(bytes(red))[0, 0] == 76
-
-
-def test_bmp_rejects_bad_inputs():
-    good = codec.encode_bmp_gray8(np.zeros((4, 4), np.uint8))
-    with pytest.raises(ValueError):
-        codec.decode_bmp(b"XX" + good[2:])  # bad magic
-    with pytest.raises(ValueError):
-        codec.decode_bmp(good[:-8])  # truncated pixels
-    rle = bytearray(good)
-    rle[30] = 1  # BI_RLE8
-    with pytest.raises(ValueError):
-        codec.decode_bmp(bytes(rle))
-    onebit = bytearray(good)
-    onebit[28] = 1  # 1 bpp
-    with pytest.raises(ValueError):
-        codec.decode_bmp(bytes(onebit))
-
-
-# --- GIF -------------------------------------------------------------------
-
-
-def test_gif_gray_round_trip():
-    """GIF89a with a 256-gray global palette round-trips; all three RGB
-    channels equal the source gray value."""
-    rng = np.random.default_rng(41)
-    for w, h in ((1, 1), (5, 3), (17, 9), (64, 64)):
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        got = codec.decode_gif(codec.encode_gif_gray(img))
-        assert got.shape == (h, w, 3)
-        for c in range(3):
-            assert np.array_equal(got[..., c], img)
-
-
-def test_gif_interlaced_round_trip():
-    """Interlace flag: rows stored in the 8/8/4/2 four-pass order are
-    de-interlaced back to natural order."""
-    rng = np.random.default_rng(42)
-    for h in (1, 2, 3, 4, 7, 8, 9, 16, 33):
-        img = rng.integers(0, 256, (h, 6), dtype=np.uint8)
-        got = codec.decode_gif(codec.encode_gif_gray(img, interlace=True))
-        assert np.array_equal(got[..., 0], img), h
-
-
-def test_gif_extensions_skipped_and_87a():
-    """GCE/comment extension blocks before the image descriptor are
-    skipped; GIF87a magic accepted."""
-    img = np.arange(8, dtype=np.uint8).reshape(2, 4) * 16
-    data = bytearray(codec.encode_gif_gray(img))
-    # splice a Graphic Control Extension + comment after the palette
-    splice_at = 13 + 768
-    gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-    comment = b"\x21\xfe\x05hello\x00"
-    data[splice_at:splice_at] = gce + comment
-    got = codec.decode_gif(bytes(data))
-    assert np.array_equal(got[..., 1], img)
-    data87 = bytes(data).replace(b"GIF89a", b"GIF87a", 1)
-    assert np.array_equal(codec.decode_gif(data87)[..., 2], img)
-
-
-def test_gif_lzw_code_width_growth():
-    """LZW table crossing the 2^width boundary grows the code width;
-    a low-entropy long stream exercises widths 9→12 and a mid-stream
-    Clear on encode-side table overflow."""
-    rng = np.random.default_rng(43)
-    # long repetitive stream → encoder table passes 4096 → Clear reset
-    idx = bytes(rng.integers(0, 4, 60000, dtype=np.uint8))
-    enc = codec._gif_lzw_encode(idx, 8)
-    assert codec._gif_lzw_decode(enc, 8, len(idx)) == bytearray(idx)
-    # tiny alphabet with min code size 2
-    small = bytes(rng.integers(0, 4, 500, dtype=np.uint8))
-    enc2 = codec._gif_lzw_encode(small, 2)
-    assert codec._gif_lzw_decode(enc2, 2, len(small)) == bytearray(small)
-
-
-def test_gif_rejects_bad_inputs():
-    good = codec.encode_gif_gray(np.zeros((4, 4), np.uint8))
-    with pytest.raises(ValueError):
-        codec.decode_gif(b"JIF89a" + good[6:])
-    with pytest.raises(ValueError):
-        codec.decode_gif(good[:20])  # truncated palette
-    # image data cut mid-sub-block
-    with pytest.raises(ValueError):
-        codec.decode_gif(good[:-6])
-    # index beyond a shrunken local palette
-    img = np.full((2, 2), 200, np.uint8)
-    data = bytearray(codec.encode_gif_gray(img))
-    data[10] = (data[10] & ~7) | 2  # claim 8-entry global palette
-    del data[13 + 3 * 8 : 13 + 3 * 256]  # drop the rest of the palette
-    with pytest.raises(ValueError):
-        codec.decode_gif(bytes(data))
-
-
-def test_gif_animated_compositing_and_disposal():
-    """Animated GIF: sub-rect frames composite onto the canvas; GCE
-    disposal 2 restores the rect to background, 3 restores the previous
-    canvas; transparent pixels leave the canvas untouched."""
-    base = np.full((6, 8), 10, np.uint8)
-    patch = np.full((2, 3), 200, np.uint8)
-    patch2 = np.full((2, 3), 30, np.uint8)
-    blob = codec.encode_gif_anim(
-        [base, patch, patch2],
-        rects=[None, (2, 1), (4, 3)],
-        disposals=[0, 3, 0],
-    )
-    f = codec.decode_gif_frames(blob)
-    assert len(f) == 3 and f[0].shape == (6, 8, 3)
-    assert (f[0][..., 0] == 10).all()
-    # frame 1: patch at (x=2, y=1) over frame 0
-    want1 = base.copy()
-    want1[1:3, 2:5] = 200
-    assert np.array_equal(f[1][..., 0], want1)
-    # disposal 3 after frame 1 → frame 2 composites onto frame 0, not 1
-    want2 = base.copy()
-    want2[3:5, 4:7] = 30
-    assert np.array_equal(f[2][..., 0], want2)
-
-    # disposal 2: rect goes back to the background color (index 77)
-    blob2 = codec.encode_gif_anim(
-        [base, patch, patch2],
-        rects=[None, (2, 1), (4, 3)],
-        disposals=[2, 2, 0],
-        bg_index=77,
-    )
-    g = codec.decode_gif_frames(blob2)
-    want2b = np.full((6, 8), 77, np.uint8)  # frame 0's rect = full canvas
-    want2b[1:3, 2:5] = 200
-    assert np.array_equal(g[1][..., 0], want2b)
-    want2c = np.full((6, 8), 77, np.uint8)
-    want2c[3:5, 4:7] = 30
-    assert np.array_equal(g[2][..., 0], want2c)
-
-
-def test_gif_animated_transparency():
-    """Pixels equal to the GCE transparent index are skipped during
-    compositing — the prior canvas shows through."""
-    base = np.full((4, 4), 50, np.uint8)
-    overlay = np.array([[200, 99], [99, 201]], np.uint8)  # 99 = holes
-    blob = codec.encode_gif_anim(
-        [base, overlay], rects=[None, (1, 1)], transparent=99
-    )
-    f = codec.decode_gif_frames(blob)
-    want = base.copy()
-    want[1, 1] = 200
-    want[2, 2] = 201  # the two 99s stay 50
-    assert np.array_equal(f[1][..., 0], want)
-
-
-def test_gif_animated_rejects_out_of_canvas_frame():
-    base = np.full((4, 4), 1, np.uint8)
-    patch = np.full((3, 3), 2, np.uint8)
-    blob = codec.encode_gif_anim([base, patch], rects=[None, (3, 3)])
-    with pytest.raises(ValueError):
-        codec.decode_gif_frames(blob)
-
-
-def test_decode_gif_first_frame_unchanged():
-    """decode_gif == first composited frame of the animated decoder."""
-    img = np.arange(24, dtype=np.uint8).reshape(4, 6) * 10
-    single = codec.encode_gif_gray(img)
-    assert np.array_equal(codec.decode_gif(single)[..., 0], img)
-    anim = codec.encode_gif_anim([img, np.zeros((1, 1), np.uint8)])
-    assert np.array_equal(codec.decode_gif(anim)[..., 0], img)
+@pytest.mark.parametrize(
+    "fmt,payload",
+    [
+        ("png16", codec.encode_heights_png(_BLOCK)[:20]),
+        ("png16", _without_chunk(codec.encode_heights_png(_BLOCK), b"IDAT", zero=True)),
+        ("png16", _without_chunk(codec.encode_heights_png(_BLOCK), b"IHDR")),
+        ("tiff", codec.encode_tiff_gray16(_BLOCK, compression=8, predictor=2)[:-3]),
+    ],
+    ids=["png16-truncated", "png16-zeroed-idat", "png16-no-ihdr", "tiff-deflate-truncated"],
+)
+def test_decode_block_malformed_payload_raises_value_error(fmt, payload):
+    """Every malformed payload surfaces as ``ValueError`` (the one type
+    the quarantine path catches), chained to the decoder's own error."""
+    with pytest.raises(ValueError) as info:
+        codec.decode_block(fmt, payload, 10)
+    assert info.value.__cause__ is not None

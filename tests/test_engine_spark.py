@@ -146,6 +146,39 @@ def test_tiled_shading_equals_untiled_oracle(spark, images):
         assert 0 < row["shaded_px"] <= ts * ts
 
 
+def test_tiff_blocks_shade_like_png16_hgt(spark, images):
+    """GeoTIFF (the reference's AW3D input) is an engine block format:
+    the same world re-encoded as TIFF blocks, alternating uncompressed
+    and deflate + predictor 2, hole blocks included, shades to the same
+    PNG bytes tile for tile as the png16/hgt world."""
+    tiff_rows, holes = [], 0
+    for i, r in enumerate(images.orderBy("image_id").collect()):
+        block = codec.decode_block(r["fmt"], r["bytes"], r["w"])
+        holes += bool((block == DEM_HEIGHT_NONE).any())
+        compression, predictor = (1, 1) if i % 2 == 0 else (8, 2)
+        payload = codec.encode_tiff_gray16(
+            block, compression=compression, predictor=predictor
+        )
+        tiff_rows.append(
+            (r["image_id"], bytearray(payload), r["w"], r["h"], "tiff",
+             r["caption"], r["phash"])
+        )
+    assert holes > 0
+    tiffs = spark.createDataFrame(tiff_rows, images.schema)
+
+    def pngs(df):
+        return {
+            (r["tile_x"], r["tile_y"]): bytes(r["png"])
+            for r in engine.run_hillshade(
+                spark, df, SPEC.tile_size, script="elecolor|+igor"
+            ).collect()
+        }
+
+    want = pngs(images)
+    assert len(want) == 4
+    assert pngs(tiffs) == want
+
+
 def test_shading_psnr_through_png_path(spark, images):
     """Decoded-pixel invariant: PNG encode/decode is lossless (PSNR=inf ≥ 40dB)."""
     shaded = engine.run_hillshade(spark, images, SPEC.tile_size).collect()

@@ -1,11 +1,10 @@
-"""Multimodal plumbing: real png16/hgt decode, per-row phash/caption
-invariant, area-weighted resize vs the numpy kernel, feature extraction,
-deterministic-fake frame sampling, and quarantine routing."""
+"""Multimodal plumbing: real png16/hgt/tiff decode, per-row phash/caption
+invariant, audio features, and quarantine routing."""
 
 import numpy as np
 import pytest
 
-from demeton_spark import kernels, multimodal, synth
+from demeton_spark import codec, multimodal, synth
 from demeton_spark.synth import WorldSpec
 
 SPEC = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=1, tile_size=30, block_size=10)
@@ -39,106 +38,6 @@ def test_verify_images_invariant(spark, images):
     assert agg["n"] == SPEC.n_rows
     assert agg["p_ok"] == SPEC.n_rows  # decoded pixels hash to phash
     assert agg["c_ok"] == SPEC.n_rows
-
-
-def test_resize_matches_numpy_oracle(spark, images):
-    decoded = multimodal.decode_images(images)
-    resized = multimodal.resize_images(decoded, 4, 4)
-    got = {r["image_id"]: r for r in resized.collect()}
-    for r in decoded.collect():
-        block = np.frombuffer(r["pixels"], dtype=np.int16).reshape(
-            r["h"], r["w"]
-        )
-        want = kernels.resample_area_weighted(block, 4, 4)
-        have = np.frombuffer(got[r["image_id"]]["pixels"], dtype=np.int16).reshape(4, 4)
-        assert np.array_equal(have, want), r["image_id"]
-
-
-def test_image_features(spark, images):
-    feats = multimodal.image_features(multimodal.decode_images(images))
-    rows = feats.collect()
-    assert len(rows) == SPEC.n_rows
-    for r in rows:
-        assert r["min_h"] <= r["max_h"]
-        assert r["grad_energy"] >= 0.0
-    # blocks with holes report missing pixels
-    assert any(r["missing_px"] > 0 for r in rows)
-
-
-def test_webp_decode_and_quarantine(spark):
-    from demeton_spark import vp8l
-
-    rgba = np.random.default_rng(3).integers(0, 256, size=(4, 4, 4), dtype=np.uint8)
-    blob = vp8l.encode_webp(rgba)
-    rows = [
-        ("a", bytearray(blob), 4, 4, "webp", "x", 0),
-        ("b", bytearray(b"\x01\x02"), 4, 4, "flac", "x", 0),  # unknown fmt
-        ("c", bytearray(b"\x01\x02"), 4, 4, "jpeg", "x", 0),  # corrupt
-        ("d", bytearray(b"\x01\x02"), 4, 4, "webp", "x", 0),  # corrupt
-    ]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
-    )
-    # unknown format / corrupt payloads raise through by default…
-    with pytest.raises(Exception):
-        multimodal.decode_images(df).collect()
-    # …and are skippable (quarantine-style); real webp decodes via the
-    # from-scratch VP8L codec (jpeg likewise — tests/test_jpeg.py)
-    ok = multimodal.decode_images(df, on_error="skip").collect()
-    assert [r["image_id"] for r in ok] == ["a"]
-    want = np.round(
-        0.299 * rgba[..., 0].astype(np.float64)
-        + 0.587 * rgba[..., 1]
-        + 0.114 * rgba[..., 2]
-    ).astype(np.int16)
-    have = np.frombuffer(ok[0]["pixels"], dtype=np.int16).reshape(4, 4)
-    assert np.array_equal(have, want)
-
-
-def test_frame_sample(spark):
-    frames = np.arange(3 * 2 * 2, dtype=np.int16)  # 3 frames of 2×2
-    df = spark.createDataFrame(
-        [("v0", bytearray(frames.tobytes()))], "video_id string, bytes binary"
-    )
-    out = multimodal.frame_sample(df, 2, 2, every_k=2).collect()
-    assert [(r["video_id"], r["frame_idx"]) for r in out] == [("v0", 0), ("v0", 2)]
-    f0 = np.frombuffer(out[0]["frame"], dtype=np.int16)
-    assert f0.tolist() == [0, 1, 2, 3]
-
-
-def test_frame_sample_animated_gif(spark):
-    """Real video path: animated GIF rows decode frame-by-frame via the
-    from-scratch decoder; compositing means frame k is the full canvas."""
-    from demeton_spark import codec
-
-    base = np.full((4, 6), 10, np.uint8)
-    patch = np.full((2, 2), 250, np.uint8)
-    frames = [base] + [patch] * 4  # 5 frames, patches at varying spots
-    rects = [None, (0, 0), (2, 1), (4, 2), (1, 0)]
-    blob = codec.encode_gif_anim(frames, rects=rects)
-    rows = [
-        ("g0", bytearray(blob), "gif"),
-        ("bad", bytearray(b"GIF89a\x00"), "gif"),
-        ("r0", bytearray(np.arange(24 * 2, dtype=np.int16).tobytes()), "rawi16"),
-        ("h264", bytearray(b"\x00\x00\x01"), "h264"),  # unsupported codec
-    ]
-    df = spark.createDataFrame(rows, "video_id string, bytes binary, fmt string")
-    with pytest.raises(Exception):
-        multimodal.frame_sample(df, 6, 4, every_k=2).collect()
-    out = multimodal.frame_sample(df, 6, 4, every_k=2, on_error="skip").collect()
-    got = {(r["video_id"], r["frame_idx"]): r["frame"] for r in out}
-    assert set(got) == {("g0", 0), ("g0", 2), ("g0", 4), ("r0", 0)}
-    # frame 2 = base + patch at (x=2, y=1) composited over patch@(0,0)
-    want = base.astype(np.int16).copy()
-    want[0:2, 0:2] = 250
-    want[1:3, 2:4] = 250
-    have = np.frombuffer(got[("g0", 2)], dtype=np.int16).reshape(4, 6)
-    assert np.array_equal(have, want)
-    # canvas-size mismatch is a decode error → quarantined under skip
-    df_bad_size = spark.createDataFrame(
-        [("g1", bytearray(blob), "gif")], "video_id string, bytes binary, fmt string"
-    )
-    assert multimodal.frame_sample(df_bad_size, 5, 5, on_error="skip").count() == 0
 
 
 def test_audio_features_end_to_end(spark):
@@ -177,6 +76,28 @@ def test_decode_tiff_format(spark):
     out = multimodal.decode_images(df).collect()
     got = np.frombuffer(out[0]["pixels"], dtype=np.int16).reshape(4, 4)
     assert np.array_equal(got, arr)
+
+
+def test_decode_images_quarantines_malformed_rows(spark):
+    """A truncated png16 row and a format the decoder does not read
+    both raise by default and are dropped under ``on_error='skip'``."""
+    block = np.arange(16, dtype=np.int16).reshape(4, 4)
+    png = codec.encode_heights_png(block)
+    rows = [
+        ("ok", bytearray(png), 4, 4, "png16", "x", 0),
+        ("short", bytearray(png[:20]), 4, 4, "png16", "x", 0),
+        ("jpg", bytearray(b"\xff\xd8\xff"), 4, 4, "jpeg", "x", 0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="malformed png16 payload"):
+        multimodal.decode_images(df).collect()
+    ok = multimodal.decode_images(df, on_error="skip").collect()
+    assert [r["image_id"] for r in ok] == ["ok"]
+    got = np.frombuffer(ok[0]["pixels"], dtype=np.int16).reshape(4, 4)
+    assert np.array_equal(got, block)
 
 
 def test_phash_near_dup_matches_bruteforce(spark):
@@ -260,35 +181,3 @@ def test_phash_bands_reject_incomplete_hamming():
 
     with pytest.raises(ValueError):
         phash_bands_for_corpus(100, 8)
-
-
-def test_bmp_gif_decode_through_spark(spark):
-    """BMP and GIF rows decode through the mapInPandas path (from-scratch
-    codecs in demeton_spark.codec); color payloads land as ITU-R 601
-    luma int16 blocks, corrupt payloads quarantine under skip."""
-    from demeton_spark import codec
-
-    rng = np.random.default_rng(77)
-    gray = rng.integers(0, 256, (6, 5), dtype=np.uint8)
-    rgb = rng.integers(0, 256, (4, 7, 3), dtype=np.uint8)
-    rows = [
-        ("bmp_g", bytearray(codec.encode_bmp_gray8(gray)), 5, 6, "bmp", "c", 0),
-        ("bmp_c", bytearray(codec.encode_bmp_rgb24(rgb)), 7, 4, "bmp", "c", 0),
-        ("gif_g", bytearray(codec.encode_gif_gray(gray, interlace=True)), 5, 6, "gif", "c", 0),
-        ("gif_bad", bytearray(b"GIF89a\x00\x00"), 5, 6, "gif", "c", 0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
-    )
-    got = {r["image_id"]: r for r in multimodal.decode_images(df, on_error="skip").collect()}
-    assert sorted(got) == ["bmp_c", "bmp_g", "gif_g"]
-    g = np.frombuffer(got["bmp_g"]["pixels"], np.int16).reshape(6, 5)
-    assert np.array_equal(g, gray.astype(np.int16))
-    gi = np.frombuffer(got["gif_g"]["pixels"], np.int16).reshape(6, 5)
-    assert np.array_equal(gi, gray.astype(np.int16))
-    luma = np.round(
-        0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    ).astype(np.int16)
-    c = np.frombuffer(got["bmp_c"]["pixels"], np.int16).reshape(4, 7)
-    assert np.array_equal(c, luma)
