@@ -2,9 +2,8 @@
 
 The reference engine decodes PNG/TIFF/HGT only
 (/root/reference/Demeton/Png/File.fs:19-53, Aw3d/Funcs.fs:180-261); this
-module is LLM-training-data-extras surface: web-corpus image tables
-carry WebP rows and the engine must decode them without a codec
-library.  Mirroring the reference's from-scratch PNG ethos, the full
+module is a standalone codec, not one of the engine's block formats
+(:func:`demeton_spark.codec.decode_block` rejects ``webp``).  Mirroring the reference's from-scratch PNG ethos, the full
 VP8L bitstream is implemented here per the public "WebP Lossless
 Bitstream Specification":
 
@@ -26,7 +25,7 @@ Huffman codes (length-limited by a balanced-code fallback), optional
 subtract-green transform, optional color cache, and optional
 distance-1 LZ77 run emission — enough to exercise every decoder path
 with round-trip tests.  Lossy WebP ("VP8 " chunks) is out of scope and
-raises ``ValueError`` → the multimodal quarantine path.
+raises ``ValueError``.
 """
 
 from __future__ import annotations

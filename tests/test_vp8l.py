@@ -143,27 +143,6 @@ def test_inv_color_indexing_bundled_pixels():
     assert out3.shape == (1, 3)
 
 
-def test_decode_images_webp_via_spark(spark):
-    """End-to-end through the mapInPandas decode path."""
-    from demeton_spark import multimodal
-
-    rgba = _rand_rgba((6, 5), 13)
-    rows = [("w0", bytearray(vp8l.encode_webp(rgba)), 5, 6, "webp", "cap", 0)]
-    df = spark.createDataFrame(
-        rows,
-        "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
-    )
-    out = multimodal.decode_images(df).collect()
-    assert len(out) == 1
-    want = np.round(
-        0.299 * rgba[..., 0].astype(np.float64)
-        + 0.587 * rgba[..., 1]
-        + 0.114 * rgba[..., 2]
-    ).astype(np.int16)
-    have = np.frombuffer(out[0]["pixels"], dtype=np.int16).reshape(6, 5)
-    assert np.array_equal(have, want)
-
-
 # --- inverse-transform verification against independent forward code --------
 
 
