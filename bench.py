@@ -265,9 +265,6 @@ def run_hillshade_bench(spark, spec: WorldSpec, images_path: str,
         t0 = time.time()  # CPU-steal variance (3× between trials)
         shaded = run_hillshade(
             spark, images, spec.tile_size, script="elecolor|+igor",
-            # tile count is known for the synthetic world: 1 tile/task
-            # keeps task sizes equal at every parallelism level
-            shade_partitions=spec.n_tiles_x * spec.n_tiles_y,
             # throughput metric: fast deflate for the bench sink only —
             # persisted job output defaults to the reference's level 6
             png_level=codec.RGBA_PNG_LEVEL_FAST,
@@ -830,7 +827,7 @@ a window per run).
             "costs more worker-occupied seconds at 32 threads — "
             "per-task slowdown from memory-bandwidth / hypervisor-steal "
             "contention, not idle workers: shuffle volume is identical "
-            "at both widths and granularity is 1 tile/task.  Inflation "
+            "at both widths.  Inflation "
             "well below 1/efficiency would instead indicate "
             "stragglers/idle workers; that is not what we observe."]
         attribution = "\n".join(lines)
@@ -970,9 +967,8 @@ The machine advertises 32 vCPUs but shows 0-25% hypervisor steal and
 under-reports scalability of the plan itself (the best low-steal
 window observed for the same build: local[32] = 11.1 s, 116.8 Mpx/s).
 The 2→8 pair is the meaningful proxy for the N→4N rule.  Per-task
-memory locality (row-band kernels) plus 1-tile-per-task shuffle
-granularity is what keeps 32-way throughput climbing at all — see
-engine.SHADE_BAND_ROWS and run_hillshade(shade_partitions=…).
+memory locality (row-band kernels) is what keeps 32-way throughput
+climbing at all — see engine.SHADE_BAND_ROWS.
 
 Reference single-node baseline (BASELINE.md): the original tool shades
 ~0.3 Mpx/s single-threaded (650×488 px ≈ 1 s, docs/Tutorial.md:43-47).
@@ -983,8 +979,8 @@ WEAK_SCALING_PATH = os.path.join(REPO, "BENCH", "WEAKSCALING.json")
 WEAK_RUNS_PATH = os.path.join(REPO, "BENCH", "WEAKSCALING_RUNS.jsonl")
 
 #: weak-scaling ladder: fixed parallelism, input grows 10x — the flat
-#: s/Mpx curve is the primary 100-TB scale evidence (one shuffle, 1
-#: tile/task, memory bounded by tile size not input size)
+#: s/Mpx curve is the primary 100-TB scale evidence (one shuffle,
+#: memory bounded by tile size not input size)
 WEAK_SFS = (0.1, 0.33, 1.0)
 
 

@@ -4,7 +4,7 @@ PNG tile sink.
 
 This is the idiomatic-Spark re-expression of Demeton's ``shade``
 lifecycle (Demeton/Commands/ShadeCommand.fs:555-614), with the
-reference's sequential per-tile fold replaced by one task per tile and
+reference's sequential per-tile fold replaced by per-tile groups and
 its implicit 1-px over-fetch replaced by explicit halo strips keyed by
 the tile that needs them (SURVEY.md §2.3 J3).  There is one tile path,
 with ONE full-data shuffle (see SCALE.md):
@@ -27,14 +27,14 @@ with ONE full-data shuffle (see SCALE.md):
                               shading-script evaluation,
                               point-in-polygon clip, Y-flip, RGBA PNG
                               encode (Hillshading.fs:81-157 vectorized).
-  5. ``run_hillshade``      — end-to-end: one groupBy(tile) task runs
-                              3 + 4 per tile (``shade_unified``), with
-                              resumable checkpointing (anti-join against
-                              a per-tile manifest — Srtm/Fetch.fs
+  5. ``run_hillshade``      — end-to-end: one group per tile runs
+                              3 + 4 (``shade_unified``), with resumable
+                              checkpointing (anti-join against a
+                              per-tile manifest — Srtm/Fetch.fs
                               negative-cache semantics), bbox pruning
-                              for clip polygons, 1-tile-per-task
-                              shuffle granularity, and pixel-count
-                              metrics.
+                              for clip polygons, tiles dealt over one
+                              reduce task per core (``tile_groups``),
+                              and pixel-count metrics.
 
 XTH tile-shade (``run_tile_shade``), plain mosaics (``assemble_tiles``,
 k = 0) and the streaming twin (``streaming.streaming_hillshade``) reuse
@@ -43,8 +43,8 @@ the same emitter, compose and render.
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
 Skewed (land-heavy) tiles are handled by winner-only decode, the
-optional pre-shuffle ``local_dedup``, the 1-tile-per-task granularity
-and AQE skew splitting.
+optional pre-shuffle ``local_dedup`` and the grid-position deal, which
+spreads neighbouring heavy tiles over all reduce tasks.
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec, kernels, pipeline
@@ -316,6 +316,37 @@ def assembled_row(
     )
 
 
+#: row stride of the tile → task deal: tile (x, y) goes to task
+#: (x + 374·y) mod n.  374 ≥ 360 keeps x + 374·y distinct over the
+#: whole 360×180 world, and it is the smallest such stride for which
+#: the busiest task of any W×H block of tiles (W, H ≤ 12) holds at most
+#: twice its fair share at every n in tests/test_engine_spark.py (2 to
+#: 64); a stride of 1 piles a 3×3 block onto 5 of 16 tasks, and one of
+#: 7 reaches only 1,620 tasks over the whole world.
+_DEAL_STRIDE = 374
+
+
+def tile_groups(parts: DataFrame, n: int | None = None) -> GroupedData:
+    """The one tile → task decision of every batch tile path: deal the
+    tiles over ``n`` reduce tasks (default one per core) by grid
+    position, ``pid = (tile_x + 374·tile_y) mod n``, and group by tile.
+
+    Every reduce task costs a fixed share of CPU whatever its size, and
+    a hash of a few tile keys spreads them over the tasks unevenly.
+    The deal sends any n tiles in a row to n different tasks, so
+    whole-row grids come out exact and a run of neighbouring (heavy,
+    contiguous land) tiles spreads over all tasks.  ``pid`` stays a
+    grouping key, so the group reuses the ``repartitionById`` exchange
+    instead of hashing again; UDFs see it as one more column."""
+    n = n or parts.sparkSession.sparkContext.defaultParallelism
+    pid = F.pmod(F.col("tile_x") + _DEAL_STRIDE * F.col("tile_y"), n)
+    return (
+        parts.withColumn("pid", pid)
+        .repartitionById(n, "pid")
+        .groupBy("pid", "tile_x", "tile_y")
+    )
+
+
 def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
     """Stitch image blocks into one int16 raster per tile
     (:func:`compose_padded` with no halo)."""
@@ -327,7 +358,7 @@ def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
             tile, n_blocks,
         )
 
-    return _block_parts(assigned).groupBy("tile_x", "tile_y").applyInPandas(
+    return tile_groups(_block_parts(assigned)).applyInPandas(
         stitch, schema=ASSEMBLED_SCHEMA
     )
 
@@ -489,8 +520,10 @@ def shade_unified(
     halo: int = 1,
     prefilter: str | None = None,
     png_level: int | None = None,
+    shade_partitions: int | None = None,
 ) -> DataFrame:
-    """One grouped task per tile: :func:`compose_padded` then
+    """One group per tile, dealt over ``shade_partitions`` tasks
+    (:func:`tile_groups`): :func:`compose_padded` then
     :func:`render_tile`.  ``parts`` comes from :func:`hillshade_parts`
     (same halo); groups with no center blocks (strips sent past the
     world edge) produce nothing.  ``prefilter`` is a step script over
@@ -513,7 +546,7 @@ def shade_unified(
             clip_poly=clip_poly, n_blocks=n_blocks,
         )
 
-    return parts.groupBy("tile_x", "tile_y").applyInPandas(
+    return tile_groups(parts, shade_partitions).applyInPandas(
         assemble_pad_shade, schema=SHADED_SCHEMA
     )
 
@@ -571,9 +604,9 @@ def run_tile_shade(
             water=(packed_u[1:-1, 1:-1] >> 15).astype(bool), n_blocks=n_blocks,
         )
 
-    return hillshade_parts(blocks, tile_size).groupBy(
-        "tile_x", "tile_y"
-    ).applyInPandas(pad_and_shade, schema=SHADED_SCHEMA)
+    return tile_groups(hillshade_parts(blocks, tile_size)).applyInPandas(
+        pad_and_shade, schema=SHADED_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -637,6 +670,8 @@ def run_hillshade(
     Horn gradient; widens the halo exchange by one ring per step.
     ``local_dedup`` collapses losing duplicate blocks before anything
     is emitted or shuffled (:func:`dedup_duplicate_blocks`).
+    ``shade_partitions`` — the number of reduce tasks the tiles are
+    dealt over (:func:`tile_groups`; default one per core).
     """
     clip_poly, cover = clip_cover(clip_polygon)
     halo = 1 + (len(pipeline.parse_script(prefilter)) if prefilter else 0)
@@ -662,17 +697,10 @@ def run_hillshade(
             parts = parts.join(
                 F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
             )
-    # pre-partition the one full-data exchange on the tile key at
-    # finer granularity than spark.sql.shuffle.partitions: the shade
-    # stage is CPU-bound per TILE, so ~1 tile/task bounds straggler
-    # cost to one tile (measured +15% at sf0.1/local[32]).  The
-    # following groupBy reuses this hash partitioning — no second
-    # exchange.  Callers with a known tile count should pass it.
-    n_parts = shade_partitions or spark.sparkContext.defaultParallelism * 4
-    parts = parts.repartition(n_parts, "tile_x", "tile_y")
     shaded = shade_unified(
         parts, tile_size, script, clip_poly=clip_poly,
         halo=halo, prefilter=prefilter, png_level=png_level,
+        shade_partitions=shade_partitions,
     )
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)

@@ -15,8 +15,9 @@ The job is idempotent/resumable: completed tile keys in --output are
 anti-joined out on restart (per-tile checkpoint manifest), and the run
 summary prints per-partition lineage metrics (tiles, blocks consumed,
 shaded/total pixels).  Duplicate-heavy (skewed) tiles need no flag:
-each tile task decodes only the winning block per position, every tile
-gets its own shade task, and AQE splits skewed shuffle partitions.
+each tile's group decodes only the winning block per position, and the
+tiles are dealt over one shade task per core by grid position, so a
+run of neighbouring heavy tiles spreads over all tasks.
 
 Locally (no cluster in this sandbox) the same file runs under
 ``python jobs/hillshade_job.py --synthetic sf0.01`` using the
@@ -47,8 +48,8 @@ def main() -> None:
                     help="height prefilter script, e.g. 'blur' or "
                          "'sharpen(amount=1.5)' (widens the halo)")
     ap.add_argument("--shade-partitions", type=int, default=0,
-                    help="shuffle partitions for the shade exchange "
-                         "(ideally the tile count; default 4x cores)")
+                    help="reduce tasks the tiles are dealt over "
+                         "(default one per core)")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--synthetic", metavar="SF",
                     help="generate a synthetic world instead of --input "

@@ -11,6 +11,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from demeton_spark import codec, engine, synth
 from demeton_spark.synth import WorldSpec
@@ -283,12 +284,11 @@ def _exchanges(df) -> list[str]:
 
 def test_tile_paths_run_one_exchange(spark):
     """The engine's defining property: blocks and halo strips reach
-    their tile through ONE exchange, hash-partitioned on the
-    destination tile key, in the default run_hillshade and in
-    run_tile_shade alike."""
-    shaded = engine.run_hillshade(
-        spark, synth.images_df(spark, SPEC), SPEC.tile_size
-    )
+    their tile through ONE exchange, which deals each destination tile
+    to its task by grid position (``tile_groups``), in the default
+    run_hillshade, run_tile_shade and assemble_tiles alike."""
+    images = synth.images_df(spark, SPEC)
+    shaded = engine.run_hillshade(spark, images, SPEC.tile_size)
     ts = 20
     xth = spark.createDataFrame(
         [(tx, ty, bytearray(codec.encode_xth(
@@ -296,9 +296,64 @@ def test_tile_paths_run_one_exchange(spark):
          for tx in range(2) for ty in range(2)],
         "tile_x int, tile_y int, xth binary",
     )
-    for df in (shaded, engine.run_tile_shade(spark, xth, ts)):
+    assembled = engine.assemble_tiles(
+        engine.parse_caption(images), SPEC.tile_size
+    )
+    for df in (shaded, engine.run_tile_shade(spark, xth, ts), assembled):
         (exchange,) = _exchanges(df)
-        assert exchange.startswith("hashpartitioning(tile_x, tile_y, ")
+        assert exchange.startswith(
+            "shufflepartitionidpassthrough(direct_shuffle_partition_id("
+        )
+
+
+def _busiest_task(n: int, w: int, h: int, x0: int, y0: int) -> int:
+    """Tiles on the busiest of ``n`` tasks when the W×H grid at origin
+    (x0, y0) is dealt by ``engine._DEAL_STRIDE``."""
+    xs, ys = np.meshgrid(np.arange(x0, x0 + w), np.arange(y0, y0 + h))
+    return np.bincount(
+        ((xs + engine._DEAL_STRIDE * ys) % n).ravel(), minlength=n
+    ).max()
+
+
+@pytest.mark.parametrize("n", [2, 3, 4, 5, 6, 7, 8, 10, 12, 16, 24, 32, 48, 64])
+def test_tile_deal_balances_every_small_grid(n):
+    """Spark-free: for every W×H grid with W, H ≤ 12, at origins on
+    both sides of the equator and meridian, no task gets more than
+    twice its fair share of tiles; the bench grids (4×2, 4×4) at n = 4
+    come out exact."""
+    for w in range(1, 13):
+        for h in range(1, 13):
+            fair = -(-w * h // n)
+            for x0, y0 in [(0, 0), (13, 45), (-7, -3), (179, -89)]:
+                busiest = _busiest_task(n, w, h, x0, y0)
+                assert busiest <= 2 * fair, (w, h, x0, y0, busiest)
+                if n == 4 and (w, h) in [(4, 2), (4, 4)]:
+                    assert busiest == fair, (w, h, x0, y0, busiest)
+
+
+@pytest.mark.parametrize("n", [1000, 8000, 16000, 64800])
+def test_tile_deal_balances_the_whole_world(n):
+    """Spark-free: the 360×180 tiles of the whole world over a
+    cluster's worth of tasks — no task gets more than twice its fair
+    share."""
+    assert _busiest_task(n, 360, 180, -180, -90) <= 2 * -(-64800 // n)
+
+
+def test_run_hillshade_deals_tiles_evenly(spark):
+    """A 4×2 world at shade_partitions=4 runs as 4 reduce tasks of 2
+    tiles each.  A hash of the tile key puts 1/2/2/3 tiles on the tasks
+    at this origin."""
+    spec = WorldSpec(
+        lon0=13, lat0=45, n_tiles_x=4, n_tiles_y=2, tile_size=30,
+        block_size=10,
+    )
+    shaded = engine.run_hillshade(
+        spark, synth.images_df(spark, spec), spec.tile_size,
+        shade_partitions=4,
+    )
+    tasks = [r["task"] for r in shaded.select(
+        F.spark_partition_id().alias("task")).collect()]
+    assert sorted(np.bincount(tasks)) == [2, 2, 2, 2]
 
 
 def test_fused_lineage_counts_duplicate_blocks(spark):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -70,34 +71,29 @@ def main() -> None:
             df.explain("formatted")
         out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
 
-    # the fused hillshade pipeline: the plan must show exactly ONE
-    # full-data Exchange (hashpartitioning on the destination tile key)
-    # feeding FlatMapGroupsInPandas — assembled tiles never re-shuffle
-    from demeton_spark.engine import parse_caption, hillshade_parts, shade_unified
+    # the hillshade pipeline as run_hillshade builds it: the plan must
+    # show exactly ONE full-data Exchange (the tile deal of
+    # engine.tile_groups) feeding FlatMapGroupsInPandas — assembled
+    # tiles never re-shuffle
+    from demeton_spark.engine import run_hillshade
     from demeton_spark.synth import WorldSpec, images_df
 
     spec = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2,
                      tile_size=60, block_size=20)
-    assigned = parse_caption(images_df(spark, spec))
-    shaded = shade_unified(
-        hillshade_parts(assigned, spec.tile_size).repartition(
-            4, "tile_x", "tile_y"
-        ),
-        spec.tile_size, "elecolor|+igor",
-    )
+    shaded = run_hillshade(spark, images_df(spark, spec), spec.tile_size,
+                           script="elecolor|+igor")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         shaded.explain("formatted")
     plan = buf.getvalue().strip()
-    import re
-
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     out.append(
         "## hillshade pipeline (fused single-shuffle topology)\n\n"
-        f"`Exchange hashpartitioning` count: **{n_exchanges}** — the "
-        "block/strip union reaches one exchange on the destination tile "
-        "key; assembly, halo padding, shading and PNG encode run inside "
-        "the single FlatMapGroupsInPandas that follows.\n\n"
+        f"Exchange count: **{n_exchanges}** — the block/strip union "
+        "reaches one `shufflepartitionidpassthrough` exchange that deals "
+        "each destination tile to its reduce task by grid position; "
+        "assembly, halo padding, shading and PNG encode run inside the "
+        "single FlatMapGroupsInPandas that follows.\n\n"
         f"```\n{plan}\n```\n"
     )
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
