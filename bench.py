@@ -1,17 +1,27 @@
 #!/usr/bin/env python
-"""Benchmark: end-to-end hillshade throughput + headline contract queries.
+"""Benchmark: end-to-end hillshade throughput + headline contract queries,
+measured on the host it runs on.
 
 Default mode (what the driver runs per round):
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
-prints ONE JSON line:
+    SPARK_GRAFT_SF_DIR=<sf0.1 table dir> python bench.py
+runs at ``local[nproc]`` (CPU affinity; ``SPARK_GRAFT_CPUS`` overrides)
+with the driver memory ``session.driver_memory`` derives from host RAM,
+and prints ONE JSON line of at most 1,500 chars:
     {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": 0.1, ...}
+     "queries": {...slowest...}, "hillshade_stages": {...}, "cpus": ...,
+     "kernel_mpx_s": ..., "spark_over_kernel": ..., ...}
+The full per-query dict goes to BENCH/QUERIES_r{N}.json.
 
-Scaling-evidence mode (BASELINE.json north_rule — N vs 4N executors,
-proxied by local[8] vs local[32] on the same input):
+The yardstick is the bare per-tile kernel (shade + PNG encode of one
+1800² tile, ``kernel_run``) in nproc plain OS processes, measured in the
+same run right after the hillshade: ``spark_over_kernel`` = hillshade
+Mpx/s ÷ kernel Mpx/s.
+
+Scaling mode (BASELINE.json north_rule — N vs 4N cores on the same input):
     python bench.py --scaling
-runs the identical hillshade job at both parallelism levels and writes
-BENCH/BASELINE.md with throughputs and the scaling efficiency.
+runs the identical hillshade at ``local[max(1, nproc // 4)]`` and
+``local[nproc]``, prints one JSON line and appends one window to
+BENCH/SCALING_WINDOWS.jsonl.
 
 The hillshade input is the deterministic synthetic image table
 (demeton_spark.synth), generated once per SF into data/synth/ and
@@ -24,6 +34,7 @@ import argparse
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
@@ -40,11 +51,6 @@ WORLD_BY_SF = {
     0.01: WorldSpec(lon0=0, lat0=40, n_tiles_x=8, n_tiles_y=5,
                     tile_size=1800, block_size=300),
     0.1: WorldSpec(lon0=0, lat0=40, n_tiles_x=20, n_tiles_y=20,
-                   tile_size=1800, block_size=300),
-    # weak-scaling ladder (--weak-scaling): side grows with sqrt(sf)
-    0.33: WorldSpec(lon0=0, lat0=40, n_tiles_x=36, n_tiles_y=36,
-                    tile_size=1800, block_size=300),
-    1.0: WorldSpec(lon0=0, lat0=40, n_tiles_x=63, n_tiles_y=63,
                    tile_size=1800, block_size=300),
 }
 
@@ -130,87 +136,79 @@ def probe_steal(seconds: float = 2.0) -> float:
         return -1.0
 
 
-def probe_kernel(reference_sec: float = 0.28) -> dict:
-    """Single-process shade+encode of one 1800² tile, vs a known-quiet
-    reference.
-
-    /proc/stat steal misses one of this host's degradation modes: two
-    r4 sf1.0 attempts double-probed 0.15-0.28% steal yet ran 2.3-2.6×
-    the best wall, with the untimed warm-up itself 2.5× slow —
-    co-tenant memory-bandwidth pressure that steals no CPU time.  The
-    kernel probe measures the thing that actually varies (per-tile
-    kernel wall) in ~1 s; slowdown ≈ 1.0 means a clean window.
-    ``reference_sec`` is the quietest single-process shade-only
-    per-tile time measured on this host
-    (BENCH/KERNEL_CONCURRENCY.json level "1" ``shade_sec``)."""
-    try:
-        import numpy as np
-
-        from demeton_spark import engine, pipeline
-        from demeton_spark.synth import WorldSpec, expected_world_heights
-
-        tile = 1800
-        spec = WorldSpec(lon0=0, lat0=40, n_tiles_x=1, n_tiles_y=1,
-                         tile_size=tile, block_size=300)
-        world = expected_world_heights(spec)
-        padded = np.full((tile + 2, tile + 2), -32768, dtype=np.int16)
-        padded[1:-1, 1:-1] = world
-        steps = pipeline.parse_script("elecolor|+igor")
-        engine.shade_padded_block(padded, 0, 40, tile, steps)  # warm
-        t0 = time.time()
-        engine.shade_padded_block(padded, 0, 40, tile, steps)
-        sec = time.time() - t0
-        out = {"per_tile_sec": round(sec, 4),
-               "slowdown_vs_quiet": round(sec / reference_sec, 2)}
-        # 8-way concurrent leg: the r4 degradation mode is invisible
-        # single-threaded (probe read 0.83× while a 32-way run was
-        # 2.3× slow) — it is parallel memory-bandwidth pressure, so
-        # probe under parallel load.  spawn context, not fork: the
-        # --scaling/--weak-scaling "after" probes run in a driver that
-        # has hosted py4j/JVM-adjacent threads, and fork() from a
-        # multithreaded process can deadlock the children — a hang the
-        # except-guard cannot catch (ADVICE r4).  Each child rebuilds
-        # its own tile and warms before its ONE timed shade, matching
-        # tools/kernel_concurrency.py, whose level-8 shade_sec is the
-        # reference this leg is compared against.
-        import multiprocessing as mp
-
-        ctx = mp.get_context("spawn")
-        t0 = time.time()
-        with ctx.Pool(8) as pool:
-            secs = pool.map(_probe_kernel_child, [tile] * 8)
-        out["per_tile_sec_8way"] = round(max(secs), 4)
-        out["slowdown_vs_quiet_8way"] = round(
-            max(secs) / KERNEL_8WAY_REFERENCE_SEC, 2)
-        out["wall_8way"] = round(time.time() - t0, 4)
-        return out
-    except Exception:
-        return {}
+KERNEL_TILE = 1800
 
 
-# quietest 8-process shade-only per-tile time on this host
-# (BENCH/KERNEL_CONCURRENCY.json level "8" shade_sec)
-KERNEL_8WAY_REFERENCE_SEC = 0.27
-
-
-def _probe_kernel_child(tile: int) -> float:
-    # spawn child: imports + tile synthesis + warm shade happen here
-    # (untimed); only the second shade is measured.
+def kernel_tiles(n_tiles: int) -> tuple[float, float, float]:
+    """Mean (total, shade, encode) seconds per tile of the kernel every
+    hillshade reduce task runs: ``engine.shade_padded_block``
+    (elecolor|+igor) then ``codec.encode_rgba_png`` at the bench sink
+    level, on one deterministic 1800² tile (hole blocks included), after
+    one untimed warm shade."""
     import numpy as np
 
-    from demeton_spark import engine, pipeline
-    from demeton_spark.synth import WorldSpec, expected_world_heights
+    from demeton_spark import codec, engine, pipeline
+    from demeton_spark.synth import expected_world_heights
 
     spec = WorldSpec(lon0=0, lat0=40, n_tiles_x=1, n_tiles_y=1,
-                     tile_size=tile, block_size=300)
-    world = expected_world_heights(spec)
-    padded = np.full((tile + 2, tile + 2), -32768, dtype=np.int16)
-    padded[1:-1, 1:-1] = world
+                     tile_size=KERNEL_TILE, block_size=300)
+    padded = np.full((KERNEL_TILE + 2, KERNEL_TILE + 2), -32768,
+                     dtype=np.int16)
+    padded[1:-1, 1:-1] = expected_world_heights(spec)
     steps = pipeline.parse_script("elecolor|+igor")
-    engine.shade_padded_block(padded, 0, 40, tile, steps)  # warm
+    engine.shade_padded_block(padded, 0, 40, KERNEL_TILE, steps)
+    t_shade = t_png = 0.0
     t0 = time.time()
-    engine.shade_padded_block(padded, 0, 40, tile, steps)
-    return time.time() - t0
+    for _ in range(n_tiles):
+        a = time.time()
+        rgba, _ = engine.shade_padded_block(padded, 0, 40, KERNEL_TILE, steps)
+        b = time.time()
+        codec.encode_rgba_png(rgba, codec.RGBA_PNG_LEVEL_FAST)
+        t_shade += b - a
+        t_png += time.time() - b
+    n = float(n_tiles)
+    return (time.time() - t0) / n, t_shade / n, t_png / n
+
+
+def kernel_run(nproc: int) -> dict:
+    """``kernel_tiles`` (4 tiles each) in ``nproc`` OS processes at once
+    — no JVM, no shuffle, no Arrow: the host's own ceiling for this
+    compute in a ``local[nproc]`` job."""
+    import multiprocessing as mp
+
+    from demeton_spark.session import WORKER_ENV
+
+    # the children inherit the env Spark's Python workers get: its
+    # malloc thresholds alone move this kernel's Mpx/s by ~25%
+    for k, v in WORKER_ENV.items():
+        os.environ.setdefault(k, v)
+    # spawn, not fork: the caller may be a driver hosting py4j threads,
+    # and fork() from a multithreaded process can deadlock the children
+    with mp.get_context("spawn").Pool(nproc) as pool:
+        res = pool.map(kernel_tiles, [4] * nproc)
+    per_tile = sum(r[0] for r in res) / nproc
+    return {
+        "per_tile_sec": round(per_tile, 4),
+        "shade_sec": round(sum(r[1] for r in res) / nproc, 4),
+        "png_sec": round(sum(r[2] for r in res) / nproc, 4),
+        "mpx_s": round(nproc * KERNEL_TILE ** 2 / 1e6 / per_tile, 2),
+    }
+
+
+def host_facts() -> dict:
+    """Host RAM and the checkout's git sha, for a self-describing record."""
+    from demeton_spark.session import host_ram_bytes
+
+    sha = None
+    if os.path.isdir(os.path.join(REPO, ".git")):  # else: an export
+        try:
+            sha = subprocess.run(
+                ["git", "describe", "--always", "--dirty", "--abbrev=12"],
+                cwd=REPO, capture_output=True, text=True,
+            ).stdout.strip() or None
+        except OSError:  # no git on this host
+            pass
+    return {"ram_gb": round(host_ram_bytes() / 2 ** 30, 1), "git": sha}
 
 
 def sf_of_dir(sf_dir: str) -> float:
@@ -252,8 +250,8 @@ def run_hillshade_bench(spark, spec: WorldSpec, images_path: str,
     driver — at scale the sink is a distributed write).
 
     Session warm-up (codegen JIT + per-worker numpy import) is NOT
-    handled here: bench_once's ``warmup`` flag runs one small untimed
-    sf0.01 hillshade first and records its wall as ``warmup_sec``."""
+    handled here: bench_once runs one small untimed sf0.01 hillshade
+    first and records its wall as ``warmup_sec``."""
     from pyspark.sql import functions as F
 
     from demeton_spark import codec
@@ -282,6 +280,7 @@ def run_hillshade_bench(spark, spec: WorldSpec, images_path: str,
     out = {
         "sec": round(elapsed, 3),
         "sec_best": round(min(times), 3),
+        "sec_total": round(sum(times), 3),
         "n_trials": trials,
         "tiles": int(agg["tiles"]),
         "megapixels": round(mpx, 2),
@@ -347,62 +346,47 @@ def run_streaming_hillshade_bench(spark) -> float:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _stage_totals(spark) -> dict:
-    """Aggregate executor metrics over every completed stage (REST API).
-    Callers snapshot before/after the timed work and report the DELTA so
-    setup stages (synth-table generation, warmup trials) do not bias the
-    attribution (ADVICE r2)."""
-    import json as _json
+def _rest(spark, path: str):
+    """GET ``path`` of this application's UI REST API; None when the UI
+    is off or unreachable."""
     import urllib.request
 
     ui = spark.sparkContext.uiWebUrl
     if not ui:
-        return {}
+        return None
     app = spark.sparkContext.applicationId
     try:
-        stages = _json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages?status=complete"
-            )
-        )
-    except Exception:
-        return {}
+        with urllib.request.urlopen(
+                f"{ui}/api/v1/applications/{app}{path}", timeout=30) as resp:
+            return json.load(resp)
+    except (OSError, ValueError):
+        return None
+
+
+def completed_stages(spark) -> list[dict]:
+    """Every completed stage of the session (empty without the UI)."""
+    return _rest(spark, "/stages?status=complete") or []
+
+
+def stage_totals(stages: list[dict]) -> dict:
+    """Executor task-s, JVM cpu-s and shuffle MB summed over ``stages``."""
     return {
-        "task_time_s": round(
-            sum(st.get("executorRunTime", 0) for st in stages) / 1e3, 1
-        ),
-        "cpu_time_s": round(
-            sum(st.get("executorCpuTime", 0) for st in stages) / 1e9, 1
-        ),
+        "task_s": round(
+            sum(st.get("executorRunTime", 0) for st in stages) / 1e3, 1),
+        "cpu_s": round(
+            sum(st.get("executorCpuTime", 0) for st in stages) / 1e9, 1),
         "shuffle_read_mb": round(
-            sum(st.get("shuffleReadBytes", 0) for st in stages) / 1e6, 1
-        ),
+            sum(st.get("shuffleReadBytes", 0) for st in stages) / 1e6, 1),
         "shuffle_write_mb": round(
-            sum(st.get("shuffleWriteBytes", 0) for st in stages) / 1e6, 1
-        ),
+            sum(st.get("shuffleWriteBytes", 0) for st in stages) / 1e6, 1),
     }
 
 
 def _peak_executor_memory(spark) -> dict:
-    """Peak executor memory from the UI REST API (local mode: the one
-    driver-executor JVM + its Python workers)."""
-    import json as _json
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return {}
-    app = spark.sparkContext.applicationId
-    try:
-        execs = _json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/executors"
-            )
-        )
-    except Exception:
-        return {}
+    """Peak executor memory so far (local mode: the one driver-executor
+    JVM + its Python workers)."""
     peak: dict[str, int] = {}
-    for e in execs:
+    for e in _rest(spark, "/executors") or []:
         for k, v in (e.get("peakMemoryMetrics") or {}).items():
             peak[k] = max(peak.get(k, 0), int(v))
     out = {}
@@ -415,56 +399,58 @@ def _peak_executor_memory(spark) -> dict:
 
 
 def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
-               trials: int = 3, warmup: int = 0, stage_metrics: bool = False):
+               trials: int = 3):
+    """One fresh ``local[cpus]`` session: an untimed warm-up, the timed
+    hillshade with its stage deltas and peak memory, then, for the full
+    record, the kernel yardstick, the stream and the headline queries."""
     from demeton_spark.session import build_session
 
     spec = WORLD_BY_SF.get(sf, WORLD_BY_SF[0.1])
-    extra = {
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
-        # block-granular rows: bigger Arrow batches amortize overhead
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-    }
-    if stage_metrics:
-        extra["spark.ui.enabled"] = "true"
-        # surfaces Python-worker RSS in peakMemoryMetrics
-        extra["spark.executor.processTreeMetrics.enabled"] = "true"
     spark = build_session(
         app_name=f"bench-local{cpus}",
         master=f"local[{cpus}]",
-        extra_conf=extra,
+        extra_conf={
+            # block-granular rows: bigger Arrow batches amortize overhead
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+            # REST API for the stage deltas and peak memory
+            "spark.ui.enabled": "true",
+            # surfaces Python-worker RSS in peakMemoryMetrics
+            "spark.executor.processTreeMetrics.enabled": "true",
+        },
     )
     try:
         images_path = ensure_synth_table(spark, spec, sf)
-        warm_sec = None
-        if warmup:
-            # one SMALL (sf0.01, 40-tile) hillshade warms the session:
-            # ≥cpus concurrent grouped tasks spawn every Python worker
-            # (numpy/pandas import once per worker, reused after) and
-            # JIT-compile the same generated operators, at ~3% of a
-            # full-SF run's cost.  Recorded as warmup_sec, untimed in
-            # the headline — a long cluster job pays this once.
-            wspec = WORLD_BY_SF[0.01]
-            wpath = ensure_synth_table(spark, wspec, 0.01)
-            t0 = time.time()
-            run_hillshade_bench(spark, wspec, wpath, trials=1)
-            warm_sec = round(time.time() - t0, 3)
-        pre = _stage_totals(spark) if stage_metrics else {}
+        # one SMALL (sf0.01, 40-tile) hillshade warms the session: ≥cpus
+        # concurrent grouped tasks spawn every Python worker (numpy/pandas
+        # import once per worker, reused after) and JIT-compile the same
+        # generated operators, at ~3% of a full-SF run's cost.  Recorded
+        # as warmup_sec, untimed in the headline — a long cluster job
+        # pays this once.
+        wspec = WORLD_BY_SF[0.01]
+        wpath = ensure_synth_table(spark, wspec, 0.01)
+        t0 = time.time()
+        run_hillshade_bench(spark, wspec, wpath, trials=1)
+        warm_sec = round(time.time() - t0, 3)
+        before = {(st["stageId"], st["attemptId"])
+                  for st in completed_stages(spark)}
         hs = run_hillshade_bench(spark, spec, images_path, trials=trials)
-        if warm_sec is not None:
-            hs["warmup_sec"] = warm_sec
-        if stage_metrics:
-            post = _stage_totals(spark)
-            hs = {**hs, **{k: round(post[k] - pre.get(k, 0), 1)
-                           for k in post}, **_peak_executor_memory(spark)}
+        stages = stage_totals([
+            st for st in completed_stages(spark)
+            if (st["stageId"], st["attemptId"]) not in before])
+        # the timed trials' wall × cores, beside the task-s they booked
+        stages["wall_core_s"] = round(hs["sec_total"] * cpus, 1)
+        hs = {**hs, "warmup_sec": warm_sec, "stages": stages,
+              **_peak_executor_memory(spark),
+              "driver_memory": spark.conf.get("spark.driver.memory")}
         queries: dict[str, float] = {"hillshade": hs["sec"]}
         if include_queries:
+            hs["kernel"] = kernel_run(cpus)
             # single run (not median): a state-store-overhead indicator,
             # at sf0.01 regardless of the bench SF (streaming state is
             # exercised, not data scale)
             queries["streaming_hillshade"] = run_streaming_hillshade_bench(
                 spark
             )
-        if include_queries:
             from demeton_spark.queries import QUERIES
 
             for name in HEADLINE_QUERIES:
@@ -492,124 +478,24 @@ def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
         spark.stop()
 
 
-def main() -> None:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--scaling", action="store_true",
-                        help="run local[2]/[8]/[32] core-scaling evidence")
-    parser.add_argument("--weak-scaling", action="store_true",
-                        help="run the sf0.1/0.33/1.0 weak-scaling ladder "
-                             "at fixed local[32]")
-    args = parser.parse_args()
+def headline(hs: dict, queries: dict, *, sf: float, cpus: int, host: dict,
+             steal: tuple[float, float], queries_artifact: str) -> str:
+    """The default record: ONE JSON line of at most 1,500 chars.
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = sf_of_dir(sf_dir)
-
-    if args.weak_scaling:
-        run_weak_scaling(cpus)
-        return
-
-    if args.scaling:
-        # Interleaved rounds: the sandbox's hypervisor steal drifts on a
-        # minutes scale, so comparing local[2] runs from one window with
-        # local[8] runs from another biases the ratio either way.  Each
-        # round runs all three parallelism levels back-to-back (one
-        # contention window) and the efficiency is computed per round;
-        # headline = median round, with per-round values disclosed.
-        steal_before = probe_steal()
-        kernel_before = probe_kernel()
-        rounds: list[dict[int, dict]] = []
-        for r in range(3):
-            one = {}
-            for n in (2, 8, 32):
-                # warmup=1: each fresh session first runs one small
-                # untimed sf0.01 hillshade (codegen JIT + N python
-                # workers importing numpy — a one-time cost a long
-                # cluster job amortizes; it lands hardest at width 32
-                # and so biases the ratio).  Its wall is recorded as
-                # warmup_sec in the results.
-                hs, _ = bench_once(n, sf_dir, sf, include_queries=False,
-                                   trials=2, warmup=1, stage_metrics=True)
-                one[n] = hs
-                print(f"round {r} local[{n}]: {hs}", file=sys.stderr)
-            rounds.append(one)
-        steal_after = probe_steal()
-        per_round_2_8 = [r[2]["sec"] / r[8]["sec"] / 4.0 for r in rounds]
-        per_round_8_32 = [r[8]["sec"] / r[32]["sec"] / 4.0 for r in rounds]
-        # headline = MEDIAN per-round efficiency (a typical contention
-        # window, not the most favorable draw); per-round values and
-        # best-of stay in the artifact as supplementary evidence
-        eff_2_8 = statistics.median(per_round_2_8)
-        eff_8_32 = statistics.median(per_round_8_32)
-        results = {
-            n: min((r[n] for r in rounds), key=lambda h: h["sec"])
-            for n in (2, 8, 32)
-        }
-        window = {
-            "label": os.environ.get("DEMETON_SCALING_LABEL",
-                                    "bench.py --scaling window"),
-            "steal_before": steal_before,
-            "steal_after": steal_after,
-            "kernel_probe_before": kernel_before,
-            "kernel_probe_after": probe_kernel(),
-            "eff_2_8": round(eff_2_8, 3),
-            "eff_8_32": round(eff_8_32, 3),
-            "per_round_2_8": [round(e, 3) for e in per_round_2_8],
-            "per_round_8_32": [round(e, 3) for e in per_round_8_32],
-            "results": {str(n): r for n, r in results.items()},
-            "attribution_rounds": [
-                {str(n): {k: r[n][k] for k in
-                          ("task_time_s", "cpu_time_s", "shuffle_read_mb",
-                           "shuffle_write_mb") if k in r[n]}
-                 for n in (8, 32)}
-                for r in rounds
-            ],
-            "sf": sf,
-        }
-        append_scaling_window(window)
-        write_baseline_md(sf)
-        print(json.dumps({
-            "metric": "hillshade scaling efficiency (N→4N cores)",
-            "value": round(eff_2_8, 3),
-            "unit": "ratio",
-            "sf": sf,
-            "efficiency_2_to_8": round(eff_2_8, 3),
-            "efficiency_8_to_32": round(eff_8_32, 3),
-            "per_round_2_to_8": [round(e, 3) for e in per_round_2_8],
-            "steal_probe": {"before": steal_before, "after": steal_after},
-            "runs": {f"local[{n}]": r for n, r in results.items()},
-        }))
-        return
-
-    steal_before = probe_steal()
-    # /proc/stat steal misses this host's dominant contention mode
-    # (co-tenant memory bandwidth, which steals no CPU); the kernel
-    # probe's 8-way leg reads it directly — slowdown ≈ 1.0 means a
-    # genuinely quiet window, ≥1.3 explains a slow-looking headline.
-    kernel_before = probe_kernel()
-    hs, queries = bench_once(cpus, sf_dir, sf, include_queries=True)
-    steal_after = probe_steal()
-    kernel_after = probe_kernel()
-    total = round(sum(queries.values()), 3)
-    weak = _load_weak_scaling_artifact()
-    # COMPACT headline only.  The driver records a 2,000-char TAIL of
-    # stdout: r3 inlined the weak-scaling blob and r4 the 56-entry
-    # per-query dict, both outgrew the window, cut the FRONT of the
-    # JSON off, and parsed as null — two rounds of machine-unreadable
-    # perf records.  Full per-query timings now go to
-    # BENCH/QUERIES_r{N}.json (round inferred from existing
-    # BENCH_r*.json driver artifacts); the headline inlines only the
-    # two pipeline entries plus the 5 slowest queries and is asserted
-    # under 1,500 chars.
-    queries_artifact = _write_queries_artifact(queries, hs, sf, cpus)
+    The driver records a 2,000-char TAIL of stdout: r3 inlined the
+    weak-scaling blob and r4 the 56-entry per-query dict, both outgrew
+    the window, cut the FRONT of the JSON off, and parsed as null.  So
+    the line inlines only the 7 slowest queries (2 if it would still
+    be too long); the full dict is in ``queries_artifact``."""
+    kernel = hs["kernel"]["mpx_s"]
     slow = dict(sorted(queries.items(), key=lambda kv: -kv[1])[:7])
-    headline = {
+    record = {
         "metric": (
             f"end-to-end hillshade ({hs['megapixels']} Mpx @ "
             f"{hs['mpx_per_sec']} Mpx/s) + {len(queries) - 1} headline "
             f"queries, local[{cpus}]"
         ),
-        "value": total,
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
         "sf": sf,
         "queries": slow,
@@ -617,26 +503,79 @@ def main() -> None:
         "hillshade_megapixels": hs["megapixels"],
         "hillshade_mpx_per_sec": hs["mpx_per_sec"],
         "hillshade_sec_best": hs["sec_best"],
+        "hillshade_warmup_sec": hs["warmup_sec"],
+        "hillshade_stages": hs["stages"],
+        "peak_jvm_heap_mb": hs.get("peak_jvm_heap_mb"),
+        "peak_python_rss_mb": hs.get("peak_python_rss_mb"),
+        "kernel_mpx_s": kernel,
+        "spark_over_kernel": round(hs["mpx_per_sec"] / kernel, 3),
         "cpus": cpus,
+        "driver_memory": hs["driver_memory"],
+        **host,
         "n": 3,
         "stat": "median",
-        "steal_probe": {"before": steal_before, "after": steal_after},
-        "kernel_probe_slowdown": {
-            "before": [kernel_before.get("slowdown_vs_quiet"),
-                       kernel_before.get("slowdown_vs_quiet_8way")],
-            "after": [kernel_after.get("slowdown_vs_quiet"),
-                      kernel_after.get("slowdown_vs_quiet_8way")],
-        },
-        "artifacts": {
-            "queries": queries_artifact,
-            "weak_scaling": "BENCH/WEAKSCALING.json" if weak else None,
-        },
+        "steal_probe": {"before": steal[0], "after": steal[1]},
+        "artifacts": {"queries": queries_artifact},
     }
-    line = json.dumps(headline)
-    if len(line) > 1500:  # keep the whole line inside the driver's tail
-        headline["queries"] = dict(list(slow.items())[:2])
-        line = json.dumps(headline)
-    print(line)
+    line = json.dumps(record)
+    if len(line) > 1500:
+        record["queries"] = dict(list(slow.items())[:2])
+        line = json.dumps(record)
+    return line
+
+
+def scaling_widths(nproc: int) -> tuple[int, int]:
+    """The north rule's N vs 4N cores, from the cores this host gives."""
+    return max(1, nproc // 4), nproc
+
+
+def run_scaling(cpus: int, sf_dir: str, sf: float) -> None:
+    """The same hillshade at N and 4N cores.  Three interleaved rounds
+    (both widths back-to-back in one window of host weather); efficiency
+    = median over rounds of (sec_N / sec_4N) / (4N / N)."""
+    lo, hi = scaling_widths(cpus)
+    steal_before = probe_steal()
+    rounds = []
+    for r in range(3):
+        rounds.append({n: bench_once(n, sf_dir, sf, include_queries=False,
+                                     trials=2)[0] for n in (lo, hi)})
+        print(f"round {r}: {rounds[-1]}", file=sys.stderr)
+    per_round = [round(r[lo]["sec"] / r[hi]["sec"] / (hi / lo), 3)
+                 for r in rounds]
+    window = {"widths": [lo, hi], "sf": sf, **host_facts(),
+              "steal_before": steal_before, "steal_after": probe_steal(),
+              "efficiency": statistics.median(per_round),
+              "per_round": per_round}
+    append_scaling_window(
+        {**window, "rounds": [{str(n): hs for n, hs in r.items()}
+                              for r in rounds]})
+    print(json.dumps({
+        "metric": f"hillshade scaling efficiency local[{lo}]→local[{hi}]",
+        "value": window["efficiency"], "unit": "ratio", **window}))
+
+
+def main() -> None:
+    parser = argparse.ArgumentParser()
+    parser.add_argument("--scaling", action="store_true",
+                        help="run the N vs 4N core-scaling evidence")
+    args = parser.parse_args()
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+    sf = sf_of_dir(sf_dir)
+
+    if args.scaling:
+        run_scaling(cpus, sf_dir, sf)
+        return
+
+    steal_before = probe_steal()
+    hs, queries = bench_once(cpus, sf_dir, sf, include_queries=True)
+    steal_after = probe_steal()
+    print(headline(hs, queries, sf=sf, cpus=cpus, host=host_facts(),
+                   steal=(steal_before, steal_after),
+                   queries_artifact=_write_queries_artifact(
+                       queries, hs, sf, cpus)))
 
 
 def _write_queries_artifact(queries: dict, hs: dict, sf: float,
@@ -667,437 +606,11 @@ SCALING_WINDOWS_PATH = os.path.join(REPO, "BENCH", "SCALING_WINDOWS.jsonl")
 
 
 def append_scaling_window(window: dict) -> None:
-    """Append one --scaling contention window to the disclosure log.
-
-    Every window ever measured stays in the file; BENCH/BASELINE.md is
-    regenerated FROM the full log, so no run can silently discard
-    history (the r4 hand-edit / regenerate clobber cycle)."""
+    """Append one --scaling window to the log; every window ever
+    measured stays in the file."""
     os.makedirs(os.path.dirname(SCALING_WINDOWS_PATH), exist_ok=True)
     with open(SCALING_WINDOWS_PATH, "a") as f:
         f.write(json.dumps(window) + "\n")
-
-
-def _load_scaling_windows() -> list[dict]:
-    try:
-        with open(SCALING_WINDOWS_PATH) as f:
-            return [json.loads(ln) for ln in f if ln.strip()]
-    except OSError:
-        return []
-
-
-def write_baseline_md(sf: float) -> None:
-    """Regenerate BENCH/BASELINE.md from the full scaling-window log.
-
-    Headline = the lowest-launch-steal window among those measured with
-    the CURRENT methodology (steady-state: session warm-up excluded,
-    detectable by warmup_sec in the results — earlier windows timed the
-    one-time codegen-JIT + 32-worker numpy import inside the wide leg,
-    which is not comparable); if no steady-state window exists yet,
-    fall back to lowest steal across all.  Per-window values are all
-    disclosed in a table, so the headline choice is auditable, not a
-    cherry-pick."""
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    # Wall-sec/Mpx/s cells are only comparable within one scale factor:
-    # keep only windows measured at the requested sf (missing sf =
-    # legacy windows, all measured at 0.1) so a future --scaling run at
-    # another SF cannot pool incomparable values into one table
-    # (ADVICE r4).
-    windows = [w for w in _load_scaling_windows()
-               if (w.get("sf") if w.get("sf") is not None else 0.1) == sf]
-    if not windows:
-        return
-
-    def steal_key(w):
-        s = w.get("steal_before")
-        return 2.0 if s is None else s
-
-    def _steady(w):
-        return any("warmup_sec" in r
-                   for r in (w.get("results") or {}).values())
-
-    pool = [w for w in windows if _steady(w)] or windows
-    head = min(pool, key=steal_key)
-    eff_2_8, eff_8_32 = head["eff_2_8"], head["eff_8_32"]
-    per_round_2_8 = head.get("per_round_2_8") or []
-    per_round_8_32 = head.get("per_round_8_32") or []
-    # throughput cells: best across every window that recorded walls
-    best: dict[int, dict] = {}
-    for w in windows:
-        for n, r in (w.get("results") or {}).items():
-            n = int(n)
-            if n not in best or r["sec"] < best[n]["sec"]:
-                best[n] = r
-    results = best
-    rows = "\n".join(
-        f"| local[{n}] | {r['sec']} | {r['mpx_per_sec']} |"
-        for n, r in sorted(results.items())
-    )
-    per_round_line = (
-        "\n  — per-round: "
-        + " / ".join(f"{e:.3f}" for e in per_round_2_8)
-        + " (every contention window, not a lucky draw)"
-        if per_round_2_8 else ""
-    )
-    per_round_8_32_line = (
-        "\n  — per-round: " + " / ".join(f"{e:.3f}" for e in per_round_8_32)
-        if per_round_8_32 else ""
-    )
-
-    def _fmt_steal(w):
-        s = w.get("steal_before")
-        return "—" if s is None else f"{100 * s:.1f}%"
-
-    def _fmt_rounds(v):
-        return "/".join(f"{e:.3f}" for e in v) if v else "—"
-
-    wrows = "\n".join(
-        f"| {w['label']}{' **(headline)**' if w is head else ''} | "
-        f"{_fmt_steal(w)} | {w['eff_2_8']:.3f} "
-        f"({_fmt_rounds(w.get('per_round_2_8'))}) | "
-        f"{w['eff_8_32']:.3f} ({_fmt_rounds(w.get('per_round_8_32'))}) | "
-        f"{(w.get('results') or {}).get('32', {}).get('mpx_per_sec', '—')} |"
-        for w in windows
-    )
-    # best single contention-round 8→32 across steady-state windows:
-    # each round is (2,8,32) back-to-back inside ONE window, so it is
-    # the cleanest same-weather comparison the sandbox can produce
-    best_round_line = ""
-    steady_rounds = [(e, w) for w in windows if _steady(w)
-                     for e in (w.get("per_round_8_32") or [])]
-    if steady_rounds:
-        be, bw = max(steady_rounds, key=lambda t: t[0])
-        best_round_line = (
-            f"\nBest single same-weather round at 8→32 across "
-            f"steady-state windows: **{be:.3f}** ({bw['label']}) — each "
-            f"round runs (2, 8, 32) back-to-back inside one contention "
-            f"window, so this is the plan's efficiency when the machine "
-            f"cooperates for ~4 minutes.")
-        try:
-            with open(os.path.join(REPO, "BENCH",
-                                   "KERNEL_CONCURRENCY.json")) as f:
-                ceil = json.load(f)["kernel_efficiency_8_to_32"]
-            best_round_line += (
-                f"  {be:.3f} / {ceil} kernel ceiling = {be / ceil:.0%} "
-                f"of the hardware's own 8→32 scaling.\n")
-        except (OSError, KeyError):  # no 8→32 leg recorded
-            best_round_line += "\n"
-    window_md = f"""### Every window ever measured (same build lineage — none discarded)
-
-| window | steal at launch | eff 2→8 (per-round) | eff 8→32 (per-round) | local[32] Mpx/s |
-|---|---|---|---|---|
-{wrows}
-
-The spread across windows is the machine, not the plan: shuffle volume
-and task counts are identical in every round; a window's local[2] leg
-can run faster than another's while its wide legs run slower — the
-signature of contention that penalizes width.  Full per-window JSON:
-`BENCH/SCALING_WINDOWS.jsonl` (append-only; `bench.py --scaling` adds
-a window per run).
-{best_round_line}"""
-    attribution = ""
-    att = next((w for w in reversed(windows)
-                if w.get("attribution_rounds")), None)
-    if att:
-        # Per-stage attribution.  task-s = aggregate executorRunTime
-        # (includes the Python/Arrow kernel time the tasks spend);
-        # jvm-cpu-s = executorCpuTime (JVM side only — the pandas-UDF
-        # compute runs in Python workers, outside this counter).  If
-        # the SAME work occupies more task-seconds at 32 threads than
-        # at 8, each task ran slower → hardware contention (memory
-        # bandwidth / hypervisor steal); if task-seconds stayed flat
-        # while wall-clock efficiency dropped, workers sat idle → a
-        # topology/straggler problem.
-        lines = [f"## Per-stage attribution ({att['label']})", "",
-                 "| round | local[8] task-s | local[32] task-s | "
-                 "task-s inflation | local[8] jvm-cpu-s | "
-                 "local[32] jvm-cpu-s | shuffle r/w MB |",
-                 "|---|---|---|---|---|---|---|"]
-        for i, r in enumerate(att["attribution_rounds"]):
-            r8, r32 = r["8"], r["32"]
-            t8, t32 = r8["task_time_s"], r32["task_time_s"]
-            infl = t32 / t8 if t8 else float("nan")
-            lines.append(
-                f"| {i} | {t8} | {t32} | **{infl:.2f}x** | "
-                f"{r8.get('cpu_time_s', 0)} | {r32.get('cpu_time_s', 0)} | "
-                f"{r32.get('shuffle_read_mb', 0)}/"
-                f"{r32.get('shuffle_write_mb', 0)} |")
-        lines += ["",
-            "Task-second inflation ≈ 1/efficiency means the SAME work "
-            "costs more worker-occupied seconds at 32 threads — "
-            "per-task slowdown from memory-bandwidth / hypervisor-steal "
-            "contention, not idle workers: shuffle volume is identical "
-            "at both widths.  Inflation "
-            "well below 1/efficiency would instead indicate "
-            "stragglers/idle workers; that is not what we observe."]
-        attribution = "\n".join(lines)
-    kernel_md = ""
-    try:
-        with open(os.path.join(REPO, "BENCH",
-                               "KERNEL_CONCURRENCY.json")) as f:
-            kc = json.load(f)
-        kernel_md = f"""## Platform ceiling: the same kernel without Spark
-
-`tools/kernel_concurrency.py` runs the EXACT per-tile kernel
-(`engine.shade_padded_block` + PNG encode, same band rows, same 1800²
-tile) across 1/8/32 independent OS processes — no JVM, no shuffle, no
-Arrow.  Interleaved rounds, steal probed
-({kc['steal_probe']['before']:.2%}→{kc['steal_probe']['after']:.2%}):
-
-| processes | agg Mpx/s | per-tile sec |
-|---|---|---|
-| 1 | {kc['levels']['1']['agg_mpx_per_sec']} | {kc['levels']['1']['per_tile_sec']} |
-| 8 | {kc['levels']['8']['agg_mpx_per_sec']} | {kc['levels']['8']['per_tile_sec']} |
-| 32 | {kc['levels']['32']['agg_mpx_per_sec']} | {kc['levels']['32']['per_tile_sec']} |
-
-- kernel-only 8→32 efficiency: **{kc['kernel_efficiency_8_to_32']}** —
-  the hardware's own ceiling for this compute at 32-way (per-tile time
-  inflates {kc['levels']['32']['per_tile_sec'] / kc['levels']['8']['per_tile_sec']:.2f}×
-  with zero framework involved: memory bandwidth, not Spark).
-- The ceiling itself moves with co-tenant weather; this run reads
-  8→32 = {kc['kernel_efficiency_8_to_32']}.  Spark-vs-ceiling comparisons are only
-  valid within matching weather, and in any weather some of the Spark
-  8→32 gap below the ceiling is harness cost (shuffle fetch + Arrow +
-  scheduling), not hardware.
-- Artifact: `BENCH/KERNEL_CONCURRENCY.json`.
-
-Any Spark 8→32 number must be read against this ceiling: the plan's
-efficiency-of-ceiling is (Spark 8→32) / (kernel 8→32).
-
-"""
-    except (OSError, KeyError):  # a record without the 8/32 legs
-        pass
-    weak = _load_weak_scaling_artifact()
-    weak_md = ""
-    if weak:
-        wrows = "\n".join(
-            f"| {p['sf']} | {p['megapixels']} | {p['sec']} | "
-            f"{p['sec_per_mpx']} | {p.get('peak_jvm_heap_mb', '—')} / "
-            f"{p.get('peak_python_rss_mb', '—')} |"
-            for p in weak["points"]
-        )
-        flat = weak["flatness_vs_sf0.1"]
-        single = weak.get("single_ladder")
-        single_md = ""
-        headline_flat = flat
-        if single:
-            srows = "\n".join(
-                f"| {p['sf']} | {p['megapixels']} | {p['sec']} | "
-                f"{p['sec_per_mpx']} |"
-                for p in single["points"]
-            )
-            sflat = single["flatness_vs_sf0.1"]
-            headline_flat = sflat
-            single_md = f"""### Headline: one clean single ladder ({single['label']})
-
-All three points from ONE real execution (min total s/Mpx among
-complete ladders in the log) — unlike the composed row below, this
-curve can be reproduced by a single `bench.py --weak-scaling` run:
-
-| sf | Mpx | wall sec | s/Mpx |
-|---|---|---|---|
-{srows}
-
-- s/Mpx relative to sf0.1: {", ".join(f"sf{k} = {v}" for k, v in sflat.items())}
-
-### Supplementary: per-point best across all ladders (composed)
-"""
-        weak_md = f"""## PRIMARY scale evidence: weak scaling (fixed width, input ×10)
-
-Same pipeline, same local[{weak['cpus']}], input grown a full decade
-(sf0.1 → sf1.0 = 1.3 → 12.9 Gpx through the ONE shuffle).  Flat s/Mpx
-means per-unit cost does not grow with input — the property that
-matters at 100 TB.
-
-{single_md}Each cell = the best window for that point across
-every ladder ever run (`BENCH/WEAKSCALING_RUNS.jsonl`, append-only,
-nothing discarded): a ladder takes many minutes and hypervisor steal
-can turn mid-run — one disclosed r4 ladder measured the sf0.33 point
-at 3× the per-Mpx cost of the 10×-larger sf1.0 point of the SAME run,
-which is contention, not scale.  Min-over-runs per point can
-understate the s/Mpx of any single real execution, which is why the
-single-ladder row above is the headline.
-
-| sf | Mpx | wall sec | s/Mpx | peak JVM heap / Python RSS (MB) |
-|---|---|---|---|---|
-{wrows}
-
-- headline s/Mpx relative to sf0.1: {", ".join(f"sf{k} = {v}" for k, v in headline_flat.items())}
-  (1.0 = perfectly flat; measured by `bench.py --weak-scaling`,
-  artifact BENCH/WEAKSCALING.json)
-- Peak memory stays bounded by TILE size, not input size — the
-  working set per task is one 1800² tile regardless of world size.
-
-"""
-    mpx = results.get(32, {}).get("megapixels", 1296.0)
-    tiles = results.get(32, {}).get("tiles", 400)
-    with open(path, "w") as f:
-        f.write("# BENCH/BASELINE — scale evidence\n\n")
-        f.write(weak_md)
-        f.write(f"""## SECONDARY: core scaling (N vs 4N cores)
-
-Same job, same input (deterministic synthetic image table, SF={sf},
-{mpx} Mpx over {tiles} tiles of
-1800²), end-to-end hillshade pipeline (read parquet → caption-parse
-assignment → block-edge strip emission → ONE shuffle keyed by
-destination tile → fused assemble+halo-pad+Horn+elecolor|+igor shade →
-PNG encode → metrics aggregate).  ``local[N]`` is the sandbox
-proxy for an N-executor cluster (BASELINE.json north_rule).  The
-sandbox shows 2-3× hypervisor-steal drift on a minutes scale, so the
-measurement runs 3 interleaved rounds of (2, 8, 32) back-to-back; the
-efficiency is computed within each round's contention window (the
-MEDIAN round is the headline; per-round values below).  HEADLINE =
-the lowest-launch-steal window among current-methodology (steady-state,
-warm-up-excluded) rows of the table of every window ever measured
-(below); each throughput cell is the best across windows.
-
-| parallelism | wall sec | Mpx/s |
-|---|---|---|
-{rows}
-
-- scaling efficiency N→4N at N=2 (local[2]→local[8]): **{eff_2_8:.3f}**
-  (target ≥ 0.8){per_round_line}
-- scaling efficiency N→4N at N=8 (local[8]→local[32]): {eff_8_32:.3f}{per_round_8_32_line}
-
-{window_md}
-{kernel_md}{attribution}
-
-The machine advertises 32 vCPUs but shows 0-25% hypervisor steal and
-~16 effective memory-bandwidth-bound cores, so the 8→32 pair
-under-reports scalability of the plan itself (the best low-steal
-window observed for the same build: local[32] = 11.1 s, 116.8 Mpx/s).
-The 2→8 pair is the meaningful proxy for the N→4N rule.  Per-task
-memory locality (row-band kernels) is what keeps 32-way throughput
-climbing at all — see engine.SHADE_BAND_ROWS.
-
-Reference single-node baseline (BASELINE.md): the original tool shades
-~0.3 Mpx/s single-threaded (650×488 px ≈ 1 s, docs/Tutorial.md:43-47).
-""")
-
-
-WEAK_SCALING_PATH = os.path.join(REPO, "BENCH", "WEAKSCALING.json")
-WEAK_RUNS_PATH = os.path.join(REPO, "BENCH", "WEAKSCALING_RUNS.jsonl")
-
-#: weak-scaling ladder: fixed parallelism, input grows 10x — the flat
-#: s/Mpx curve is the primary 100-TB scale evidence (one shuffle,
-#: memory bounded by tile size not input size)
-WEAK_SFS = (0.1, 0.33, 1.0)
-
-
-def _load_weak_scaling_artifact():
-    try:
-        with open(WEAK_SCALING_PATH) as f:
-            return json.load(f)
-    except Exception:
-        return None
-
-
-def run_weak_scaling(cpus: int) -> None:
-    kernel_before = probe_kernel()
-    points = []
-    for sf in WEAK_SFS:
-        # one JVM per point: peak-memory readings do not bleed across
-        # sizes.  warmup=1 (same steady-state methodology as --scaling:
-        # the untimed sf0.01 warm-up pays the one-time codegen-JIT +
-        # per-worker numpy import, which otherwise lands INSIDE the
-        # small points' timed trials and tilts the curve toward
-        # "improves with scale" for the wrong reason).
-        trials = 1 if sf >= 1.0 else 2
-        hs, _ = bench_once(cpus, f"sf{sf}", sf, include_queries=False,
-                           trials=trials, warmup=1, stage_metrics=True)
-        pt = {"sf": sf, **hs,
-              "sec_per_mpx": round(hs["sec"] / hs["megapixels"], 5)}
-        points.append(pt)
-        print(f"weak sf={sf}: {pt}", file=sys.stderr)
-    run = {
-        "label": os.environ.get("DEMETON_WEAK_LABEL",
-                                "bench.py --weak-scaling run"),
-        "cpus": cpus,
-        "kernel_probe_before": kernel_before,
-        "kernel_probe_after": probe_kernel(),
-        "points": points,
-        "sec_per_mpx": {str(p["sf"]): p["sec_per_mpx"] for p in points},
-    }
-    os.makedirs(os.path.dirname(WEAK_RUNS_PATH), exist_ok=True)
-    with open(WEAK_RUNS_PATH, "a") as f:
-        f.write(json.dumps(run) + "\n")
-    result = compose_weak_scaling_artifact()
-    print(json.dumps({
-        "metric": "hillshade weak scaling s/Mpx at fixed local[%d]" % cpus,
-        "value": result["flatness_vs_sf0.1"][str(WEAK_SFS[-1])],
-        "unit": "ratio (1.0 = flat)",
-        **result,
-    }))
-
-
-def compose_weak_scaling_artifact() -> dict:
-    """Rebuild BENCH/WEAKSCALING.json from the append-only run log.
-
-    Each ladder run is one contention window per POINT (a point takes
-    minutes, weather turns mid-ladder: one r4 run measured sf0.33 at
-    3× the per-Mpx cost of the 10×-larger sf1.0 point in the same
-    ladder — physically impossible except as contention).  Headline =
-    per-point BEST s/Mpx across all runs (same treatment as the
-    core-scaling throughput cells), all runs disclosed in the log so
-    nothing is discarded."""
-    runs = []
-    try:
-        with open(WEAK_RUNS_PATH) as f:
-            runs = [json.loads(ln) for ln in f if ln.strip()]
-    except OSError:
-        pass
-    if not runs:
-        return {}
-    best: dict[str, dict] = {}
-    for run in runs:
-        for p in run["points"]:
-            key = str(p["sf"])
-            if key not in best or p["sec_per_mpx"] < best[key]["sec_per_mpx"]:
-                best[key] = {**p, "from_run": run["label"]}
-    points = [best[str(sf)] for sf in WEAK_SFS if str(sf) in best]
-    base = points[0]["sec_per_mpx"]
-    # beside the per-point-best composition, publish ONE clean complete
-    # ladder (min total s/Mpx among runs covering every point): the
-    # composed curve can understate any single real execution (VERDICT
-    # r4 #4), so a reader needs a row that IS a single real execution
-    complete = [r for r in runs
-                if {str(p["sf"]) for p in r["points"]}
-                >= {str(s) for s in WEAK_SFS}]
-    single = None
-    if complete:
-        ladder = min(
-            complete,
-            key=lambda r: sum(p["sec_per_mpx"] for p in r["points"]))
-        spts = {str(p["sf"]): p for p in ladder["points"]}
-        sbase = spts[str(WEAK_SFS[0])]["sec_per_mpx"]
-        single = {
-            "label": ladder["label"],
-            "kernel_probe_before": ladder.get("kernel_probe_before"),
-            "kernel_probe_after": ladder.get("kernel_probe_after"),
-            "points": [spts[str(s)] for s in WEAK_SFS],
-            "sec_per_mpx": {k: p["sec_per_mpx"] for k, p in spts.items()},
-            "flatness_vs_sf0.1": {
-                str(s): round(spts[str(s)]["sec_per_mpx"] / sbase, 3)
-                for s in WEAK_SFS
-            },
-        }
-    result = {
-        "cpus": runs[-1]["cpus"],
-        "stat": "per-point best s/Mpx across all runs in "
-                "BENCH/WEAKSCALING_RUNS.jsonl (append-only; every "
-                "ladder ever run is disclosed there)",
-        "points": points,
-        "sec_per_mpx": {str(p["sf"]): p["sec_per_mpx"] for p in points},
-        # s/Mpx at each size relative to the smallest: 1.0 = perfectly
-        # flat; < 1.0 = the pipeline got MORE efficient as input grew
-        "flatness_vs_sf0.1": {
-            str(p["sf"]): round(p["sec_per_mpx"] / base, 3) for p in points
-        },
-        "single_ladder": single,
-    }
-    with open(WEAK_SCALING_PATH, "w") as f:
-        json.dump(result, f, indent=1)
-    return result
 
 
 if __name__ == "__main__":

@@ -23,25 +23,44 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Python worker environment: pin BLAS/OMP to one thread per worker and
+#: stop glibc from returning every large numpy temporary to the OS
+#: (mmap/munmap storms show up as 80%+ sys time with 32 concurrent
+#: kernel-heavy workers).
+WORKER_ENV = {
+    "OMP_NUM_THREADS": "1",
+    "OPENBLAS_NUM_THREADS": "1",
+    "MKL_NUM_THREADS": "1",
+    "MALLOC_ARENA_MAX": "2",
+    "MALLOC_MMAP_THRESHOLD_": "536870912",
+    "MALLOC_TRIM_THRESHOLD_": "536870912",
+}
+
+
+def host_ram_bytes() -> int:
+    """Physical RAM of this host (``MemTotal`` on Linux)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def driver_memory(ram_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set (a
+    deployment setting), else half of the host's RAM in whole GiB, at
+    least ``1g``."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    if ram_bytes is None:
+        ram_bytes = host_ram_bytes()
+    return f"{max(1, ram_bytes // 2 ** 31)}g"
+
+
 def build_session(
     app_name: str = "demeton-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    # Python workers inherit this process's env (local mode) — pin BLAS/OMP
-    # to one thread per worker and stop glibc from returning every large
-    # numpy temporary to the OS (mmap/munmap storms show up as 80%+ sys
-    # time with 32 concurrent kernel-heavy workers).
-    worker_env = {
-        "OMP_NUM_THREADS": "1",
-        "OPENBLAS_NUM_THREADS": "1",
-        "MKL_NUM_THREADS": "1",
-        "MALLOC_ARENA_MAX": "2",
-        "MALLOC_MMAP_THRESHOLD_": "536870912",
-        "MALLOC_TRIM_THRESHOLD_": "536870912",
-    }
-    for k, v in worker_env.items():
+    # Python workers inherit this process's env (local mode)
+    for k, v in WORKER_ENV.items():
         os.environ.setdefault(k, v)
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
@@ -75,14 +94,14 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
     )
     if master == "local" or master.startswith("local["):
         builder = builder.config("spark.python.daemon.module",
                                  "demeton_spark.pyworker")
-    for k, v in worker_env.items():  # cluster mode: ship to executors too
+    for k, v in WORKER_ENV.items():  # cluster mode: ship to executors too
         builder = builder.config(f"spark.executorEnv.{k}", v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,0 +1,55 @@
+"""Spark-free checks of the benchmark's host-derived settings and of the
+one-line record the driver reads."""
+
+import json
+
+import pytest
+
+import bench
+from demeton_spark.session import driver_memory
+
+
+@pytest.mark.parametrize("nproc, widths",
+                         [(1, (1, 1)), (2, (1, 2)), (4, (1, 4)), (32, (8, 32))])
+def test_scaling_widths_follow_the_cores(nproc, widths):
+    assert bench.scaling_widths(nproc) == widths
+
+
+def test_default_headline_fits_the_driver_tail():
+    # every query the record can carry; the longest names run slowest
+    queries = {name: 1000.0 + len(name) for name in
+               ["hillshade", "streaming_hillshade", *bench.HEADLINE_QUERIES]}
+    hs = {"megapixels": 1296.0, "mpx_per_sec": 30.51, "sec_best": 38.812,
+          "warmup_sec": 12.345, "driver_memory": "7g",
+          "stages": {"task_s": 123.4, "cpu_s": 12.3,
+                     "shuffle_read_mb": 2345.6, "shuffle_write_mb": 2345.6,
+                     "wall_core_s": 567.8},
+          "peak_jvm_heap_mb": 5432.1, "peak_python_rss_mb": 3210.9,
+          "kernel": {"mpx_s": 42.91}}
+    line = bench.headline(
+        hs, queries, sf=0.1, cpus=4,
+        host={"ram_gb": 15.7, "git": "0123456789ab"},
+        steal=(0.0123, 0.0456), queries_artifact="BENCH/QUERIES_r06.json")
+    assert len(line) <= 1500
+    record = json.loads(line)
+    assert record["unit"] == "sec"
+    assert record["value"] == pytest.approx(sum(queries.values()))
+    assert "local[4]" in record["metric"]
+    assert record["cpus"] == 4 and record["driver_memory"] == "7g"
+    assert record["kernel_mpx_s"] == 42.91
+    assert record["spark_over_kernel"] == pytest.approx(30.51 / 42.91, abs=1e-3)
+    assert record["hillshade_stages"]["task_s"] == 123.4
+    assert record["peak_jvm_heap_mb"] == 5432.1
+
+
+def test_driver_memory_is_half_the_host_ram(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert driver_memory(16479424 * 1024) == "7g"  # MemTotal 15.7 GiB
+    assert driver_memory(64 * 2 ** 30) == "32g"
+    assert driver_memory(2 ** 30) == "1g"  # floor
+
+
+def test_driver_memory_env_overrides(monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory(64 * 2 ** 30) == "3g"
+    assert driver_memory() == "3g"

@@ -66,7 +66,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from demeton_spark.session import build_session
 
-    spark = build_session(app_name="oracle-check", master="local[8]")
+    spark = build_session(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

@@ -29,10 +29,11 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=None,
                     help="spark.sql.shuffle.partitions for the stream")
     ap.add_argument("--triggers", type=int, default=4)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="local[N] width (default: the host's cores)")
     args = ap.parse_args()
 
-    from bench import WORLD_BY_SF, ensure_synth_table
+    from bench import WORLD_BY_SF, completed_stages, ensure_synth_table
     from demeton_spark import codec, streaming
     from demeton_spark.session import build_session
 
@@ -42,8 +43,10 @@ def main() -> None:
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"
         )
-    spark = build_session(app_name="stream-profile",
-                          master=f"local[{args.cpus}]", extra_conf=extra)
+    spark = build_session(
+        app_name="stream-profile",
+        master=f"local[{args.cpus}]" if args.cpus else None,
+        extra_conf=extra)
     if args.partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.partitions))
     spec = WORLD_BY_SF[0.01]
@@ -84,24 +87,13 @@ def main() -> None:
                 "stateRowsTotal": so.get("numRowsTotal"),
                 "stateMemUsedBytes": so.get("memoryUsedBytes"),
             })
-        stages = []
-        try:
-            import urllib.request
-
-            ui = spark.sparkContext.uiWebUrl
-            app = spark.sparkContext.applicationId
-            for st in json.load(urllib.request.urlopen(
-                    f"{ui}/api/v1/applications/{app}/stages?status=complete")):
-                stages.append({
-                    "stage": st["stageId"],
-                    "name": st["name"].split("\n")[0][:60],
-                    "tasks": st["numCompleteTasks"],
-                    "run_s": round(st.get("executorRunTime", 0) / 1e3, 2),
-                    "cpu_s": round(st.get("executorCpuTime", 0) / 1e9, 2),
-                    "sched_delay_like_ms": None,
-                })
-        except Exception:
-            pass
+        stages = [{
+            "stage": st["stageId"],
+            "name": st["name"].split("\n")[0][:60],
+            "tasks": st["numCompleteTasks"],
+            "run_s": round(st.get("executorRunTime", 0) / 1e3, 2),
+            "cpu_s": round(st.get("executorCpuTime", 0) / 1e9, 2),
+        } for st in completed_stages(spark)]
         out = {
             "wall_sec": round(wall, 3),
             "stages": sorted(stages, key=lambda s: -s["run_s"])[:10],
