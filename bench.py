@@ -382,6 +382,60 @@ def stage_totals(stages: list[dict]) -> dict:
     }
 
 
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and every process below
+    it — the driver, its JVM's threads, the Python workers — read from
+    /proc.  Children already reaped count through their parent's
+    cutime/cstime, live ones through their own stat, so each CPU-second
+    is counted once."""
+    stats, kids = {}, {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat", "rb") as fh:
+                stat = fh.read()
+        except OSError:  # the process ended between listdir and open
+            continue
+        # the command name may hold spaces: fields resume after the last ')'
+        fields = stat[stat.rindex(b")") + 2 :].split()
+        stats[int(entry)] = fields
+        kids.setdefault(int(fields[1]), []).append(int(entry))
+    total, todo = 0, [os.getpid()]
+    while todo:
+        p = todo.pop()
+        if p in stats:  # utime, stime, cutime, cstime
+            total += sum(int(x) for x in stats[p][11:15])
+        todo.extend(kids.get(p, []))
+    return total / _TICK
+
+
+def stop_spark(spark) -> None:
+    """Stop ``spark`` AND the JVM behind it.  ``spark.stop()`` keeps the
+    py4j gateway, so the next session would reuse the first JVM, its
+    heap size and its heap history."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    gateway.shutdown()
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        if proc.stdin is not None:  # the JVM exits at EOF on its stdin
+            proc.stdin.close()
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    SparkContext._gateway = SparkContext._jvm = None
+
+
 def _peak_executor_memory(spark) -> dict:
     """Peak executor memory so far (local mode: the one driver-executor
     JVM + its Python workers)."""
@@ -400,9 +454,10 @@ def _peak_executor_memory(spark) -> dict:
 
 def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
                trials: int = 3):
-    """One fresh ``local[cpus]`` session: an untimed warm-up, the timed
-    hillshade with its stage deltas and peak memory, then, for the full
-    record, the kernel yardstick, the stream and the headline queries."""
+    """One fresh ``local[cpus]`` session in a fresh JVM: an untimed
+    warm-up, the timed hillshade with its stage deltas, process-tree CPU
+    and peak memory, then, for the full record, the kernel yardstick,
+    the stream and the headline queries."""
     from demeton_spark.session import build_session
 
     spec = WORLD_BY_SF.get(sf, WORLD_BY_SF[0.1])
@@ -433,10 +488,15 @@ def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
         warm_sec = round(time.time() - t0, 3)
         before = {(st["stageId"], st["attemptId"])
                   for st in completed_stages(spark)}
+        cpu0 = tree_cpu_s()
         hs = run_hillshade_bench(spark, spec, images_path, trials=trials)
+        tree_cpu = round(tree_cpu_s() - cpu0, 1)
         stages = stage_totals([
             st for st in completed_stages(spark)
             if (st["stageId"], st["attemptId"]) not in before])
+        # cpu_s is the JVM's executorCpuTime only; the Python workers
+        # and the driver show in the process tree's CPU
+        stages["tree_cpu_s"] = tree_cpu
         # the timed trials' wall × cores, beside the task-s they booked
         stages["wall_core_s"] = round(hs["sec_total"] * cpus, 1)
         hs = {**hs, "warmup_sec": warm_sec, "stages": stages,
@@ -475,7 +535,7 @@ def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
                 gc.collect()
         return hs, queries
     finally:
-        spark.stop()
+        stop_spark(spark)
 
 
 def headline(hs: dict, queries: dict, *, sf: float, cpus: int, host: dict,

@@ -12,13 +12,14 @@ with ONE full-data shuffle (see SCALE.md):
   1. ``parse_caption``      — pure Column expressions recover the
                               block's tile + block coords from the
                               caption (equi-join key construction, J1).
-  2. ``hillshade_parts``    — the only parts emitter: raw (still-
-                              compressed) blocks plus the k-px halo
-                              strips ``emit_block_strips`` cuts from
-                              border blocks (k = 1 + prefilter steps),
-                              all keyed by DESTINATION tile.
-  3. ``compose_padded``     — the only stitch: winner-only decode in
-                              deterministic overwrite order (J2, §4.3)
+  2. ``hillshade_parts``    — the only parts emitter: one scan, one
+                              ``mapInArrow`` pass that forwards the raw
+                              (still-compressed) blocks and appends the
+                              k-px halo strips cut from border blocks
+                              (k = 1 + prefilter steps), all keyed by
+                              DESTINATION tile.
+  3. ``compose_padded``     — the only stitch (in ``applyInArrow``
+                              groups): winner-only decode (J2, §4.3)
                               plus strip placement into the (ts+2k)²
                               array, DEM_HEIGHT_NONE at world edges
                               (extract-fill, Dem/Funcs.fs:395-416).
@@ -54,9 +55,14 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from . import codec, kernels, pipeline
 from .synth import WorldSpec
@@ -90,33 +96,41 @@ def parse_caption(images: DataFrame) -> DataFrame:
     expressions — stays inside whole-stage codegen, no Python.
     Rows with unparseable captions are dropped here; collect them with
     :func:`invalid_caption_rows` first if you need a quarantine sink.
+    The five columns are added in one projection (one analyzer pass).
     """
     images = images.where(F.col("caption").rlike(_CAPTION_PATTERN))
     name = F.regexp_extract("caption", _CAPTION_PATTERN, 1)
     lat_sign = F.when(F.substring(name, 1, 1) == "N", 1).otherwise(-1)
     lon_sign = F.when(F.substring(name, 4, 1) == "E", 1).otherwise(-1)
-    return (
-        images.withColumn("tile_name", name)
-        .withColumn("tile_y", (lat_sign * F.substring(name, 2, 2).cast("int")).cast("int"))
-        .withColumn("tile_x", (lon_sign * F.substring(name, 5, 3).cast("int")).cast("int"))
-        .withColumn(
-            "bx", F.regexp_extract("caption", _CAPTION_PATTERN, 2).cast("int")
-        )
-        .withColumn(
-            "by", F.regexp_extract("caption", _CAPTION_PATTERN, 3).cast("int")
-        )
-    )
+    return images.withColumns({
+        "tile_name": name,
+        "tile_y": (lat_sign * F.substring(name, 2, 2).cast("int")).cast("int"),
+        "tile_x": (lon_sign * F.substring(name, 5, 3).cast("int")).cast("int"),
+        "bx": F.regexp_extract("caption", _CAPTION_PATTERN, 2).cast("int"),
+        "by": F.regexp_extract("caption", _CAPTION_PATTERN, 3).cast("int"),
+    })
 
 
 # ---------------------------------------------------------------------------
 # 2. the parts stream: blocks + halo strips keyed by destination tile (J3)
 # ---------------------------------------------------------------------------
 
-PART_SCHEMA = (
+_SPARK_TYPES = {"int": IntegerType(), "long": LongType(),
+                "string": StringType(), "binary": BinaryType()}
+
+
+def _schema(ddl: str) -> StructType:
+    """A flat ``"name type, …"`` schema as a StructType, built without a
+    JVM (executors import this module too)."""
+    return StructType([StructField(n, _SPARK_TYPES[t])
+                       for n, t in (f.split() for f in ddl.split(", "))])
+
+
+PART_SCHEMA = _schema(
     "tile_x int, tile_y int, part string, bx int, by int, image_id string, "
     "w int, h int, fmt string, data binary"
 )
-_PART_COLUMNS = tuple(f.split()[0] for f in PART_SCHEMA.split(", "))
+_PART_COLUMNS = tuple(PART_SCHEMA.fieldNames())
 
 #: the 8 halo strips: destination-tile offset (dx, dy) from the sender,
 #: keyed by where the cells land in the receiver's padded array (a
@@ -155,16 +169,14 @@ def _place(d: int, i: int, size: int, ts: int, k: int) -> slice:
     return slice(k + i * size, k + (i + 1) * size)
 
 
-def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
-    """Image rows → the k-px strip rows (PART_SCHEMA, fmt='raw') their
-    border blocks donate to neighbor tiles.  Strip rows keep the
-    sender's ``(by, bx, image_id)`` so the receiver can replay the
-    deterministic overwrite order (§4.3)."""
+def _cut_strips(blocks, tile_size: int, halo: int) -> dict[str, list]:
+    """``(tile_x, tile_y, image_id, fmt, payload, w, h, bx, by)`` block
+    tuples → the PART_SCHEMA columns (fmt='raw') of the k-px strips
+    their border blocks donate to neighbor tiles.  Strip rows keep the
+    sender's ``(bx, by, image_id)`` so the receiver picks the same
+    winner as for the sender's own blocks (§4.3)."""
     out: dict[str, list] = {c: [] for c in _PART_COLUMNS}
-    for tx, ty, iid, fmt, payload, w, h, bx, by in zip(
-        pdf["tile_x"], pdf["tile_y"], pdf["image_id"], pdf["fmt"],
-        pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"],
-    ):
+    for tx, ty, iid, fmt, payload, w, h, bx, by in blocks:
         w, h, bx, by = int(w), int(h), int(bx), int(by)
         if halo > min(w, h):
             raise ValueError(f"halo {halo} exceeds block size {w}x{h}")
@@ -180,30 +192,43 @@ def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
                    "raw", strip.tobytes())
             for col, v in zip(_PART_COLUMNS, row):
                 out[col].append(v)
-    return pd.DataFrame(out)
+    return out
 
 
-def emit_block_strips(
-    assigned: DataFrame, tile_size: int, halo: int = 1
-) -> DataFrame:
-    """Narrow stage: border blocks → k-px strip rows keyed by the
-    neighbor tile that needs them (:func:`block_strips`).
+#: the block columns :func:`_cut_strips` reads, in its tuple order
+_CUT_COLUMNS = ("tile_x", "tile_y", "image_id", "fmt", "data", "w", "h",
+                "bx", "by")
 
-    The Catalyst filter keeps interior blocks out of the Python worker
-    entirely; only the border fraction of the input is decoded twice.
-    """
-    edge = assigned.where(
-        (F.col("bx") == 0)
-        | (F.col("by") == 0)
-        | ((F.col("bx") + 1) * F.col("w") >= tile_size)
-        | ((F.col("by") + 1) * F.col("h") >= tile_size)
-    )
 
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield block_strips(pdf, tile_size, halo)
+def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
+    """Image rows (with their ``bytes``) → the k-px strip rows
+    (PART_SCHEMA) their border blocks donate to neighbor tiles."""
+    cols = [pdf["bytes" if c == "data" else c] for c in _CUT_COLUMNS]
+    return pd.DataFrame(_cut_strips(zip(*cols), tile_size, halo))
 
-    return edge.mapInPandas(cut, schema=PART_SCHEMA)
+
+def emit_parts(
+    batch: pa.RecordBatch, tile_size: int, halo: int
+) -> Iterator[pa.RecordBatch]:
+    """One Arrow batch of "B" parts (PART_SCHEMA) → the batch itself,
+    untouched, then the strips its border blocks (a numpy mask) donate,
+    in the batch's own Arrow field types (large or not, per
+    ``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    yield batch
+    bx, by, w, h = (batch.column(c).to_numpy(zero_copy_only=False)
+                    for c in ("bx", "by", "w", "h"))
+    edge = ((bx == 0) | (by == 0) | ((bx + 1) * w >= tile_size)
+            | ((by + 1) * h >= tile_size))
+    if edge.any():
+        rows = batch.filter(pa.array(edge))
+        strips = _cut_strips(
+            zip(*(rows.column(c).to_pylist() for c in _CUT_COLUMNS)),
+            tile_size, halo,
+        )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(strips[f.name], f.type) for f in batch.schema],
+            schema=batch.schema,
+        )
 
 
 def dedup_duplicate_blocks(assigned: DataFrame) -> DataFrame:
@@ -247,73 +272,85 @@ def hillshade_parts(
 ) -> DataFrame:
     """Blocks + their neighbors' strip contributions, keyed by the
     destination tile — the single-shuffle input of :func:`shade_unified`
-    and of every other tile path."""
-    return _block_parts(assigned).unionByName(
-        emit_block_strips(assigned, tile_size, halo)
-    )
+    and of every other tile path: one scan of ``assigned`` and one
+    Arrow pass (:func:`emit_parts`) per batch."""
+
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield from emit_parts(batch, tile_size, halo)
+
+    return _block_parts(assigned).mapInArrow(emit, schema=PART_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # 3. compose: the one stitch + strip placement (J2 mosaic)
 # ---------------------------------------------------------------------------
 
-def compose_padded(
-    parts: pd.DataFrame, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
-) -> tuple[np.ndarray | None, int]:
-    """One tile's parts (PART_SCHEMA rows) → ``(padded, n_blocks)``: the
-    (ts+2k)² int16 array with its blocks stitched into the interior and
-    its neighbors' strips in the k-px halo.
+def _columns(parts: pa.Table | pd.DataFrame, names) -> list[list]:
+    """``names`` columns of an Arrow table or pandas frame, as lists."""
+    if isinstance(parts, pa.Table):
+        return [parts.column(c).to_pylist() for c in names]
+    return [parts[c].tolist() for c in names]
 
-    Parts overwrite in deterministic ``(by, bx, image_id)`` order —
-    Spark group order is nondeterministic, the sort re-establishes the
-    reference's merge semantics (Dem/Funcs.fs:357-388, §4.3).  In that
-    order only the LAST part per position is ever visible, so only the
-    winners are decoded: duplicate-heavy ("land") tiles cost one decode
-    per position however many copies arrived, and duplicate edge blocks
+
+def compose_padded(
+    parts: pa.Table | pd.DataFrame, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
+) -> tuple[np.ndarray | None, int]:
+    """One tile's parts (PART_SCHEMA rows, as an Arrow table or a pandas
+    frame) → ``(padded, n_blocks)``: the (ts+2k)² int16 array with its
+    blocks stitched into the interior and its neighbors' strips in the
+    k-px halo.
+
+    Spark group order is nondeterministic; the reference's merge
+    (Dem/Funcs.fs:357-388, §4.3) overwrites in ``(by, bx, image_id)``
+    order, so the part with the largest ``image_id`` at each
+    ``(part, bx, by)`` position is the one visible.  Only those winners
+    are decoded: duplicate-heavy ("land") tiles cost one decode per
+    position however many copies arrived, and duplicate edge blocks
     resolve identically on both sides of a tile boundary.  ``n_blocks``
     counts every block row received (input lineage); a group with none
     (strips sent past the world edge) gives ``(None, 0)``.  ``fill`` is
     the missing-neighbor value: DEM_HEIGHT_NONE for heights, 0 for
     XTH-packed tiles (offset 0 decodes to missing, with no water bit).
     """
-    n_blocks = int((parts["part"] == "B").sum())
+    part, bxs, bys, ids, ws, hs, fmts, data = _columns(
+        parts, ("part", "bx", "by", "image_id", "w", "h", "fmt", "data"))
+    n_blocks = part.count("B")
     if n_blocks == 0:
         return None, 0
+    winner: dict[tuple, int] = {}
+    for i, pos in enumerate(zip(part, bxs, bys)):
+        j = winner.setdefault(pos, i)
+        if ids[i] > ids[j]:
+            winner[pos] = i
     padded = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.int16)
-    winners = parts.sort_values(["by", "bx", "image_id"]).drop_duplicates(
-        ["part", "bx", "by"], keep="last"
-    )
-    for part, fmt, payload, w, h, bx, by in zip(
-        winners["part"], winners["fmt"], winners["data"], winners["w"],
-        winners["h"], winners["bx"], winners["by"],
-    ):
-        w, h, bx, by = int(w), int(h), int(bx), int(by)
-        dx, dy = _HALO_PARTS.get(part, (0, 0))
+    for i in winner.values():
+        w, h, bx, by = ws[i], hs[i], bxs[i], bys[i]
+        dx, dy = _HALO_PARTS.get(part[i], (0, 0))
         region = padded[_place(dy, by, h, ts, k), _place(dx, bx, w, ts, k)]
-        cells = (codec.decode_block(fmt, payload, w) if part == "B"
-                 else np.frombuffer(payload, dtype="<i2"))
+        cells = (codec.decode_block(fmts[i], data[i], w) if part[i] == "B"
+                 else np.frombuffer(data[i], dtype="<i2"))
         region[...] = cells.reshape(region.shape)
     return padded, n_blocks
 
 
-ASSEMBLED_SCHEMA = (
+ASSEMBLED_SCHEMA = _schema(
     "tile_x int, tile_y int, heights binary, n_blocks int, missing_px long"
 )
+_ASSEMBLED_ARROW = to_arrow_schema(ASSEMBLED_SCHEMA)
 
 
 def assembled_row(
     tile_x: int, tile_y: int, tile: np.ndarray, n_blocks: int
-) -> pd.DataFrame:
+) -> pa.Table:
     """One ASSEMBLED_SCHEMA row for a stitched tile."""
-    return pd.DataFrame(
-        {
-            "tile_x": [tile_x],
-            "tile_y": [tile_y],
-            "heights": [tile.tobytes()],
-            "n_blocks": [n_blocks],
-            "missing_px": [int(np.count_nonzero(tile == DEM_HEIGHT_NONE))],
-        }
-    )
+    return pa.Table.from_pydict({
+        "tile_x": [tile_x],
+        "tile_y": [tile_y],
+        "heights": [tile.tobytes()],
+        "n_blocks": [n_blocks],
+        "missing_px": [int(np.count_nonzero(tile == DEM_HEIGHT_NONE))],
+    }, schema=_ASSEMBLED_ARROW)
 
 
 #: row stride of the tile → task deal: tile (x, y) goes to task
@@ -351,14 +388,11 @@ def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
     """Stitch image blocks into one int16 raster per tile
     (:func:`compose_padded` with no halo)."""
 
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile, n_blocks = compose_padded(pdf, tile_size, 0)
-        return assembled_row(
-            int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
-            tile, n_blocks,
-        )
+    def stitch(key, table):
+        tile, n_blocks = compose_padded(table, tile_size, 0)
+        return assembled_row(key[1].as_py(), key[2].as_py(), tile, n_blocks)
 
-    return tile_groups(_block_parts(assigned)).applyInPandas(
+    return tile_groups(_block_parts(assigned)).applyInArrow(
         stitch, schema=ASSEMBLED_SCHEMA
     )
 
@@ -367,10 +401,11 @@ def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
 # 4. render (W1-W3 + §2.8 shaders, vectorized per tile)
 # ---------------------------------------------------------------------------
 
-SHADED_SCHEMA = (
+SHADED_SCHEMA = _schema(
     "tile_x int, tile_y int, tile_name string, width int, height int, "
     "png binary, shaded_px long, total_px long, n_blocks int"
 )
+_SHADED_ARROW = to_arrow_schema(SHADED_SCHEMA)
 
 
 #: row-band height for chunked shading: bounds the per-task float32
@@ -478,18 +513,12 @@ def render_setup(
     )
 
 
-#: what a group with no blocks of its own renders to
-_NO_TILES = pd.DataFrame(
-    columns=[c.split()[0] for c in SHADED_SCHEMA.split(", ")]
-)
-
-
 def render_tile(
     padded: np.ndarray, tile_x: int, tile_y: int, ts: int, steps,
     registry: dict, lvl: int, *, pre_steps=(),
     clip_poly: np.ndarray | None = None, water: np.ndarray | None = None,
     n_blocks: int = 0,
-) -> pd.DataFrame:
+) -> pa.Table:
     """The one place a SHADED_SCHEMA row is made: height prefilters (each
     consumes one halo ring of ``padded``), Horn + shaders + clip
     (:func:`shade_padded_block`), RGBA PNG encode at level ``lvl``."""
@@ -499,19 +528,17 @@ def render_tile(
         padded, tile_x, tile_y, ts, steps, water=water, clip_poly=clip_poly,
         registry=registry,
     )
-    return pd.DataFrame(
-        {
-            "tile_x": [tile_x],
-            "tile_y": [tile_y],
-            "tile_name": [_tile_name(0, tile_x, tile_y)],
-            "width": [ts],
-            "height": [ts],
-            "png": [codec.encode_rgba_png(rgba, lvl)],
-            "shaded_px": [shaded],
-            "total_px": [ts * ts],
-            "n_blocks": [n_blocks],
-        }
-    )
+    return pa.Table.from_pydict({
+        "tile_x": [tile_x],
+        "tile_y": [tile_y],
+        "tile_name": [_tile_name(0, tile_x, tile_y)],
+        "width": [ts],
+        "height": [ts],
+        "png": [codec.encode_rgba_png(rgba, lvl)],
+        "shaded_px": [shaded],
+        "total_px": [ts * ts],
+        "n_blocks": [n_blocks],
+    }, schema=_SHADED_ARROW)
 
 
 def shade_unified(
@@ -536,17 +563,17 @@ def shade_unified(
             f"({len(pre_steps)})"
         )
 
-    def assemble_pad_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        padded, n_blocks = compose_padded(pdf, tile_size, halo)
+    def assemble_pad_shade(key, table):
+        padded, n_blocks = compose_padded(table, tile_size, halo)
         if padded is None:
-            return _NO_TILES
+            return _SHADED_ARROW.empty_table()
         return render_tile(
-            padded, int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
-            tile_size, steps, registry, lvl, pre_steps=pre_steps,
-            clip_poly=clip_poly, n_blocks=n_blocks,
+            padded, key[1].as_py(), key[2].as_py(), tile_size, steps,
+            registry, lvl, pre_steps=pre_steps, clip_poly=clip_poly,
+            n_blocks=n_blocks,
         )
 
-    return tile_groups(parts, shade_partitions).applyInPandas(
+    return tile_groups(parts, shade_partitions).applyInArrow(
         assemble_pad_shade, schema=SHADED_SCHEMA
     )
 
@@ -589,22 +616,22 @@ def run_tile_shade(
         F.col("xth").alias("bytes"),
     )
 
-    def pad_and_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        packed, n_blocks = compose_padded(pdf, tile_size, 1, fill=0)
+    def pad_and_shade(key, table):
+        packed, n_blocks = compose_padded(table, tile_size, 1, fill=0)
         if packed is None:
-            return _NO_TILES
+            return _SHADED_ARROW.empty_table()
         packed_u = packed.view(np.uint16)
         offs = (packed_u & 0x7FFF).astype(np.int32)
         heights = np.where(
             offs == 0, DEM_HEIGHT_NONE, offs + codec._XTH_MIN_HEIGHT
         ).astype(np.int16)
         return render_tile(
-            heights, int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
-            tile_size, steps, registry, lvl,
+            heights, key[1].as_py(), key[2].as_py(), tile_size, steps,
+            registry, lvl,
             water=(packed_u[1:-1, 1:-1] >> 15).astype(bool), n_blocks=n_blocks,
         )
 
-    return tile_groups(hillshade_parts(blocks, tile_size)).applyInPandas(
+    return tile_groups(hillshade_parts(blocks, tile_size)).applyInArrow(
         pad_and_shade, schema=SHADED_SCHEMA
     )
 
@@ -676,16 +703,17 @@ def run_hillshade(
     clip_poly, cover = clip_cover(clip_polygon)
     halo = 1 + (len(pipeline.parse_script(prefilter)) if prefilter else 0)
     assigned = parse_caption(images)
+    if cover is not None:  # only the cover and its ring send parts to it
+        x0, y0, x1, y1 = cover
+        assigned = assigned.where(in_tiles(x0 - 1, y0 - 1, x1 + 1, y1 + 1))
     if local_dedup:
         assigned = dedup_duplicate_blocks(assigned)
     parts = hillshade_parts(assigned, tile_size, halo)
     if cover is not None:
-        # prune DESTINATION tiles to the polygon's bbox cover.  The filter
-        # sits above the block/strip union: it pushes down to the scan on
-        # the block arm (the full-data one), while strips donated by
-        # just-outside tiles into kept boundary tiles survive — the
-        # clipped result stays pixel-identical to clipping the unpruned
-        # output.
+        # prune DESTINATION tiles to the polygon's bbox cover.  Strips
+        # donated by the ring just outside into kept boundary tiles
+        # survive, so the clipped result stays pixel-identical to
+        # clipping the unpruned output.
         parts = parts.where(in_tiles(*cover))
     if output_dir is not None and resume:
         done = _read_manifest(spark, output_dir)
@@ -704,7 +732,7 @@ def run_hillshade(
     )
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)
-        return spark.read.parquet(output_dir)
+        return spark.read.schema(SHADED_SCHEMA).parquet(output_dir)
     return shaded
 
 

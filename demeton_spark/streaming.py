@@ -338,7 +338,7 @@ def streaming_assemble_tiles(images: DataFrame, tile_size: int) -> DataFrame:
             return
         tile, n_blocks = compose_padded(parts, tile_size, 0)
         state.update(_TOMBSTONE)
-        yield assembled_row(int(key[0]), int(key[1]), tile, n_blocks)
+        yield assembled_row(int(key[0]), int(key[1]), tile, n_blocks).to_pandas()
 
     blocks = _block_parts(parse_caption(images))
     return blocks.groupBy("tile_x", "tile_y").applyInPandasWithState(
@@ -445,7 +445,7 @@ def streaming_hillshade(
         yield render_tile(
             padded, tx, ty, tile_size, steps, registry, lvl,
             pre_steps=pre_steps, clip_poly=clip_poly, n_blocks=n_blocks,
-        )
+        ).to_pandas()
 
     return parts.groupBy("tile_x", "tile_y").applyInPandasWithState(
         update,

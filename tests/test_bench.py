@@ -53,3 +53,25 @@ def test_driver_memory_env_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
     assert driver_memory(64 * 2 ** 30) == "3g"
     assert driver_memory() == "3g"
+
+
+def test_tree_cpu_counts_a_busy_child():
+    """A child's CPU counts while it runs and after it is reaped."""
+    import subprocess
+    import sys
+    import time
+
+    burn = ("import time\nt = time.process_time()\n"
+            "while time.process_time() - t < 0.5:\n    pass\n"
+            "print('done', flush=True)\ntime.sleep(60)\n")
+    tree0, own0 = bench.tree_cpu_s(), time.process_time()
+    child = subprocess.Popen([sys.executable, "-c", burn],
+                             stdout=subprocess.PIPE, text=True)
+    try:
+        assert child.stdout.readline().strip() == "done"
+        alive = bench.tree_cpu_s() - tree0 - (time.process_time() - own0)
+    finally:
+        child.kill()
+        child.wait()
+    reaped = bench.tree_cpu_s() - tree0 - (time.process_time() - own0)
+    assert alive >= 0.45 and reaped >= 0.45

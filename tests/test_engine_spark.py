@@ -692,3 +692,102 @@ def test_local_dedup_byte_identical_and_collapses(spark):
     # duplicates may survive — but most of the 4x duplication must go
     assert n_raw == spec.n_rows
     assert n_dedup <= n_raw * 0.6
+
+
+def _world_blocks_batch(spec: WorldSpec, large: bool = False):
+    """The "B" parts of ``_world_parts`` as one Arrow batch of the
+    PART_SCHEMA columns (large string/binary types when ``large``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    parts = _world_parts(spec, 1)
+    blocks = parts[parts["part"] == "B"][list(engine.PART_SCHEMA.fieldNames())]
+    schema = pa.schema([
+        (f.name, {pa.string(): pa.large_string(),
+                  pa.binary(): pa.large_binary()}.get(f.type, f.type)
+         if large else f.type)
+        for f in to_arrow_schema(engine.PART_SCHEMA)
+    ])
+    return pa.RecordBatch.from_pandas(blocks, schema=schema,
+                                      preserve_index=False)
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["string", "large"])
+@pytest.mark.parametrize("k", [1, 2])
+def test_emit_parts_passes_blocks_through_and_cuts_strips(k, large):
+    """Spark-free: the map-side emitter returns its input batch as the
+    "B" parts, byte for byte, then the strips ``block_strips`` cuts from
+    the same rows, in a batch of the input's own Arrow schema."""
+    spec = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=1,
+                     tile_size=30, block_size=10)
+    batch = _world_blocks_batch(spec, large)
+    out = list(engine.emit_parts(batch, spec.tile_size, k))
+    assert len(out) == 2 and out[0].equals(batch)
+    assert out[1].schema == batch.schema
+    blocks = batch.to_pandas().rename(columns={"data": "bytes"})
+    expected = engine.block_strips(blocks, spec.tile_size, k)
+    pd.testing.assert_frame_equal(
+        out[1].to_pandas(), expected[list(engine.PART_SCHEMA.fieldNames())],
+        check_dtype=False,
+    )
+    # each tile's interior block (1, 1) donates nothing
+    assert len(expected) and not (
+        (expected["bx"] == 1) & (expected["by"] == 1)).any()
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_compose_padded_arrow_equals_pandas(k):
+    """Spark-free: ``compose_padded`` on the parts as an Arrow table
+    (what the reduce UDF receives) equals the pandas result, including
+    a losing duplicate that arrives last."""
+    import pyarrow as pa
+
+    parts = _world_parts(SPEC, k)
+    sw = parts[(parts["tile_x"] == 13) & (parts["tile_y"] == 45)]
+    loser = sw[sw["part"] == "B"].iloc[[0]].assign(
+        image_id="img",
+        data=np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes(),
+    )
+    for frame in (sw, pd.concat([sw, loser]), pd.concat([loser, sw])):
+        want, n_want = engine.compose_padded(frame, SPEC.tile_size, k)
+        got, n_got = engine.compose_padded(
+            pa.Table.from_pandas(frame, preserve_index=False),
+            SPEC.tile_size, k,
+        )
+        assert np.array_equal(got, want) and n_got == n_want
+    assert n_got == SPEC.blocks_per_tile + 1
+
+
+def _file_scans(df) -> int:
+    """FileScan operators in ``df``'s final executed plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return len(re.findall(r"\bFileScan\b", plan.toString()))
+
+
+def test_run_hillshade_scans_its_input_once(spark, images, tmp_path):
+    """Blocks and halo strips come out of one pass over the images
+    table: the final plan holds a single FileScan of it."""
+    path = str(tmp_path / "images")
+    images.write.parquet(path)
+    shaded = engine.run_hillshade(
+        spark, spark.read.parquet(path), SPEC.tile_size)
+    assert _file_scans(shaded) == 1
+
+
+def test_large_var_types_shade_the_same_bytes(spark, images):
+    """With Arrow's large string/binary types the emitter's strip
+    batches keep the input's types and the tiles come out the same."""
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    want = {(r["tile_x"], r["tile_y"]): bytes(r["png"]) for r in
+            engine.run_hillshade(spark, images, SPEC.tile_size).collect()}
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        got = {(r["tile_x"], r["tile_y"]): bytes(r["png"]) for r in
+               engine.run_hillshade(spark, images, SPEC.tile_size).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert got == want and len(got) == 4
