@@ -12,10 +12,10 @@ and prints ONE JSON line of at most 1,500 chars:
      "kernel_mpx_s": ..., "spark_over_kernel": ..., ...}
 The full per-query dict goes to BENCH/QUERIES_r{N}.json.
 
-The yardstick is the bare per-tile kernel (shade + PNG encode of one
-1800² tile, ``kernel_run``) in nproc plain OS processes, measured in the
-same run right after the hillshade: ``spark_over_kernel`` = hillshade
-Mpx/s ÷ kernel Mpx/s.
+The yardstick is the bare per-tile kernel (``engine.render_tile``: shade
++ PNG encode of one 1800² tile, ``kernel_run``) in nproc plain OS
+processes, measured in the same run right after the hillshade:
+``spark_over_kernel`` = hillshade Mpx/s ÷ kernel Mpx/s.
 
 Scaling mode (BASELINE.json north_rule — N vs 4N cores on the same input):
     python bench.py --scaling
@@ -140,14 +140,15 @@ KERNEL_TILE = 1800
 
 
 def kernel_tiles(n_tiles: int) -> tuple[float, float, float]:
-    """Mean (total, shade, encode) seconds per tile of the kernel every
-    hillshade reduce task runs: ``engine.shade_padded_block``
-    (elecolor|+igor) then ``codec.encode_rgba_png`` at the bench sink
-    level, on one deterministic 1800² tile (hole blocks included), after
-    one untimed warm shade."""
+    """Mean (total, shade, encode) seconds per tile of the function every
+    hillshade reduce task runs, ``engine.render_tile`` (elecolor|+igor at
+    the bench sink level), on one deterministic 1800² tile (hole blocks
+    included), after one untimed warm shade.  ``encode`` times the PNG
+    writer alone on the scanline buffer that shade filled; ``shade`` is
+    the rest of the render."""
     import numpy as np
 
-    from demeton_spark import codec, engine, pipeline
+    from demeton_spark import codec, engine
     from demeton_spark.synth import expected_world_heights
 
     spec = WorldSpec(lon0=0, lat0=40, n_tiles_x=1, n_tiles_y=1,
@@ -155,19 +156,20 @@ def kernel_tiles(n_tiles: int) -> tuple[float, float, float]:
     padded = np.full((KERNEL_TILE + 2, KERNEL_TILE + 2), -32768,
                      dtype=np.int16)
     padded[1:-1, 1:-1] = expected_world_heights(spec)
-    steps = pipeline.parse_script("elecolor|+igor")
-    engine.shade_padded_block(padded, 0, 40, KERNEL_TILE, steps)
-    t_shade = t_png = 0.0
-    t0 = time.time()
+    steps, registry, lvl, _ = engine.render_setup(
+        "elecolor|+igor", codec.RGBA_PNG_LEVEL_FAST)
+    scan, pixels = codec.rgba_scanlines(KERNEL_TILE, KERNEL_TILE)
+    engine.shade_padded_block(padded, 0, 40, KERNEL_TILE, steps, out=pixels)
+    t_tile = t_png = 0.0
     for _ in range(n_tiles):
-        a = time.time()
-        rgba, _ = engine.shade_padded_block(padded, 0, 40, KERNEL_TILE, steps)
-        b = time.time()
-        codec.encode_rgba_png(rgba, codec.RGBA_PNG_LEVEL_FAST)
-        t_shade += b - a
-        t_png += time.time() - b
+        a = time.perf_counter()
+        engine.render_tile(padded, 0, 40, KERNEL_TILE, steps, registry, lvl)
+        b = time.perf_counter()
+        codec.encode_rgba_scanlines(scan, lvl)
+        t_tile += b - a
+        t_png += time.perf_counter() - b
     n = float(n_tiles)
-    return (time.time() - t0) / n, t_shade / n, t_png / n
+    return t_tile / n, (t_tile - t_png) / n, t_png / n
 
 
 def kernel_run(nproc: int) -> dict:

@@ -11,7 +11,8 @@ Reference semantics (file:line in /root/reference):
   - height↔uint16 (+offset, 0=missing): Demeton/Srtm/Png.fs:14-39
   - PNG container (sig/IHDR/IDAT/IEND):  Demeton/Png/File.fs:19-53,
                                          Demeton/Png/Chunks.fs:21-213
-  - scanline filters (we emit Up, decode all 5): Demeton/Png/Filters.fs:36-120
+  - scanline filters (we emit Up for height PNGs, None for RGBA, and
+    decode all 5):                       Demeton/Png/Filters.fs:36-120
   - HGT big-endian, north-first rows, 1-px overlap skip:
                                          Demeton/Dem/Hgt.fs:14-129
   - XTH little-endian + water-bit packing: Demeton/Dem/Xth.fs:19-200
@@ -59,42 +60,34 @@ def _chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
-def _encode_png(
-    raw: np.ndarray, bit_depth: int, color_type: int, level: int = 6
-) -> bytes:
-    """Encode a (H, W[, C]) uint8/uint16 array as PNG with the Up filter.
-
-    Up filtering before deflate is what makes smooth terrain compress
-    well (the reference picks filters by min-sum-of-abs heuristic,
-    Filters.fs:113-120; Up wins on smooth gradients).  ``level`` is the
-    deflate effort: decoded pixels are identical at any level, only the
-    byte size changes, so throughput-bound sinks pick a low level.
-    """
-    if raw.ndim == 2:
-        h, w = raw.shape
-        channels = 1
-    else:
-        h, w, channels = raw.shape
-    if bit_depth == 16:
-        body = raw.astype(">u2").tobytes()
-        bpr = w * channels * 2
-    else:
-        body = raw.astype(np.uint8).tobytes()
-        bpr = w * channels
-    rows = np.frombuffer(body, dtype=np.uint8).reshape(h, bpr)
-    prev = np.zeros((1, bpr), dtype=np.uint8)
-    up = rows - np.vstack([prev, rows[:-1]])  # uint8 wraparound == mod 256
-    filtered = np.empty((h, bpr + 1), dtype=np.uint8)
-    filtered[:, 0] = 2  # Up filter
-    filtered[:, 1:] = up
+def _png(w: int, h: int, bit_depth: int, color_type: int,
+         scanlines: np.ndarray, level: int) -> bytes:
+    """The PNG container around ``scanlines``: every row already led by
+    its filter byte, compressed as one deflate stream (one IDAT)."""
     ihdr = struct.pack(">IIBBBBB", w, h, bit_depth, color_type, 0, 0, 0)
-    idat = zlib.compress(filtered.tobytes(), level)
     return (
         PNG_SIGNATURE
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", idat)
+        + _chunk(b"IDAT", zlib.compress(scanlines, level))
         + _chunk(b"IEND", b"")
     )
+
+
+def _encode_png16(values: np.ndarray) -> bytes:
+    """Encode a (H, W) uint16 array as a 16-bit grayscale PNG with the
+    Up filter, deflate level 6.
+
+    Up filtering before deflate is what makes smooth terrain compress
+    well (the reference picks filters by min-sum-of-abs heuristic,
+    Filters.fs:113-120; Up wins on smooth gradients).
+    """
+    h, w = values.shape
+    body = values.astype(">u2").view(np.uint8).reshape(h, 2 * w)
+    scan = np.empty((h, 2 * w + 1), dtype=np.uint8)
+    scan[:, 0] = 2  # Up filter
+    scan[0, 1:] = body[0]
+    np.subtract(body[1:], body[:-1], out=scan[1:, 1:])  # uint8 wraps mod 256
+    return _png(w, h, 16, 0, scan, 6)
 
 
 def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -139,9 +132,10 @@ def _decode_png(data: bytes) -> tuple[np.ndarray, int, int]:
     )
     filters = raw[:, 0]
     out = np.empty((height, bpr), dtype=np.uint8)
-    # Fast paths for uniform-filter streams (our own encoder always emits
-    # Up): unfiltering Up is a column-wise cumulative sum mod 256, which
-    # uint8 accumulate gives for free — no per-row Python loop.
+    # Fast paths for uniform-filter streams (our own encoders emit Up for
+    # heights, None for RGBA): unfiltering Up is a column-wise cumulative
+    # sum mod 256, which uint8 accumulate gives for free — no per-row
+    # Python loop.
     if (filters == 2).all():
         out = np.add.accumulate(raw[:, 1:], axis=0, dtype=np.uint8)
     elif (filters == 0).all():
@@ -203,7 +197,7 @@ def _unfilter_rows(
 def encode_heights_png(heights: np.ndarray) -> bytes:
     """int16 heights block (row 0 = south) → 16-bit grayscale PNG bytes
     (encodeSrtmHeightsArrayToPng, Srtm/Png.fs:53-70)."""
-    return _encode_png(heights_to_uint16(heights), 16, 0)
+    return _encode_png16(heights_to_uint16(heights))
 
 
 def decode_heights_png(data: bytes) -> np.ndarray:
@@ -218,17 +212,37 @@ def decode_heights_png(data: bytes) -> np.ndarray:
 
 #: default deflate level for rendered output tiles: 6, matching the
 #: reference's zlib DEFAULT_COMPRESSION (Png/Chunks.fs:106) so persisted
-#: artifacts have the reference's storage characteristics.  The pipeline
-#: is encode-bound at level 6 (~1.7s/tile vs ~0.3s shading at 1800²);
-#: throughput-bound paths (bench.py) pass png_level=1 explicitly
-#: (7.8x faster encode, ~12% larger tiles).
+#: artifacts have the reference's storage characteristics.  Deflate
+#: dominates a tile's render at level 6: engine.render_tile on one
+#: 1800² elecolor|+igor tile takes ~170 ms at level 6 against ~105 ms at
+#: level 1 on a 4-vCPU x86 host; throughput-bound paths (bench.py) pass
+#: png_level=1 explicitly (tiles ~1.9x the size: 1,247 vs 671 KB).
 RGBA_PNG_LEVEL = 6
 RGBA_PNG_LEVEL_FAST = 1
 
 
+def rgba_scanlines(h: int, w: int) -> tuple[np.ndarray, np.ndarray]:
+    """A PNG scanline buffer for an (h, w) RGBA8 image, every row led by
+    filter byte 0 (None), and the (h, w, 4) view of its pixels: fill the
+    view, then :func:`encode_rgba_scanlines` compresses the buffer as is.
+    On shaded tiles None is smaller than Up for most scripts (igor alone
+    is ~7% larger at level 6) and needs no filter pass."""
+    scan = np.empty((h, 4 * w + 1), dtype=np.uint8)
+    scan[:, 0] = 0
+    return scan, scan[:, 1:].reshape(h, w, 4)
+
+
+def encode_rgba_scanlines(scan: np.ndarray, level: int) -> bytes:
+    """PNG bytes of a filled :func:`rgba_scanlines` buffer."""
+    h, n = scan.shape
+    return _png((n - 1) // 4, h, 8, 6, scan, level)
+
+
 def encode_rgba_png(image: np.ndarray, level: int = RGBA_PNG_LEVEL) -> bytes:
     """(H, W, 4) uint8 RGBA → PNG bytes (decoded-pixel lossless)."""
-    return _encode_png(image, 8, 6, level)
+    scan, pixels = rgba_scanlines(*image.shape[:2])
+    pixels[...] = image
+    return encode_rgba_scanlines(scan, level)
 
 
 def decode_rgba_png(data: bytes) -> np.ndarray:

@@ -425,13 +425,16 @@ def shade_padded_block(
     water: np.ndarray | None = None,
     clip_poly: np.ndarray | None = None,
     registry: dict | None = None,
+    out: np.ndarray | None = None,
 ) -> tuple[np.ndarray, int]:
     """Numpy core shared by the Spark path and the single-array oracle.
 
     ``padded`` is the (ts+2, ts+2) int16 block (row 0 = south).  Returns
-    (RGBA image in bitmap orientation — row 0 = north, per the Y-flip at
-    Hillshading.fs:150-153 — and the shaded-pixel count).  The tile is
-    processed in row bands: identical results, bounded temporaries.
+    (``out``: the RGBA image in bitmap orientation — row 0 = north, per
+    the Y-flip at Hillshading.fs:150-153 — and the shaded-pixel count).
+    The tile is processed in row bands: identical results, bounded
+    temporaries.  Each band is written once, flipped, into ``out`` (a new
+    array if None; render_tile passes a :func:`codec.rgba_scanlines` view).
     ``water`` (center-sized bool mask) feeds the water shaders when the
     tile came from an XTH source (TileShadeCommand.fs:428-473).
     """
@@ -439,7 +442,8 @@ def shade_padded_block(
     w = padded.shape[1] - 2
     cpd = cells_per_degree(tile_size, 0)
     min_cell_y = tile_y * tile_size
-    out = np.empty((h, w, 4), dtype=np.uint8)
+    if out is None:
+        out = np.empty((h, w, 4), dtype=np.uint8)
     shaded = 0
     for r0 in range(0, h, SHADE_BAND_ROWS):
         r1 = min(r0 + SHADE_BAND_ROWS, h)
@@ -464,7 +468,8 @@ def shade_padded_block(
             water=None if water is None else water[r0:r1, :],
             dem=padded[r0 + 1 : r1 + 1, 1:-1],
         )
-        rgba = pipeline.evaluate_steps(steps, ctx, registry=registry)
+        band = out[h - r1 : h - r0]
+        band[...] = pipeline.evaluate_steps(steps, ctx, registry=registry)[::-1]
         if clip_poly is not None:
             # point-in-polygon raster clip (north-star: "point-in-polygon
             # tests clip rasters to requested geo bounds"): pixels whose
@@ -478,11 +483,9 @@ def shade_padded_block(
             px = np.broadcast_to(lon, (nrows, w))
             py = np.broadcast_to(lat_deg[:, None], (nrows, w))
             inside = points_in_polygon(px, py, clip_poly[:, 0], clip_poly[:, 1])
-            rgba = rgba.copy()
-            rgba[..., 3] = np.where(inside, rgba[..., 3], 0)
-        shaded += int(np.count_nonzero(rgba[..., 3] > 0))
-        out[r0:r1] = rgba
-    return out[::-1, :, :], shaded  # Y-flip to bitmap orientation
+            np.copyto(band[..., 3], 0, where=~inside[::-1])
+        shaded += int(np.count_nonzero(band[..., 3]))
+    return out, shaded
 
 
 def apply_prefilters(padded: np.ndarray, steps) -> np.ndarray:
@@ -521,12 +524,15 @@ def render_tile(
 ) -> pa.Table:
     """The one place a SHADED_SCHEMA row is made: height prefilters (each
     consumes one halo ring of ``padded``), Horn + shaders + clip
-    (:func:`shade_padded_block`), RGBA PNG encode at level ``lvl``."""
+    (:func:`shade_padded_block`) written straight into a None-filtered
+    PNG scanline buffer (:func:`codec.rgba_scanlines`), which is
+    compressed at level ``lvl``."""
     if pre_steps:
         padded = apply_prefilters(padded, pre_steps)
-    rgba, shaded = shade_padded_block(
+    scan, pixels = codec.rgba_scanlines(ts, ts)
+    _, shaded = shade_padded_block(
         padded, tile_x, tile_y, ts, steps, water=water, clip_poly=clip_poly,
-        registry=registry,
+        registry=registry, out=pixels,
     )
     return pa.Table.from_pydict({
         "tile_x": [tile_x],
@@ -534,7 +540,7 @@ def render_tile(
         "tile_name": [_tile_name(0, tile_x, tile_y)],
         "width": [ts],
         "height": [ts],
-        "png": [codec.encode_rgba_png(rgba, lvl)],
+        "png": [codec.encode_rgba_scanlines(scan, lvl)],
         "shaded_px": [shaded],
         "total_px": [ts * ts],
         "n_blocks": [n_blocks],

@@ -100,17 +100,24 @@ def horn_pq(
         q = ((z8 + 2 z7 + z6) − (z2 + 2 z1 + z0)) / (8·gridH)
     Any NaN neighbor → NaN p/q (missing-data propagation, §4.3).
     Returns (p, q) of shape (H, W).
+
+    Computed separably: p differences the column-wise [1,2,1] sums of
+    the west and east columns, q sums [1,2,1]-weighted the north−south
+    differences.  Each reads the same six neighbours as the formula, so
+    NaN propagates the same way, and for integer heights (every caller:
+    int16 blocks, even in float32) each numerator term is an integer of
+    magnitude < 2²⁴, exact in any float order, so only the final divide
+    rounds and the result is bit-identical to the formula above.
     """
-    z0 = padded[:-2, :-2]
-    z1 = padded[:-2, 1:-1]
-    z2 = padded[:-2, 2:]
-    z3 = padded[1:-1, :-2]
-    z5 = padded[1:-1, 2:]
-    z6 = padded[2:, :-2]
-    z7 = padded[2:, 1:-1]
-    z8 = padded[2:, 2:]
-    p = ((z8 + 2.0 * z5 + z2) - (z6 + 2.0 * z3 + z0)) / (8.0 * grid_width)
-    q = ((z8 + 2.0 * z7 + z6) - (z2 + 2.0 * z1 + z0)) / (8.0 * grid_height)
+    s = padded[:-2] + padded[2:]  # [1,2,1] down every column
+    s += padded[1:-1]
+    s += padded[1:-1]
+    p = (s[:, 2:] - s[:, :-2]) / (8.0 * grid_width)
+    d = padded[2:] - padded[:-2]  # north − south per column
+    q = d[:, :-2] + d[:, 2:]
+    q += d[:, 1:-1]
+    q += d[:, 1:-1]
+    q = q / (8.0 * grid_height)
     return p, q
 
 
@@ -141,20 +148,32 @@ def igor_alpha(
     """Igor darkness (IgorHillshader.fs:28-46) as a bare uint8 alpha
     plane, NaN aspect → 0.
 
-    ``aspect`` is expected already normalized to [0, 2π) (the
-    slope_and_aspect contract), so the circular difference needs no fmod.
+    ``slope`` and ``aspect`` share one float dtype, and ``aspect`` is
+    expected already normalized to [0, 2π) (the slope_and_aspect
+    contract), so the circular difference needs no fmod.
     """
-    valid = ~np.isnan(aspect)
     two_pi = math.pi * 2.0
     saz = float(normalize_angle(sun_azimuth_rad, two_pi))
-    # cheap positive-mod normalization: exact identity for the [0, 2π)
+    # the reference's operations in its order, for bit parity, through
+    # two buffers:  (slope / (π/2)) · (aspect_diff / π) · intensity.
+    # Cheap positive-mod normalization: exact identity for the [0, 2π)
     # values slope_and_aspect produces, fmod-free for the hot path
-    aspect_n = aspect - two_pi * np.floor(aspect / two_pi)
-    diff = np.abs(aspect_n - saz)
-    aspect_diff = np.where(diff > math.pi, two_pi - diff, diff)
-    # keep the reference's exact operation order for bit parity
-    darkness = (slope / (math.pi / 2.0)) * (aspect_diff / math.pi) * intensity
-    return ratio_to_byte(np.where(valid, darkness, 0.0))
+    t = np.divide(aspect, two_pi)
+    np.floor(t, out=t)
+    t *= two_pi
+    np.subtract(aspect, t, out=t)  # aspect_n
+    t -= saz
+    np.abs(t, out=t)  # diff
+    u = np.subtract(two_pi, t)
+    # where(diff > π, 2π − diff, diff) == min(diff, 2π − diff): 2π − diff
+    # rounds to ≤ diff when diff > π and to ≥ diff otherwise
+    np.minimum(t, u, out=t)
+    t /= math.pi  # aspect_diff / π
+    np.divide(slope, math.pi / 2.0, out=u)
+    u *= t
+    u *= intensity
+    u[np.isnan(aspect)] = 0.0
+    return ratio_to_byte(u)
 
 
 def shade_igor(
@@ -197,15 +216,15 @@ def over_black(alpha: np.ndarray, dest: np.ndarray) -> np.ndarray:
     """
     out = np.empty_like(dest)
     inv = (255 - alpha).astype(np.uint16)
+    holes = dest[..., 3] == 0
+    any_holes = holes.any()
+    if any_holes:
+        # the blend below gives back dst where α = 0, which is the base
+        # pixel itself; weight 0 blackens the RGB of the α > 0 holes
+        inv[holes & (alpha > 0)] = 0
     for c in range(3):  # one plane at a time: long inner loops, no (…,3) broadcast
         out[..., c] = _rdiv255(dest[..., c] * inv)
-    out[..., 3] = 255
-    holes = dest[..., 3] == 0
-    if holes.any():
-        a = alpha[holes]
-        src = np.zeros((a.size, 4), dtype=np.uint8)
-        src[:, 3] = a
-        out[holes] = np.where((a > 0)[:, None], src, dest[holes])
+    out[..., 3] = np.where(holes, alpha, 255) if any_holes else 255
     return out
 
 

@@ -240,11 +240,9 @@ def register_shader(name: str, func) -> None:
 
 
 def _alpha_is_binary(alpha: np.ndarray) -> bool:
-    """Every alpha is 0 or 255 (an opaque base with transparent voids)."""
-    return (
-        np.count_nonzero(alpha == 255) + np.count_nonzero(alpha == 0)
-        == alpha.size
-    )
+    """Every alpha is 0 or 255 (an opaque base with transparent voids):
+    α + 1 wraps 255 to 0, so both and only they land at ≤ 1."""
+    return bool((alpha + np.uint8(1) <= 1).all())
 
 
 def evaluate_steps(

@@ -187,7 +187,7 @@ def render_shaded_raster(
             ).reshape(tile_size, tile_size)
         merged_f = kernels.heights_to_float(merged)
 
-        out = np.empty((h, w, 4), dtype=np.uint8)
+        scan, out = codec.rgba_scanlines(h, w)
         shaded = 0
         xs = np.arange(min_x, min_x + w, dtype=np.float64)
         for r0 in range(0, h, RENDER_BAND_ROWS):
@@ -231,8 +231,8 @@ def render_shaded_raster(
                 heights=hgt[(0, 0)], slope=slope, aspect=aspect
             )
             rgba = pipeline.evaluate_steps(steps, ctx, registry=registry)
-            shaded += int(np.count_nonzero(rgba[..., 3] > 0))
-            out[r0:r1] = rgba
+            shaded += int(np.count_nonzero(rgba[..., 3]))
+            out[h - r1 : h - r0] = rgba[::-1]  # Y-flip to bitmap rows
         return pd.DataFrame(
             {
                 "rt_x": [rect[0]],
@@ -241,7 +241,7 @@ def render_shaded_raster(
                 "min_y": [min_y],
                 "width": [w],
                 "height": [h],
-                "png": [codec.encode_rgba_png(out[::-1, :, :], lvl)],
+                "png": [codec.encode_rgba_scanlines(scan, lvl)],
                 "shaded_px": [shaded],
                 "total_px": [w * h],
                 "n_dem_tiles": [len(pdf)],

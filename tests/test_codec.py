@@ -313,3 +313,74 @@ def test_decode_block_malformed_payload_raises_value_error(fmt, payload):
     with pytest.raises(ValueError) as info:
         codec.decode_block(fmt, payload, 10)
     assert info.value.__cause__ is not None
+
+
+# --- shaded RGBA tiles: None-filtered scanlines -----------------------------
+
+@pytest.fixture(scope="module")
+def hole_tile():
+    """One deterministic 1800² synthetic tile (hole blocks included) with
+    its 1-px no-data halo, as a reduce task gets it."""
+    from demeton_spark import synth
+
+    ts = 1800
+    spec = synth.WorldSpec(lon0=13, lat0=45, n_tiles_x=1, n_tiles_y=1,
+                           tile_size=ts, block_size=300)
+    padded = np.full((ts + 2, ts + 2), DEM_HEIGHT_NONE, dtype=np.int16)
+    padded[1:-1, 1:-1] = synth.expected_world_heights(spec)
+    return padded
+
+
+def _scanlines(png: bytes, bpr: int) -> np.ndarray:
+    """The inflated IDAT stream of ``png`` as (rows, 1 + bpr) bytes."""
+    import zlib
+
+    pos, idat = 8, b""
+    while pos < len(png):
+        (length,) = struct.unpack_from(">I", png, pos)
+        if png[pos + 4 : pos + 8] == b"IDAT":
+            idat += png[pos + 8 : pos + 8 + length]
+        pos += 12 + length
+    return np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(-1, bpr + 1)
+
+
+def test_render_tile_png_is_none_filtered_and_decodes_to_shade(hole_tile):
+    """engine.render_tile shades straight into a None-filtered scanline
+    buffer: filter byte 0 on every row, pixels and shaded count equal to
+    shade_padded_block's bitmap-order RGBA."""
+    from demeton_spark import engine
+
+    ts = hole_tile.shape[0] - 2
+    steps, registry, lvl, _ = engine.render_setup("elecolor|+igor", 1)
+    row = engine.render_tile(hole_tile, 13, 45, ts, steps, registry, lvl).to_pylist()[0]
+    rgba, shaded = engine.shade_padded_block(hole_tile, 13, 45, ts, steps)
+    assert (_scanlines(row["png"], 4 * ts)[:, 0] == 0).all()
+    assert np.array_equal(codec.decode_rgba_png(row["png"]), rgba)
+    assert row["shaded_px"] == shaded and 0 < shaded < ts * ts
+
+
+def _up_filtered_rgba_png(rgba: np.ndarray, level: int) -> bytes:
+    """Oracle: the same pixels Up-filtered (the RGBA encoding before
+    shaded tiles went None-filtered)."""
+    h, w, _ = rgba.shape
+    rows = rgba.reshape(h, 4 * w)
+    up = rows - np.vstack([np.zeros((1, 4 * w), dtype=np.uint8), rows[:-1]])
+    scan = np.hstack([np.full((h, 1), 2, dtype=np.uint8), up])
+    return codec._png(w, h, 8, 6, scan, level)
+
+
+@pytest.mark.parametrize("script", ["elecolor|+igor", "igor", "elecolor"])
+def test_none_filtered_tile_png_at_most_10pct_over_up(hole_tile, script):
+    """Size guard: a shaded tile's None-filtered PNG is no more than 10%
+    larger than an Up-filtered encoding of the same pixels, at the bench
+    sink level (1) and the default (6)."""
+    from demeton_spark import engine, pipeline
+
+    ts = hole_tile.shape[0] - 2
+    rgba, _ = engine.shade_padded_block(hole_tile, 13, 45, ts,
+                                        pipeline.parse_script(script))
+    for level in (codec.RGBA_PNG_LEVEL_FAST, codec.RGBA_PNG_LEVEL):
+        none = codec.encode_rgba_png(rgba, level)
+        up = _up_filtered_rgba_png(rgba, level)
+        assert np.array_equal(codec.decode_rgba_png(up), rgba)
+        assert len(none) <= 1.10 * len(up), (level, len(none), len(up))

@@ -428,3 +428,87 @@ def test_igor_override_beats_fusion():
     reg["igor"] = custom_igor
     overridden = P.evaluate_steps(steps, ctx, registry=reg)
     assert (overridden[..., 1] == 123).all() and (overridden[..., 3] == 255).all()
+
+
+def _horn_textbook(padded, grid_width, grid_height):
+    """The 8-neighbour Horn formula as written in Hillshading.fs:40-60."""
+    z0, z1, z2 = padded[:-2, :-2], padded[:-2, 1:-1], padded[:-2, 2:]
+    z3, z5 = padded[1:-1, :-2], padded[1:-1, 2:]
+    z6, z7, z8 = padded[2:, :-2], padded[2:, 1:-1], padded[2:, 2:]
+    p = ((z8 + 2.0 * z5 + z2) - (z6 + 2.0 * z3 + z0)) / (8.0 * grid_width)
+    q = ((z8 + 2.0 * z7 + z6) - (z2 + 2.0 * z1 + z0)) / (8.0 * grid_height)
+    return p, q
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_horn_pq_bit_identical_to_textbook_formula(dtype):
+    """The separable Horn equals the 8-neighbour formula bit for bit on
+    integer heights up to the int16 extremes, NaN voids included."""
+    rng = np.random.default_rng(5)
+    h, w = 130, 97
+    heights = rng.integers(-32767, 32768, (h + 2, w + 2)).astype(np.int16)
+    heights[rng.random(heights.shape) < 0.1] = 32767
+    heights[rng.random(heights.shape) < 0.1] = -32767
+    heights[rng.random(heights.shape) < 0.03] = DEM_HEIGHT_NONE
+    padded = kernels.heights_to_float(heights, dtype=dtype)
+    gw = rng.uniform(5.0, 40.0, (h, 1)).astype(dtype)
+    gh = np.full((h, 1), 30.87, dtype=dtype)
+    got = kernels.horn_pq(padded, gw, gh)
+    want = _horn_textbook(padded, gw, gh)
+    for g, e in zip(got, want):
+        assert g.dtype == e.dtype
+        assert np.array_equal(g, e, equal_nan=True)
+    assert np.isnan(got[0]).any() and not np.isnan(got[0]).all()
+
+
+def _igor_alpha_out_of_place(slope, aspect, sun_azimuth_rad, intensity):
+    """igor_alpha written with one temporary per operation."""
+    two_pi = math.pi * 2.0
+    saz = float(normalize_angle(sun_azimuth_rad, two_pi))
+    aspect_n = aspect - two_pi * np.floor(aspect / two_pi)
+    diff = np.abs(aspect_n - saz)
+    aspect_diff = np.where(diff > math.pi, two_pi - diff, diff)
+    darkness = (slope / (math.pi / 2.0)) * (aspect_diff / math.pi) * intensity
+    return kernels.ratio_to_byte(np.where(~np.isnan(aspect), darkness, 0.0))
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_igor_alpha_bit_identical_to_out_of_place_formula(dtype):
+    """Random slopes/aspects, NaN voids and aspects a few ulps either
+    side of half a turn from the sun, for several suns and intensities."""
+    rng = np.random.default_rng(9)
+    slope = rng.uniform(0, math.pi / 2, 4000).astype(dtype)
+    aspect = rng.uniform(0, 2 * math.pi, 4000).astype(dtype)
+    aspect[::37] = np.nan
+    slope[::37] = np.nan
+    for sun_deg, intensity in ((-45.0, 1.0), (135.0, 0.7), (10.0, 1.3)):
+        sun = math.radians(sun_deg)
+        opposite = dtype(normalize_angle(sun + math.pi, 2 * math.pi))
+        edge = np.array([opposite], dtype=dtype)
+        for _ in range(4):  # ulps around the diff == π switch
+            edge = np.concatenate([np.nextafter(edge, dtype(0)), edge,
+                                   np.nextafter(edge, dtype(7))])
+        a = np.concatenate([aspect, edge])
+        s = np.concatenate([slope, np.full(edge.size, 1.0, dtype=dtype)])
+        assert np.array_equal(
+            kernels.igor_alpha(s, a, sun, intensity),
+            _igor_alpha_out_of_place(s, a, sun, intensity),
+        ), (sun_deg, intensity)
+
+
+def test_over_black_on_void_band_equals_composite_over_black_layer():
+    """A band-shaped opaque base with scattered voids whose RGB is not
+    black: over_black equals composite_over of an explicit black layer,
+    with igor alpha 0 over some voids and > 0 over others."""
+    rng = np.random.default_rng(3)
+    base = rng.integers(0, 256, (64, 200, 4), dtype=np.uint8)
+    voids = rng.random((64, 200)) < 0.05
+    base[..., 3] = np.where(voids, 0, 255)
+    alpha = rng.integers(0, 256, (64, 200), dtype=np.uint8)
+    alpha[rng.random((64, 200)) < 0.3] = 0
+    assert (voids & (alpha == 0)).any() and (voids & (alpha > 0)).any()
+    assert base[voids, :3].any()
+    layer = np.zeros_like(base)
+    layer[..., 3] = alpha
+    assert np.array_equal(kernels.over_black(alpha, base),
+                          kernels.composite_over(layer, base))

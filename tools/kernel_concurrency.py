@@ -1,12 +1,12 @@
 """Platform-ceiling probe for the shade hot path, WITHOUT Spark.
 
 Runs ``bench.kernel_run`` — the exact per-tile kernel the hillshade
-pipeline executes on every task (``engine.shade_padded_block`` then
-``codec.encode_rgba_png`` at the bench sink level, on one deterministic
-1800² tile) — in 1 and in ``nproc`` independent OS processes.  This
-isolates the numpy/zlib compute from Spark's scheduling, Arrow transfer
-and shuffle: the 1-process leg gives the per-tile shade and encode
-times, the nproc leg the host's kernel ceiling for a ``local[nproc]``
+pipeline executes on every task (``engine.render_tile`` at the bench sink
+level, on one deterministic 1800² tile) — in 1 and in ``nproc``
+independent OS processes.  This isolates the numpy/zlib compute from
+Spark's scheduling, Arrow transfer and shuffle: the 1-process leg gives
+the per-tile shade and encode times (encode: the PNG writer on a filled
+scanline buffer), the nproc leg the host's kernel ceiling for a ``local[nproc]``
 Spark job (no leg oversubscribes the host's cores).
 
 Usage: ``python tools/kernel_concurrency.py``.  Prints one JSON line.
