@@ -387,13 +387,11 @@ def stage_totals(stages: list[dict]) -> dict:
 _TICK = os.sysconf("SC_CLK_TCK")
 
 
-def tree_cpu_s() -> float:
-    """CPU seconds used so far by this process and every process below
-    it — the driver, its JVM's threads, the Python workers — read from
-    /proc.  Children already reaped count through their parent's
-    cutime/cstime, live ones through their own stat, so each CPU-second
-    is counted once."""
-    stats, kids = {}, {}
+def _proc_table() -> dict[int, tuple[int, bytes, int, int]]:
+    """pid → (ppid, command name, utime + stime, cutime + cstime) from
+    each /proc/<pid>/stat: totals over all of a process's threads,
+    exited ones included."""
+    table = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
             continue
@@ -403,16 +401,48 @@ def tree_cpu_s() -> float:
         except OSError:  # the process ended between listdir and open
             continue
         # the command name may hold spaces: fields resume after the last ')'
-        fields = stat[stat.rindex(b")") + 2 :].split()
-        stats[int(entry)] = fields
-        kids.setdefault(int(fields[1]), []).append(int(entry))
-    total, todo = 0, [os.getpid()]
+        name, rest = stat[stat.index(b"(") + 1 :].rsplit(b")", 1)
+        f = [int(x) for x in rest.split()[1:15]]
+        table[int(entry)] = (f[0], name, f[10] + f[11], f[12] + f[13])
+    return table
+
+
+CPU_ROLES = ("driver", "jvm", "workers")
+
+
+def cpu_by_role(table: dict, root: int) -> dict[str, float]:
+    """CPU seconds of the process tree under ``root``: ``driver`` is
+    ``root`` and its non-JVM descendants, ``jvm`` a ``java`` process
+    below them, ``workers`` everything below the JVM (the Python daemon
+    and its workers).  Reaped children count through their parent's
+    cutime/cstime, in the role of its live children.  Per process, not
+    per thread: the JVM's JIT compiler threads exit mid-run, and a sum
+    over its live threads would drop their CPU."""
+    kids: dict[int, list[int]] = {}
+    for pid, entry in table.items():
+        kids.setdefault(entry[0], []).append(pid)
+    ticks = dict.fromkeys(CPU_ROLES, 0)
+    todo = [(root, "driver")]
     while todo:
-        p = todo.pop()
-        if p in stats:  # utime, stime, cutime, cstime
-            total += sum(int(x) for x in stats[p][11:15])
-        todo.extend(kids.get(p, []))
-    return total / _TICK
+        pid, role = todo.pop()
+        if pid in table:
+            _, name, own, reaped = table[pid]
+            role = "jvm" if role == "driver" and name == b"java" else role
+            below = "workers" if role == "jvm" else role
+            ticks[role] += own
+            ticks[below] += reaped
+            todo.extend((k, below) for k in kids.get(pid, []))
+    return {role: t / _TICK for role, t in ticks.items()}
+
+
+def tree_cpu_by_role() -> dict[str, float]:
+    return cpu_by_role(_proc_table(), os.getpid())
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and every process below
+    it — the driver, its JVM, the Python workers — read from /proc."""
+    return sum(tree_cpu_by_role().values())
 
 
 def stop_spark(spark) -> None:
@@ -490,15 +520,16 @@ def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
         warm_sec = round(time.time() - t0, 3)
         before = {(st["stageId"], st["attemptId"])
                   for st in completed_stages(spark)}
-        cpu0 = tree_cpu_s()
+        cpu0 = tree_cpu_by_role()
         hs = run_hillshade_bench(spark, spec, images_path, trials=trials)
-        tree_cpu = round(tree_cpu_s() - cpu0, 1)
+        cpu = {r: c - cpu0[r] for r, c in tree_cpu_by_role().items()}
         stages = stage_totals([
             st for st in completed_stages(spark)
             if (st["stageId"], st["attemptId"]) not in before])
         # cpu_s is the JVM's executorCpuTime only; the Python workers
-        # and the driver show in the process tree's CPU
-        stages["tree_cpu_s"] = tree_cpu
+        # and the driver show in the process tree's CPU, split by role
+        stages["tree_cpu_s"] = round(sum(cpu.values()), 1)
+        stages.update({f"{r}_cpu_s": round(c, 1) for r, c in cpu.items()})
         # the timed trials' wall × cores, beside the task-s they booked
         stages["wall_core_s"] = round(hs["sec_total"] * cpus, 1)
         hs = {**hs, "warmup_sec": warm_sec, "stages": stages,

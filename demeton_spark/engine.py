@@ -43,9 +43,9 @@ the same emitter, compose and render.
 
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
-Skewed (land-heavy) tiles are handled by winner-only decode, the
-optional pre-shuffle ``local_dedup`` and the grid-position deal, which
-spreads neighbouring heavy tiles over all reduce tasks.
+Skewed (land-heavy) tiles are handled by winner-only decode and the
+grid-position deal, which spreads neighbouring heavy tiles over all
+reduce tasks.
 """
 
 from __future__ import annotations
@@ -229,34 +229,6 @@ def emit_parts(
             [pa.array(strips[f.name], f.type) for f in batch.schema],
             schema=batch.schema,
         )
-
-
-def dedup_duplicate_blocks(assigned: DataFrame) -> DataFrame:
-    """Pre-shuffle duplicate collapse: within each Arrow batch keep only
-    the max-``image_id`` row per (tile_x, tile_y, bx, by).
-
-    Purely local — no shuffle, no global aggregation — so the
-    overwrite-order winner (max image_id, the same rule the
-    post-shuffle winner-only decode applies) always survives, and the
-    pipeline output stays byte-identical.  Enable via
-    ``run_hillshade(local_dedup=True)`` when the source carries heavy
-    duplicate-block skew: losing payloads then never cross the wire
-    (the SCALE.md caveat), at the cost of one Arrow pass over the
-    input — a win whenever the duplication ratio beats ~1.5×.
-    """
-    schema = assigned.schema
-
-    def dedup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            idx = pdf.groupby(["tile_x", "tile_y", "bx", "by"])[
-                "image_id"
-            ].idxmax()
-            yield pdf.loc[np.sort(idx.to_numpy())]
-
-    return assigned.mapInPandas(dedup, schema=schema)
 
 
 def _block_parts(assigned: DataFrame) -> DataFrame:
@@ -685,7 +657,6 @@ def run_hillshade(
     shade_partitions: int | None = None,
     prefilter: str | None = None,
     png_level: int | None = None,
-    local_dedup: bool = False,
 ) -> DataFrame:
     """images table → shaded PNG tiles.
 
@@ -701,8 +672,6 @@ def run_hillshade(
     ``prefilter`` — height low/high-pass step script (``"blur"``,
     ``"sharpen(amount=…)"``; Roadmap.md filters) applied before the
     Horn gradient; widens the halo exchange by one ring per step.
-    ``local_dedup`` collapses losing duplicate blocks before anything
-    is emitted or shuffled (:func:`dedup_duplicate_blocks`).
     ``shade_partitions`` — the number of reduce tasks the tiles are
     dealt over (:func:`tile_groups`; default one per core).
     """
@@ -712,8 +681,6 @@ def run_hillshade(
     if cover is not None:  # only the cover and its ring send parts to it
         x0, y0, x1, y1 = cover
         assigned = assigned.where(in_tiles(x0 - 1, y0 - 1, x1 + 1, y1 + 1))
-    if local_dedup:
-        assigned = dedup_duplicate_blocks(assigned)
     parts = hillshade_parts(assigned, tile_size, halo)
     if cover is not None:
         # prune DESTINATION tiles to the polygon's bbox cover.  Strips

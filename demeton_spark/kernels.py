@@ -127,11 +127,20 @@ def slope_and_aspect(p: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarr
     The raw aspect lies in [π/2, 5π/2), so the fmod-normalization reduces
     to a single conditional subtract — bit-exact (Sterbenz: the subtract
     is exact for values in [π, 4π)) and ~20× faster than fmod here.
+    The operations run in that order, in place in the two outputs; only
+    the wrap allocates a temporary.
     """
-    slope = np.arctan(np.sqrt(p * p + q * q))
+    slope = np.multiply(p, p)
+    aspect = np.multiply(q, q)
+    slope += aspect
+    np.sqrt(slope, out=slope)
+    np.arctan(slope, out=slope)
     two_pi = math.pi * 2.0
-    raw = (math.pi * 3.0 / 2.0) - np.arctan2(q, p)
-    aspect = np.where(raw >= two_pi, raw - two_pi, raw)
+    np.arctan2(q, p, out=aspect)
+    np.subtract(math.pi * 3.0 / 2.0, aspect, out=aspect)  # raw
+    # raw − 2π where raw ≥ 2π and raw − 0 elsewhere: the values of the
+    # where(); a masked subtract stalls on rough terrain's random masks
+    aspect -= np.multiply(aspect >= two_pi, two_pi, dtype=aspect.dtype)
     return slope, aspect
 
 

@@ -32,7 +32,9 @@ Operator coverage map (SURVEY.md §2):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import gc
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .tiles import tile_name_sql
@@ -45,6 +47,68 @@ BBOX = (13.49437, 46.159668, 14.236633, 46.543914)
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+class _Memo(dict):
+    """Driver-side memo of materialized (``localCheckpoint``) results,
+    keyed per session and input, oldest entry out past 8 — the local
+    stand-in for a table a production pipeline writes once and every
+    consumer reads.  An evicted entry is collected at once, so the
+    ContextCleaner reclaims its checkpoint blocks promptly instead of
+    whenever Python GC next runs."""
+
+    BOUND = 8
+
+    def __setitem__(self, key, value) -> None:
+        super().__setitem__(key, value)
+        if len(self) > self.BOUND:
+            del self[next(iter(self))]
+            gc.collect()
+
+
+def _explode_bands(
+    df: DataFrame, id_col: str, bands: list[Column], carry: tuple = ()
+) -> DataFrame:
+    """One row per (id, band): ``id_col``, the ``carry`` columns and the
+    fields of that band's key struct (``bands`` holds one struct per
+    band)."""
+    exploded = df.select(id_col, *carry, F.explode(F.array(*bands)).alias("_b"))
+    return exploded.select(id_col, *carry, "_b.*")
+
+
+def band_pairs(
+    df: DataFrame,
+    id_col: str,
+    bands: list[Column],
+    carry: tuple = (),
+    verify=None,
+) -> DataFrame:
+    """The banded candidate self-join of every near-duplicate family.
+
+    Explodes one key struct per band (:func:`_explode_bands`),
+    equi-joins the frame with itself on the struct's fields, keeps
+    ``id_a < id_b`` and returns each pair once, however many bands it
+    shares: columns ``{id_col}_a, {id_col}_b`` then ``{c}_a, {c}_b`` per
+    carried column.  ``id_col`` must be a key of ``df``.  Only ids,
+    band keys and the (narrow) carried columns cross the band shuffle;
+    wide values such as word sets or vectors are fetched by equi-joins
+    on the distinct pairs instead of riding the band explosion (which
+    would multiply their shuffle volume by the band count).
+    ``verify`` maps those candidate rows to the verified rows to keep,
+    before the distinct, so only verified rows are deduplicated.
+    """
+    banded = _explode_bands(df, id_col, bands, carry)
+    keys = [c for c in banded.columns if c not in (id_col, *carry)]
+    cand = (
+        banded.alias("a")
+        .join(banded.alias("b"), on=keys, how="inner")
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+              for c in (id_col, *carry) for s in "ab"]
+        )
+    )
+    return (verify(cand) if verify else cand).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -841,46 +905,22 @@ def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_signatures(exploded, "hwords")
 
 
-def _lsh_band_rows(sig: DataFrame) -> DataFrame:
-    """Explode a signature into (doc_id, band, k1, k2) band-key rows."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.col(f"mh{_MH_ROWS * i}").alias("k1"),
-                F.col(f"mh{_MH_ROWS * i + 1}").alias("k2"),
-            )
-            for i in range(_MH_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", "b.band", "b.k1", "b.k2"
-    )
-
-
-def _lsh_candidates(sig: DataFrame) -> DataFrame:
-    """Band-bucket equi-join → distinct candidate pairs.
-
-    Only (doc_id, band-key) rows cross the band shuffle — the hashed
-    word sets do NOT ride the 8-way band explosion (at scale that would
-    octuple shuffle volume); verification fetches them by two equi-joins
-    in ``_verified_pairs``."""
-    bands = _lsh_band_rows(sig)
-    return (
-        bands.alias("a")
-        .join(bands.alias("b"), on=["band", "k1", "k2"], how="inner")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+def _lsh_bands() -> list[Column]:
+    """Band i's key: (band, k1, k2) = (i, mh[2i], mh[2i+1])."""
+    return [
+        F.struct(
+            F.lit(i).alias("band"),
+            F.col(f"mh{_MH_ROWS * i}").alias("k1"),
+            F.col(f"mh{_MH_ROWS * i + 1}").alias("k2"),
         )
-        .distinct()
-    )
+        for i in range(_MH_BANDS)
+    ]
 
 
 def _verified_pairs(sig: DataFrame, set_col: str) -> DataFrame:
-    """Candidates + exact overlap stats (i, na, nb) from the hashed sets."""
-    cand = _lsh_candidates(sig)
+    """Candidates + exact overlap stats (i, na, nb) from the hashed sets,
+    fetched by two equi-joins (they do not ride the band explosion)."""
+    cand = band_pairs(sig, "doc_id", _lsh_bands()).toDF("doc_a", "doc_b")
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("wa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("wb"))
     return (
@@ -1014,7 +1054,11 @@ def q_doc_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.lit(2) * F.col("i") >= F.col("u"))
     )
-    cand = _lsh_candidates(sig).withColumn("hit", F.lit(1))
+    cand = (
+        band_pairs(sig, "doc_id", _lsh_bands())
+        .toDF("doc_a", "doc_b")
+        .withColumn("hit", F.lit(1))
+    )
     bucket = (
         F.when(F.lit(10) * F.col("i") >= F.lit(9) * F.col("u"), F.lit("j>=0.9"))
         .when(
@@ -1077,7 +1121,7 @@ group by 1
 #: materializes once and every downstream consumer reads (VERDICT r2:
 #: without it, doc_dedup_keep_best re-derives the whole LSH + CC
 #: pipeline that doc_dedup_clusters just computed)
-_CLUSTER_MEMO: dict[tuple[str, str], DataFrame] = {}
+_CLUSTER_MEMO = _Memo()
 
 
 def _dedup_clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1095,8 +1139,6 @@ def _dedup_clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
         ).localCheckpoint()
         _CLUSTER_MEMO[key] = df
-        if len(_CLUSTER_MEMO) > 8:  # bound driver references across sessions
-            _CLUSTER_MEMO.pop(next(iter(_CLUSTER_MEMO)))
     return df
 
 
@@ -1921,7 +1963,8 @@ _EMB_BANDS = 10
 _EMB_BAND_BITS = 3
 
 
-def _emb_band_rows(normed: DataFrame) -> DataFrame:
+def _emb_bands() -> list[Column]:
+    """Band b's key: (band, bk) with bk the sign bits of dims 3b..3b+2."""
     bands = []
     for b in range(_EMB_BANDS):
         bk = None
@@ -1932,29 +1975,13 @@ def _emb_band_rows(normed: DataFrame) -> DataFrame:
         bands.append(
             F.struct(F.lit(b).alias("band"), bk.cast("int").alias("bk"))
         )
-    return normed.select(
-        "vec_id", F.explode(F.array(*bands)).alias("s")
-    ).select("vec_id", "s.band", "s.bk")
-
-
-def _emb_candidates(normed: DataFrame) -> DataFrame:
-    br = _emb_band_rows(normed)
-    return (
-        br.alias("a")
-        .join(br.alias("b"), on=["band", "bk"], how="inner")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
+    return bands
 
 
 def _emb_verified(normed: DataFrame) -> DataFrame:
     """Candidates + exact cosine from two equi-joins back to the
     normalized vectors (vectors don't ride the 10-way band explosion)."""
-    cand = _emb_candidates(normed)
+    cand = band_pairs(normed, "vec_id", _emb_bands()).toDF("vec_a", "vec_b")
     sa = normed.select(
         F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"),
@@ -2029,7 +2056,7 @@ with {_SQL_NORMED_EMB},
 select vec_a, vec_b, cosine from verified where cosine >= 0.4
 """
 
-_EMB_CLUSTER_MEMO: dict[tuple, DataFrame] = {}
+_EMB_CLUSTER_MEMO = _Memo()
 
 
 def _emb_snapshot(sf_dir: str) -> tuple:
@@ -2078,14 +2105,6 @@ def q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").cast("bigint").alias("cluster_id"),
         ).localCheckpoint()
         _EMB_CLUSTER_MEMO[key] = df
-        if len(_EMB_CLUSTER_MEMO) > 8:
-            # drop the oldest entry's reference and collect NOW so the
-            # ContextCleaner reclaims its localCheckpoint RDD blocks
-            # promptly instead of whenever Python GC next runs
-            _EMB_CLUSTER_MEMO.pop(next(iter(_EMB_CLUSTER_MEMO)))
-            import gc as _gc
-
-            _gc.collect()
     return df
 
 
@@ -2146,7 +2165,11 @@ def q_emb_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("cosine") >= 0.3)
     )
-    cand = _emb_candidates(normed).withColumn("hit", F.lit(1))
+    cand = (
+        band_pairs(normed, "vec_id", _emb_bands())
+        .toDF("vec_a", "vec_b")
+        .withColumn("hit", F.lit(1))
+    )
     bucket = F.when(F.col("cosine") >= 0.4, F.lit("c>=0.4")).otherwise(
         F.lit("0.3<=c<0.4")
     )
@@ -2213,7 +2236,7 @@ def q_knn_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     normed = _normed_emb(spark, sf_dir).localCheckpoint()
-    bands = _emb_band_rows(normed)
+    bands = _explode_bands(normed, "vec_id", _emb_bands())
     probe_bands = bands.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "band", "bk"
     )
@@ -2347,6 +2370,32 @@ def _simhash_nd_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select("doc_id", fingerprint.cast("bigint").alias("simhash"))
 
 
+def _simhash_bands() -> list[Column]:
+    """Band b's key: one int ``bk`` packing (b, 4-bit band value)."""
+    return [
+        F.struct(
+            (
+                F.shiftright(F.col("simhash"), 4 * b)
+                .bitwiseAND(F.lit(15))
+                .cast("int")
+                + F.lit(16 * b)
+            ).alias("bk")
+        )
+        for b in range(_SIMHASH_ND_BITS // 4)
+    ]
+
+
+def _within_hamming(cand: DataFrame, hash_col: str, k: int) -> DataFrame:
+    """:func:`band_pairs` verify: the pair ids and the XOR-popcount of
+    their carried hashes, where it is at most ``k``."""
+    hamming = F.bit_count(
+        F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+    ).cast("int")
+    return cand.select(*cand.columns[:2], hamming.alias("hamming")).where(
+        F.col("hamming") <= k
+    )
+
+
 def q_doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 4-bit band bucket-join + Hamming verify.
 
@@ -2360,32 +2409,10 @@ def q_doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     width, and the verified output is near-linear in true duplicates.
     """
     sig = _simhash_nd_sig(spark, sf_dir)
-    band_keys = F.array(
-        *[
-            F.shiftright(F.col("simhash"), 4 * b)
-            .bitwiseAND(F.lit(15))
-            .cast("int")
-            + F.lit(16 * b)
-            for b in range(_SIMHASH_ND_BITS // 4)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", "simhash", F.explode(band_keys).alias("bk")
-    )
-    return (
-        banded.alias("a")
-        .join(banded.alias("b"), on="bk", how="inner")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= 2)
-        .distinct()  # a pair matching in several bands appears once
-    )
+    return band_pairs(
+        sig, "doc_id", _simhash_bands(), carry=("simhash",),
+        verify=lambda cand: _within_hamming(cand, "simhash", 2),
+    ).toDF("doc_a", "doc_b", "hamming")
 
 
 SQL_DOC_SIMHASH_NEAR_DUP = f"""
@@ -2457,25 +2484,9 @@ def q_doc_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("hamming") <= 2)
     )
-    band_keys = F.array(
-        *[
-            F.shiftright(F.col("simhash"), 4 * b)
-            .bitwiseAND(F.lit(15))
-            .cast("int")
-            + F.lit(16 * b)
-            for b in range(_SIMHASH_ND_BITS // 4)
-        ]
-    )
-    banded = sig.select("doc_id", F.explode(band_keys).alias("bk"))
     cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), on="bk", how="inner")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+        band_pairs(sig, "doc_id", _simhash_bands())
+        .toDF("doc_a", "doc_b")
         .withColumn("hit", F.lit(1))
     )
     hits = exact.join(cand, ["doc_a", "doc_b"], "left")
@@ -2552,8 +2563,8 @@ def _hamming_band_pairs(
 ) -> DataFrame:
     """Pigeonhole-complete Hamming near-dup pairs over an integer hash.
 
-    Explodes ``n_bands`` band keys of ``band_bits`` each, bucket
-    equi-joins on (band, key), verifies with XOR-popcount.  COMPLETE
+    ``n_bands`` band keys of ``band_bits`` each pair rows through
+    :func:`band_pairs` on (band, key); XOR-popcount verifies.  COMPLETE
     (not approximate) whenever ``max_hamming < n_bands``: a pair
     differing in h bits contaminates at most h bands, leaving a clean
     shared band.  The join is a plain shuffle equi-join on small int
@@ -2561,35 +2572,18 @@ def _hamming_band_pairs(
     bounded (widen the hash or band_bits if they don't).
     """
     assert max_hamming < n_bands
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col(hash_col), band_bits * b)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("bk"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col), F.col(hash_col), F.explode(band_keys).alias("b")
-    ).select(id_col, hash_col, "b.band", "b.bk")
-    return (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["band", "bk"], how="inner")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias(f"{id_col}_a"),
-            F.col(f"b.{id_col}").alias(f"{id_col}_b"),
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            )
-            .cast("int")
-            .alias("hamming"),
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.shiftright(F.col(hash_col), band_bits * b)
+            .bitwiseAND(F.lit((1 << band_bits) - 1))
+            .alias("bk"),
         )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+        for b in range(n_bands)
+    ]
+    return band_pairs(
+        sig, id_col, bands, carry=(hash_col,),
+        verify=lambda cand: _within_hamming(cand, hash_col, max_hamming),
     )
 
 
@@ -3227,7 +3221,7 @@ def _km_assign_col(v, centroids: list):
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-_KM_MEMO: dict[tuple[str, str], tuple[list, DataFrame]] = {}
+_KM_MEMO = _Memo()
 
 
 def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
@@ -3262,8 +3256,6 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
             new[r["cluster"]][r["dim"]] = r["c"]
         centroids = new
     _KM_MEMO[key] = (centroids, emb)
-    if len(_KM_MEMO) > 8:  # bound driver references across sessions
-        _KM_MEMO.pop(next(iter(_KM_MEMO)))
     return centroids, emb
 
 
@@ -4326,7 +4318,7 @@ def _with_geocell(
     )
 
 
-_GEOCELL_MEMO: dict[tuple[str, str], DataFrame] = {}
+_GEOCELL_MEMO = _Memo()
 
 
 def q_geocell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4351,8 +4343,6 @@ def q_geocell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         _GEOCELL_MEMO[key] = df
-        if len(_GEOCELL_MEMO) > 8:
-            _GEOCELL_MEMO.pop(next(iter(_GEOCELL_MEMO)))
     return df
 
 

@@ -75,3 +75,42 @@ def test_tree_cpu_counts_a_busy_child():
         child.wait()
     reaped = bench.tree_cpu_s() - tree0 - (time.process_time() - own0)
     assert alive >= 0.45 and reaped >= 0.45
+
+
+def test_cpu_by_role_splits_driver_jvm_and_workers():
+    """Role by place in the tree; reaped children's ticks go to the role
+    of their parent's live children; processes outside the tree and the
+    JVM's thread count play no part."""
+    tick = bench._TICK
+    table = {  # pid: (ppid, comm, own ticks, reaped ticks)
+        100: (1, b"python3", 10, 2),
+        200: (100, b"java", 50, 7),  # reaped: an exited Python daemon
+        300: (100, b"python3", 3, 0),  # another child of the driver
+        400: (200, b"python3", 4, 20),  # daemon; reaped: exited workers
+        500: (400, b"python3", 30, 0),
+        501: (400, b"pyspark worker", 40, 0),
+        900: (1, b"java", 1000, 0),  # not below the driver
+    }
+    got = bench.cpu_by_role(table, 100)
+    assert got == pytest.approx({"driver": 15 / tick, "jvm": 50 / tick,
+                                 "workers": 101 / tick})
+    assert bench.cpu_by_role(table, 999) == dict.fromkeys(bench.CPU_ROLES, 0.0)
+
+
+def test_headline_with_the_cpu_split_fits_the_driver_tail():
+    queries = {name: 1000.0 + len(name) for name in
+               ["hillshade", "streaming_hillshade", *bench.HEADLINE_QUERIES]}
+    stages = {"task_s": 1234.5, "cpu_s": 123.4, "shuffle_read_mb": 12345.6,
+              "shuffle_write_mb": 12345.6, "tree_cpu_s": 1299.9,
+              **{f"{r}_cpu_s": 1099.9 for r in bench.CPU_ROLES},
+              "wall_core_s": 5678.9}
+    hs = {"megapixels": 1296.0, "mpx_per_sec": 30.51, "sec_best": 38.812,
+          "warmup_sec": 12.345, "driver_memory": "7g", "stages": stages,
+          "peak_jvm_heap_mb": 5432.1, "peak_python_rss_mb": 3210.9,
+          "kernel": {"mpx_s": 42.91}}
+    line = bench.headline(
+        hs, queries, sf=0.1, cpus=4,
+        host={"ram_gb": 15.7, "git": "0123456789ab"},
+        steal=(0.0123, 0.0456), queries_artifact="BENCH/QUERIES_r06.json")
+    assert len(line) <= 1500
+    assert json.loads(line)["hillshade_stages"]["workers_cpu_s"] == 1099.9

@@ -654,46 +654,6 @@ def test_empty_input_produces_no_tiles(spark):
     assert engine.run_hillshade(spark, empty, 30).count() == 0
 
 
-def test_local_dedup_byte_identical_and_collapses(spark):
-    """Pre-shuffle duplicate collapse (local_dedup=True) must be
-    byte-identical to the post-shuffle winner-only path on a
-    duplicate-heavy world, and must actually drop losing duplicates
-    before the exchange."""
-    from demeton_spark.engine import dedup_duplicate_blocks, parse_caption
-    from demeton_spark.synth import WorldSpec, images_df
-
-    spec = WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60,
-        block_size=20, skew_factor=4, skew_every=2,
-    )
-    imgs = images_df(spark, spec, num_partitions=4)
-    base = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, imgs, spec.tile_size, script="elecolor|+igor"
-        ).collect()
-    }
-    dedup = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, imgs, spec.tile_size, script="elecolor|+igor",
-            local_dedup=True,
-        ).collect()
-    }
-    assert set(base) == set(dedup)
-    for k in base:
-        assert codec.decode_rgba_png(base[k][0]).tobytes() == \
-            codec.decode_rgba_png(dedup[k][0]).tobytes()
-        assert base[k][1] == dedup[k][1]
-    # the collapse is real: duplicates vanish from the parts stream
-    n_raw = parse_caption(imgs).count()
-    n_dedup = dedup_duplicate_blocks(parse_caption(imgs)).count()
-    # collapse granularity is the Arrow batch, so cross-batch
-    # duplicates may survive — but most of the 4x duplication must go
-    assert n_raw == spec.n_rows
-    assert n_dedup <= n_raw * 0.6
-
-
 def _world_blocks_batch(spec: WorldSpec, large: bool = False):
     """The "B" parts of ``_world_parts`` as one Arrow batch of the
     PART_SCHEMA columns (large string/binary types when ``large``)."""

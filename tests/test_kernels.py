@@ -496,6 +496,37 @@ def test_igor_alpha_bit_identical_to_out_of_place_formula(dtype):
         ), (sun_deg, intensity)
 
 
+def _slope_and_aspect_out_of_place(p, q):
+    """slope_and_aspect written with one temporary per operation."""
+    slope = np.arctan(np.sqrt(p * p + q * q))
+    two_pi = math.pi * 2.0
+    raw = (math.pi * 3.0 / 2.0) - np.arctan2(q, p)
+    return slope, np.where(raw >= two_pi, raw - two_pi, raw)
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_slope_and_aspect_bit_identical_to_out_of_place_formula(dtype):
+    """Horn p/q of a random int16 block with NaN voids, plus flat and
+    axis-aligned gradients (aspect exactly at the 2π wrap)."""
+    rng = np.random.default_rng(11)
+    h, w = 128, 181
+    heights = rng.integers(-500, 3000, (h + 2, w + 2)).astype(np.int16)
+    heights[rng.random(heights.shape) < 0.05] = DEM_HEIGHT_NONE
+    heights[:20] = 100  # flat: p = q = 0
+    heights[20:40] = np.arange(w + 2, dtype=np.int16)  # east-west ramp
+    padded = kernels.heights_to_float(heights, dtype=dtype)
+    gw = rng.uniform(5.0, 40.0, (h, 1)).astype(dtype)
+    gh = np.full((h, 1), 30.87, dtype=dtype)
+    p, q = kernels.horn_pq(padded, gw, gh)
+    got = kernels.slope_and_aspect(p, q)
+    want = _slope_and_aspect_out_of_place(p, q)
+    for g, e in zip(got, want):
+        assert g.dtype == e.dtype == dtype
+        assert np.array_equal(g, e, equal_nan=True)
+    assert np.isnan(got[1]).any() and not np.isnan(got[1]).all()
+    assert (want[1] == 0.0).any()  # hit the raw ≥ 2π branch
+
+
 def test_over_black_on_void_band_equals_composite_over_black_layer():
     """A band-shaped opaque base with scattered voids whose RGB is not
     black: over_black equals composite_over of an explicit black layer,
