@@ -140,43 +140,23 @@ def _q_tile_shade_xth(spark: SparkSession, sf_dir: str) -> DataFrame:
     colors-all-pixels acceptance shape); XTH bit-packing and
     water-shader pixel semantics stay pinned in tests/test_water.py
     and tests/test_engine_spark.py."""
-    from demeton_spark.engine import run_tile_shade
+    from demeton_spark.engine import map_tiles, run_tile_shade
     from demeton_spark.water import build_xth_tiles
 
     tiles, ts = _synthetic_tiles(spark)
     # water-class raster at 2x the DEM resolution: class 80 where the
     # terrain sits below 560m (deterministic lakes); derived tile-by-tile
-    # inside mapInPandas — no driver-side collect
+    # in one Arrow tile map — no driver-side collect
     ws = ts * 2
 
-    def classes_of(batches):
+    def classes_of(tx, ty, h):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for tx, ty, buf in zip(
-                pdf["tile_x"], pdf["tile_y"], pdf["heights"]
-            ):
-                h = np.frombuffer(buf, dtype="<i2").reshape(ts, ts)
-                up = np.repeat(np.repeat(h, 2, axis=0), 2, axis=1)
-                rows.append(
-                    (
-                        int(tx),
-                        int(ty),
-                        bytearray(
-                            np.where(up < 560, 80, 10)
-                            .astype(np.uint8)
-                            .tobytes()
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["tile_x", "tile_y", "classes"]
-            )
+        up = np.repeat(np.repeat(h, 2, axis=0), 2, axis=1)
+        yield tx, ty, np.where(up < 560, 80, 10).astype(np.uint8).tobytes()
 
-    water = tiles.mapInPandas(
-        classes_of, "tile_x int, tile_y int, classes binary"
+    water = map_tiles(
+        tiles, ts, classes_of, "tile_x int, tile_y int, classes binary"
     )
     xth = build_xth_tiles(tiles, water, ts, ws)
     shaded = run_tile_shade(spark, xth, ts)

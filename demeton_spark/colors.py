@@ -97,15 +97,6 @@ def mix_colors_np(color_a, color_b, ratio: np.ndarray) -> np.ndarray:
     return np.clip(mixed, 0, 255).astype(np.uint8)
 
 
-def color_distance(color_a, color_b) -> float:
-    """Euclidean RGBA distance (Rgba8Bit.fs:126-132)."""
-    return float(
-        np.sqrt(
-            sum((float(x) - float(y)) ** 2 for x, y in zip(color_a, color_b))
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # elevation color scale
 # ---------------------------------------------------------------------------

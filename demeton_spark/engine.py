@@ -39,7 +39,10 @@ with ONE full-data shuffle (see SCALE.md):
 
 XTH tile-shade (``run_tile_shade``), plain mosaics (``assemble_tiles``,
 k = 0) and the streaming twin (``streaming.streaming_hillshade``) reuse
-the same emitter, compose and render.
+the same emitter, compose and render.  Operators over assembled tiles
+(isolines, posterization, water bodies, XTH packing, zonal stats) run
+their numpy kernels through the one Arrow tile map, ``map_tiles``, the
+only reader of the ``heights`` bytes ``assembled_row`` writes.
 
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
@@ -61,7 +64,8 @@ from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
+    BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
+    StructField, StructType,
 )
 
 from . import codec, kernels, pipeline
@@ -115,7 +119,8 @@ def parse_caption(images: DataFrame) -> DataFrame:
 # 2. the parts stream: blocks + halo strips keyed by destination tile (J3)
 # ---------------------------------------------------------------------------
 
-_SPARK_TYPES = {"int": IntegerType(), "long": LongType(),
+_SPARK_TYPES = {"int": IntegerType(), "long": LongType(), "bigint": LongType(),
+                "double": DoubleType(), "boolean": BooleanType(),
                 "string": StringType(), "binary": BinaryType()}
 
 
@@ -325,6 +330,12 @@ def assembled_row(
     }, schema=_ASSEMBLED_ARROW)
 
 
+def tile_heights(buf: bytes, ts: int) -> np.ndarray:
+    """An assembled tile's ``heights`` bytes (:func:`assembled_row`) as
+    the read-only (ts, ts) int16 array, row 0 = south."""
+    return np.frombuffer(buf, dtype="<i2").reshape(ts, ts)
+
+
 #: row stride of the tile → task deal: tile (x, y) goes to task
 #: (x + 374·y) mod n.  374 ≥ 360 keeps x + 374·y distinct over the
 #: whole 360×180 world, and it is the smallest such stride for which
@@ -367,6 +378,35 @@ def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
     return tile_groups(_block_parts(assigned)).applyInArrow(
         stitch, schema=ASSEMBLED_SCHEMA
     )
+
+
+def map_tiles(
+    tiles: DataFrame, tile_size: int, fn, schema: str, extra: tuple = ()
+) -> DataFrame:
+    """The one per-tile operator loop: a ``mapInArrow`` pass over
+    ``(tile_x, tile_y, heights, *extra)`` rows that calls
+    ``fn(tile_x, tile_y, heights, *extra_values)`` with each tile's
+    int16 array (:func:`tile_heights`) and packs the tuples it yields,
+    in ``schema`` order (``"name type, …"``), into one Arrow batch per
+    input batch.  A ``None`` in a tuple is a null."""
+    out = _schema(schema)
+    arrow = to_arrow_schema(out)
+    names = ("tile_x", "tile_y", "heights", *extra)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = []
+            for tx, ty, buf, *rest in zip(
+                *(batch.column(c).to_pylist() for c in names)
+            ):
+                rows.extend(fn(tx, ty, tile_heights(buf, tile_size), *rest))
+            cols = list(zip(*rows)) or [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                schema=arrow,
+            )
+
+    return tiles.select(*names).mapInArrow(run, schema=out)
 
 
 # ---------------------------------------------------------------------------

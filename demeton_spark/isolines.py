@@ -15,13 +15,11 @@ interpolated crossing of the iso level.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from . import kernels
+from .engine import map_tiles
 
 #: case → list of (edge_a, edge_b) segments.  Edges: 0=bottom, 1=right,
 #: 2=top, 3=left.  Case bit i set ⇔ corner i >= level, corners ordered
@@ -48,6 +46,25 @@ def _interp(a: np.ndarray, b: np.ndarray, level: float) -> np.ndarray:
     return np.clip(t, 0.0, 1.0)
 
 
+def _corners(f: np.ndarray) -> tuple[np.ndarray, ...]:
+    """The (bl, br, tr, tl) corner views of every 2×2 cell of ``f``."""
+    return f[:-1, :-1], f[:-1, 1:], f[1:, 1:], f[1:, :-1]
+
+
+def _cases(corners, level: float) -> np.ndarray:
+    """Per-cell case code: bit i set ⇔ corner i >= level; 0 where any
+    corner is missing (NaN)."""
+    bl, br, tr, tl = corners
+    ok = ~(np.isnan(bl) | np.isnan(br) | np.isnan(tr) | np.isnan(tl))
+    case = (
+        (bl >= level).astype(np.int8)
+        | ((br >= level).astype(np.int8) << 1)
+        | ((tr >= level).astype(np.int8) << 2)
+        | ((tl >= level).astype(np.int8) << 3)
+    )
+    return np.where(ok, case, 0)
+
+
 def isoline_segments(heights: np.ndarray, level: float) -> np.ndarray:
     """All isoline segments of the heights grid at ``level``.
 
@@ -58,18 +75,8 @@ def isoline_segments(heights: np.ndarray, level: float) -> np.ndarray:
     h, w = f.shape
     if h < 2 or w < 2:
         return np.empty((0, 4))
-    bl = f[:-1, :-1]
-    br = f[:-1, 1:]
-    tr = f[1:, 1:]
-    tl = f[1:, :-1]
-    ok = ~(np.isnan(bl) | np.isnan(br) | np.isnan(tr) | np.isnan(tl))
-    case = (
-        (bl >= level).astype(np.int8)
-        | ((br >= level).astype(np.int8) << 1)
-        | ((tr >= level).astype(np.int8) << 2)
-        | ((tl >= level).astype(np.int8) << 3)
-    )
-    case = np.where(ok, case, 0)
+    bl, br, tr, tl = corners = _corners(f)
+    case = _cases(corners, level)
 
     ys, xs = np.nonzero((case != 0) & (case != 15))
     if len(ys) == 0:
@@ -163,7 +170,7 @@ def chain_segments(segments: np.ndarray, tol: float = 1e-9) -> list[np.ndarray]:
 
 
 # ---------------------------------------------------------------------------
-# Spark operator
+# Spark operators (one engine.map_tiles pass each)
 # ---------------------------------------------------------------------------
 
 ISOLINE_SCHEMA = (
@@ -172,43 +179,33 @@ ISOLINE_SCHEMA = (
 )
 
 
+def chain_closed(chain: np.ndarray) -> bool:
+    """Is a :func:`chain_segments` chain a closed loop?"""
+    return bool(len(chain) > 2 and np.allclose(chain[0], chain[-1]))
+
+
+def _total_length(segs: np.ndarray) -> float:
+    """Summed length of (x0, y0, x1, y1) segment rows."""
+    return float(np.sum(np.hypot(segs[:, 2] - segs[:, 0], segs[:, 3] - segs[:, 1])))
+
+
 def tile_isolines(
     tiles: DataFrame, tile_size: int, levels: list[float]
 ) -> DataFrame:
-    """Per-tile isoline statistics at the given height levels (one
-    mapInPandas pass; heavy vector output stays distributed — only
-    stats come back)."""
+    """Per-tile isoline statistics at the given height levels (one Arrow
+    pass, :func:`engine.map_tiles`; heavy vector output stays
+    distributed — only stats come back)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "tile_x", "tile_y", "level", "n_segments",
-                "n_closed", "n_clipped", "total_len")}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                grid = kernels.heights_to_float(
-                    np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-                )
-                for level in levels:
-                    segs = isoline_segments(grid, level)
-                    chains = chain_segments(segs)
-                    closed = sum(
-                        1 for ch in chains
-                        if len(ch) > 2 and np.allclose(ch[0], ch[-1])
-                    )
-                    length = float(
-                        np.sum(np.hypot(segs[:, 2] - segs[:, 0],
-                                        segs[:, 3] - segs[:, 1]))
-                    ) if len(segs) else 0.0
-                    rows["tile_x"].append(int(tx))
-                    rows["tile_y"].append(int(ty))
-                    rows["level"].append(float(level))
-                    rows["n_segments"].append(len(segs))
-                    rows["n_closed"].append(closed)
-                    rows["n_clipped"].append(len(chains) - closed)
-                    rows["total_len"].append(length)
-            yield pd.DataFrame(rows)
+    def stats(tx, ty, heights):
+        grid = kernels.heights_to_float(heights)
+        for level in levels:
+            segs = isoline_segments(grid, level)
+            chains = chain_segments(segs)
+            closed = sum(map(chain_closed, chains))
+            yield (tx, ty, float(level), len(segs), closed,
+                   len(chains) - closed, _total_length(segs))
 
-    return tiles.mapInPandas(run, schema=ISOLINE_SCHEMA)
+    return map_tiles(tiles, tile_size, stats, ISOLINE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -245,51 +242,23 @@ def tile_posterize(
     """
     bounds = [-np.inf] + list(thresholds) + [np.inf]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("tile_x", "tile_y", "class_id", "lo", "hi", "n_px",
-                "min_x", "min_y", "max_x", "max_y",
-                "n_boundary_chains", "boundary_len")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                grid = kernels.heights_to_float(
-                    np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-                )
-                classes = posterize_classes(grid, thresholds)
-                # boundary chains per threshold (shared by the classes on
-                # either side; attributed to the class above the mark)
-                chain_stats = {}
-                for i, level in enumerate(thresholds):
-                    segs = isoline_segments(grid, level)
-                    chains = chain_segments(segs)
-                    length = float(
-                        np.sum(np.hypot(segs[:, 2] - segs[:, 0],
-                                        segs[:, 3] - segs[:, 1]))
-                    ) if len(segs) else 0.0
-                    chain_stats[i + 1] = (len(chains), length)
-                for cid in np.unique(classes):
-                    mask = classes == cid
-                    ys, xs = np.nonzero(mask)
-                    n_ch, blen = chain_stats.get(int(cid), (0, 0.0))
-                    rows["tile_x"].append(int(tx))
-                    rows["tile_y"].append(int(ty))
-                    rows["class_id"].append(int(cid))
-                    rows["lo"].append(
-                        float(bounds[cid]) if cid >= 0 else float("nan")
-                    )
-                    rows["hi"].append(
-                        float(bounds[cid + 1]) if cid >= 0 else float("nan")
-                    )
-                    rows["n_px"].append(int(mask.sum()))
-                    rows["min_x"].append(int(xs.min()))
-                    rows["min_y"].append(int(ys.min()))
-                    rows["max_x"].append(int(xs.max()))
-                    rows["max_y"].append(int(ys.max()))
-                    rows["n_boundary_chains"].append(int(n_ch))
-                    rows["boundary_len"].append(float(blen))
-            yield pd.DataFrame(rows)
+    def classes_of(tx, ty, heights):
+        grid = kernels.heights_to_float(heights)
+        classes = posterize_classes(grid, thresholds)
+        # boundary chains per threshold (shared by the classes on either
+        # side; attributed to the class above the mark)
+        chain_stats = {}
+        for i, level in enumerate(thresholds):
+            segs = isoline_segments(grid, level)
+            chain_stats[i + 1] = (len(chain_segments(segs)), _total_length(segs))
+        for cid in np.unique(classes).tolist():
+            ys, xs = np.nonzero(classes == cid)
+            n_ch, blen = chain_stats.get(cid, (0, 0.0))
+            lo, hi = (bounds[cid], bounds[cid + 1]) if cid >= 0 else (None, None)
+            yield (tx, ty, cid, lo, hi, len(ys), int(xs.min()), int(ys.min()),
+                   int(xs.max()), int(ys.max()), n_ch, blen)
 
-    return tiles.mapInPandas(run, schema=POSTERIZE_SCHEMA)
+    return map_tiles(tiles, tile_size, classes_of, POSTERIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -402,33 +371,12 @@ def tile_case_histogram(
     SQL-checkable core of the marching-squares classification — the
     oracle recomputes it from the four corner heights per cell."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "tile_x", "tile_y", "level", "case_id", "n_cells")}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                f = kernels.heights_to_float(
-                    np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-                )
-                bl, br = f[:-1, :-1], f[:-1, 1:]
-                tr, tl = f[1:, 1:], f[1:, :-1]
-                ok = ~(np.isnan(bl) | np.isnan(br) | np.isnan(tr) | np.isnan(tl))
-                for level in levels:
-                    case = (
-                        (bl >= level).astype(np.int8)
-                        | ((br >= level).astype(np.int8) << 1)
-                        | ((tr >= level).astype(np.int8) << 2)
-                        | ((tl >= level).astype(np.int8) << 3)
-                    )
-                    case = np.where(ok, case, 0)
-                    counts = np.bincount(case.ravel(), minlength=16)
-                    for cid in range(1, 15):
-                        if counts[cid]:
-                            rows["tile_x"].append(int(tx))
-                            rows["tile_y"].append(int(ty))
-                            rows["level"].append(float(level))
-                            rows["case_id"].append(cid)
-                            rows["n_cells"].append(int(counts[cid]))
-            yield pd.DataFrame(rows)
+    def histogram(tx, ty, heights):
+        corners = _corners(kernels.heights_to_float(heights))
+        for level in levels:
+            counts = np.bincount(_cases(corners, level).ravel(), minlength=16)
+            for cid in range(1, 15):
+                if counts[cid]:
+                    yield tx, ty, float(level), cid, int(counts[cid])
 
-    return tiles.mapInPandas(run, schema=CASE_HISTOGRAM_SCHEMA)
+    return map_tiles(tiles, tile_size, histogram, CASE_HISTOGRAM_SCHEMA)

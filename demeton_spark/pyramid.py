@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .engine import tile_heights
 from .kernels import downsample_average_2x2
 from .tiles import DEM_HEIGHT_NONE
 
@@ -40,9 +41,7 @@ def build_pyramid_level(child_tiles: DataFrame, tile_size: int, level: int) -> D
         for cx, cy, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
             ox = (int(cx) - px * 2) * ts
             oy = (int(cy) - py * 2) * ts
-            merged[oy : oy + ts, ox : ox + ts] = np.frombuffer(
-                buf, dtype="<i2"
-            ).reshape(ts, ts)
+            merged[oy : oy + ts, ox : ox + ts] = tile_heights(buf, ts)
         parent = downsample_average_2x2(merged)
         ok = parent != DEM_HEIGHT_NONE
         return pd.DataFrame(

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec, kernels, pipeline
+from .engine import tile_heights
 from .geometry import MapScale, Mercator
 from .tiles import DEM_HEIGHT_NONE, bounds_to_tiles, cells_per_degree
 
@@ -182,9 +183,9 @@ def render_shaded_raster(
         ):
             oy = (int(ty) * tile_size) - cell_y0
             ox = (int(tx) * tile_size) - cell_x0
-            merged[oy : oy + tile_size, ox : ox + tile_size] = np.frombuffer(
-                buf, dtype="<i2"
-            ).reshape(tile_size, tile_size)
+            merged[oy : oy + tile_size, ox : ox + tile_size] = tile_heights(
+                buf, tile_size
+            )
         merged_f = kernels.heights_to_float(merged)
 
         scan, out = codec.rgba_scanlines(h, w)

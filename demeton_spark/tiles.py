@@ -14,9 +14,9 @@ Semantics follow the reference implementation (breki/demeton):
     (max tile index uses ``ceil - 1`` so an exactly tile-aligned bbox
     does not over-cover)
 
-Everything here is pure Python / numpy / Spark Column expressions — no
-per-row Python UDFs.  The Column builders mirror the scalar functions
-exactly so Catalyst can constant-fold / push them down.
+Everything here is pure Python or Spark Column expressions — no
+per-row Python UDFs.  The Column builder mirrors its scalar function
+exactly so Catalyst can constant-fold / push it down.
 """
 
 from __future__ import annotations
@@ -24,9 +24,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import numpy as np
-
-try:  # Column-expression builders are optional (numpy-only use works too)
+try:  # Column-expression builders are optional (plain-Python use works too)
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 except ImportError:  # pragma: no cover
@@ -197,47 +195,8 @@ def tile_key_decode(key: int) -> tuple[int, int, int]:
 
 
 # ---------------------------------------------------------------------------
-# numpy vectorized variants (used inside pandas UDFs)
-# ---------------------------------------------------------------------------
-
-def tile_of_lon_lat_np(
-    tile_size: int, level: int, lon: np.ndarray, lat: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    cpd = cells_per_degree(tile_size, level)
-    tx = np.floor(lon * cpd / tile_size).astype(np.int64)
-    ty = np.floor(lat * cpd / tile_size).astype(np.int64)
-    return tx, ty
-
-
-def tile_key_np(level, tile_x: np.ndarray, tile_y: np.ndarray) -> np.ndarray:
-    return (
-        (np.asarray(level, dtype=np.int64) << 42)
-        | ((tile_x.astype(np.int64) + _KEY_OFFSET) << 21)
-        | (tile_y.astype(np.int64) + _KEY_OFFSET)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Spark Column-expression builders (JVM-side, codegen-friendly)
 # ---------------------------------------------------------------------------
-
-def tile_x_col(lon: "Column", level: int = 0) -> "Column":
-    """Tile X of a longitude column — pure Catalyst expression."""
-    return F.floor(lon / F.lit(float(1 << level))).cast("int")
-
-
-def tile_y_col(lat: "Column", level: int = 0) -> "Column":
-    return F.floor(lat / F.lit(float(1 << level))).cast("int")
-
-
-def tile_key_col(level: "Column | int", tile_x: "Column", tile_y: "Column") -> "Column":
-    lvl = F.lit(level) if isinstance(level, int) else level
-    return (
-        F.shiftleft(lvl.cast("bigint"), 42)
-        .bitwiseOR(F.shiftleft(tile_x.cast("bigint") + _KEY_OFFSET, 21))
-        .bitwiseOR(tile_y.cast("bigint") + _KEY_OFFSET)
-    )
-
 
 def tile_name_col(level: "Column | int", tile_x: "Column", tile_y: "Column") -> "Column":
     """Tile-name column mirroring :func:`tile_name` for level-0 tiles.

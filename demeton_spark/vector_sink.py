@@ -18,14 +18,13 @@ diffable across runs.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from demeton_spark import kernels
-from demeton_spark.isolines import chain_segments, isoline_segments
+from demeton_spark.engine import map_tiles
+from demeton_spark.isolines import chain_closed, chain_segments, isoline_segments
 
 FEATURE_SCHEMA = (
     "tile_x int, tile_y int, level double, closed boolean, "
@@ -64,42 +63,16 @@ def tile_isolines_features(
     squares + chaining pass as ``tile_isolines`` — the stats query and
     this export share one code path, so the oracle-checked counts pin
     the geometry exported here."""
-    ts = tile_size
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "tile_x", "tile_y", "level", "closed", "n_points",
-                    "feature",
-                )
-            }
-            for tx, ty, buf in zip(
-                pdf["tile_x"], pdf["tile_y"], pdf["heights"]
-            ):
-                grid = kernels.heights_to_float(
-                    np.frombuffer(buf, dtype="<i2").reshape(ts, ts)
-                )
-                for level in levels:
-                    for chain in chain_segments(isoline_segments(grid, level)):
-                        closed = bool(
-                            len(chain) > 2 and np.allclose(chain[0], chain[-1])
-                        )
-                        rows["tile_x"].append(int(tx))
-                        rows["tile_y"].append(int(ty))
-                        rows["level"].append(float(level))
-                        rows["closed"].append(closed)
-                        rows["n_points"].append(len(chain))
-                        rows["feature"].append(
-                            _chain_to_feature(
-                                chain, int(tx), int(ty), ts, float(level),
-                                closed,
-                            )
-                        )
-            yield pd.DataFrame(rows)
+    def features(tx, ty, heights):
+        grid = kernels.heights_to_float(heights)
+        for level in map(float, levels):
+            for chain in chain_segments(isoline_segments(grid, level)):
+                closed = chain_closed(chain)
+                yield (tx, ty, level, closed, len(chain),
+                       _chain_to_feature(chain, tx, ty, tile_size, level, closed))
 
-    return tiles.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_tiles(tiles, tile_size, features, FEATURE_SCHEMA)
 
 
 def write_geojson_lines(features: DataFrame, output_dir: str) -> None:

@@ -690,26 +690,6 @@ def _emit_symbol(bw: _BitWriter, codes: dict[int, tuple[int, int]], s: int) -> N
         bw.write((code >> i) & 1, 1)
 
 
-def _emit_prefix_value(bw: _BitWriter, codes, v: int) -> tuple[int, int, int]:
-    """Return (prefix code, extra, ebits) for value v and emit the code."""
-    if v <= 4:
-        c, extra, ebits = v - 1, 0, 0
-    else:
-        u = v - 1
-        hb = u.bit_length() - 1
-        ebits = hb - 1
-        if u < (3 << ebits):
-            c = 2 * hb
-            extra = u - (2 << ebits)
-        else:
-            c = 2 * hb + 1
-            extra = u - (3 << ebits)
-    _emit_symbol(bw, codes, c)
-    if ebits:
-        bw.write(extra, ebits)
-    return c, extra, ebits
-
-
 def _length_prefix_code(v: int) -> int:
     if v <= 4:
         return v - 1

@@ -14,10 +14,10 @@ Reference semantics reproduced (capability, not code):
   - outline distance rings 1..3 grown inward from the shore
     (/root/reference/Demeton/WaterBodies/Outlining.fs:37-154)
 
-The Spark path labels each tile independently (one applyInPandas task
-per tile), then joins adjacent tiles' edge strips: water pixels that
-touch across a tile boundary yield equivalence edges between
-(tile, local_label) nodes, and :func:`demeton_spark.graph.
+The Spark path labels each tile independently (one Arrow pass over the
+tiles, ``engine.map_tiles``), then joins adjacent tiles' edge strips:
+water pixels that touch across a tile boundary yield equivalence edges
+between (tile, local_label) nodes, and :func:`demeton_spark.graph.
 connected_components` collapses them into global components.  This is
 the same halo topology as the shading stencil — strips are ~2·ts cells
 per tile, so the wide stage stays narrow-payload at 10^12-pixel scale.
@@ -25,13 +25,14 @@ per tile, so the wide stage stays narrow-payload at 10^12-pixel scale.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import codec
+from .engine import map_tiles
+from .kernels import resample_majority_binary
 from .tiles import DEM_HEIGHT_NONE
 
 # ---------------------------------------------------------------------------
@@ -131,12 +132,14 @@ def label_components(mask: np.ndarray) -> np.ndarray:
 
 
 def component_stats(labels: np.ndarray) -> pd.DataFrame:
-    """Per-component area + bbox: columns (label, area, min_x, min_y,
-    max_x, max_y), sorted by label."""
+    """Per-component area + bbox + scan-first pixel: columns (label,
+    area, min_x, min_y, max_x, max_y, first_x, first_y), sorted by
+    label; the same columns when there is no component."""
     ys, xs = np.nonzero(labels)
     if len(ys) == 0:
         return pd.DataFrame(
-            columns=["label", "area", "min_x", "min_y", "max_x", "max_y"]
+            columns=["label", "area", "min_x", "min_y", "max_x", "max_y",
+                     "first_x", "first_y"]
         ).astype(np.int64)
     labs = labels[ys, xs]
     order = np.argsort(labs, kind="stable")
@@ -216,6 +219,8 @@ _CELL_KEY_MUL = 1 << 26
 
 def cell_key(cy: int, cx: int):
     return (cy + _CELL_KEY_OFF) * _CELL_KEY_MUL + (cx + _CELL_KEY_OFF)
+
+
 _EDGE_STRIP_SCHEMA = (
     "ex long, ey long, side string, pos long, node long"
 )
@@ -235,43 +240,15 @@ def tile_water_components(
     """Per-tile component stats in GLOBAL cell coordinates, node-keyed for
     cross-tile union.  Input rows: (tile_x, tile_y, heights binary)."""
 
-    def per_tile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                tile = np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-                labels = label_components(water_mask_from_heights(tile, sea_level))
-                st = component_stats(labels)
-                if not len(st):
-                    continue
-                st = st.assign(
-                    tile_x=int(tx),
-                    tile_y=int(ty),
-                    min_cx=st["min_x"] + int(tx) * tile_size,
-                    max_cx=st["max_x"] + int(tx) * tile_size,
-                    min_cy=st["min_y"] + int(ty) * tile_size,
-                    max_cy=st["max_y"] + int(ty) * tile_size,
-                    min_key=cell_key(
-                        st["first_y"] + int(ty) * tile_size,
-                        st["first_x"] + int(tx) * tile_size,
-                    ),
-                )
-                st["label"] = st["label"].astype(np.int32)
-                frames.append(
-                    st[["tile_x", "tile_y", "label", "area",
-                        "min_cx", "min_cy", "max_cx", "max_cy", "min_key"]]
-                )
-            yield (
-                pd.concat(frames)
-                if frames
-                else pd.DataFrame(
-                    {k: [] for k in (
-                        "tile_x", "tile_y", "label", "area",
-                        "min_cx", "min_cy", "max_cx", "max_cy", "min_key")}
-                )
-            )
+    def components(tx, ty, heights):
+        labels = label_components(water_mask_from_heights(heights, sea_level))
+        x0, y0 = tx * tile_size, ty * tile_size
+        for c in component_stats(labels).itertuples():
+            yield (tx, ty, c.label, c.area, c.min_x + x0, c.min_y + y0,
+                   c.max_x + x0, c.max_y + y0,
+                   cell_key(c.first_y + y0, c.first_x + x0))
 
-    return tiles.mapInPandas(per_tile, schema=TILE_COMPONENT_SCHEMA)
+    return map_tiles(tiles, tile_size, components, TILE_COMPONENT_SCHEMA)
 
 
 def _edge_strips(tiles: DataFrame, tile_size: int, sea_level: int) -> DataFrame:
@@ -281,31 +258,19 @@ def _edge_strips(tiles: DataFrame, tile_size: int, sea_level: int) -> DataFrame:
     A groupBy on the edge key joins both tiles' strips without a full
     tile shuffle."""
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ts = tile_size
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in ("ex", "ey", "side", "pos", "node")}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                tile = np.frombuffer(buf, dtype="<i2").reshape(ts, ts)
-                labels = label_components(water_mask_from_heights(tile, sea_level))
-                nodes = _node_id(int(tx), int(ty), labels)
-                edges = [
-                    # (edge key, side tag, boundary row/col)
-                    ((int(tx), int(ty)), "S", labels[0, :], nodes[0, :]),
-                    ((int(tx), int(ty) + 1), "S", labels[-1, :], nodes[-1, :]),
-                    ((int(tx), int(ty)), "W", labels[:, 0], nodes[:, 0]),
-                    ((int(tx) + 1, int(ty)), "W", labels[:, -1], nodes[:, -1]),
-                ]
-                for (ex, ey), side, lab_line, node_line in edges:
-                    idx = np.flatnonzero(lab_line)
-                    out["ex"].extend([ex] * len(idx))
-                    out["ey"].extend([ey] * len(idx))
-                    out["side"].extend([side] * len(idx))
-                    out["pos"].extend(idx.tolist())
-                    out["node"].extend(node_line[idx].tolist())
-            yield pd.DataFrame(out)
+    def strips(tx, ty, heights):
+        labels = label_components(water_mask_from_heights(heights, sea_level))
+        nodes = _node_id(tx, ty, labels)
+        for ex, ey, side, line in (
+            # (edge key, side tag, boundary row/col)
+            (tx, ty, "S", np.s_[0, :]), (tx, ty + 1, "S", np.s_[-1, :]),
+            (tx, ty, "W", np.s_[:, 0]), (tx + 1, ty, "W", np.s_[:, -1]),
+        ):
+            idx = np.flatnonzero(labels[line])
+            for pos, node in zip(idx.tolist(), nodes[line][idx].tolist()):
+                yield ex, ey, side, pos, node
 
-    return tiles.mapInPandas(emit, schema=_EDGE_STRIP_SCHEMA)
+    return map_tiles(tiles, tile_size, strips, _EDGE_STRIP_SCHEMA)
 
 
 def global_water_components(
@@ -397,29 +362,18 @@ def build_xth_tiles(
         how="left",
     )
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import codec
-        from .kernels import resample_majority_binary
+    def pack(tx, ty, heights, wc):
+        if wc is None:
+            mask = np.zeros(heights.shape, dtype=bool)
+        else:
+            classes = np.frombuffer(wc, dtype=np.uint8).reshape(
+                water_size, water_size
+            )
+            mono = (classes == water_class).astype(np.int16)
+            mask = resample_majority_binary(mono, tile_size, tile_size).astype(bool)
+        yield tx, ty, codec.encode_xth(heights, mask)
 
-        ts = tile_size
-        for pdf in batches:
-            out: dict[str, list] = {"tile_x": [], "tile_y": [], "xth": []}
-            for r in pdf.itertuples():
-                heights = np.frombuffer(r.heights, dtype="<i2").reshape(ts, ts)
-                if r.wc is None:
-                    mask = np.zeros((ts, ts), dtype=bool)
-                else:
-                    classes = np.frombuffer(r.wc, dtype=np.uint8).reshape(
-                        water_size, water_size
-                    )
-                    mono = (classes == water_class).astype(np.int16)
-                    mask = resample_majority_binary(mono, ts, ts).astype(bool)
-                out["tile_x"].append(int(r.tile_x))
-                out["tile_y"].append(int(r.tile_y))
-                out["xth"].append(codec.encode_xth(heights, mask))
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(pack, schema=XTH_TILE_SCHEMA)
+    return map_tiles(joined, tile_size, pack, XTH_TILE_SCHEMA, extra=("wc",))
 
 
 def visible_components(components: DataFrame,

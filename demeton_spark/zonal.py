@@ -11,15 +11,15 @@ distributed generalization.
 
 Spark-first topology (scales to a 10^12-pixel DEM):
 
-  1. polygon → tile cover (floor/ceil−1 bbox rule, same as
-     ``tiles.bounds_to_tiles``): a tiny driver-side table, broadcast.
+  1. polygon → tile cover (``floor(min)..floor(max)`` of the bbox on
+     each axis): a tiny driver-side table, broadcast.
   2. tile table ⨝ broadcast(cover) — the only join; the raster side
      never shuffles, each tile row is touched once per covering polygon
      (polygons are dimension-sized, rasters are fact-sized).
-  3. one Arrow pass (``mapInPandas``) per joined row: decode the int16
-     tile, vectorized crossing-number mask over the cell lattice
-     (geometry.points_in_polygon), emit PARTIAL aggregates — six ints
-     per (polygon, tile), never pixels.
+  3. one Arrow pass (``engine.map_tiles``) over the joined rows: per
+     row, a vectorized crossing-number mask over the cell lattice
+     (geometry.points_in_polygon) of the int16 tile, emitting PARTIAL
+     aggregates — six ints per (polygon, tile), never pixels.
   4. hash-aggregate partials per polygon (map-side combine; the shuffle
      carries O(polygons × covered tiles) rows).
 
@@ -31,13 +31,13 @@ arithmetic — no trig re-derivation inside either engine.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from demeton_spark.engine import map_tiles
 from demeton_spark.geometry import points_in_polygon
 
 Polygon = tuple[int, Sequence[tuple[float, float]]]
@@ -72,8 +72,12 @@ def zonal_demo_polygons(n: int = 6) -> list[Polygon]:
 
 
 def _poly_tile_cover(polys: Sequence[Polygon]) -> list[tuple[int, int, int]]:
-    """(poly_id, tile_x, tile_y) for every 1° tile the polygon's MBR
-    touches — the floor/ceil−1 cover rule of ``tiles.bounds_to_tiles``."""
+    """(poly_id, tile_x, tile_y) for every 1° tile from ``floor(min)`` to
+    ``floor(max)`` of the polygon's MBR on each axis.  Unlike the
+    ceil−1 rule of ``tiles.bounds_to_tiles``, an MBR edge lying exactly
+    on a tile boundary also covers the tile beyond it.  The DuckDB
+    twins in ``queries`` reuse these rows, so both engines see the same
+    cover."""
     rows = []
     for poly_id, verts in polys:
         xs = [v[0] for v in verts]
@@ -110,38 +114,27 @@ def zonal_stats(
     )
     joined = tiles.join(F.broadcast(cover), ["tile_x", "tile_y"])
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lattice = np.arange(ts, dtype=np.float64) / ts
-        for pdf in batches:
-            out: dict[str, list] = {
-                "poly_id": [], "n_px": [], "n_valid": [],
-                "sum_h": [], "min_h": [], "max_h": [],
-            }
-            for tx, ty, blob, pid in zip(
-                pdf["tile_x"], pdf["tile_y"], pdf["heights"], pdf["poly_id"]
-            ):
-                h = np.frombuffer(bytes(blob), dtype=np.int16).reshape(ts, ts)
-                vx, vy = zip(*verts_by_id[int(pid)])
-                lon = tx + lattice  # cell-corner lattice, exact doubles
-                lat = ty + lattice
-                mask = points_in_polygon(
-                    np.broadcast_to(lon, (ts, ts)).ravel(),
-                    np.repeat(lat, ts),
-                    np.asarray(vx), np.asarray(vy),
-                ).reshape(ts, ts)
-                n_px = int(mask.sum())
-                inside = h[mask]
-                valid = inside[inside != -32768].astype(np.int64)
-                out["poly_id"].append(int(pid))
-                out["n_px"].append(n_px)
-                out["n_valid"].append(valid.size)
-                out["sum_h"].append(int(valid.sum()) if valid.size else 0)
-                out["min_h"].append(int(valid.min()) if valid.size else None)
-                out["max_h"].append(int(valid.max()) if valid.size else None)
-            yield pd.DataFrame(out)
+    lattice = np.arange(ts, dtype=np.float64) / ts
+
+    def partials(tx, ty, h, pid):
+        vx, vy = zip(*verts_by_id[pid])
+        lon = tx + lattice  # cell-corner lattice, exact doubles
+        lat = ty + lattice
+        mask = points_in_polygon(
+            np.broadcast_to(lon, (ts, ts)).ravel(),
+            np.repeat(lat, ts),
+            np.asarray(vx), np.asarray(vy),
+        ).reshape(ts, ts)
+        inside = h[mask]
+        valid = inside[inside != -32768].astype(np.int64)
+        if valid.size:
+            yield (pid, int(mask.sum()), valid.size, int(valid.sum()),
+                   int(valid.min()), int(valid.max()))
+        else:
+            yield pid, int(mask.sum()), 0, 0, None, None
 
     agg = (
-        joined.mapInPandas(partials, _PARTIAL_SCHEMA)
+        map_tiles(joined, ts, partials, _PARTIAL_SCHEMA, extra=("poly_id",))
         .groupBy("poly_id")
         .agg(
             F.sum("n_px").alias("n_px"),

@@ -13,8 +13,9 @@ Run on a cluster (the package ships as a zip via --py-files):
 Pipeline (all stages are the oracle-checked contract operators):
   1. multi-band MinHash LSH near-dup pairs (8 bands x 2 rows,
      exact-Jaccard verified) -> <output>/pairs
-  2. connected-component cluster assignment (min-label or
-     large-star/small-star via --cc-algorithm) -> <output>/clusters
+  2. connected-component cluster assignment (min-label propagation,
+     finishing with alternating-star when the graph's diameter is
+     large) -> <output>/clusters
   3. canonical keep list (best quality per cluster) -> <output>/keep
   4. optional candidate-recall audit vs exact Jaccard on a bounded
      doc_id slice (--with-recall) -> printed in the JSON summary
@@ -45,11 +46,6 @@ def main() -> None:
     ap.add_argument("--output", default=None,
                     help="optional parquet sink root (pairs/, clusters/, "
                          "keep/ subdirs); omit for a dry-run summary")
-    ap.add_argument("--cc-algorithm", default="label",
-                    choices=["label", "star"],
-                    help="connected-components variant: min-label "
-                         "(O(diameter), dense dup clusters) or "
-                         "large-star/small-star (O(log n), chain-shaped)")
     ap.add_argument("--with-recall", action="store_true",
                     help="also compute the per-bucket LSH candidate "
                          "recall audit on a bounded doc slice")
@@ -76,8 +72,7 @@ def main() -> None:
         F.col("doc_id").cast("bigint").alias("doc")
     )
     labels = connected_components(
-        docs, pairs.select("doc_a", "doc_b"), "doc", ("doc_a", "doc_b"),
-        algorithm=args.cc_algorithm,
+        docs, pairs.select("doc_a", "doc_b"), "doc", ("doc_a", "doc_b")
     )
     clusters = labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
@@ -111,7 +106,6 @@ def main() -> None:
         "n_clusters": n_clusters,
         "n_keep": n_keep,
         "duplicate_ratio": round(n_docs / max(n_keep, 1), 4),
-        "cc_algorithm": args.cc_algorithm,
         "sec": round(time.time() - t0, 2),
     }
     if args.with_recall:

@@ -73,7 +73,7 @@ def main() -> None:
 
     # the hillshade pipeline as run_hillshade builds it: the plan must
     # show exactly ONE full-data Exchange (the tile deal of
-    # engine.tile_groups) feeding FlatMapGroupsInPandas — assembled
+    # engine.tile_groups) feeding FlatMapGroupsInArrow — assembled
     # tiles never re-shuffle
     from demeton_spark.engine import run_hillshade
     from demeton_spark.synth import WorldSpec, images_df
@@ -93,7 +93,7 @@ def main() -> None:
         "reaches one `shufflepartitionidpassthrough` exchange that deals "
         "each destination tile to its reduce task by grid position; "
         "assembly, halo padding, shading and PNG encode run inside the "
-        "single FlatMapGroupsInPandas that follows.\n\n"
+        "single FlatMapGroupsInArrow that follows.\n\n"
         f"```\n{plan}\n```\n"
     )
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
