@@ -562,24 +562,20 @@ def render_tile(
 def shade_unified(
     parts: DataFrame, tile_size: int, script: str,
     clip_poly: np.ndarray | None = None,
-    halo: int = 1,
     prefilter: str | None = None,
     png_level: int | None = None,
     shade_partitions: int | None = None,
 ) -> DataFrame:
     """One group per tile, dealt over ``shade_partitions`` tasks
     (:func:`tile_groups`): :func:`compose_padded` then
-    :func:`render_tile`.  ``parts`` comes from :func:`hillshade_parts`
-    (same halo); groups with no center blocks (strips sent past the
-    world edge) produce nothing.  ``prefilter`` is a step script over
+    :func:`render_tile`.  ``parts`` comes from :func:`hillshade_parts`;
+    groups with no center blocks (strips sent past the world edge)
+    produce nothing.  ``prefilter`` is a step script over
     kernels.PREFILTERS (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``);
-    each step consumes one halo ring, so halo must be 1 + n_steps."""
+    each step consumes one halo ring, so the parts' halo must be 1 +
+    the number of steps."""
     steps, registry, lvl, pre_steps = render_setup(script, png_level, prefilter)
-    if halo != 1 + len(pre_steps):
-        raise ValueError(
-            f"halo {halo} must be 1 + number of prefilter steps "
-            f"({len(pre_steps)})"
-        )
+    halo = 1 + len(pre_steps)
 
     def assemble_pad_shade(key, table):
         padded, n_blocks = compose_padded(table, tile_size, halo)
@@ -740,7 +736,7 @@ def run_hillshade(
             )
     shaded = shade_unified(
         parts, tile_size, script, clip_poly=clip_poly,
-        halo=halo, prefilter=prefilter, png_level=png_level,
+        prefilter=prefilter, png_level=png_level,
         shade_partitions=shade_partitions,
     )
     if output_dir is not None:

@@ -33,6 +33,7 @@ Operator coverage map (SURVEY.md §2):
 from __future__ import annotations
 
 import gc
+import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,13 +50,34 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _snapshot(sf_dir: str, tables: tuple) -> tuple:
+    """Data-change token of the named tables: per table, the (mtime_ns,
+    size) of its parquet file, or the (name, mtime_ns, size) of each
+    entry of a parquet directory; ``"missing"`` where it cannot be
+    read."""
+
+    def stat(path: str) -> tuple:
+        try:
+            if os.path.isdir(path):
+                return tuple(
+                    (name, *stat(os.path.join(path, name)))
+                    for name in sorted(os.listdir(path))
+                )
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        except OSError:
+            return ("missing",)
+
+    return tuple(stat(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
+
+
 class _Memo(dict):
     """Driver-side memo of materialized (``localCheckpoint``) results,
-    keyed per session and input, oldest entry out past 8 — the local
-    stand-in for a table a production pipeline writes once and every
-    consumer reads.  An evicted entry is collected at once, so the
-    ContextCleaner reclaims its checkpoint blocks promptly instead of
-    whenever Python GC next runs."""
+    keyed per session, input and data snapshot, oldest entry out past
+    8 — the local stand-in for a table a production pipeline writes once
+    and every consumer reads.  An evicted entry is collected at once, so
+    the ContextCleaner reclaims its checkpoint blocks promptly instead
+    of whenever Python GC next runs."""
 
     BOUND = 8
 
@@ -64,6 +86,16 @@ class _Memo(dict):
         if len(self) > self.BOUND:
             del self[next(iter(self))]
             gc.collect()
+
+    def get_or_build(self, spark: SparkSession, sf_dir: str, tables: tuple,
+                     build):
+        """``build()``'s result for this session and ``sf_dir``, built
+        again once one of the ``tables`` it reads is rewritten."""
+        key = (spark.sparkContext.applicationId, sf_dir,
+               _snapshot(sf_dir, tables))
+        if key not in self:
+            self[key] = build()
+        return self[key]
 
 
 def _explode_bands(
@@ -109,6 +141,35 @@ def band_pairs(
         )
     )
     return (verify(cand) if verify else cand).distinct()
+
+
+def _recall(exact: DataFrame, cand: DataFrame, on: list, by) -> DataFrame:
+    """The recall gate of every candidate generator: left-joins the
+    candidate pairs (a key on the ``on`` columns) onto the exact pairs
+    and returns, per ``by`` (a column of ``exact`` or an expression over
+    it), the ``n`` exact pairs, the ``hits`` among them that are
+    candidates and ``recall = round(hits / n, 6)``."""
+    hit = F.coalesce(F.col("_hit"), F.lit(0))
+    return (
+        exact.join(cand.select(*on, F.lit(1).alias("_hit")), on, "left")
+        .groupBy(by)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(hit).alias("hits"),
+            F.round(F.sum(hit) / F.count("*"), 6).alias("recall"),
+        )
+    )
+
+
+def _knn_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """recall@k per probe of an approximate top-k against the exact
+    top-k (both keyed by ``query_id, neighbor_id``)."""
+    return _recall(exact, approx, ["query_id", "neighbor_id"], "query_id").select(
+        "query_id",
+        F.col("n").cast("int").alias("k"),
+        F.col("hits").cast("int").alias("hits"),
+        "recall",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1054,11 +1115,7 @@ def q_doc_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.lit(2) * F.col("i") >= F.col("u"))
     )
-    cand = (
-        band_pairs(sig, "doc_id", _lsh_bands())
-        .toDF("doc_a", "doc_b")
-        .withColumn("hit", F.lit(1))
-    )
+    cand = band_pairs(sig, "doc_id", _lsh_bands()).toDF("doc_a", "doc_b")
     bucket = (
         F.when(F.lit(10) * F.col("i") >= F.lit(9) * F.col("u"), F.lit("j>=0.9"))
         .when(
@@ -1067,19 +1124,9 @@ def q_doc_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit("0.5<=j<0.7"))
     )
-    return (
-        exact.join(cand, on=["doc_a", "doc_b"], how="left")
-        .select(
-            bucket.alias("jaccard_bucket"),
-            F.coalesce(F.col("hit"), F.lit(0)).alias("hit"),
-        )
-        .groupBy("jaccard_bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_exact"),
-            F.sum("hit").cast("bigint").alias("n_candidates"),
-            F.round(F.sum("hit") / F.count("*"), 6).alias("recall"),
-        )
-    )
+    return _recall(
+        exact, cand, ["doc_a", "doc_b"], bucket.alias("jaccard_bucket")
+    ).toDF("jaccard_bucket", "n_exact", "n_candidates", "recall")
 
 
 SQL_DOC_NEAR_DUP_RECALL = f"""
@@ -1116,18 +1163,16 @@ group by 1
 """
 
 
-#: materialized cluster assignments per (application, sf_dir) — the
-#: local stand-in for the written clusters table a production pipeline
-#: materializes once and every downstream consumer reads (VERDICT r2:
-#: without it, doc_dedup_keep_best re-derives the whole LSH + CC
-#: pipeline that doc_dedup_clusters just computed)
+#: materialized cluster assignments — the local stand-in for the
+#: written clusters table a production pipeline materializes once and
+#: every downstream consumer reads (VERDICT r2: without it,
+#: doc_dedup_keep_best re-derives the whole LSH + CC pipeline that
+#: doc_dedup_clusters just computed)
 _CLUSTER_MEMO = _Memo()
 
 
 def _dedup_clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CLUSTER_MEMO.get(key)
-    if df is None:
+    def build() -> DataFrame:
         from .graph import connected_components
 
         pairs = q_doc_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -1135,11 +1180,11 @@ def _dedup_clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").cast("bigint").alias("doc")
         )
         labels = connected_components(docs, pairs, "doc", ("doc_a", "doc_b"))
-        df = labels.select(
+        return labels.select(
             F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
         ).localCheckpoint()
-        _CLUSTER_MEMO[key] = df
-    return df
+
+    return _CLUSTER_MEMO.get_or_build(spark, sf_dir, ("documents",), build)
 
 
 def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1154,8 +1199,8 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeling (/root/reference/Demeton/WaterBodies/Coloring.fs:17-182),
     applied to a similarity graph instead of a pixel grid.  The
     assignment is localCheckpoint-materialized once per (session,
-    sf_dir) — the local stand-in for the clusters table a production
-    dedup pipeline writes once and reads everywhere.
+    sf_dir, documents snapshot) — the local stand-in for the clusters
+    table a production dedup pipeline writes once and reads everywhere.
     """
     return _dedup_clusters_materialized(spark, sf_dir)
 
@@ -1832,6 +1877,14 @@ from wm group by doc_id
 
 # --- similarity search over embeddings -----------------------------------------
 
+def _dot(a, b):
+    """JVM-side dot product via zip_with + sequential fold (deterministic
+    accumulation order — matches DuckDB's list_dot_product bit-for-bit)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 for probe vectors (vec_id < 5).
 
@@ -1845,13 +1898,8 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("bigint").alias("vec_id"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     with_norm = emb.select(
-        "vec_id", "v", F.sqrt(dot(F.col("v"), F.col("v"))).alias("norm")
+        "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("norm")
     )
     probes = with_norm.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -1865,7 +1913,7 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm")), 6
+                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm")), 6
             ).alias("cosine"),
         )
     )
@@ -1905,14 +1953,6 @@ ranked as (
 select query_id, neighbor_id, cosine, cast(rank as int) as rank
 from ranked where rank <= 3
 """
-
-
-def _dot(a, b):
-    """JVM-side dot product via zip_with + sequential fold (deterministic
-    accumulation order — matches DuckDB's list_dot_product bit-for-bit)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def _normed_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2059,27 +2099,6 @@ select vec_a, vec_b, cosine from verified where cosine >= 0.4
 _EMB_CLUSTER_MEMO = _Memo()
 
 
-def _emb_snapshot(sf_dir: str) -> tuple:
-    """Data-change token for the cluster memo: (mtime_ns, size) of the
-    embeddings parquet (recursed one level for directory layouts).
-    ADVICE r3: keying only on (applicationId, sf_dir) returned stale
-    clusters if the parquet was rewritten within a session."""
-    import os as _os
-
-    path = _os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = _os.stat(path)
-        if _os.path.isdir(path):
-            parts = []
-            for name in sorted(_os.listdir(path)):
-                ps = _os.stat(_os.path.join(path, name))
-                parts.append((name, ps.st_mtime_ns, ps.st_size))
-            return tuple(parts)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return ("missing",)
-
-
 def q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive embedding-dedup clusters: connected components over
     the LSH-verified cosine pairs — the embedding twin of
@@ -2087,12 +2106,11 @@ def q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster even when cos(A,C) falls below threshold).  Same linear
     cluster-table output, the alternating-star CC bound applies, and
     the assignment is localCheckpoint-materialized once per (session,
-    sf_dir) — the local stand-in for the written cluster table every
-    consumer reads at production scale."""
-    key = (spark.sparkContext.applicationId, sf_dir, _emb_snapshot(sf_dir))
-    df = _EMB_CLUSTER_MEMO.get(key)
-    if df is None:
-        from demeton_spark.graph import connected_components
+    sf_dir, embeddings snapshot) — the local stand-in for the written
+    cluster table every consumer reads at production scale."""
+
+    def build() -> DataFrame:
+        from .graph import connected_components
 
         normed = _normed_emb(spark, sf_dir).localCheckpoint()
         pairs = _emb_verified(normed).where(F.col("cosine") >= 0.4)
@@ -2100,12 +2118,12 @@ def q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cc = connected_components(
             nodes, pairs.select("vec_a", "vec_b"), "node", ("vec_a", "vec_b")
         )
-        df = cc.select(
+        return cc.select(
             F.col("node").cast("bigint").alias("vec_id"),
             F.col("label").cast("bigint").alias("cluster_id"),
         ).localCheckpoint()
-        _EMB_CLUSTER_MEMO[key] = df
-    return df
+
+    return _EMB_CLUSTER_MEMO.get_or_build(spark, sf_dir, ("embeddings",), build)
 
 
 SQL_EMB_DEDUP_CLUSTERS = f"""
@@ -2165,27 +2183,13 @@ def q_emb_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("cosine") >= 0.3)
     )
-    cand = (
-        band_pairs(normed, "vec_id", _emb_bands())
-        .toDF("vec_a", "vec_b")
-        .withColumn("hit", F.lit(1))
-    )
+    cand = band_pairs(normed, "vec_id", _emb_bands()).toDF("vec_a", "vec_b")
     bucket = F.when(F.col("cosine") >= 0.4, F.lit("c>=0.4")).otherwise(
         F.lit("0.3<=c<0.4")
     )
-    return (
-        exact.join(cand, on=["vec_a", "vec_b"], how="left")
-        .select(
-            bucket.alias("cosine_bucket"),
-            F.coalesce(F.col("hit"), F.lit(0)).alias("hit"),
-        )
-        .groupBy("cosine_bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_exact"),
-            F.sum("hit").cast("bigint").alias("n_candidates"),
-            F.round(F.sum("hit") / F.count("*"), 6).alias("recall"),
-        )
-    )
+    return _recall(
+        exact, cand, ["vec_a", "vec_b"], bucket.alias("cosine_bucket")
+    ).toDF("cosine_bucket", "n_exact", "n_candidates", "recall")
 
 
 SQL_EMB_NEAR_DUP_RECALL = f"""
@@ -2484,18 +2488,9 @@ def q_doc_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("hamming") <= 2)
     )
-    cand = (
-        band_pairs(sig, "doc_id", _simhash_bands())
-        .toDF("doc_a", "doc_b")
-        .withColumn("hit", F.lit(1))
-    )
-    hits = exact.join(cand, ["doc_a", "doc_b"], "left")
-    return hits.groupBy("hamming").agg(
-        F.count("*").cast("bigint").alias("n_exact"),
-        F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_candidates"),
-        F.round(
-            F.sum(F.coalesce("hit", F.lit(0))).cast("double") / F.count("*"), 6
-        ).alias("recall"),
+    cand = band_pairs(sig, "doc_id", _simhash_bands()).toDF("doc_a", "doc_b")
+    return _recall(exact, cand, ["doc_a", "doc_b"], "hamming").toDF(
+        "hamming", "n_exact", "n_candidates", "recall"
     )
 
 
@@ -3113,17 +3108,18 @@ group by user_id, session_id
 
 
 def q_user_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user (count, sum, max) over event values — the batch twin of
-    the custom stateful streaming operator (`streaming.
-    running_user_stats` converges to exactly this aggregate; the
-    equivalence is pinned in tests/test_streaming.py)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("user_id").cast("bigint").alias("user_id")
-    ).agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        F.round(F.sum("value"), 6).alias("sum_value"),
-        F.round(F.max("value"), 6).alias("max_value"),
+    """Per-user (count, sum, max) over event values — the SAME operator
+    the streaming path runs (`streaming.running_user_stats` works on
+    batch and stream alike; the streaming equivalence is pinned in
+    tests/test_streaming.py)."""
+    from .streaming import running_user_stats
+
+    out = running_user_stats(_t(spark, sf_dir, "events"))
+    return out.select(
+        F.col("user_id").cast("bigint").alias("user_id"),
+        F.col("n_events").cast("bigint").alias("n_events"),
+        F.round("sum_value", 6).alias("sum_value"),
+        F.round("max_value", 6).alias("max_value"),
     )
 
 
@@ -3141,21 +3137,8 @@ def q_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k of the IVF-bucketed ANN against the exact brute-force
     top-k, per probe — the standard ANN quality metric, computed as a
     join of the two query results (both already oracle-checked)."""
-    exact = q_knn_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = q_knn_ivf_bucketed(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, on=["query_id", "neighbor_id"], how="left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").cast("int").alias("k"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("int").alias("hits"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                / F.count("*"), 6
-            ).alias("recall"),
-        )
+    return _knn_recall(
+        q_knn_bruteforce(spark, sf_dir), q_knn_ivf_bucketed(spark, sf_dir)
     )
 
 
@@ -3225,14 +3208,17 @@ _KM_MEMO = _Memo()
 
 
 def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
-    """Run KMEANS_ITERS Lloyd iterations; return (centroids, emb).
+    """The fitted (centroids, emb) of :func:`_km_lloyd`, memoized like
+    the dedup cluster table: the fitted model is written once and read
+    by every consumer at production scale, so centroids/knn/recall
+    queries share one fit."""
+    return _KM_MEMO.get_or_build(
+        spark, sf_dir, ("embeddings",), lambda: _km_lloyd(spark, sf_dir)
+    )
 
-    Memoized per (session, sf_dir) like the dedup cluster table: the
-    fitted model is written once and read by every consumer at
-    production scale, so centroids/knn/recall queries share one fit."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _KM_MEMO:
-        return _KM_MEMO[key]
+
+def _km_lloyd(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
+    """Run KMEANS_ITERS Lloyd iterations; return (centroids, emb)."""
     emb = _km_emb(spark, sf_dir).localCheckpoint()
     init = {
         r["vec_id"]: r["v"]
@@ -3255,7 +3241,6 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
         for r in parts:
             new[r["cluster"]][r["dim"]] = r["c"]
         centroids = new
-    _KM_MEMO[key] = (centroids, emb)
     return centroids, emb
 
 
@@ -3339,30 +3324,8 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall of the trained-IVF search vs exact brute force."""
-    exact = q_knn_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = q_knn_ivf_kmeans(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("hit_id")
-    )
-    return (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (exact.neighbor_id == approx.hit_id),
-            "left",
-        )
-        .drop(approx.query_id)
-        .groupBy("query_id")
-        .agg(
-            F.count("*").cast("int").alias("k"),
-            F.sum(
-                F.when(F.col("hit_id").isNotNull(), 1).otherwise(0)
-            ).cast("int").alias("hits"),
-            F.round(
-                F.sum(F.when(F.col("hit_id").isNotNull(), 1).otherwise(0))
-                / F.count("*"),
-                6,
-            ).alias("recall"),
-        )
+    return _knn_recall(
+        q_knn_bruteforce(spark, sf_dir), q_knn_ivf_kmeans(spark, sf_dir)
     )
 
 
@@ -4327,14 +4290,13 @@ def q_geocell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the north rule, Catalyst-only (one hash-agg shuffle; no UDF).
 
     The aggregated cell table is localCheckpoint-materialized per
-    (session, sf_dir): downstream consumers (rollup) read the written
-    cell table at production scale rather than re-encoding."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _GEOCELL_MEMO.get(key)
-    if df is None:
-        pts = _pts(spark, sf_dir)
-        cells = _with_geocell(pts, GEOCELL_LEVEL, keep=["value"])
-        df = (
+    (session, sf_dir, events snapshot): downstream consumers (rollup)
+    read the written cell table at production scale rather than
+    re-encoding."""
+
+    def build() -> DataFrame:
+        cells = _with_geocell(_pts(spark, sf_dir), GEOCELL_LEVEL, keep=["value"])
+        return (
             cells.groupBy("face", "cell_id")
             .agg(
                 F.count("*").alias("n_events"),
@@ -4342,8 +4304,8 @@ def q_geocell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        _GEOCELL_MEMO[key] = df
-    return df
+
+    return _GEOCELL_MEMO.get_or_build(spark, sf_dir, ("events",), build)
 
 
 def q_geocell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4486,6 +4448,27 @@ def _with_xyz(df: DataFrame, keep: list) -> DataFrame:
     )
 
 
+def _geo_top_k(cand: DataFrame) -> DataFrame:
+    """Top GEO_KNN_K points per probe among the (probe, point) rows of
+    ``cand``, ranked by the squared chord between the probe (qx, qy, qz)
+    and the point (x, y, z) — monotone in great-circle distance — then
+    by id: ``query_id, neighbor_id, chord_sq, rank``."""
+    from pyspark.sql import Window
+
+    dx, dy, dz = (F.col(f"q{c}") - F.col(c) for c in "xyz")
+    w = Window.partitionBy("query_id").orderBy("chord_sq", "neighbor_id")
+    return (
+        cand.where(F.col("event_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("event_id").alias("neighbor_id"),
+            (dx * dx + dy * dy + dz * dz).alias("chord_sq"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= GEO_KNN_K)
+    )
+
+
 def _geo_pts_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts(spark, sf_dir).select("event_id", "lon", "lat")
     keyed = _with_geocell(
@@ -4496,8 +4479,6 @@ def _geo_pts_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_geo_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 nearest event points per probe via the cell-bucket join."""
-    from pyspark.sql import Window
-
     base = _geo_pts_keyed(spark, sf_dir)
     ring = F.array(
         *[
@@ -4528,37 +4509,17 @@ def q_geo_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qz",
         )
     )
-    cand = probes.join(base, ["face", "i", "j"]).where(
-        F.col("event_id") != F.col("query_id")
-    )
-    chord_sq = (
-        (F.col("qx") - F.col("x")) * (F.col("qx") - F.col("x"))
-        + (F.col("qy") - F.col("y")) * (F.col("qy") - F.col("y"))
-        + (F.col("qz") - F.col("z")) * (F.col("qz") - F.col("z"))
-    )
-    w = Window.partitionBy("query_id").orderBy("chord_sq", "neighbor_id")
-    return (
-        cand.select(
-            "query_id",
-            F.col("event_id").alias("neighbor_id"),
-            chord_sq.alias("chord_sq"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= GEO_KNN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("chord_sq"), 9).alias("chord_sq"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _geo_top_k(probes.join(base, ["face", "i", "j"])).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("chord_sq"), 9).alias("chord_sq"),
+        F.col("rank").cast("int").alias("rank"),
     )
 
 
 def q_geo_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall of the cell-bucket kNN vs exact brute force
     (bounded 5×N cross join — the gate, not the data path)."""
-    from pyspark.sql import Window
-
     base = _with_xyz(
         _pts(spark, sf_dir).select("event_id", "lon", "lat"),
         keep=["event_id"],
@@ -4569,48 +4530,8 @@ def q_geo_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y").alias("qy"),
         F.col("z").alias("qz"),
     )
-    chord_sq = (
-        (F.col("qx") - F.col("x")) * (F.col("qx") - F.col("x"))
-        + (F.col("qy") - F.col("y")) * (F.col("qy") - F.col("y"))
-        + (F.col("qz") - F.col("z")) * (F.col("qz") - F.col("z"))
-    )
-    w = Window.partitionBy("query_id").orderBy("chord_sq", "neighbor_id")
-    exact = (
-        probes.crossJoin(base)
-        .where(F.col("event_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("event_id").alias("neighbor_id"),
-            chord_sq.alias("chord_sq"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= GEO_KNN_K)
-        .select("query_id", "neighbor_id")
-    )
-    approx = q_geo_knn_cells(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("hit_id")
-    )
-    return (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (exact.neighbor_id == approx.hit_id),
-            "left",
-        )
-        .drop(approx.query_id)
-        .groupBy("query_id")
-        .agg(
-            F.count("*").cast("int").alias("k"),
-            F.sum(F.when(F.col("hit_id").isNotNull(), 1).otherwise(0))
-            .cast("int")
-            .alias("hits"),
-            F.round(
-                F.sum(F.when(F.col("hit_id").isNotNull(), 1).otherwise(0))
-                / F.count("*"),
-                6,
-            ).alias("recall"),
-        )
-    )
+    exact = _geo_top_k(probes.crossJoin(base))
+    return _knn_recall(exact, q_geo_knn_cells(spark, sf_dir))
 
 
 _GEO_PTS_KEYED_SQL = f"""

@@ -56,7 +56,6 @@ def driver_memory(ram_bytes: int | None = None) -> str:
 def build_session(
     app_name: str = "demeton-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     # Python workers inherit this process's env (local mode)
@@ -70,12 +69,11 @@ def build_session(
         parallelism = int(master[6:-1])
     else:
         parallelism = cpus
-    shuffle_partitions = shuffle_partitions or max(parallelism * 2, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(parallelism * 2, 8)))
         .config("spark.default.parallelism", str(parallelism))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")

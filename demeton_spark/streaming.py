@@ -5,9 +5,12 @@ resumable import) map to the checkpoint manifest in ``engine.py``.  For
 true stream processing the engine exposes watermarked tumbling-window
 aggregation and gap-based session windows over an events stream, plus a
 file-source factory so the same parquet layout works batch or
-streaming.  All state handling is Spark-native (``window`` /
-``session_window`` + watermark): no custom Python state in the hot
-path.
+streaming.  The window, session and per-user aggregates keep their
+state Spark-native (``window`` / ``session_window`` + watermark, or a
+plain update-mode aggregate); ``streaming_assemble_tiles``,
+``streaming_hillshade`` and ``streaming_exact_dedup`` keep Python state
+through ``applyInPandasWithState`` (buffered tile parts, emitted-tile
+tombstones, seen hashes).
 
 At scale: the file source incrementally lists new files per
 micro-batch; watermarks bound the state store; ``availableNow`` gives
@@ -210,47 +213,15 @@ def session_counts(
     )
 
 
-USER_STATS_SCHEMA = (
-    "user_id long, n_events long, sum_value double, max_value double"
-)
-_USER_STATE_SCHEMA = "n long, s double, m double"
-
-
 def running_user_stats(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running (count, sum, max) over ``value``, emitting the updated
-    aggregate every micro-batch.
-
-    This is the escape hatch for stateful logic the built-in
-    window/session operators can't express; state is one tiny tuple per
-    user, managed by Spark's state store (checkpointed, exactly-once).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n, s, m = state.get if state.exists else (0, 0.0, float("-inf"))
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-            if len(pdf):
-                m = max(m, float(pdf["value"].max()))
-        state.update((n, s, m))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value": [s],
-                "max_value": [m],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=USER_STATS_SCHEMA,
-        stateStructType=_USER_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Per-user running (count, sum, max) over ``value``: one built-in
+    aggregate, which a stream in update mode re-emits for every user a
+    micro-batch touches (state is one small row per user in Spark's
+    checkpointed state store)."""
+    return events.groupBy("user_id").agg(
+        F.count("*").alias("n_events"),
+        F.sum("value").alias("sum_value"),
+        F.max("value").alias("max_value"),
     )
 
 
@@ -490,7 +461,6 @@ def streaming_exact_dedup(images: DataFrame) -> DataFrame:
     wins (deterministic), so when arrival order respects image_id the
     emitted set equals the batch keep list bit-for-bit.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def dedup(key, pdfs, state: GroupState):

@@ -8,7 +8,6 @@ def spark():
     spark = build_session(
         app_name="demeton-tests",
         master="local[4]",
-        shuffle_partitions=8,
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield spark
