@@ -41,6 +41,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from demeton_spark.queries import QUERIES  # noqa: E402
 from demeton_spark.synth import WorldSpec  # noqa: E402
 
 #: synthetic world per SF: ~12.96 unique Mpx per 0.001 SF (one 3600² tile
@@ -54,62 +55,8 @@ WORLD_BY_SF = {
                    tile_size=1800, block_size=300),
 }
 
-HEADLINE_QUERIES = [
-    "tile_assign_events",
-    "geocell_assign",
-    "geocell_rollup",
-    "geo_knn_cells",
-    "geo_points_in_polygons",
-    "geo_zonal_stats",
-    "geo_point_elevation",
-    "geo_polygon_overlaps",
-    "tile_metadata_join",
-    "bbox_cover",
-    "polygon_clip",
-    "pyramid_parents",
-    "tile_mbr",
-    "value_histogram",
-    "pricing_summary",
-    "top_revenue_orders",
-    "region_rollup",
-    "events_top_event",
-    "events_sessionize",
-    "events_windowed_counts",
-    "events_session_windows",
-    "user_value_stats",
-    "doc_exact_dedup",
-    "doc_minhash",
-    "doc_near_dup_pairs",
-    "doc_near_dup_recall",
-    "doc_dedup_clusters",
-    "doc_dedup_keep_best",
-    "doc_token_stats",
-    "doc_lang_quality",
-    "doc_repetition",
-    "doc_simhash",
-    "doc_simhash_near_dup",
-    "doc_simhash_recall",
-    "image_phash_dedup",
-    "image_phash_near_dup",
-    "pair_dedup_clusters",
-    "image_dhash",
-    "audio_features",
-    "doc_fingerprint",
-    "doc_ngram_near_dup",
-    "doc_decontaminate",
-    "doc_filter_pipeline",
-    "doc_stratified_sample",
-    "events_value_quantiles",
-    "knn_bruteforce",
-    "knn_ivf_bucketed",
-    "knn_ivf_recall",
-    "kmeans_centroids",
-    "knn_ivf_kmeans",
-    "emb_near_dup_pairs",
-    "emb_dedup_clusters",
-    "emb_near_dup_recall",
-    "embedding_label_stats",
-]
+#: every registered contract query (``queries.QUERIES``), in its order
+HEADLINE_QUERIES = list(QUERIES)
 
 
 def probe_steal(seconds: float = 2.0) -> float:
@@ -544,8 +491,6 @@ def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
             queries["streaming_hillshade"] = run_streaming_hillshade_bench(
                 spark
             )
-            from demeton_spark.queries import QUERIES
-
             for name in HEADLINE_QUERIES:
                 fn = QUERIES[name]
                 trials_q = []

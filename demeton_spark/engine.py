@@ -17,7 +17,12 @@ with ONE full-data shuffle (see SCALE.md):
                               (still-compressed) blocks and appends the
                               k-px halo strips cut from border blocks
                               (k = 1 + prefilter steps), all keyed by
-                              DESTINATION tile.
+                              DESTINATION tile; an optional ``keep`` box
+                              prunes senders to it ± 1 before the pass
+                              and destinations to it after.
+                              ``needed_parts`` is the same strip rule
+                              seen from the receiver: what a tile is
+                              complete with.
   3. ``compose_padded``     — the only stitch (in ``applyInArrow``
                               groups): winner-only decode (J2, §4.3)
                               plus strip placement into the (ts+2k)²
@@ -28,18 +33,23 @@ with ONE full-data shuffle (see SCALE.md):
                               shading-script evaluation,
                               point-in-polygon clip, Y-flip, RGBA PNG
                               encode (Hillshading.fs:81-157 vectorized).
-  5. ``run_hillshade``      — end-to-end: one group per tile runs
-                              3 + 4 (``shade_unified``), with resumable
-                              checkpointing (anti-join against a
-                              per-tile manifest — Srtm/Fetch.fs
-                              negative-cache semantics), bbox pruning
-                              for clip polygons, tiles dealt over one
-                              reduce task per core (``tile_groups``),
-                              and pixel-count metrics.
+                              ``tile_shader`` sets 3 + 4 up once per job
+                              as one ``shade(tile_x, tile_y, parts)``.
+  5. ``run_hillshade``      — end-to-end: one group per tile runs the
+                              shade function (``shade_unified``), with
+                              resumable checkpointing (anti-join against
+                              a per-tile manifest — Srtm/Fetch.fs
+                              negative-cache semantics), the clip
+                              polygon's bbox cover as ``keep``, tiles
+                              dealt over one reduce task per core
+                              (``tile_groups``), and pixel-count metrics.
 
-XTH tile-shade (``run_tile_shade``), plain mosaics (``assemble_tiles``,
-k = 0) and the streaming twin (``streaming.streaming_hillshade``) reuse
-the same emitter, compose and render.  Operators over assembled tiles
+XTH tile-shade (``run_tile_shade``) and plain mosaics
+(``assemble_tiles``, k = 0) reuse the same emitter, compose and render.
+The streaming twins (``streaming.streaming_assemble_tiles`` and
+``streaming.streaming_hillshade``) buffer the same parts across
+micro-batches until ``needed_parts`` are in, then finish with
+``compose_padded`` or the shade function.  Operators over assembled tiles
 (isolines, posterization, water bodies, XTH packing, zonal stats) run
 their numpy kernels through the one Arrow tile map, ``map_tiles``, the
 only reader of the ``heights`` bytes ``assembled_row`` writes.
@@ -200,6 +210,27 @@ def _cut_strips(blocks, tile_size: int, halo: int) -> dict[str, list]:
     return out
 
 
+def needed_parts(
+    tile_x: int, tile_y: int, nx: int, ny: int, world: tuple | None = None
+) -> set[tuple[str, int, int]]:
+    """The ``(part, bx, by)`` positions tile ``(tile_x, tile_y)`` is
+    complete with: its nx×ny "B" blocks, plus, given the inclusive world
+    box ``(x0, y0, x1, y1)``, every strip that an in-world neighbour's
+    edge blocks donate to it (:func:`_cut_strips`' rule, seen from the
+    receiver)."""
+    need = {("B", bx, by) for by in range(ny) for bx in range(nx)}
+    if world is not None:
+        x0, y0, x1, y1 = world
+        need.update(
+            (part, bx, by)
+            for part, (dx, dy) in _HALO_PARTS.items()
+            if x0 <= tile_x - dx <= x1 and y0 <= tile_y - dy <= y1
+            for by in range(ny) if _on_edge(dy, by, ny)
+            for bx in range(nx) if _on_edge(dx, bx, nx)
+        )
+    return need
+
+
 #: the block columns :func:`_cut_strips` reads, in its tuple order
 _CUT_COLUMNS = ("tile_x", "tile_y", "image_id", "fmt", "data", "w", "h",
                 "bx", "by")
@@ -245,18 +276,29 @@ def _block_parts(assigned: DataFrame) -> DataFrame:
 
 
 def hillshade_parts(
-    assigned: DataFrame, tile_size: int, halo: int = 1
+    assigned: DataFrame, tile_size: int, halo: int = 1,
+    keep: tuple | None = None,
 ) -> DataFrame:
     """Blocks + their neighbors' strip contributions, keyed by the
     destination tile — the single-shuffle input of :func:`shade_unified`
     and of every other tile path: one scan of ``assigned`` and one
-    Arrow pass (:func:`emit_parts`) per batch."""
+    Arrow pass (:func:`emit_parts`) per batch.
+
+    ``keep`` — an inclusive destination box ``(x0, y0, x1, y1)``: only
+    senders in the box or its one-tile ring reach the emitter, and only
+    parts bound for the box leave it.  The ring's strips into kept
+    boundary tiles survive, so a kept tile shades as if nothing had
+    been pruned."""
 
     def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             yield from emit_parts(batch, tile_size, halo)
 
-    return _block_parts(assigned).mapInArrow(emit, schema=PART_SCHEMA)
+    if keep is not None:  # senders: the box and its one-tile ring
+        x0, y0, x1, y1 = keep
+        assigned = assigned.where(in_tiles(x0 - 1, y0 - 1, x1 + 1, y1 + 1))
+    parts = _block_parts(assigned).mapInArrow(emit, schema=PART_SCHEMA)
+    return parts if keep is None else parts.where(in_tiles(*keep))
 
 
 # ---------------------------------------------------------------------------
@@ -559,36 +601,47 @@ def render_tile(
     }, schema=_SHADED_ARROW)
 
 
-def shade_unified(
-    parts: DataFrame, tile_size: int, script: str,
-    clip_poly: np.ndarray | None = None,
-    prefilter: str | None = None,
-    png_level: int | None = None,
-    shade_partitions: int | None = None,
-) -> DataFrame:
-    """One group per tile, dealt over ``shade_partitions`` tasks
-    (:func:`tile_groups`): :func:`compose_padded` then
-    :func:`render_tile`.  ``parts`` comes from :func:`hillshade_parts`;
-    groups with no center blocks (strips sent past the world edge)
-    produce nothing.  ``prefilter`` is a step script over
-    kernels.PREFILTERS (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``);
-    each step consumes one halo ring, so the parts' halo must be 1 +
-    the number of steps."""
+def tile_shader(
+    tile_size: int, script: str, clip_poly: np.ndarray | None = None,
+    prefilter: str | None = None, png_level: int | None = None,
+):
+    """The one per-tile shade function, set up once on the driver:
+    ``(halo, shade)``, where ``shade(tile_x, tile_y, parts)`` is
+    :func:`compose_padded` then :func:`render_tile` and returns a
+    SHADED_SCHEMA table (empty when ``parts`` hold no "B" block, i.e.
+    strips sent past the world edge).  ``prefilter`` is a step script
+    over kernels.PREFILTERS (e.g. ``"blur"`` or
+    ``"sharpen(amount=1.5)"``); each step consumes one halo ring, so
+    ``halo`` is 1 + the number of steps, and the parts must be cut with
+    it (:func:`hillshade_parts`)."""
     steps, registry, lvl, pre_steps = render_setup(script, png_level, prefilter)
     halo = 1 + len(pre_steps)
 
-    def assemble_pad_shade(key, table):
-        padded, n_blocks = compose_padded(table, tile_size, halo)
+    def shade(tile_x: int, tile_y: int, parts) -> pa.Table:
+        padded, n_blocks = compose_padded(parts, tile_size, halo)
         if padded is None:
             return _SHADED_ARROW.empty_table()
         return render_tile(
-            padded, key[1].as_py(), key[2].as_py(), tile_size, steps,
-            registry, lvl, pre_steps=pre_steps, clip_poly=clip_poly,
-            n_blocks=n_blocks,
+            padded, tile_x, tile_y, tile_size, steps, registry, lvl,
+            pre_steps=pre_steps, clip_poly=clip_poly, n_blocks=n_blocks,
         )
 
+    return halo, shade
+
+
+def shade_unified(
+    parts: DataFrame, shade, shade_partitions: int | None = None
+) -> DataFrame:
+    """One group per tile, dealt over ``shade_partitions`` tasks
+    (:func:`tile_groups`), each shaded by ``shade`` (:func:`tile_shader`).
+    ``parts`` comes from :func:`hillshade_parts`, cut with the shader's
+    halo."""
+
+    def shade_group(key, table):
+        return shade(key[1].as_py(), key[2].as_py(), table)
+
     return tile_groups(parts, shade_partitions).applyInArrow(
-        assemble_pad_shade, schema=SHADED_SCHEMA
+        shade_group, schema=SHADED_SCHEMA
     )
 
 
@@ -712,18 +765,8 @@ def run_hillshade(
     dealt over (:func:`tile_groups`; default one per core).
     """
     clip_poly, cover = clip_cover(clip_polygon)
-    halo = 1 + (len(pipeline.parse_script(prefilter)) if prefilter else 0)
-    assigned = parse_caption(images)
-    if cover is not None:  # only the cover and its ring send parts to it
-        x0, y0, x1, y1 = cover
-        assigned = assigned.where(in_tiles(x0 - 1, y0 - 1, x1 + 1, y1 + 1))
-    parts = hillshade_parts(assigned, tile_size, halo)
-    if cover is not None:
-        # prune DESTINATION tiles to the polygon's bbox cover.  Strips
-        # donated by the ring just outside into kept boundary tiles
-        # survive, so the clipped result stays pixel-identical to
-        # clipping the unpruned output.
-        parts = parts.where(in_tiles(*cover))
+    halo, shade = tile_shader(tile_size, script, clip_poly, prefilter, png_level)
+    parts = hillshade_parts(parse_caption(images), tile_size, halo, keep=cover)
     if output_dir is not None and resume:
         done = _read_manifest(spark, output_dir)
         if done is not None:
@@ -734,11 +777,7 @@ def run_hillshade(
             parts = parts.join(
                 F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
             )
-    shaded = shade_unified(
-        parts, tile_size, script, clip_poly=clip_poly,
-        prefilter=prefilter, png_level=png_level,
-        shade_partitions=shade_partitions,
-    )
+    shaded = shade_unified(parts, shade, shade_partitions)
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)
         return spark.read.schema(SHADED_SCHEMA).parquet(output_dir)

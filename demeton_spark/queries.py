@@ -33,7 +33,7 @@ Operator coverage map (SURVEY.md §2):
 from __future__ import annotations
 
 import gc
-import os
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,29 +46,46 @@ SRTM_TS = 3600  # level-0 cells per degree
 BBOX = (13.49437, 46.159668, 14.236633, 46.543914)
 
 
+def sf_of(sf_dir: str) -> float:
+    """The scale factor an ``sf_dir`` names (``…/sf0.01`` → 0.01), or
+    0.01 when it names none."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return float(m.group(1)) if m else 0.01
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _snapshot(sf_dir: str, tables: tuple) -> tuple:
-    """Data-change token of the named tables: per table, the (mtime_ns,
-    size) of its parquet file, or the (name, mtime_ns, size) of each
-    entry of a parquet directory; ``"missing"`` where it cannot be
-    read."""
+def _snapshot(spark: SparkSession, sf_dir: str, tables: tuple) -> tuple:
+    """Data-change token of the named tables, read through Spark's
+    Hadoop ``FileSystem`` so that every ``sf_dir`` Spark reads (a plain
+    path, ``file://``, ``hdfs://``, ``s3a://``…) gets one: per table,
+    the (modification time, length) of its parquet file, or the (name,
+    …) of each entry of a parquet directory, recursively; ``"missing"``
+    where it cannot be read."""
+    from py4j.protocol import Py4JJavaError
 
-    def stat(path: str) -> tuple:
+    sc = spark.sparkContext
+    conf = sc._jsc.hadoopConfiguration()
+
+    def stat(fs, st) -> tuple:
+        if st.isDirectory():
+            return tuple(sorted(
+                (e.getPath().getName(), *stat(fs, e))
+                for e in fs.listStatus(st.getPath())
+            ))
+        return (st.getModificationTime(), st.getLen())
+
+    def token(table: str) -> tuple:
+        path = sc._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{table}.parquet")
         try:
-            if os.path.isdir(path):
-                return tuple(
-                    (name, *stat(os.path.join(path, name)))
-                    for name in sorted(os.listdir(path))
-                )
-            st = os.stat(path)
-            return (st.st_mtime_ns, st.st_size)
-        except OSError:
+            fs = path.getFileSystem(conf)
+            return stat(fs, fs.getFileStatus(path))
+        except Py4JJavaError:
             return ("missing",)
 
-    return tuple(stat(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
+    return tuple(token(t) for t in tables)
 
 
 class _Memo(dict):
@@ -92,7 +109,7 @@ class _Memo(dict):
         """``build()``'s result for this session and ``sf_dir``, built
         again once one of the ``tables`` it reads is rewritten."""
         key = (spark.sparkContext.applicationId, sf_dir,
-               _snapshot(sf_dir, tables))
+               _snapshot(spark, sf_dir, tables))
         if key not in self:
             self[key] = build()
         return self[key]
@@ -2717,15 +2734,8 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the generator (sha256-of-pixels phash, skew layout) stays
     pinned by the codec/synth round-trip tests.
     """
-    import re
-
-    from demeton_spark.synth import ensure_contract_images
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    imgs = spark.read.parquet(ensure_contract_images(spark, sf))
     return (
-        imgs.groupBy("phash")
+        _contract_images(spark, sf_dir).groupBy("phash")
         .agg(
             F.min("image_id").alias("keep_id"),
             F.count("*").cast("int").alias("copies"),
@@ -2751,13 +2761,9 @@ SQL_IMAGE_PHASH_DEDUP = sql_image_phash_dedup()
 
 
 def _contract_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re
-
     from demeton_spark.synth import ensure_contract_images
 
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return spark.read.parquet(ensure_contract_images(spark, sf))
+    return spark.read.parquet(ensure_contract_images(spark, sf_of(sf_dir)))
 
 
 def pair_dedup_clusters(imgs: DataFrame) -> DataFrame:
@@ -2972,14 +2978,10 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^10 clips this is a linear embarrassingly-parallel scan — no
     shuffle at all.
     """
-    import re
-
     from demeton_spark import multimodal
     from demeton_spark.synth import ensure_contract_audio
 
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    clips = spark.read.parquet(ensure_contract_audio(spark, sf))
+    clips = spark.read.parquet(ensure_contract_audio(spark, sf_of(sf_dir)))
     feats = multimodal.audio_features(clips.select("audio_id", "bytes"))
     return feats.select(
         "audio_id",

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec, kernels, pipeline
-from .engine import tile_heights
+from .engine import render_setup, tile_heights
 from .geometry import MapScale, Mercator
 from .tiles import DEM_HEIGHT_NONE, bounds_to_tiles, cells_per_degree
 
@@ -138,9 +138,7 @@ def render_shaded_raster(
     ``tile_size`` cells per degree.  Returns one row per raster tile.
     """
     proj = projection or Mercator(map_scale)
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # driver snapshot for executors
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
+    steps, registry, lvl, _ = render_setup(script, png_level)
     mbr = raster_mbr(proj, coverage_points_deg)
     raster_tiles = split_into_tiles(mbr, raster_tile_px)
 

@@ -7,10 +7,15 @@ aggregation and gap-based session windows over an events stream, plus a
 file-source factory so the same parquet layout works batch or
 streaming.  The window, session and per-user aggregates keep their
 state Spark-native (``window`` / ``session_window`` + watermark, or a
-plain update-mode aggregate); ``streaming_assemble_tiles``,
-``streaming_hillshade`` and ``streaming_exact_dedup`` keep Python state
-through ``applyInPandasWithState`` (buffered tile parts, emitted-tile
-tombstones, seen hashes).
+plain update-mode aggregate).  Two operators keep Python state through
+``applyInPandasWithState``: ``buffered_tiles`` (a tile's parts until
+``engine.needed_parts`` are in, then a tombstone) and
+``streaming_exact_dedup`` (seen hashes).  The tile operator carries no
+tile logic of its own: ``streaming_assemble_tiles`` feeds it the
+engine's blocks and finishes with ``engine.compose_padded``, and
+``streaming_hillshade`` feeds it ``engine.hillshade_parts`` (pruned to
+the world ∩ clip cover) and finishes with the engine's shade function,
+``engine.tile_shader`` — the batch ``run_hillshade``'s own.
 
 At scale: the file source incrementally lists new files per
 micro-batch; watermarks bound the state store; ``availableNow`` gives
@@ -243,24 +248,6 @@ _BUFFER_COLUMNS = ("part", "bx", "by", "image_id", "w", "h", "fmt", "data")
 _TOMBSTONE = (True, *([] for _ in _BUFFER_COLUMNS))
 
 
-def _buffered_parts(pdfs, state) -> pd.DataFrame | None:
-    """One tile's parts so far: those buffered in its state plus this
-    micro-batch's.  None once the tile was emitted (late duplicates
-    drop — the reference's negative-cache/idempotent import, §2.11)."""
-    frames = [pdf[list(_BUFFER_COLUMNS)] for pdf in pdfs]
-    if state.exists:
-        done, *cols = state.get
-        if done:
-            return None
-        frames.insert(0, pd.DataFrame(dict(zip(_BUFFER_COLUMNS, cols))))
-    frames = [f for f in frames if len(f)]
-    return pd.concat(frames, ignore_index=True) if frames else None
-
-
-def _keep_buffering(state, parts: pd.DataFrame) -> None:
-    state.update((False, *(parts[c].tolist() for c in _BUFFER_COLUMNS)))
-
-
 def read_images_stream(
     spark: SparkSession, images_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -273,23 +260,66 @@ def read_images_stream(
     return reader.parquet(images_dir)
 
 
+def buffered_tiles(
+    parts: DataFrame, tile_size: int, finish, schema, world=None
+) -> DataFrame:
+    """The one stateful tile operator: ``parts`` (engine.PART_SCHEMA,
+    keyed by destination tile) buffer in the state store across
+    micro-batches until the tile holds every part
+    :func:`engine.needed_parts` names for it (``world`` is the inclusive
+    world box whose tiles send it halo strips; None for plain mosaics),
+    then ``finish(tile_x, tile_y, parts)`` makes its row (an Arrow table
+    in ``schema``) exactly once.  The state then clears to a tombstone,
+    so late duplicates drop (the reference's negative-cache/idempotent
+    import, §2.11); until then, per-tile state is a few compressed
+    blocks, bounded by tile size."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from .engine import needed_parts
+
+    def update(key, pdfs, state):
+        frames = [pdf[list(_BUFFER_COLUMNS)] for pdf in pdfs]
+        if state.exists:
+            done, *cols = state.get
+            if done:
+                return
+            frames.insert(0, pd.DataFrame(dict(zip(_BUFFER_COLUMNS, cols))))
+        frames = [f for f in frames if len(f)]
+        if not frames:
+            return
+        buffered = pd.concat(frames, ignore_index=True)
+        tx, ty = int(key[0]), int(key[1])
+        nx = tile_size // int(buffered["w"].iloc[0])
+        ny = tile_size // int(buffered["h"].iloc[0])
+        have = set(zip(buffered["part"], buffered["bx"], buffered["by"]))
+        if not needed_parts(tx, ty, nx, ny, world) <= have:
+            state.update((False, *(buffered[c].tolist()
+                                   for c in _BUFFER_COLUMNS)))
+            return
+        state.update(_TOMBSTONE)
+        yield finish(tx, ty, buffered).to_pandas()
+
+    return parts.groupBy("tile_x", "tile_y").applyInPandasWithState(
+        update,
+        outputStructType=schema,
+        stateStructType=_PARTS_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def streaming_assemble_tiles(images: DataFrame, tile_size: int) -> DataFrame:
-    """Custom stateful streaming operator: blocks stream in (in any
-    order, across any number of micro-batches), each tile's blocks
-    buffer in the state store, and the tile is emitted exactly once the
-    moment every block position is covered.
+    """Blocks stream in (in any order, across any number of
+    micro-batches) and each tile is emitted exactly once, the moment
+    every block position is covered (:func:`buffered_tiles`).
 
     This is the streaming re-expression of the mosaic join (SURVEY.md
     §2.3 J2) — the batch engine's ``assemble_tiles`` needs all blocks
     of a tile in one task; here Spark's state store provides the
     cross-batch buffer, checkpointed and exactly-once.  The assembled
     tile comes from the same ``engine.compose_padded`` as the batch
-    path, so heights are byte-identical.  Late duplicates arriving
-    after completion are dropped; per-tile state is a few compressed
-    blocks, bounded by tile size, and clears to a tombstone on emit.
+    path, so heights are byte-identical.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .engine import (
         ASSEMBLED_SCHEMA,
         _block_parts,
@@ -298,27 +328,11 @@ def streaming_assemble_tiles(images: DataFrame, tile_size: int) -> DataFrame:
         parse_caption,
     )
 
-    def update(key, pdfs, state):
-        parts = _buffered_parts(pdfs, state)
-        if parts is None:
-            return
-        nx = tile_size // int(parts["w"].iloc[0])
-        ny = tile_size // int(parts["h"].iloc[0])
-        if len(set(zip(parts["bx"], parts["by"]))) < nx * ny:
-            _keep_buffering(state, parts)  # still incomplete
-            return
-        tile, n_blocks = compose_padded(parts, tile_size, 0)
-        state.update(_TOMBSTONE)
-        yield assembled_row(int(key[0]), int(key[1]), tile, n_blocks).to_pandas()
+    def finish(tx, ty, parts):
+        return assembled_row(tx, ty, *compose_padded(parts, tile_size, 0))
 
-    blocks = _block_parts(parse_caption(images))
-    return blocks.groupBy("tile_x", "tile_y").applyInPandasWithState(
-        update,
-        outputStructType=ASSEMBLED_SCHEMA,
-        stateStructType=_PARTS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return buffered_tiles(_block_parts(parse_caption(images)), tile_size,
+                          finish, ASSEMBLED_SCHEMA)
 
 
 def streaming_hillshade(
@@ -335,10 +349,9 @@ def streaming_hillshade(
 
     Each micro-batch of image rows goes through the batch
     :func:`demeton_spark.engine.hillshade_parts` (raw blocks + k-px
-    strips cut from border blocks, keyed by destination tile).  One
-    ``applyInPandasWithState`` keyed by destination tile buffers parts
-    across micro-batches and shades the tile EXACTLY ONCE, through the
-    batch ``compose_padded`` and ``render_tile``, when both its own
+    strips cut from border blocks, keyed by destination tile), and
+    :func:`buffered_tiles` shades each tile EXACTLY ONCE, through the
+    batch shade function (``engine.tile_shader``), when both its own
     block grid and every halo strip an existing neighbor will ever send
     are present — ``world_bounds`` (min tile_x, min tile_y, max tile_x,
     max tile_y, inclusive) makes completeness decidable without
@@ -347,84 +360,28 @@ def streaming_hillshade(
     byte-identical to the batch pipeline (tested); late duplicates
     after emission drop (idempotent-import semantics, §2.11).
     ``clip_polygon`` and ``prefilter`` behave as in the batch
-    run_hillshade: clipped-out destination tiles are filtered from the
-    parts stream (state never accumulates for them) and prefilters
-    widen the buffered strips to k px.
+    run_hillshade: the parts are pruned to the world ∩ the clip cover
+    before the emitter (state never accumulates for clipped-out tiles),
+    while completeness still waits for strips from every in-world
+    neighbor, and prefilters widen the buffered strips to k px.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .engine import (
-        _HALO_PARTS,
         SHADED_SCHEMA,
-        _on_edge,
         clip_cover,
-        compose_padded,
         hillshade_parts,
-        in_tiles,
         parse_caption,
-        render_setup,
-        render_tile,
+        tile_shader,
     )
 
-    steps, registry, lvl, pre_steps = render_setup(script, png_level, prefilter)
-    halo = 1 + len(pre_steps)
     clip_poly, cover = clip_cover(clip_polygon)
-    wx0, wy0, wx1, wy1 = world_bounds  # sender existence universe
-    tx0, ty0, tx1, ty1 = world_bounds  # destination (kept-tile) universe
-    if cover is not None:
-        # destinations shrink to the polygon's bbox cover (state never
-        # accumulates for clipped-out tiles) but SENDERS keep the full
-        # world bounds: a tile just outside the clip cover still donates
-        # halo strips to kept boundary tiles, exactly like the batch
-        # path's destination-only filter — completeness must wait for
-        # those strips or boundary pixels would shade nondeterministically
-        tx0, ty0 = max(tx0, cover[0]), max(ty0, cover[1])
-        tx1, ty1 = min(tx1, cover[2]), min(ty1, cover[3])
-    parts = hillshade_parts(parse_caption(images), tile_size, halo).where(
-        in_tiles(tx0, ty0, tx1, ty1)
-    )
-
-    def expected_strips(tx: int, ty: int, nx: int, ny: int) -> set:
-        """(part, bx, by) triples this tile will eventually receive:
-        the sender at (tx-dx, ty-dy) exists inside the WORLD bounds
-        (not the clip cover), and its block faces this tile."""
-        return {
-            (part, bx, by)
-            for part, (dx, dy) in _HALO_PARTS.items()
-            if wx0 <= tx - dx <= wx1 and wy0 <= ty - dy <= wy1
-            for by in range(ny) if _on_edge(dy, by, ny)
-            for bx in range(nx) if _on_edge(dx, bx, nx)
-        }
-
-    def update(key, pdfs, state):
-        parts = _buffered_parts(pdfs, state)
-        if parts is None:
-            return
-        tx, ty = int(key[0]), int(key[1])
-        nx = tile_size // int(parts["w"].iloc[0])
-        ny = tile_size // int(parts["h"].iloc[0])
-        is_block = parts["part"] == "B"
-        blocks, strips = parts[is_block], parts[~is_block]
-        have_blocks = set(zip(blocks["bx"], blocks["by"]))
-        have_strips = set(zip(strips["part"], strips["bx"], strips["by"]))
-        if (len(have_blocks) < nx * ny
-                or not expected_strips(tx, ty, nx, ny) <= have_strips):
-            _keep_buffering(state, parts)
-            return
-        padded, n_blocks = compose_padded(parts, tile_size, halo)
-        state.update(_TOMBSTONE)
-        yield render_tile(
-            padded, tx, ty, tile_size, steps, registry, lvl,
-            pre_steps=pre_steps, clip_poly=clip_poly, n_blocks=n_blocks,
-        ).to_pandas()
-
-    return parts.groupBy("tile_x", "tile_y").applyInPandasWithState(
-        update,
-        outputStructType=SHADED_SCHEMA,
-        stateStructType=_PARTS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    halo, shade = tile_shader(tile_size, script, clip_poly, prefilter, png_level)
+    keep = world_bounds
+    if cover is not None:  # the world ∩ the clip cover
+        keep = (max(keep[0], cover[0]), max(keep[1], cover[1]),
+                min(keep[2], cover[2]), min(keep[3], cover[3]))
+    parts = hillshade_parts(parse_caption(images), tile_size, halo, keep=keep)
+    return buffered_tiles(parts, tile_size, shade, SHADED_SCHEMA,
+                          world=world_bounds)
 
 
 def run_to_memory(

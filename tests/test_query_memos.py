@@ -27,25 +27,28 @@ def _run_all(spark, sf_dir: str) -> dict:
 
 
 def test_memos_rebuild_after_a_table_is_rewritten(spark, tmp_path):
-    sf_dir = str(tmp_path)
-    for t in TABLES:
-        shutil.copyfile(f"{SF}/{t}.parquet", f"{sf_dir}/{t}.parquet")
-    before = _run_all(spark, sf_dir)
+    # the same tables read as a plain path and as a file:// URI
+    for local, sf_dir in ((tmp_path / "path", str(tmp_path / "path")),
+                          (tmp_path / "uri", (tmp_path / "uri").as_uri())):
+        local.mkdir()
+        for t in TABLES:
+            shutil.copyfile(f"{SF}/{t}.parquet", local / f"{t}.parquet")
+        before = _run_all(spark, sf_dir)
 
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        table = pq.read_table(path)
-        pq.write_table(table.slice(0, table.num_rows // 2), path)
-    after = _run_all(spark, sf_dir)
+        for t in TABLES:
+            path = local / f"{t}.parquet"
+            table = pq.read_table(path)
+            pq.write_table(table.slice(0, table.num_rows // 2), path)
+        after = _run_all(spark, sf_dir)
 
-    for memo in MEMOS:
-        memo.clear()
-    fresh = _run_all(spark, sf_dir)
+        for memo in MEMOS:
+            memo.clear()
+        fresh = _run_all(spark, sf_dir)
 
-    for name in MEMOIZED:
-        assert after[name] == fresh[name], name
-        assert after[name] != before[name], name
-    n_docs = pq.read_metadata(f"{sf_dir}/documents.parquet").num_rows
-    assert len(after["doc_dedup_clusters"]) == n_docs
-    n_events = pq.read_metadata(f"{sf_dir}/events.parquet").num_rows
-    assert sum(r[2] for r in after["geocell_assign"]) == n_events
+        for name in MEMOIZED:
+            assert after[name] == fresh[name], (sf_dir, name)
+            assert after[name] != before[name], (sf_dir, name)
+        n_docs = pq.read_metadata(local / "documents.parquet").num_rows
+        assert len(after["doc_dedup_clusters"]) == n_docs
+        n_events = pq.read_metadata(local / "events.parquet").num_rows
+        assert sum(r[2] for r in after["geocell_assign"]) == n_events

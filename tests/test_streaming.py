@@ -291,6 +291,62 @@ def test_streaming_hillshade_clip_and_prefilter_match_batch(spark, tmp_path):
         assert got[k]["shaded_px"] == batch[k]["shaded_px"]
 
 
+@pytest.mark.parametrize("op", ["assemble", "hillshade"])
+def test_late_duplicate_after_emit_drops(spark, tmp_path, op):
+    """Both tile operators emit a tile once: a third micro-batch that
+    re-sends a corner block of an already emitted tile (its strips go to
+    three emitted neighbours), under a larger
+    image_id (so it would win the block position) and with another
+    block's pixels, adds no row and changes no emitted byte."""
+    import re as _re
+
+    from demeton_spark import engine, synth
+    from demeton_spark.synth import WorldSpec
+
+    spec = WorldSpec(
+        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=30,
+        block_size=10,
+    )
+    images = synth.images_df(spark, spec)
+    pdf = images.toPandas()
+
+    def parity(caption):
+        m = _re.search(r"block \((\d+),(\d+)\)", caption)
+        return (int(m.group(1)) + int(m.group(2))) % 2
+
+    mask = pdf["caption"].map(parity) == 0
+    late = pdf[pdf["caption"] == "tile N45E013 block (2,2)"].head(1).copy()
+    other = pdf[pdf["caption"] == "tile N45E013 block (1,1)"].iloc[0]
+    late["image_id"] = "zzz-late"
+    late["bytes"] = [other["bytes"]]
+    late["fmt"] = other["fmt"]
+    src = str(tmp_path / f"img_late_{op}")
+    for part in (pdf[mask], pdf[~mask], late):
+        spark.createDataFrame(part, streaming.IMAGES_SCHEMA).coalesce(1).write.mode(
+            "append").parquet(src)
+
+    stream_in = streaming.read_images_stream(spark, src, max_files_per_trigger=1)
+    if op == "assemble":
+        stream = streaming.streaming_assemble_tiles(stream_in, spec.tile_size)
+        batch = engine.assemble_tiles(engine.parse_caption(images), spec.tile_size)
+        col = "heights"
+    else:
+        bounds = (13, 45, 14, 46)
+        stream = streaming.streaming_hillshade(stream_in, spec.tile_size, bounds)
+        batch = engine.run_hillshade(
+            spark, images, spec.tile_size, script="elecolor|+igor")
+        col = "png"
+    got = streaming.run_to_memory(
+        stream, f"stream_late_{op}", str(tmp_path / f"ckpt_late_{op}")
+    ).collect()
+    want = {(r["tile_x"], r["tile_y"]): r for r in batch.collect()}
+    assert len(got) == len(want) == 4
+    for r in got:
+        b = want[(r["tile_x"], r["tile_y"])]
+        assert bytes(r[col]) == bytes(b[col])
+        assert r["n_blocks"] == b["n_blocks"]
+
+
 def test_streaming_exact_dedup_matches_batch_keep_list(spark, tmp_path):
     """streaming_exact_dedup must emit exactly the batch keep list (min
     image_id per phash) when winners arrive in the first micro-batch,

@@ -78,12 +78,9 @@ def main() -> int:
     # fixture-pinned oracles carry the driver's sf0.01 parquet path in
     # their contract strings; regenerate them for the sf under test
     # (the Spark side materializes the fixture before the oracle runs)
-    import re as _re
+    from demeton_spark.queries import FIXTURE_ORACLES, sf_of
 
-    from demeton_spark.queries import FIXTURE_ORACLES
-
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
+    sf = sf_of(sf_dir)
     if sf != 0.01:
         oracles = {**oracles, **{k: fn(sf) for k, fn in FIXTURE_ORACLES.items()}}
     failures = 0
