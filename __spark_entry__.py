@@ -19,7 +19,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from demeton_spark.queries import ORACLES, QUERIES
+from demeton_spark.queries import (
+    _CQ, LCC_CONTRACT_SPEC, ORACLES, QUERIES, contract_tiles,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -38,13 +40,10 @@ def _q_hillshade_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES are pinned in tests/test_engine_spark.py (byte parity vs
     the untiled numpy oracle)."""
     from demeton_spark.engine import run_hillshade
-    from demeton_spark.synth import WorldSpec, images_df
+    from demeton_spark.synth import images_df
 
-    spec = WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60, block_size=20
-    )
     shaded = run_hillshade(
-        spark, images_df(spark, spec), spec.tile_size, script="elecolor|+igor"
+        spark, images_df(spark, _CQ), _CQ.tile_size, script="elecolor|+igor"
     )
     return shaded.select(
         "tile_x", "tile_y", "tile_name", "width", "height", "shaded_px", "total_px"
@@ -56,17 +55,9 @@ def _q_pyramid_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a DuckDB oracle that regenerates the synthetic world from
     generate_series and reproduces the NaN-masked half-to-even 2×2 mean
     with exact integer arithmetic (queries.SQL_PYRAMID_DOWNSAMPLE)."""
-    from demeton_spark.engine import assemble_tiles, parse_caption
     from demeton_spark.pyramid import build_pyramid_level
-    from demeton_spark.synth import WorldSpec, images_df
 
-    spec = WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60, block_size=20
-    )
-    tiles0 = assemble_tiles(
-        parse_caption(images_df(spark, spec)), spec.tile_size
-    )
-    lvl1 = build_pyramid_level(tiles0, spec.tile_size, level=1)
+    lvl1 = build_pyramid_level(contract_tiles(spark), _CQ.tile_size, level=1)
     return lvl1.select("level", "tile_x", "tile_y", "missing_px", "height_sum")
 
 
@@ -77,38 +68,10 @@ def _q_water_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pinned in tests/test_water.py."""
     from demeton_spark.water import global_water_components
 
-    tiles, ts = _synthetic_tiles(spark)
     # this lon/lat window of the synthetic terrain spans ~[500, 736]m;
     # a 550m sea level carves lakes that straddle tile boundaries
-    return global_water_components(tiles, ts, sea_level=550)
-
-
-def _synthetic_tiles(spark: SparkSession):
-    """Deterministic 2x2-tile heights table shared by the raster-operator
-    contract queries (water components, isolines)."""
-    import numpy as np
-
-    from demeton_spark.synth import WorldSpec, expected_world_heights
-
-    spec = WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60, block_size=20
-    )
-    world = expected_world_heights(spec)
-    ts = spec.tile_size
-    rows = []
-    for by in range(spec.n_tiles_y):
-        for bx in range(spec.n_tiles_x):
-            block = world[by * ts : (by + 1) * ts, bx * ts : (bx + 1) * ts]
-            rows.append(
-                (
-                    spec.lon0 + bx,
-                    spec.lat0 + by,
-                    bytearray(np.ascontiguousarray(block).tobytes()),
-                )
-            )
-    return (
-        spark.createDataFrame(rows, "tile_x int, tile_y int, heights binary"),
-        ts,
+    return global_water_components(
+        contract_tiles(spark), _CQ.tile_size, sea_level=550
     )
 
 
@@ -123,8 +86,7 @@ def _q_tile_isolines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from demeton_spark.isolines import tile_isolines
 
-    tiles, ts = _synthetic_tiles(spark)
-    out = tile_isolines(tiles, ts, [550.0, 650.0])
+    out = tile_isolines(contract_tiles(spark), _CQ.tile_size, [550.0, 650.0])
     return out.select(
         "tile_x", "tile_y", "level", "n_segments", "n_closed", "n_clipped",
         F.round("total_len", 6).alias("total_len"),
@@ -143,7 +105,7 @@ def _q_tile_shade_xth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demeton_spark.engine import map_tiles, run_tile_shade
     from demeton_spark.water import build_xth_tiles
 
-    tiles, ts = _synthetic_tiles(spark)
+    tiles, ts = contract_tiles(spark), _CQ.tile_size
     # water-class raster at 2x the DEM resolution: class 80 where the
     # terrain sits below 560m (deterministic lakes); derived tile-by-tile
     # in one Arrow tile map — no driver-side collect
@@ -172,8 +134,9 @@ def _q_tile_isoline_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment geometry/chaining stays pinned by tests + tile_isolines."""
     from demeton_spark.isolines import tile_case_histogram
 
-    tiles, ts = _synthetic_tiles(spark)
-    return tile_case_histogram(tiles, ts, [550.0, 650.0])
+    return tile_case_histogram(
+        contract_tiles(spark), _CQ.tile_size, [550.0, 650.0]
+    )
 
 
 def _q_tile_posterize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,8 +148,7 @@ def _q_tile_posterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_isolines.py (chain topology isn't SQL-expressible)."""
     from demeton_spark.isolines import tile_posterize
 
-    tiles, ts = _synthetic_tiles(spark)
-    out = tile_posterize(tiles, ts, [550.0, 650.0])
+    out = tile_posterize(contract_tiles(spark), _CQ.tile_size, [550.0, 650.0])
     return out.select(
         "tile_x", "tile_y", "class_id", "n_px",
         "min_x", "min_y", "max_x", "max_y",
@@ -203,11 +165,10 @@ def _q_shade_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demeton_spark.geometry import MapScale
     from demeton_spark.render import render_shaded_raster
 
-    tiles, ts = _synthetic_tiles(spark)
     pts = [(13.2, 45.2), (14.8, 45.2), (13.2, 46.8), (14.8, 46.8)]
     out = render_shaded_raster(
-        spark, tiles, pts, MapScale(5_000_000, 96), tile_size=ts,
-        raster_tile_px=64,
+        spark, contract_tiles(spark), pts, MapScale(5_000_000, 96),
+        tile_size=_CQ.tile_size, raster_tile_px=64,
     )
     return out.select(
         "rt_x", "rt_y", "width", "height", "shaded_px", "total_px",
@@ -227,14 +188,13 @@ def _q_shade_raster_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs2cs control points in tests/test_projections.py."""
     from demeton_spark.geometry import MapScale
     from demeton_spark.projections import create_projection
-    from demeton_spark.queries import LCC_CONTRACT_SPEC
     from demeton_spark.render import render_shaded_raster
 
-    tiles, ts = _synthetic_tiles(spark)
     pts = [(13.2, 45.2), (14.8, 45.2), (13.2, 46.8), (14.8, 46.8)]
     scale = MapScale(5_000_000, 96)
     out = render_shaded_raster(
-        spark, tiles, pts, scale, tile_size=ts, raster_tile_px=64,
+        spark, contract_tiles(spark), pts, scale, tile_size=_CQ.tile_size,
+        raster_tile_px=64,
         projection=create_projection(LCC_CONTRACT_SPEC, scale),
     )
     return out.select(
@@ -252,13 +212,10 @@ def _q_hillshade_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel parity vs the clipped untiled oracle is pinned in
     tests/test_engine_spark.py."""
     from demeton_spark.engine import run_hillshade
-    from demeton_spark.synth import WorldSpec, images_df
+    from demeton_spark.synth import images_df
 
-    spec = WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60, block_size=20
-    )
     shaded = run_hillshade(
-        spark, images_df(spark, spec), spec.tile_size, script="elecolor|+igor",
+        spark, images_df(spark, _CQ), _CQ.tile_size, script="elecolor|+igor",
         clip_polygon=[(13.1, 45.1), (13.95, 45.5), (13.4, 45.95)],
     )
     return shaded.select(

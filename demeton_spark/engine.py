@@ -23,10 +23,11 @@ with ONE full-data shuffle (see SCALE.md):
                               ``needed_parts`` is the same strip rule
                               seen from the receiver: what a tile is
                               complete with.
-  3. ``compose_padded``     — the only stitch (in ``applyInArrow``
-                              groups): winner-only decode (J2, §4.3)
-                              plus strip placement into the (ts+2k)²
-                              array, DEM_HEIGHT_NONE at world edges
+  3. ``compose_padded``     — the only stitch, of mosaics (k = 0),
+                              shaded tiles and pyramid parents alike:
+                              winner-only decode (J2, §4.3) plus strip
+                              placement into the (ts+2k)² array,
+                              DEM_HEIGHT_NONE at world edges
                               (extract-fill, Dem/Funcs.fs:395-416).
   4. ``render_tile``        — the only maker of output rows: optional
                               blur/sharpen prefilters, Horn p/q,
@@ -35,24 +36,22 @@ with ONE full-data shuffle (see SCALE.md):
                               encode (Hillshading.fs:81-157 vectorized).
                               ``tile_shader`` sets 3 + 4 up once per job
                               as one ``shade(tile_x, tile_y, parts)``.
-  5. ``run_hillshade``      — end-to-end: one group per tile runs the
-                              shade function (``shade_unified``), with
+  5. ``run_hillshade``      — end-to-end: ``reduce_tiles`` runs the
+                              shade function once per tile, with
                               resumable checkpointing (anti-join against
                               a per-tile manifest — Srtm/Fetch.fs
                               negative-cache semantics), the clip
-                              polygon's bbox cover as ``keep``, tiles
-                              dealt over one reduce task per core
-                              (``tile_groups``), and pixel-count metrics.
+                              polygon's bbox cover as ``keep``, and
+                              pixel-count metrics.
 
-XTH tile-shade (``run_tile_shade``) and plain mosaics
-(``assemble_tiles``, k = 0) reuse the same emitter, compose and render.
-The streaming twins (``streaming.streaming_assemble_tiles`` and
-``streaming.streaming_hillshade``) buffer the same parts across
-micro-batches until ``needed_parts`` are in, then finish with
-``compose_padded`` or the shade function.  Operators over assembled tiles
-(isolines, posterization, water bodies, XTH packing, zonal stats) run
-their numpy kernels through the one Arrow tile map, ``map_tiles``, the
-only reader of the ``heights`` bytes ``assembled_row`` writes.
+Every tile operator is one of three, one Arrow boundary per kind:
+``map_tiles``, the per-tile map over assembled tiles (the only reader
+of the ``heights`` bytes ``assembled_row`` writes); ``reduce_tiles``,
+the batch reduce (hillshade, XTH tile-shade, mosaics, the pyramid
+step); and ``streaming.buffered_tiles``, the stream reduce.  Both
+reduces make a tile's rows with a ``finish(tile_x, tile_y, parts)``,
+and batch and stream twins share theirs (``tile_assembler``,
+``tile_shader``), so they write the same bytes.
 
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
@@ -70,7 +69,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -280,8 +279,8 @@ def hillshade_parts(
     keep: tuple | None = None,
 ) -> DataFrame:
     """Blocks + their neighbors' strip contributions, keyed by the
-    destination tile — the single-shuffle input of :func:`shade_unified`
-    and of every other tile path: one scan of ``assigned`` and one
+    destination tile — the single-shuffle input of :func:`reduce_tiles`
+    in every tile path: one scan of ``assigned`` and one
     Arrow pass (:func:`emit_parts`) per batch.
 
     ``keep`` — an inclusive destination box ``(x0, y0, x1, y1)``: only
@@ -388,10 +387,14 @@ def tile_heights(buf: bytes, ts: int) -> np.ndarray:
 _DEAL_STRIDE = 374
 
 
-def tile_groups(parts: DataFrame, n: int | None = None) -> GroupedData:
-    """The one tile → task decision of every batch tile path: deal the
-    tiles over ``n`` reduce tasks (default one per core) by grid
-    position, ``pid = (tile_x + 374·tile_y) mod n``, and group by tile.
+def reduce_tiles(
+    parts: DataFrame, finish, schema: StructType, n: int | None = None
+) -> DataFrame:
+    """The one batch tile reduce: deal the tiles over ``n`` reduce tasks
+    (default one per core) by grid position, ``pid = (tile_x +
+    374·tile_y) mod n``, group ``parts`` (PART_SCHEMA rows keyed by
+    destination tile) by tile, and make each tile's rows with
+    ``finish(tile_x, tile_y, parts)``, an Arrow table in ``schema``.
 
     Every reduce task costs a fixed share of CPU whatever its size, and
     a hash of a few tile keys spreads them over the tasks unevenly.
@@ -399,26 +402,39 @@ def tile_groups(parts: DataFrame, n: int | None = None) -> GroupedData:
     whole-row grids come out exact and a run of neighbouring (heavy,
     contiguous land) tiles spreads over all tasks.  ``pid`` stays a
     grouping key, so the group reuses the ``repartitionById`` exchange
-    instead of hashing again; UDFs see it as one more column."""
+    instead of hashing again."""
     n = n or parts.sparkSession.sparkContext.defaultParallelism
     pid = F.pmod(F.col("tile_x") + _DEAL_STRIDE * F.col("tile_y"), n)
+
+    # no type hints: applyInArrow would infer the UDF kind from them
+    def reduce(key, table):
+        return finish(key[1].as_py(), key[2].as_py(), table)
+
     return (
         parts.withColumn("pid", pid)
         .repartitionById(n, "pid")
         .groupBy("pid", "tile_x", "tile_y")
+        .applyInArrow(reduce, schema=schema)
     )
+
+
+def tile_assembler(tile_size: int):
+    """The one assemble finish, ``assemble(tile_x, tile_y, parts)``: a
+    tile's "B" parts stitched with no halo (:func:`compose_padded`) into
+    its ASSEMBLED_SCHEMA row.  The batch :func:`assemble_tiles` and
+    ``streaming.streaming_assemble_tiles`` both finish with it."""
+
+    def assemble(tile_x: int, tile_y: int, parts) -> pa.Table:
+        return assembled_row(tile_x, tile_y, *compose_padded(parts, tile_size, 0))
+
+    return assemble
 
 
 def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
     """Stitch image blocks into one int16 raster per tile
-    (:func:`compose_padded` with no halo)."""
-
-    def stitch(key, table):
-        tile, n_blocks = compose_padded(table, tile_size, 0)
-        return assembled_row(key[1].as_py(), key[2].as_py(), tile, n_blocks)
-
-    return tile_groups(_block_parts(assigned)).applyInArrow(
-        stitch, schema=ASSEMBLED_SCHEMA
+    (:func:`tile_assembler` over :func:`reduce_tiles`)."""
+    return reduce_tiles(
+        _block_parts(assigned), tile_assembler(tile_size), ASSEMBLED_SCHEMA
     )
 
 
@@ -629,22 +645,6 @@ def tile_shader(
     return halo, shade
 
 
-def shade_unified(
-    parts: DataFrame, shade, shade_partitions: int | None = None
-) -> DataFrame:
-    """One group per tile, dealt over ``shade_partitions`` tasks
-    (:func:`tile_groups`), each shaded by ``shade`` (:func:`tile_shader`).
-    ``parts`` comes from :func:`hillshade_parts`, cut with the shader's
-    halo."""
-
-    def shade_group(key, table):
-        return shade(key[1].as_py(), key[2].as_py(), table)
-
-    return tile_groups(parts, shade_partitions).applyInArrow(
-        shade_group, schema=SHADED_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------------
 # tile-shade: XTH water-bit tiles → fixed pipeline (reference §3.2)
 # ---------------------------------------------------------------------------
@@ -683,8 +683,8 @@ def run_tile_shade(
         F.col("xth").alias("bytes"),
     )
 
-    def pad_and_shade(key, table):
-        packed, n_blocks = compose_padded(table, tile_size, 1, fill=0)
+    def pad_and_shade(tile_x: int, tile_y: int, parts) -> pa.Table:
+        packed, n_blocks = compose_padded(parts, tile_size, 1, fill=0)
         if packed is None:
             return _SHADED_ARROW.empty_table()
         packed_u = packed.view(np.uint16)
@@ -693,13 +693,12 @@ def run_tile_shade(
             offs == 0, DEM_HEIGHT_NONE, offs + codec._XTH_MIN_HEIGHT
         ).astype(np.int16)
         return render_tile(
-            heights, key[1].as_py(), key[2].as_py(), tile_size, steps,
-            registry, lvl,
+            heights, tile_x, tile_y, tile_size, steps, registry, lvl,
             water=(packed_u[1:-1, 1:-1] >> 15).astype(bool), n_blocks=n_blocks,
         )
 
-    return tile_groups(hillshade_parts(blocks, tile_size)).applyInArrow(
-        pad_and_shade, schema=SHADED_SCHEMA
+    return reduce_tiles(
+        hillshade_parts(blocks, tile_size), pad_and_shade, SHADED_SCHEMA
     )
 
 
@@ -762,7 +761,7 @@ def run_hillshade(
     ``"sharpen(amount=…)"``; Roadmap.md filters) applied before the
     Horn gradient; widens the halo exchange by one ring per step.
     ``shade_partitions`` — the number of reduce tasks the tiles are
-    dealt over (:func:`tile_groups`; default one per core).
+    dealt over (:func:`reduce_tiles`; default one per core).
     """
     clip_poly, cover = clip_cover(clip_polygon)
     halo, shade = tile_shader(tile_size, script, clip_poly, prefilter, png_level)
@@ -777,7 +776,7 @@ def run_hillshade(
             parts = parts.join(
                 F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
             )
-    shaded = shade_unified(parts, shade, shade_partitions)
+    shaded = reduce_tiles(parts, shade, SHADED_SCHEMA, shade_partitions)
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)
         return spark.read.schema(SHADED_SCHEMA).parquet(output_dir)

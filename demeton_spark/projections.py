@@ -28,6 +28,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from .geometry import INCHES_PER_METER, MapScale, Mercator
+from .tiles import MAX_DEM_LEVEL
 
 EPSILON = 1.0e-10  # Projections/Common.fs:20
 
@@ -271,9 +272,6 @@ def min_lon_lat_delta(
     delta = np.minimum(np.abs(lon1 - lon0), np.abs(lat1 - lat0))
     delta = np.where(v0 & v1, delta, np.inf)
     return float(np.min(delta))
-
-
-MAX_DEM_LEVEL = 6  # Dem/Types.fs:176-177
 
 
 def lon_lat_delta_to_dem_level(tile_size: int, lon_lat_delta_rad: float) -> int:

@@ -5,16 +5,21 @@ The reference builds higher levels recursively per tile on demand
 one batch job per level — an equi-join of children onto their parent key
 (floor(x/2), floor(y/2); Downsampling.fs:37-61) and a 2×2-average kernel
 (Downsampling.fs:67-130) — each level checkpointable before the next.
+The join is the engine's own tile reduce: each child is a raw "B" part
+of its parent, the parents are dealt like every other tile
+(``engine.reduce_tiles``), and ``engine.compose_padded`` stitches the
+children before the kernel runs.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .engine import tile_heights
+from .engine import _schema, compose_padded, reduce_tiles
 from .kernels import downsample_average_2x2
 from .tiles import DEM_HEIGHT_NONE
 
@@ -22,45 +27,46 @@ PYRAMID_SCHEMA = (
     "level int, tile_x int, tile_y int, heights binary, "
     "missing_px long, height_sum long"
 )
+_PYRAMID_SPARK = _schema(PYRAMID_SCHEMA)
+_PYRAMID_ARROW = to_arrow_schema(_PYRAMID_SPARK)
 
 
 def build_pyramid_level(child_tiles: DataFrame, tile_size: int, level: int) -> DataFrame:
     """One pyramid step: child tiles (level-1) → parent tiles at ``level``.
 
     ``child_tiles`` needs columns (tile_x, tile_y, heights); heights are
-    int16 LE south-up ``tile_size``² blocks.  The groupBy key is the
-    parent tile; each group merges ≤4 children positioned by coordinate
-    parity, then 2×2-average-downsamples (missing-aware, half-to-even).
+    int16 LE south-up ``tile_size``² blocks.  Each child becomes a raw
+    "B" part of its parent at block ``(x − 2·parent_x, y − 2·parent_y)``;
+    a parent's ≤4 children stitch into its 2·ts mosaic (missing
+    children stay DEM_HEIGHT_NONE), which is 2×2-average-downsampled
+    (missing-aware, half-to-even).
     """
-
-    def downsample(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = tile_size
-        merged = np.full((2 * ts, 2 * ts), DEM_HEIGHT_NONE, dtype=np.int16)
-        px = int(pdf["parent_x"].iloc[0])
-        py = int(pdf["parent_y"].iloc[0])
-        for cx, cy, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-            ox = (int(cx) - px * 2) * ts
-            oy = (int(cy) - py * 2) * ts
-            merged[oy : oy + ts, ox : ox + ts] = tile_heights(buf, ts)
-        parent = downsample_average_2x2(merged)
-        ok = parent != DEM_HEIGHT_NONE
-        return pd.DataFrame(
-            {
-                "level": [level],
-                "tile_x": [px],
-                "tile_y": [py],
-                "heights": [parent.tobytes()],
-                "missing_px": [int(np.count_nonzero(~ok))],
-                "height_sum": [int(parent[ok].astype(np.int64).sum())],
-            }
-        )
-
-    with_parent = child_tiles.withColumn(
-        "parent_x", F.floor(F.col("tile_x") / 2.0).cast("int")
-    ).withColumn("parent_y", F.floor(F.col("tile_y") / 2.0).cast("int"))
-    return with_parent.groupBy("parent_x", "parent_y").applyInPandas(
-        downsample, schema=PYRAMID_SCHEMA
+    ts = tile_size
+    parent_x = F.floor(F.col("tile_x") / 2).cast("int")
+    parent_y = F.floor(F.col("tile_y") / 2).cast("int")
+    parts = child_tiles.select(
+        parent_x.alias("tile_x"), parent_y.alias("tile_y"),
+        F.lit("B").alias("part"),
+        (F.col("tile_x") - 2 * parent_x).alias("bx"),
+        (F.col("tile_y") - 2 * parent_y).alias("by"),
+        F.lit("").alias("image_id"), F.lit(ts).alias("w"),
+        F.lit(ts).alias("h"), F.lit("raw").alias("fmt"),
+        F.col("heights").alias("data"),
     )
+
+    def downsample(tile_x: int, tile_y: int, children) -> pa.Table:
+        parent = downsample_average_2x2(compose_padded(children, 2 * ts, 0)[0])
+        ok = parent != DEM_HEIGHT_NONE
+        return pa.Table.from_pydict({
+            "level": [level],
+            "tile_x": [tile_x],
+            "tile_y": [tile_y],
+            "heights": [parent.tobytes()],
+            "missing_px": [int(np.count_nonzero(~ok))],
+            "height_sum": [int(parent[ok].astype(np.int64).sum())],
+        }, schema=_PYRAMID_ARROW)
+
+    return reduce_tiles(parts, downsample, _PYRAMID_SPARK)
 
 
 def build_full_pyramid(

@@ -38,6 +38,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .synth import WorldSpec, images_df
 from .tiles import tile_name_sql
 
 SRTM_TS = 3600  # level-0 cells per degree
@@ -3479,31 +3480,42 @@ group by e.query_id
 # no terrain value in this window sits nearer than 1.9e-5 to a .5 boundary
 # (checked empirically), so DuckDB round() == np.round here.
 
-_CQ_TS, _CQ_BS = 60, 20
-_CQ_LON0, _CQ_LAT0, _CQ_NTX, _CQ_NTY = 13, 45, 2, 2
+#: the contract world: 2×2 1° tiles of 60² cells in 20² blocks from
+#: N45E013, which every raster contract query reads
+_CQ = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60,
+                block_size=20)
+
+
+def contract_tiles(spark: SparkSession) -> DataFrame:
+    """The contract world's ``(tile_x, tile_y, heights)`` table, built
+    by the engine from its image rows (``engine.assemble_tiles``)."""
+    from demeton_spark.engine import assemble_tiles, parse_caption
+
+    tiles = assemble_tiles(parse_caption(images_df(spark, _CQ)), _CQ.tile_size)
+    return tiles.select("tile_x", "tile_y", "heights")
 
 
 def _sql_synth_world() -> str:
     """DuckDB CTE reproducing synth.expected_world_heights for the
-    contract-world spec (2×2 1° tiles, ts=60, bs=20): terrain sinusoid
-    (synth.py:100-108) + deterministic hole mask (synth.py:148-152)."""
-    bpt_side = _CQ_TS // _CQ_BS
-    bpt = bpt_side * bpt_side
+    contract world (``_CQ``): terrain sinusoid (synth.py:100-108) +
+    deterministic hole mask (synth.py:148-152)."""
+    ts, bs = _CQ.tile_size, _CQ.block_size
+    bpt_side, bpt = _CQ.blocks_per_tile_side, _CQ.blocks_per_tile
     return f"""
 world as (
-  select tx, ty, lx, ly, tx * {_CQ_TS} + lx as gx, ty * {_CQ_TS} + ly as gy,
-    case when ((((ty - {_CQ_LAT0}) * {_CQ_NTX} + (tx - {_CQ_LON0})) * {bpt}
-               + (ly // {_CQ_BS}) * {bpt_side} + (lx // {_CQ_BS})) % 16 = 5)
-              and (ly % {_CQ_BS}) % 7 = 0 and (lx % {_CQ_BS}) % 5 = 0
+  select tx, ty, lx, ly, tx * {ts} + lx as gx, ty * {ts} + ly as gy,
+    case when ((((ty - {_CQ.lat0}) * {_CQ.n_tiles_x} + (tx - {_CQ.lon0})) * {bpt}
+               + (ly // {bs}) * {bpt_side} + (lx // {bs})) % 16 = 5)
+              and (ly % {bs}) % 7 = 0 and (lx % {bs}) % 5 = 0
          then -32768
          else cast(round(500.0
-              + 400.0 * sin(2 * pi() * (tx * {_CQ_TS} + lx) / 1200.0)
-                      * cos(2 * pi() * (ty * {_CQ_TS} + ly) / 1200.0)) as int)
+              + 400.0 * sin(2 * pi() * (tx * {ts} + lx) / 1200.0)
+                      * cos(2 * pi() * (ty * {ts} + ly) / 1200.0)) as int)
     end as h
-  from (select unnest(generate_series({_CQ_LON0}, {_CQ_LON0 + _CQ_NTX - 1})) as tx) a
-  cross join (select unnest(generate_series({_CQ_LAT0}, {_CQ_LAT0 + _CQ_NTY - 1})) as ty) b
-  cross join (select unnest(generate_series(0, {_CQ_TS - 1})) as lx) c
-  cross join (select unnest(generate_series(0, {_CQ_TS - 1})) as ly) d
+  from (select unnest(generate_series({_CQ.lon0}, {_CQ.lon0 + _CQ.n_tiles_x - 1})) as tx) a
+  cross join (select unnest(generate_series({_CQ.lat0}, {_CQ.lat0 + _CQ.n_tiles_y - 1})) as ty) b
+  cross join (select unnest(generate_series(0, {ts - 1})) as lx) c
+  cross join (select unnest(generate_series(0, {ts - 1})) as ly) d
 )"""
 
 
@@ -3514,8 +3526,8 @@ SQL_PYRAMID_DOWNSAMPLE = f"""
 with {_sql_synth_world()},
 grp as (
   select tx // 2 as px, ty // 2 as py,
-         (ty % 2) * {_CQ_TS // 2} + ly // 2 as py_cell,
-         (tx % 2) * {_CQ_TS // 2} + lx // 2 as px_cell,
+         (ty % 2) * {_CQ.tile_size // 2} + ly // 2 as py_cell,
+         (tx % 2) * {_CQ.tile_size // 2} + lx // 2 as px_cell,
          sum(case when h <> -32768 then h else 0 end) as s,
          sum(case when h <> -32768 then 1 else 0 end) as n
   from world
@@ -3531,7 +3543,7 @@ vals as (
   from grp
 )
 select 1 as level, cast(px as int) as tile_x, cast(py as int) as tile_y,
-       cast({_CQ_TS * _CQ_TS} - count(v) as bigint) as missing_px,
+       cast({_CQ.tile_size * _CQ.tile_size} - count(v) as bigint) as missing_px,
        cast(sum(v) as bigint) as height_sum
 from vals
 group by px, py
@@ -3599,9 +3611,9 @@ with {_sql_synth_world()}
 select cast(tx as int) as tile_x, cast(ty as int) as tile_y,
        'N' || lpad(cast(ty as varchar), 2, '0')
            || 'E' || lpad(cast(tx as varchar), 3, '0') as tile_name,
-       cast({_CQ_TS} as int) as width, cast({_CQ_TS} as int) as height,
+       cast({_CQ.tile_size} as int) as width, cast({_CQ.tile_size} as int) as height,
        cast(count(case when h <> -32768 then 1 end) as bigint) as shaded_px,
-       cast({_CQ_TS * _CQ_TS} as bigint) as total_px
+       cast({_CQ.tile_size * _CQ.tile_size} as bigint) as total_px
 from world
 group by tx, ty
 """
@@ -3645,12 +3657,12 @@ select cast(tx as int) as tile_x, cast(ty as int) as tile_y,
            || 'E' || lpad(cast(tx as varchar), 3, '0') as tile_name,
        cast(count(case when h <> -32768 and
              {_sql_pip_expr(
-                 f"(cast(gx as double) / {_CQ_TS})",
-                 f"(cast(gy as double) / {_CQ_TS})",
+                 f"(cast(gx as double) / {_CQ.tile_size})",
+                 f"(cast(gy as double) / {_CQ.tile_size})",
                  _CLIP_POLY,
              )}
            then 1 end) as bigint) as shaded_px,
-       cast({_CQ_TS * _CQ_TS} as bigint) as total_px
+       cast({_CQ.tile_size * _CQ.tile_size} as bigint) as total_px
 from world
 where tx >= floor({min(v[0] for v in _CLIP_POLY)!r})
   and tx <= ceil({max(v[0] for v in _CLIP_POLY)!r}) - 1
@@ -3671,12 +3683,12 @@ SQL_TILE_SHADE_XTH = f"""
 select cast(tx as int) as tile_x, cast(ty as int) as tile_y,
        'N' || lpad(cast(ty as varchar), 2, '0')
            || 'E' || lpad(cast(tx as varchar), 3, '0') as tile_name,
-       cast({_CQ_TS * _CQ_TS} as bigint) as shaded_px,
-       cast({_CQ_TS * _CQ_TS} as bigint) as total_px
-from (select unnest(generate_series({_CQ_LON0},
-                                    {_CQ_LON0 + _CQ_NTX - 1})) as tx) a
-cross join (select unnest(generate_series({_CQ_LAT0},
-                                          {_CQ_LAT0 + _CQ_NTY - 1})) as ty) b
+       cast({_CQ.tile_size * _CQ.tile_size} as bigint) as shaded_px,
+       cast({_CQ.tile_size * _CQ.tile_size} as bigint) as total_px
+from (select unnest(generate_series({_CQ.lon0},
+                                    {_CQ.lon0 + _CQ.n_tiles_x - 1})) as tx) a
+cross join (select unnest(generate_series({_CQ.lat0},
+                                          {_CQ.lat0 + _CQ.n_tiles_y - 1})) as ty) b
 """
 
 
@@ -3696,7 +3708,7 @@ corners as (
               and t.lx = b.lx and t.ly = b.ly + 1
   join world q on q.tx = b.tx and q.ty = b.ty
               and q.lx = b.lx + 1 and q.ly = b.ly + 1
-  where b.lx < {_CQ_TS - 1} and b.ly < {_CQ_TS - 1}
+  where b.lx < {_CQ.tile_size - 1} and b.ly < {_CQ.tile_size - 1}
 ),
 cases as (
   select tx, ty, cast(lvl as double) as level,
@@ -3776,28 +3788,28 @@ grid as (
 ),
 cov as (
   select g.*,
-    greatest(cast(floor(degrees((rx - 1) / psf)) as int), {_CQ_LON0}) as tx_lo,
+    greatest(cast(floor(degrees((rx - 1) / psf)) as int), {_CQ.lon0}) as tx_lo,
     least(cast(ceil(degrees((rx + w + 1) / psf)) as int) - 1,
-          {_CQ_LON0 + _CQ_NTX - 1}) as tx_hi,
+          {_CQ.lon0 + _CQ.n_tiles_x - 1}) as tx_hi,
     greatest(cast(floor(degrees(2*atan(exp((ry - 1) / psf)) - pi()/2)) as int),
-             {_CQ_LAT0}) as ty_lo,
+             {_CQ.lat0}) as ty_lo,
     least(cast(ceil(degrees(2*atan(exp((ry + h + 1) / psf)) - pi()/2)) as int) - 1,
-          {_CQ_LAT0 + _CQ_NTY - 1}) as ty_hi
+          {_CQ.lat0 + _CQ.n_tiles_y - 1}) as ty_hi
   from grid g cross join c
 ),
 rects as (
   select xi, yi, rx, ry, w, h,
          (tx_hi - tx_lo + 1) * (ty_hi - ty_lo + 1) as n_dem,
-         tx_lo * {_CQ_TS} as cx0, ty_lo * {_CQ_TS} as cy0,
-         (tx_hi - tx_lo + 1) * {_CQ_TS} as mw,
-         (ty_hi - ty_lo + 1) * {_CQ_TS} as mh
+         tx_lo * {_CQ.tile_size} as cx0, ty_lo * {_CQ.tile_size} as cy0,
+         (tx_hi - tx_lo + 1) * {_CQ.tile_size} as mw,
+         (ty_hi - ty_lo + 1) * {_CQ.tile_size} as mh
   from cov
   where tx_hi >= tx_lo and ty_hi >= ty_lo
 ),
 px as (
   select r.xi, r.yi,
-         degrees((r.rx + p.i) / psf) * {float(_CQ_TS)!r} - r.cx0 as x,
-         degrees(2*atan(exp((r.ry + q.i) / psf)) - pi()/2) * {float(_CQ_TS)!r}
+         degrees((r.rx + p.i) / psf) * {float(_CQ.tile_size)!r} - r.cx0 as x,
+         degrees(2*atan(exp((r.ry + q.i) / psf)) - pi()/2) * {float(_CQ.tile_size)!r}
            - r.cy0 as y,
          r.cx0, r.cy0, r.mw, r.mh
   from rects r cross join c
@@ -3967,29 +3979,29 @@ pll as (
 ),
 cov as (
   select xi, yi,
-    greatest(cast(floor(min(lon_deg) * {float(_CQ_TS)!r} / {_CQ_TS}) as int),
-             {_CQ_LON0}) as tx_lo,
-    least(cast(ceil(max(lon_deg) * {float(_CQ_TS)!r} / {_CQ_TS}) as int) - 1,
-          {_CQ_LON0 + _CQ_NTX - 1}) as tx_hi,
-    greatest(cast(floor(min(lat_deg) * {float(_CQ_TS)!r} / {_CQ_TS}) as int),
-             {_CQ_LAT0}) as ty_lo,
-    least(cast(ceil(max(lat_deg) * {float(_CQ_TS)!r} / {_CQ_TS}) as int) - 1,
-          {_CQ_LAT0 + _CQ_NTY - 1}) as ty_hi
+    greatest(cast(floor(min(lon_deg) * {float(_CQ.tile_size)!r} / {_CQ.tile_size}) as int),
+             {_CQ.lon0}) as tx_lo,
+    least(cast(ceil(max(lon_deg) * {float(_CQ.tile_size)!r} / {_CQ.tile_size}) as int) - 1,
+          {_CQ.lon0 + _CQ.n_tiles_x - 1}) as tx_hi,
+    greatest(cast(floor(min(lat_deg) * {float(_CQ.tile_size)!r} / {_CQ.tile_size}) as int),
+             {_CQ.lat0}) as ty_lo,
+    least(cast(ceil(max(lat_deg) * {float(_CQ.tile_size)!r} / {_CQ.tile_size}) as int) - 1,
+          {_CQ.lat0 + _CQ.n_tiles_y - 1}) as ty_hi
   from pll where ii < 0 group by xi, yi
 ),
 rects as (
   select g.xi, g.yi, g.w, g.h,
          (c.tx_hi - c.tx_lo + 1) * (c.ty_hi - c.ty_lo + 1) as n_dem,
-         c.tx_lo * {_CQ_TS} as cx0, c.ty_lo * {_CQ_TS} as cy0,
-         (c.tx_hi - c.tx_lo + 1) * {_CQ_TS} as mw,
-         (c.ty_hi - c.ty_lo + 1) * {_CQ_TS} as mh
+         c.tx_lo * {_CQ.tile_size} as cx0, c.ty_lo * {_CQ.tile_size} as cy0,
+         (c.tx_hi - c.tx_lo + 1) * {_CQ.tile_size} as mw,
+         (c.ty_hi - c.ty_lo + 1) * {_CQ.tile_size} as mh
   from grid g join cov c on c.xi = g.xi and c.yi = g.yi
   where c.tx_hi >= c.tx_lo and c.ty_hi >= c.ty_lo
 ),
 px as (
   select p.xi, p.yi,
-         p.lon_deg * {float(_CQ_TS)!r} - r.cx0 as x,
-         p.lat_deg * {float(_CQ_TS)!r} - r.cy0 as y,
+         p.lon_deg * {float(_CQ.tile_size)!r} - r.cx0 as x,
+         p.lat_deg * {float(_CQ.tile_size)!r} - r.cy0 as y,
          r.cx0, r.cy0, r.mw, r.mh
   from pll p join rects r on r.xi = p.xi and r.yi = p.yi
   where p.ii >= 0
@@ -4052,7 +4064,7 @@ cells as (
   join world tl on tl.tx = bl.tx and tl.ty = bl.ty
                and tl.lx = bl.lx and tl.ly = bl.ly + 1
   cross join levels lv
-  where bl.lx < {_CQ_TS - 1} and bl.ly < {_CQ_TS - 1}
+  where bl.lx < {_CQ.tile_size - 1} and bl.ly < {_CQ.tile_size - 1}
 ),
 pairs as (
   select * from (values
@@ -4821,42 +4833,6 @@ def _zonal_polys():
     return zonal_demo_polygons()
 
 
-def _cq_tiles(spark: SparkSession) -> DataFrame:
-    """Contract-world int16 tile table, generated distributed (one
-    mapInPandas row per tile — no driver-side numpy world)."""
-    import pandas as pd
-
-    from demeton_spark.synth import WorldSpec, expected_tile_heights
-
-    spec = WorldSpec(
-        lon0=_CQ_LON0, lat0=_CQ_LAT0, n_tiles_x=_CQ_NTX, n_tiles_y=_CQ_NTY,
-        tile_size=_CQ_TS, block_size=_CQ_BS,
-    )
-    coords = spark.createDataFrame(
-        [
-            (spec.lon0 + i, spec.lat0 + j)
-            for i in range(spec.n_tiles_x)
-            for j in range(spec.n_tiles_y)
-        ],
-        "tile_x int, tile_y int",
-    ).repartition(spec.n_tiles_x * spec.n_tiles_y)
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "tile_x": pdf["tile_x"],
-                    "tile_y": pdf["tile_y"],
-                    "heights": [
-                        expected_tile_heights(spec, int(tx), int(ty)).tobytes()
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                }
-            )
-
-    return coords.mapInPandas(gen, "tile_x int, tile_y int, heights binary")
-
-
 def q_geo_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal statistics (raster↔vector join): per-polygon elevation
     aggregates over the contract DEM — polygon→tile-cover broadcast
@@ -4864,13 +4840,13 @@ def q_geo_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg per polygon.  See demeton_spark/zonal.py."""
     from demeton_spark.zonal import zonal_stats
 
-    return zonal_stats(_cq_tiles(spark), _CQ_TS, _zonal_polys())
+    return zonal_stats(contract_tiles(spark), _CQ.tile_size, _zonal_polys())
 
 
 def _sql_zonal_stats() -> str:
     parts = []
-    lon = f"(cast(tx as double) + cast(lx as double) / {_CQ_TS})"
-    lat = f"(cast(ty as double) + cast(ly as double) / {_CQ_TS})"
+    lon = f"(cast(tx as double) + cast(lx as double) / {_CQ.tile_size})"
+    lat = f"(cast(ty as double) + cast(ly as double) / {_CQ.tile_size})"
     for pid, verts in _zonal_polys():
         pip = _sql_pip_expr(lon, lat, verts)
         parts.append(f"""
@@ -4921,7 +4897,7 @@ def _pelev_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geo_point_elevation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ts = _CQ_TS
+    ts = _CQ.tile_size
     pts = _pelev_points(spark, sf_dir).select(
         "event_id", "lon", "lat",
         (F.col("lon") * float(ts)).alias("gxf"),
@@ -4956,7 +4932,7 @@ def q_geo_point_elevation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("tile_x", F.expr(f"cast(gx div {ts} as int)"))
         .withColumn("tile_y", F.expr(f"cast(gy div {ts} as int)"))
     )
-    j = corners.join(_cq_tiles(spark), ["tile_x", "tile_y"]).withColumn(
+    j = corners.join(contract_tiles(spark), ["tile_x", "tile_y"]).withColumn(
         "off", ((F.col("gy") % ts) * ts + F.col("gx") % ts) * 2 + 1
     )
     lo = F.conv(
@@ -4996,10 +4972,10 @@ pts as (
 ),
 base as (
   select event_id, lon, lat,
-         cast(floor(lon * {_CQ_TS}.0) as bigint) as gx1,
-         cast(floor(lat * {_CQ_TS}.0) as bigint) as gy1,
-         lon * {_CQ_TS}.0 - floor(lon * {_CQ_TS}.0) as dx,
-         lat * {_CQ_TS}.0 - floor(lat * {_CQ_TS}.0) as dy
+         cast(floor(lon * {_CQ.tile_size}.0) as bigint) as gx1,
+         cast(floor(lat * {_CQ.tile_size}.0) as bigint) as gy1,
+         lon * {_CQ.tile_size}.0 - floor(lon * {_CQ.tile_size}.0) as dx,
+         lat * {_CQ.tile_size}.0 - floor(lat * {_CQ.tile_size}.0) as dy
   from pts
 ),
 corners as (
@@ -5011,8 +4987,8 @@ looked as (
   select k.event_id, k.lon, k.lat, k.dx, k.dy, k.c,
          case when w.h <> -32768 then cast(w.h as double) end as hv
   from corners k
-  left join world w on w.tx * {_CQ_TS} + w.lx = k.gx
-                   and w.ty * {_CQ_TS} + w.ly = k.gy
+  left join world w on w.tx * {_CQ.tile_size} + w.lx = k.gx
+                   and w.ty * {_CQ.tile_size} + w.ly = k.gy
 ),
 per as (
   select event_id, any_value(lon) as lon, any_value(lat) as lat,

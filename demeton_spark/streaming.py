@@ -12,7 +12,8 @@ plain update-mode aggregate).  Two operators keep Python state through
 ``engine.needed_parts`` are in, then a tombstone) and
 ``streaming_exact_dedup`` (seen hashes).  The tile operator carries no
 tile logic of its own: ``streaming_assemble_tiles`` feeds it the
-engine's blocks and finishes with ``engine.compose_padded``, and
+engine's blocks and finishes with the engine's assemble function,
+``engine.tile_assembler`` — the batch ``assemble_tiles``'s own — and
 ``streaming_hillshade`` feeds it ``engine.hillshade_parts`` (pruned to
 the world ∩ clip cover) and finishes with the engine's shade function,
 ``engine.tile_shader`` — the batch ``run_hillshade``'s own.
@@ -317,22 +318,15 @@ def streaming_assemble_tiles(images: DataFrame, tile_size: int) -> DataFrame:
     §2.3 J2) — the batch engine's ``assemble_tiles`` needs all blocks
     of a tile in one task; here Spark's state store provides the
     cross-batch buffer, checkpointed and exactly-once.  The assembled
-    tile comes from the same ``engine.compose_padded`` as the batch
-    path, so heights are byte-identical.
+    tile comes from the batch path's own finish
+    (``engine.tile_assembler``), so heights are byte-identical.
     """
     from .engine import (
-        ASSEMBLED_SCHEMA,
-        _block_parts,
-        assembled_row,
-        compose_padded,
-        parse_caption,
+        ASSEMBLED_SCHEMA, _block_parts, parse_caption, tile_assembler,
     )
 
-    def finish(tx, ty, parts):
-        return assembled_row(tx, ty, *compose_padded(parts, tile_size, 0))
-
     return buffered_tiles(_block_parts(parse_caption(images)), tile_size,
-                          finish, ASSEMBLED_SCHEMA)
+                          tile_assembler(tile_size), ASSEMBLED_SCHEMA)
 
 
 def streaming_hillshade(

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from demeton_spark import codec, engine, synth
+from demeton_spark import codec, engine, pyramid, synth
 from demeton_spark.synth import WorldSpec
 from demeton_spark.tiles import DEM_HEIGHT_NONE, tile_name
 
@@ -60,6 +60,23 @@ def test_assembled_tiles_match_numpy_oracle(spark, images):
         assert row["missing_px"] == int(
             np.count_nonzero(expected == DEM_HEIGHT_NONE)
         )
+
+
+def test_contract_tiles_match_numpy_oracle(spark):
+    """The tile table every raster contract query reads is the contract
+    world's 4 tiles, byte-equal to the numpy oracle."""
+    from demeton_spark.queries import _CQ, contract_tiles
+
+    tiles = contract_tiles(spark)
+    assert tiles.columns == ["tile_x", "tile_y", "heights"]
+    got = {(r["tile_x"], r["tile_y"]): bytes(r["heights"])
+           for r in tiles.collect()}
+    assert set(got) == {(_CQ.lon0 + i, _CQ.lat0 + j)
+                        for i in range(_CQ.n_tiles_x)
+                        for j in range(_CQ.n_tiles_y)} and len(got) == 4
+    for (tx, ty), heights in got.items():
+        expected = synth.expected_tile_heights(_CQ, tx, ty)
+        assert heights == expected.astype("<i2").tobytes(), (tx, ty)
 
 
 def _world_parts(spec: WorldSpec, k: int) -> pd.DataFrame:
@@ -285,8 +302,9 @@ def _exchanges(df) -> list[str]:
 def test_tile_paths_run_one_exchange(spark):
     """The engine's defining property: blocks and halo strips reach
     their tile through ONE exchange, which deals each destination tile
-    to its task by grid position (``tile_groups``), in the default
-    run_hillshade, run_tile_shade and assemble_tiles alike."""
+    to its task by grid position (``reduce_tiles``), in the default
+    run_hillshade, run_tile_shade, assemble_tiles and the pyramid step
+    alike."""
     images = synth.images_df(spark, SPEC)
     shaded = engine.run_hillshade(spark, images, SPEC.tile_size)
     ts = 20
@@ -299,7 +317,14 @@ def test_tile_paths_run_one_exchange(spark):
     assembled = engine.assemble_tiles(
         engine.parse_caption(images), SPEC.tile_size
     )
-    for df in (shaded, engine.run_tile_shade(spark, xth, ts), assembled):
+    tiles = spark.createDataFrame(
+        [(tx, ty, bytearray(np.zeros((ts, ts), "<i2").tobytes()))
+         for tx in range(2) for ty in range(2)],
+        "tile_x int, tile_y int, heights binary",
+    )
+    parents = pyramid.build_pyramid_level(tiles, ts, level=1)
+    for df in (shaded, engine.run_tile_shade(spark, xth, ts), assembled,
+               parents):
         (exchange,) = _exchanges(df)
         assert exchange.startswith(
             "shufflepartitionidpassthrough(direct_shuffle_partition_id("

@@ -53,7 +53,7 @@ PLAN_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    from demeton_spark.queries import QUERIES
+    from demeton_spark.queries import _CQ, QUERIES
     from demeton_spark.session import build_session
 
     spark = build_session(app_name="explain", master="local[2]")
@@ -73,14 +73,12 @@ def main() -> None:
 
     # the hillshade pipeline as run_hillshade builds it: the plan must
     # show exactly ONE full-data Exchange (the tile deal of
-    # engine.tile_groups) feeding FlatMapGroupsInArrow — assembled
+    # engine.reduce_tiles) feeding FlatMapGroupsInArrow — assembled
     # tiles never re-shuffle
     from demeton_spark.engine import run_hillshade
-    from demeton_spark.synth import WorldSpec, images_df
+    from demeton_spark.synth import images_df
 
-    spec = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2,
-                     tile_size=60, block_size=20)
-    shaded = run_hillshade(spark, images_df(spark, spec), spec.tile_size,
+    shaded = run_hillshade(spark, images_df(spark, _CQ), _CQ.tile_size,
                            script="elecolor|+igor")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
