@@ -43,7 +43,8 @@ def _q_hillshade_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demeton_spark.synth import images_df
 
     shaded = run_hillshade(
-        spark, images_df(spark, _CQ), _CQ.tile_size, script="elecolor|+igor"
+        spark, images_df(spark, _CQ, num_partitions=1), _CQ.tile_size,
+        script="elecolor|+igor",
     )
     return shaded.select(
         "tile_x", "tile_y", "tile_name", "width", "height", "shaded_px", "total_px"
@@ -215,7 +216,8 @@ def _q_hillshade_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demeton_spark.synth import images_df
 
     shaded = run_hillshade(
-        spark, images_df(spark, _CQ), _CQ.tile_size, script="elecolor|+igor",
+        spark, images_df(spark, _CQ, num_partitions=1), _CQ.tile_size,
+        script="elecolor|+igor",
         clip_polygon=[(13.1, 45.1), (13.95, 45.5), (13.4, 45.95)],
     )
     return shaded.select(

@@ -41,7 +41,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from demeton_spark.queries import QUERIES  # noqa: E402
+import __spark_entry__  # noqa: E402
 from demeton_spark.synth import WorldSpec  # noqa: E402
 
 #: synthetic world per SF: ~12.96 unique Mpx per 0.001 SF (one 3600² tile
@@ -55,8 +55,9 @@ WORLD_BY_SF = {
                    tile_size=1800, block_size=300),
 }
 
-#: every registered contract query (``queries.QUERIES``), in its order
-HEADLINE_QUERIES = list(QUERIES)
+#: every contract query ``__spark_entry__.queries()`` registers, the
+#: raster queries included, by name, in its order
+HEADLINE_QUERIES = __spark_entry__.queries()
 
 
 def probe_steal(seconds: float = 2.0) -> float:
@@ -491,8 +492,7 @@ def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
             queries["streaming_hillshade"] = run_streaming_hillshade_bench(
                 spark
             )
-            for name in HEADLINE_QUERIES:
-                fn = QUERIES[name]
+            for name, fn in HEADLINE_QUERIES.items():
                 trials_q = []
                 for _ in range(3):  # median-of-3: sandbox CPU-steal variance
                     t0 = time.time()

@@ -44,11 +44,13 @@ with ONE full-data shuffle (see SCALE.md):
                               polygon's bbox cover as ``keep``, and
                               pixel-count metrics.
 
-Every tile operator is one of three, one Arrow boundary per kind:
-``map_tiles``, the per-tile map over assembled tiles (the only reader
-of the ``heights`` bytes ``assembled_row`` writes); ``reduce_tiles``,
-the batch reduce (hillshade, XTH tile-shade, mosaics, the pyramid
-step); and ``streaming.buffered_tiles``, the stream reduce.  Both
+Every row and tile operator is one of three, one Arrow boundary per
+kind: ``map_rows``, the per-row map (image decode and checks, audio
+features, the synthetic generators), with ``map_tiles`` its per-tile
+form over assembled tiles (the only reader of the ``heights`` bytes
+``assembled_row`` writes); ``reduce_tiles``, the batch reduce
+(hillshade, XTH tile-shade, mosaics, the pyramid step, the projected
+render); and ``streaming.buffered_tiles``, the stream reduce.  Both
 reduces make a tile's rows with a ``finish(tile_x, tile_y, parts)``,
 and batch and stream twins share theirs (``tile_assembler``,
 ``tile_shader``), so they write the same bytes.
@@ -438,33 +440,42 @@ def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
     )
 
 
-def map_tiles(
-    tiles: DataFrame, tile_size: int, fn, schema: str, extra: tuple = ()
-) -> DataFrame:
-    """The one per-tile operator loop: a ``mapInArrow`` pass over
-    ``(tile_x, tile_y, heights, *extra)`` rows that calls
-    ``fn(tile_x, tile_y, heights, *extra_values)`` with each tile's
-    int16 array (:func:`tile_heights`) and packs the tuples it yields,
-    in ``schema`` order (``"name type, …"``), into one Arrow batch per
-    input batch.  A ``None`` in a tuple is a null."""
+def map_rows(df: DataFrame, names, fn, schema: str) -> DataFrame:
+    """The one per-row operator loop: a ``mapInArrow`` pass over the
+    ``names`` columns of ``df`` that calls ``fn(*row)`` on each row and
+    packs the tuples it yields, in ``schema`` order (``"name type,
+    …"``), into one Arrow batch per input batch.  A ``None`` in a tuple
+    is a null."""
     out = _schema(schema)
     arrow = to_arrow_schema(out)
-    names = ("tile_x", "tile_y", "heights", *extra)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             rows = []
-            for tx, ty, buf, *rest in zip(
-                *(batch.column(c).to_pylist() for c in names)
-            ):
-                rows.extend(fn(tx, ty, tile_heights(buf, tile_size), *rest))
+            for row in zip(*(batch.column(c).to_pylist() for c in names)):
+                rows.extend(fn(*row))
             cols = list(zip(*rows)) or [()] * len(arrow)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(c, f.type) for c, f in zip(cols, arrow)],
                 schema=arrow,
             )
 
-    return tiles.select(*names).mapInArrow(run, schema=out)
+    return df.select(*names).mapInArrow(run, schema=out)
+
+
+def map_tiles(
+    tiles: DataFrame, tile_size: int, fn, schema: str, extra: tuple = ()
+) -> DataFrame:
+    """The per-tile operator loop: :func:`map_rows` over ``(tile_x,
+    tile_y, heights, *extra)`` rows that calls ``fn(tile_x, tile_y,
+    heights, *extra_values)`` with each tile's int16 array
+    (:func:`tile_heights`)."""
+
+    def per_tile(tx, ty, buf, *rest):
+        return fn(tx, ty, tile_heights(buf, tile_size), *rest)
+
+    return map_rows(tiles, ("tile_x", "tile_y", "heights", *extra), per_tile,
+                    schema)
 
 
 # ---------------------------------------------------------------------------

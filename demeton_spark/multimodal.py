@@ -1,6 +1,6 @@
 """Multimodal column operators over opaque ``binary`` payloads with
-typed metadata — all Arrow-batched ``mapInPandas``, no per-row Python
-UDFs.
+typed metadata — per-row kernels on the engine's one Arrow row map
+(``engine.map_rows``), no per-row Python UDFs.
 
 Images: ``decode_images`` and ``verify_images`` read the image table's
 block formats through :func:`demeton_spark.codec.decode_block` — the
@@ -20,12 +20,12 @@ the caption must parse.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from . import codec
+from .engine import _CAPTION_PATTERN, map_rows
 
 DECODED_SCHEMA = (
     "image_id string, w int, h int, fmt string, pixels binary, "
@@ -43,29 +43,21 @@ def decode_images(
     quarantine — at 10^12-row scale one poison row must not kill the
     job)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "image_id", "w", "h", "fmt", "pixels", "caption", "phash")}
-            for r in pdf.itertuples():
-                try:
-                    block = codec.decode_block(r.fmt, r.bytes, int(r.w))
-                except ValueError:
-                    # unknown format or corrupt payload: at 10^12-row
-                    # scale one poison row must not kill the job
-                    if on_error == "skip":
-                        continue
-                    raise
-                out["image_id"].append(r.image_id)
-                out["w"].append(int(r.w))
-                out["h"].append(int(r.h))
-                out["fmt"].append(r.fmt)
-                out["pixels"].append(block.tobytes())
-                out["caption"].append(r.caption)
-                out["phash"].append(int(r.phash))
-            yield pd.DataFrame(out)
+    def decode(image_id, data, w, h, fmt, caption, phash):
+        try:
+            block = codec.decode_block(fmt, data, w)
+        except ValueError:
+            # unknown format or corrupt payload: at 10^12-row scale one
+            # poison row must not kill the job
+            if on_error == "skip":
+                return
+            raise
+        yield image_id, w, h, fmt, block.tobytes(), caption, phash
 
-    return images.mapInPandas(run, schema=DECODED_SCHEMA)
+    return map_rows(
+        images, ("image_id", "bytes", "w", "h", "fmt", "caption", "phash"),
+        decode, DECODED_SCHEMA,
+    )
 
 
 VERIFY_SCHEMA = (
@@ -77,34 +69,28 @@ def verify_images(images: DataFrame) -> DataFrame:
     """Per-row invariant check: sha256-derived pixel hash == phash column
     and the caption parses (input_hint: decoded-pixel parity + caption
     equality)."""
-    from .engine import _CAPTION_PATTERN
-    import re
-
     pat = re.compile(_CAPTION_PATTERN)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, p_ok, c_ok = [], [], []
-            for r in pdf.itertuples():
-                block = codec.decode_block(r.fmt, r.bytes, int(r.w))
-                got = int.from_bytes(
-                    hashlib.sha256(block.tobytes()).digest()[:8],
-                    "big",
-                    signed=True,
-                )
-                ids.append(r.image_id)
-                p_ok.append(got == int(r.phash))
-                c_ok.append(bool(pat.search(r.caption)))
-            yield pd.DataFrame(
-                {"image_id": ids, "phash_ok": p_ok, "caption_ok": c_ok}
-            )
+    def verify(image_id, data, w, fmt, phash, caption):
+        block = codec.decode_block(fmt, data, w)
+        got = int.from_bytes(
+            hashlib.sha256(block.tobytes()).digest()[:8], "big", signed=True
+        )
+        yield image_id, got == phash, bool(pat.search(caption))
 
-    return images.mapInPandas(run, schema=VERIFY_SCHEMA)
+    return map_rows(
+        images, ("image_id", "bytes", "w", "fmt", "phash", "caption"),
+        verify, VERIFY_SCHEMA,
+    )
 
 
 AUDIO_FEATURES_SCHEMA = (
     "audio_id string, n_samples long, sample_rate int, duration_ms double, "
     "rms double, peak int, zero_crossings long, spectral_centroid_hz double"
+)
+#: the ``audio.wav_features`` keys, in AUDIO_FEATURES_SCHEMA order
+_AUDIO_FEATURES = tuple(
+    f.split()[0] for f in AUDIO_FEATURES_SCHEMA.split(", ")[1:]
 )
 
 
@@ -122,24 +108,15 @@ def audio_features(audio: DataFrame, on_error: str = "raise") -> DataFrame:
     """
     from . import audio as audio_codec
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "audio_id", "n_samples", "sample_rate", "duration_ms",
-                "rms", "peak", "zero_crossings", "spectral_centroid_hz")}
-            for r in pdf.itertuples():
-                try:
-                    f = audio_codec.wav_features(bytes(r.bytes))
-                except ValueError:
-                    if on_error == "skip":
-                        continue
-                    raise
-                rows["audio_id"].append(r.audio_id)
-                for k in (
-                    "n_samples", "sample_rate", "duration_ms", "rms",
-                    "peak", "zero_crossings", "spectral_centroid_hz",
-                ):
-                    rows[k].append(f[k])
-            yield pd.DataFrame(rows)
+    def features(audio_id, data):
+        try:
+            f = audio_codec.wav_features(data)
+        except ValueError:
+            if on_error == "skip":
+                return
+            raise
+        yield (audio_id, *(f[k] for k in _AUDIO_FEATURES))
 
-    return audio.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(
+        audio, ("audio_id", "bytes"), features, AUDIO_FEATURES_SCHEMA
+    )

@@ -2832,32 +2832,25 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     HGT byte order breaks the oracle.  Scale: one Arrow decode pass,
     no shuffle at all until the consumer aggregates.
     """
-    import pandas as pd
+    import numpy as np
 
     from demeton_spark.codec import decode_block
+    from demeton_spark.engine import map_rows
 
-    imgs = _contract_images(spark, sf_dir).select("image_id", "bytes", "fmt", "w")
+    def dhash(iid, blob, fmt, w):
+        grid = decode_block(fmt, blob, w)
+        s = grid.astype(np.int64).reshape(5, 4, 5, 4).sum(axis=(1, 3))
+        val = 0
+        for idx, b in enumerate((s[:, :-1] > s[:, 1:]).ravel()):
+            val |= int(b) << idx
+        for idx, b in enumerate((s[:-1, :] > s[1:, :]).ravel()):
+            val |= int(b) << (20 + idx)
+        yield iid, val
 
-    def compute(batches):
-        import numpy as np
-
-        for pdf in batches:
-            ids, hashes = [], []
-            for iid, blob, fmt, w in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"]
-            ):
-                grid = decode_block(fmt, blob, int(w))
-                s = grid.astype(np.int64).reshape(5, 4, 5, 4).sum(axis=(1, 3))
-                val = 0
-                for idx, b in enumerate((s[:, :-1] > s[:, 1:]).ravel()):
-                    val |= int(b) << idx
-                for idx, b in enumerate((s[:-1, :] > s[1:, :]).ravel()):
-                    val |= int(b) << (20 + idx)
-                ids.append(iid)
-                hashes.append(val)
-            yield pd.DataFrame({"image_id": ids, "dhash": hashes})
-
-    return imgs.mapInPandas(compute, "image_id string, dhash bigint")
+    return map_rows(
+        _contract_images(spark, sf_dir), ("image_id", "bytes", "fmt", "w"),
+        dhash, "image_id string, dhash bigint",
+    )
 
 
 def sql_image_dhash(sf: float = 0.01) -> str:
@@ -2966,7 +2959,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     The clips table (multimodal extra — the reference has no audio
     path) carries opaque ``binary`` WAV payloads; the Spark side
     decodes them with the from-scratch RIFF codec
-    (:mod:`demeton_spark.audio`) inside one mapInPandas pass and
+    (:mod:`demeton_spark.audio`) inside one Arrow row map and
     reports the corpus-curation feature set.  The DuckDB oracle cannot
     decode WAV — instead the generator params ``(a, n, rate)``
     materialized next to the bytes let it regenerate the exact integer
@@ -3488,10 +3481,13 @@ _CQ = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60,
 
 def contract_tiles(spark: SparkSession) -> DataFrame:
     """The contract world's ``(tile_x, tile_y, heights)`` table, built
-    by the engine from its image rows (``engine.assemble_tiles``)."""
+    by the engine from its image rows (``engine.assemble_tiles``).  Its
+    36 image rows come from one generator task: a task per core costs
+    more than the rows it makes."""
     from demeton_spark.engine import assemble_tiles, parse_caption
 
-    tiles = assemble_tiles(parse_caption(images_df(spark, _CQ)), _CQ.tile_size)
+    images = images_df(spark, _CQ, num_partitions=1)
+    tiles = assemble_tiles(parse_caption(images), _CQ.tile_size)
     return tiles.select("tile_x", "tile_y", "heights")
 
 
@@ -4166,8 +4162,8 @@ left join chainstats c on c.tx = t.tx and c.ty = t.ty and c.level = lv.level
 # Catalyst-ONLY implementation: the cube-face projection, quadratic ST
 # transform and the per-level Hilbert state machine all compile to JVM
 # whole-stage-codegen expressions (the 2-bit orientation chain unrolls
-# into LEVEL chained CASEs) — zero Python in the hot path, unlike the
-# mapInPandas route demeton_spark.geocell also offers.  The DuckDB twin
+# into LEVEL chained CASEs) — zero Python in the hot path;
+# demeton_spark.geocell holds the same math as numpy.  The DuckDB twin
 # below is generated from the same public tables but through an
 # independent chain of unrolled CTEs.
 

@@ -10,7 +10,7 @@ Reference lifecycle reproduced (SURVEY.md §3.1):
   - per tile: invert corners + 1 px buffer → lon/lat bounds → covering
     DEM tiles (:457-471 + Dem/Funcs.fs:262-308) — this becomes the
     assignment JOIN: a small broadcast relation (raster tile × DEM tile
-    key) against the big DEM tile table, grouped by raster tile
+    key) against the big DEM tile table, reduced per raster tile
   - per pixel: inverse-project the 3×3 pixel neighborhood, bilinear
     heights (Dem/Types.fs:143-155), Horn p/q with per-pixel geodesic
     grid sizes (Shaders/Hillshading.fs:30-60,81-157), shade, Y-flip
@@ -24,28 +24,31 @@ fractions).
 At scale: raster tiles are the parallelism unit (millions of tasks for
 a world render); the assignment relation stays tiny (tens of DEM keys
 per raster tile) and broadcasts, so the only wide operation is the
-groupBy that co-locates each raster tile's covering DEM tiles.
+engine's one tile reduce (``engine.reduce_tiles``, the raster tile as
+its tile key): one grid-position exchange co-locates each raster
+tile's covering DEM tiles.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import codec, kernels, pipeline
-from .engine import render_setup, tile_heights
+from .engine import _schema, reduce_tiles, render_setup, tile_heights
 from .geometry import MapScale, Mercator
 from .tiles import DEM_HEIGHT_NONE, bounds_to_tiles, cells_per_degree
 
-RENDERED_SCHEMA = (
+RENDERED_SCHEMA = _schema(
     "rt_x int, rt_y int, min_x long, min_y long, width int, height int, "
     "png binary, shaded_px long, total_px long, n_dem_tiles int"
 )
+_RENDERED_ARROW = to_arrow_schema(RENDERED_SCHEMA)
 
 RENDER_BAND_ROWS = 128
 
@@ -139,48 +142,43 @@ def render_shaded_raster(
     """
     proj = projection or Mercator(map_scale)
     steps, registry, lvl, _ = render_setup(script, png_level)
-    mbr = raster_mbr(proj, coverage_points_deg)
-    raster_tiles = split_into_tiles(mbr, raster_tile_px)
+    rects = {
+        (rect[0], rect[1]): rect
+        for rect in split_into_tiles(raster_mbr(proj, coverage_points_deg),
+                                     raster_tile_px)
+    }
 
-    # assignment relation: raster tile × covering DEM tile key (driver-
-    # side: |raster tiles| × ~4 rows — broadcast against the DEM table)
-    assign_rows = []
-    for rect in raster_tiles:
-        for tx, ty in covering_dem_tiles(proj, rect, tile_size):
-            assign_rows.append((*rect, tx, ty))
+    # assignment relation: raster tile (as the reduce's tile key) ×
+    # covering DEM tile key (driver-side: |raster tiles| × ~4 rows —
+    # broadcast against the DEM table)
     assign = spark.createDataFrame(
-        assign_rows,
-        "rt_x int, rt_y int, min_x long, min_y long, w int, h int, "
-        "tile_x int, tile_y int",
+        [(xi, yi, tx, ty) for (xi, yi), rect in rects.items()
+         for tx, ty in covering_dem_tiles(proj, rect, tile_size)],
+        "tile_x int, tile_y int, dem_x int, dem_y int",
     )
-    joined = F.broadcast(assign).join(
-        dem_tiles, on=["tile_x", "tile_y"], how="inner"
+    dem = dem_tiles.select(
+        F.col("tile_x").alias("dem_x"), F.col("tile_y").alias("dem_y"),
+        "heights",
     )
+    parts = F.broadcast(assign).join(dem, on=["dem_x", "dem_y"], how="inner")
 
     cpd = cells_per_degree(tile_size, 0)
 
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
-        rect = (
-            int(pdf["rt_x"].iloc[0]), int(pdf["rt_y"].iloc[0]),
-            int(pdf["min_x"].iloc[0]), int(pdf["min_y"].iloc[0]),
-            int(pdf["w"].iloc[0]), int(pdf["h"].iloc[0]),
-        )
-        _, _, min_x, min_y, w, h = rect
+    def render(rt_x: int, rt_y: int, group: pa.Table) -> pa.Table:
+        _, _, min_x, min_y, w, h = rects[rt_x, rt_y]
         # mosaic the group's DEM tiles into one array (J2 merge)
-        txs = pdf["tile_x"].astype(int)
-        tys = pdf["tile_y"].astype(int)
-        cell_x0 = int(txs.min()) * tile_size
-        cell_y0 = int(tys.min()) * tile_size
+        txs, tys, bufs = (group.column(c).to_pylist()
+                          for c in ("dem_x", "dem_y", "heights"))
+        cell_x0 = min(txs) * tile_size
+        cell_y0 = min(tys) * tile_size
         merged = np.full(
-            ((int(tys.max()) - int(tys.min()) + 1) * tile_size,
-             (int(txs.max()) - int(txs.min()) + 1) * tile_size),
+            ((max(tys) - min(tys) + 1) * tile_size,
+             (max(txs) - min(txs) + 1) * tile_size),
             DEM_HEIGHT_NONE, dtype=np.int16,
         )
-        for tx, ty, buf in sorted(
-            zip(txs, tys, pdf["heights"]), key=lambda r: (r[1], r[0])
-        ):
-            oy = (int(ty) * tile_size) - cell_y0
-            ox = (int(tx) * tile_size) - cell_x0
+        for tx, ty, buf in zip(txs, tys, bufs):
+            oy = ty * tile_size - cell_y0
+            ox = tx * tile_size - cell_x0
             merged[oy : oy + tile_size, ox : ox + tile_size] = tile_heights(
                 buf, tile_size
             )
@@ -232,24 +230,20 @@ def render_shaded_raster(
             rgba = pipeline.evaluate_steps(steps, ctx, registry=registry)
             shaded += int(np.count_nonzero(rgba[..., 3]))
             out[h - r1 : h - r0] = rgba[::-1]  # Y-flip to bitmap rows
-        return pd.DataFrame(
-            {
-                "rt_x": [rect[0]],
-                "rt_y": [rect[1]],
-                "min_x": [min_x],
-                "min_y": [min_y],
-                "width": [w],
-                "height": [h],
-                "png": [codec.encode_rgba_scanlines(scan, lvl)],
-                "shaded_px": [shaded],
-                "total_px": [w * h],
-                "n_dem_tiles": [len(pdf)],
-            }
-        )
+        return pa.Table.from_pydict({
+            "rt_x": [rt_x],
+            "rt_y": [rt_y],
+            "min_x": [min_x],
+            "min_y": [min_y],
+            "width": [w],
+            "height": [h],
+            "png": [codec.encode_rgba_scanlines(scan, lvl)],
+            "shaded_px": [shaded],
+            "total_px": [w * h],
+            "n_dem_tiles": [group.num_rows],
+        }, schema=_RENDERED_ARROW)
 
-    return joined.groupBy("rt_x", "rt_y", "min_x", "min_y", "w", "h").applyInPandas(
-        render, schema=RENDERED_SCHEMA
-    )
+    return reduce_tiles(parts, render, RENDERED_SCHEMA)
 
 
 def georef_sidecars(rendered: DataFrame, scale: MapScale) -> DataFrame:

@@ -25,7 +25,6 @@ FIXTURES.md §1.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -182,17 +181,14 @@ def generate_images_pdf(spec: WorldSpec, indices: np.ndarray) -> pd.DataFrame:
 
 
 def images_df(spark, spec: WorldSpec, num_partitions: int | None = None):
-    """Distributed generation: spark.range → mapInPandas (Arrow-batched)."""
-    n = spec.n_rows
+    """Distributed generation: ``spark.range`` → one :func:`_block_row`
+    per row index (``engine.map_rows``)."""
+    from .engine import map_rows  # engine imports WorldSpec from here
+
     parts = num_partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield generate_images_pdf(spec, pdf["id"].to_numpy())
-
-    return (
-        spark.range(0, n, numPartitions=parts)
-        .mapInPandas(gen, schema=IMAGES_SCHEMA)
+    return map_rows(
+        spark.range(0, spec.n_rows, numPartitions=parts), ("id",),
+        lambda i: (_block_row(spec, i),), IMAGES_SCHEMA,
     )
 
 
@@ -247,37 +243,26 @@ def audio_clip_samples(a: int, n: int) -> np.ndarray:
     return (((a * (t + 7) * (t + 13)) % 4001) - 2000).astype(np.int16)
 
 
-def generate_audio_pdf(ids: np.ndarray) -> pd.DataFrame:
-    """One row per clip id: WAV/PCM16-mono payload + the integer
-    generator params the SQL oracle needs to regenerate the series."""
+def audio_clip_row(i: int) -> tuple:
+    """Clip ``i`` as one AUDIO_SCHEMA row: its WAV/PCM16-mono payload
+    plus the integer generator params the SQL oracle needs to
+    regenerate the series."""
     from . import audio as audio_codec
 
-    rows = {"audio_id": [], "a": [], "n": [], "rate": [], "bytes": []}
-    for i in ids:
-        i = int(i)
-        a, n, rate = audio_clip_params(i)
-        wav = audio_codec.encode_wav(audio_clip_samples(a, n), rate)
-        rows["audio_id"].append(f"clip{i:06d}")
-        rows["a"].append(a)
-        rows["n"].append(n)
-        rows["rate"].append(rate)
-        rows["bytes"].append(wav)
-    pdf = pd.DataFrame(rows)
-    for c in ("a", "n", "rate"):
-        pdf[c] = pdf[c].astype("int32")
-    return pdf
+    a, n, rate = audio_clip_params(i)
+    wav = audio_codec.encode_wav(audio_clip_samples(a, n), rate)
+    return f"clip{i:06d}", a, n, rate, wav
 
 
 def audio_df(spark, n_clips: int, num_partitions: int | None = None):
-    """Distributed WAV-clip generation: spark.range → mapInPandas."""
+    """Distributed WAV-clip generation: ``spark.range`` → one
+    :func:`audio_clip_row` per clip index (``engine.map_rows``)."""
+    from .engine import map_rows
+
     parts = num_partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield generate_audio_pdf(pdf["id"].to_numpy())
-
-    return spark.range(0, n_clips, numPartitions=parts).mapInPandas(
-        gen, schema=AUDIO_SCHEMA
+    return map_rows(
+        spark.range(0, n_clips, numPartitions=parts), ("id",),
+        lambda i: (audio_clip_row(i),), AUDIO_SCHEMA,
     )
 
 

@@ -13,7 +13,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from demeton_spark import codec, engine, pyramid, synth
+from demeton_spark import codec, engine, pyramid, render, synth
+from demeton_spark.geometry import MapScale
 from demeton_spark.synth import WorldSpec
 from demeton_spark.tiles import DEM_HEIGHT_NONE, tile_name
 
@@ -303,8 +304,8 @@ def test_tile_paths_run_one_exchange(spark):
     """The engine's defining property: blocks and halo strips reach
     their tile through ONE exchange, which deals each destination tile
     to its task by grid position (``reduce_tiles``), in the default
-    run_hillshade, run_tile_shade, assemble_tiles and the pyramid step
-    alike."""
+    run_hillshade, run_tile_shade, assemble_tiles, the pyramid step and
+    the projected render (raster tiles as the tile key) alike."""
     images = synth.images_df(spark, SPEC)
     shaded = engine.run_hillshade(spark, images, SPEC.tile_size)
     ts = 20
@@ -323,8 +324,12 @@ def test_tile_paths_run_one_exchange(spark):
         "tile_x int, tile_y int, heights binary",
     )
     parents = pyramid.build_pyramid_level(tiles, ts, level=1)
+    rendered = render.render_shaded_raster(
+        spark, tiles, [(0.2, 0.2), (1.8, 0.2), (0.2, 1.8), (1.8, 1.8)],
+        MapScale(5_000_000, 96), tile_size=ts, raster_tile_px=64,
+    )
     for df in (shaded, engine.run_tile_shade(spark, xth, ts), assembled,
-               parents):
+               parents, rendered):
         (exchange,) = _exchanges(df)
         assert exchange.startswith(
             "shufflepartitionidpassthrough(direct_shuffle_partition_id("

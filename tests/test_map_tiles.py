@@ -1,11 +1,12 @@
-"""``engine.map_tiles``, the one Arrow loop of the per-tile operators:
-its rows and schema equal ``fn`` applied tile by tile in plain Python,
-with an extra input column, a nullable output column, tiles that yield
-no rows, and a whole batch that yields none."""
+"""``engine.map_rows``, the one Arrow loop of the per-row operators,
+and ``engine.map_tiles``, its per-tile form: their rows and schema equal
+``fn`` applied row by row in plain Python, with extra input columns, a
+nullable output column, rows that yield no rows, and a whole batch that
+yields none."""
 
 import numpy as np
 
-from demeton_spark.engine import map_tiles, tile_heights
+from demeton_spark.engine import map_rows, map_tiles, tile_heights
 from demeton_spark.tiles import DEM_HEIGHT_NONE
 
 TS = 8
@@ -74,6 +75,36 @@ def test_map_tiles_batch_without_output_rows(spark):
     got = map_tiles(tiles, TS, _make_fn(), SCHEMA, extra=("tag",))
     assert got.collect() == []
     assert got.schema == spark.createDataFrame([], SCHEMA).schema
+
+
+def _make_row_fn():
+    """Ids below 4 (all of the first partition) and ids ≡ 2 (mod 3)
+    yield nothing; ids ≡ 0 (mod 3) yield a second row whose half is
+    null."""
+
+    def fn(tag, i):
+        if i < 4 or i % 3 == 2:
+            return
+        yield i, tag, i / 2
+        if i % 3 == 0:
+            yield -i, tag + "!", None
+
+    return fn
+
+
+def test_map_rows_matches_plain_python(spark):
+    df = spark.range(0, 12, numPartitions=3).selectExpr(
+        "id", "cast(id % 4 as string) as tag"
+    )
+    schema = "id bigint, tag string, half double"
+    fn = _make_row_fn()
+    got = map_rows(df, ("tag", "id"), fn, schema)
+
+    want = [out for i in range(12) for out in fn(str(i % 4), i)]
+    assert {len(list(fn(str(i % 4), i))) for i in range(12)} == {0, 1, 2}
+    assert any(r[2] is None for r in want)  # the nullable column is hit
+    assert got.schema == spark.createDataFrame([], schema).schema
+    assert sorted(map(tuple, got.collect())) == sorted(want)
 
 
 def test_tile_heights_round_trips_the_tile_bytes():
