@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 #: rounds used by the most recent connected_components call (for tests
 #: and round-count telemetry)
 LAST_ROUNDS = 0
+#: round cap of every propagation or star loop
+MAX_ITERATIONS = 25
+#: label-propagation rounds ``"auto"`` runs before it contracts
+STAR_AFTER = 8
 
 
 def connected_components(
@@ -29,9 +33,7 @@ def connected_components(
     edges: DataFrame,
     node_col: str = "node",
     edge_cols: tuple[str, str] = ("a", "b"),
-    max_iterations: int = 25,
     algorithm: str = "auto",
-    star_after: int = 8,
 ) -> DataFrame:
     """Label every node with the min node id of its component.
 
@@ -41,27 +43,23 @@ def connected_components(
 
     ``algorithm``:
       - ``"auto"`` (default) — min-label propagation for up to
-        ``star_after`` rounds (the common low-diameter case: duplicate
+        ``STAR_AFTER`` rounds (the common low-diameter case: duplicate
         clusters, tile adjacency converge in a handful), then, if not
         yet converged, contract nodes to their current labels and
         finish with alternating-star — so a pathological high-diameter
-        graph costs O(star_after + log n) rounds, never O(diameter).
+        graph costs O(STAR_AFTER + log n) rounds, never O(diameter).
       - ``"label"`` — pure min-label propagation, O(diameter) rounds
-        (capped at ``max_iterations``).
+        (capped at ``MAX_ITERATIONS``).
       - ``"star"`` — alternating large-star/small-star contraction
         (Kiveris et al., "Connected Components in MapReduce and
         Beyond"), O(log n) rounds; the scale path for chain- or
         tree-shaped graphs whose diameter grows with n.
     """
     if algorithm == "star":
-        return _cc_star(nodes, edges, node_col, edge_cols, max_iterations)
+        return _cc_star(nodes, edges, node_col, edge_cols)
     if algorithm not in ("label", "auto"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    label_cap = (
-        max_iterations
-        if algorithm == "label"
-        else min(star_after, max_iterations)
-    )
+    label_cap = MAX_ITERATIONS if algorithm == "label" else STAR_AFTER
     global LAST_ROUNDS
     ea, eb = edge_cols
     # Narrow the loop's width by repartitioning the INPUTS once, not by
@@ -113,7 +111,7 @@ def connected_components(
     if converged or algorithm == "label":
         sym.unpersist()
         return labels
-    # auto escape hatch: diameter exceeded star_after rounds.  Contract
+    # auto escape hatch: diameter exceeded STAR_AFTER rounds.  Contract
     # every node to its current label (labels are node ids within the
     # same component, so component minima are preserved), finish the
     # contracted graph with O(log n)-round alternating-star, then map
@@ -131,7 +129,7 @@ def connected_components(
     )
     sym.unpersist()
     lbl_nodes = labels.select(F.col("label").alias("node")).distinct()
-    star = _cc_star(lbl_nodes, contracted, "node", ("a", "b"), max_iterations)
+    star = _cc_star(lbl_nodes, contracted, "node", ("a", "b"))
     LAST_ROUNDS += label_rounds
     final = star.select(
         F.col("node").alias("label"), F.col("label").alias("final")
@@ -186,7 +184,6 @@ def _cc_star(
     edges: DataFrame,
     node_col: str,
     edge_cols: tuple[str, str],
-    max_iterations: int,
 ) -> DataFrame:
     """Alternating large-star/small-star edge contraction to a forest of
     stars rooted at component minima; O(log n) rounds.  Fixpoint is
@@ -201,7 +198,7 @@ def _cc_star(
         .localCheckpoint()
     )
     prev_sig = None
-    for it in range(max_iterations):
+    for it in range(MAX_ITERATIONS):
         LAST_ROUNDS = it + 1
         e = _small_star(_large_star(e)).localCheckpoint()
         sig = e.agg(

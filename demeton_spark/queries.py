@@ -190,6 +190,15 @@ def _knn_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
+def _top_k(df: DataFrame, by: str, k: int, *order) -> DataFrame:
+    """The first ``k`` rows of ``df`` per ``by`` in ``order``, numbered
+    1..k in an int ``rank`` column."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
 # ---------------------------------------------------------------------------
 # deterministic lon/lat derivation shared by Spark + DuckDB
 # (events carry no geo columns; derive off-boundary coords from ids)
@@ -202,15 +211,20 @@ _PTS_SQL = (
 )
 
 
+def event_lonlat_cols():
+    """The ``lon, lat`` columns of ``_PTS_SQL``, also consumed by
+    streaming.geocell_event_counts, so the batch and streaming cell
+    queries place identical points."""
+    lon = F.lit(-179.5) + (F.col("event_id") % 359)
+    lat = F.lit(-89.5) + (F.col("user_id") % 179)
+    return lon, lat
+
+
 def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        (F.lit(-179.5) + (F.col("event_id") % 359)).alias("lon"),
-        (F.lit(-89.5) + (F.col("user_id") % 179)).alias("lat"),
+    lon, lat = event_lonlat_cols()
+    return _t(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value",
+        lon.alias("lon"), lat.alias("lat"),
     )
 
 
@@ -1311,45 +1325,58 @@ group by cluster_id
 """
 
 
-def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprint from md5-derived word hashes."""
-    docs = _t(spark, sf_dir, "documents")
-    words = _words()  # keep duplicates: simhash weights by frequency
-    exploded = docs.select(
+def _simhash(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """``doc_id, simhash``: per document, bit b (b < ``bits``) of
+    ``simhash`` is set where more of the document's words (duplicates
+    counted: SimHash weights by frequency) have bit b set in their md5
+    word hash than not."""
+    exploded = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(words).alias("word"),
+        F.explode(_words()).alias("word"),
     ).select("doc_id", _word_hash(F.col("word"), 0).alias("h"))
-    bits = [
+    votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
         ).alias(f"b{b}")
-        for b in range(16)
+        for b in range(bits)
     ]
-    agg = exploded.groupBy("doc_id").agg(*bits)
+    agg = exploded.groupBy("doc_id").agg(*votes)
     fingerprint = None
-    for b in range(16):
+    for b in range(bits):
         bit = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         fingerprint = bit if fingerprint is None else fingerprint + bit
     return agg.select("doc_id", fingerprint.cast("bigint").alias("simhash"))
 
 
-SQL_DOC_SIMHASH = f"""
-with exploded as (
+def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit SimHash fingerprint from md5-derived word hashes."""
+    return _simhash(spark, sf_dir, 16)
+
+
+def _sql_simhash_votes(bits: int, where: str = "") -> str:
+    """The DuckDB twin of :func:`_simhash` up to its per-bit votes: the
+    ``exploded``, ``e`` and ``bits`` CTEs over ``documents{where}``."""
+    votes = ", ".join(
+        f"sum(case when (h >> {b}) & 1 = 1 then 1 else -1 end) as b{b}"
+        for b in range(bits)
+    )
+    return f"""exploded as (
   select cast(doc_id as bigint) as doc_id,
          unnest(list_filter(string_split(text, ' '), y -> y <> '')) as word
-  from documents
+  from documents{where}
 ),
 e as (
   select doc_id, {_sql_word_hash('word', 0)} as h from exploded
 ),
 bits as (
   select doc_id,
-  {", ".join(
-    f"sum(case when (h >> {b}) & 1 = 1 then 1 else -1 end) as b{b}"
-    for b in range(16)
-  )}
+  {votes}
   from e group by doc_id
-)
+)"""
+
+
+SQL_DOC_SIMHASH = f"""
+with {_sql_simhash_votes(16)}
 select doc_id,
   cast({" + ".join(f"case when b{b} > 0 then {1 << b} else 0 end" for b in range(16))}
     as bigint) as simhash
@@ -1903,6 +1930,39 @@ def _dot(a, b):
     )
 
 
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one vector table every similarity query scores: ``vec_id
+    bigint, v array<double>, norm double``."""
+    emb = _t(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("bigint").alias("vec_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
+    )
+    return emb.select(
+        "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("norm")
+    )
+
+
+def _side(vecs: DataFrame, id_name: str, p: str) -> DataFrame:
+    """``vecs`` as one side of a scored pair: ``vec_id`` renamed to
+    ``id_name``, ``v, norm`` to ``{p}v, {p}norm``."""
+    return vecs.select(
+        F.col("vec_id").alias(id_name),
+        F.col("v").alias(f"{p}v"),
+        F.col("norm").alias(f"{p}norm"),
+    )
+
+
+def _cosine(p: str, q: str = "") -> Column:
+    """The ``cosine`` of the vectors ``{p}v`` and ``{q}v`` (norms
+    ``{p}norm``, ``{q}norm``), rounded to 6 places so that ranks and
+    thresholds agree with the DuckDB twins bit for bit."""
+    return F.round(
+        _dot(F.col(f"{p}v"), F.col(f"{q}v"))
+        / (F.col(f"{p}norm") * F.col(f"{q}norm")),
+        6,
+    ).alias("cosine")
+
+
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 for probe vectors (vec_id < 5).
 
@@ -1910,42 +1970,27 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions — no Python in the loop); rounded before ranking so the
     DuckDB oracle agrees bit-for-bit.
     """
-    from pyspark.sql import Window
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    )
-    with_norm = emb.select(
-        "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("norm")
-    )
-    probes = with_norm.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
+    vecs = _vectors(spark, sf_dir)
     scored = (
-        probes.crossJoin(with_norm.select("vec_id", "v", "norm"))
+        _side(vecs.where(F.col("vec_id") < 5), "query_id", "q")
+        .crossJoin(vecs)
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm")), 6
-            ).alias("cosine"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _cosine("q"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return _top_k(scored, "query_id", 3, F.desc("cosine"), "neighbor_id")
 
 
-SQL_KNN_BRUTEFORCE = """
+_SQL_KNN_TOP3 = """ranked as (
+  select query_id, neighbor_id, cosine,
+         row_number() over (partition by query_id
+                            order by cosine desc, neighbor_id asc) as rank
+  from scored
+)
+select query_id, neighbor_id, cosine, cast(rank as int) as rank
+from ranked where rank <= 3
+"""
+
+SQL_KNN_BRUTEFORCE = f"""
 with emb as (
   select cast(vec_id as bigint) as vec_id,
          list_transform(embedding, x -> cast(x as double)) as v
@@ -1962,34 +2007,12 @@ scored as (
   from normed q, normed n
   where q.vec_id < 5 and n.vec_id <> q.vec_id
 ),
-ranked as (
-  select query_id, neighbor_id, cosine,
-         row_number() over (partition by query_id
-                            order by cosine desc, neighbor_id asc) as rank
-  from scored
-)
-select query_id, neighbor_id, cosine, cast(rank as int) as rank
-from ranked where rank <= 3
-"""
+{_SQL_KNN_TOP3}"""
 
 
-def _normed_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    )
-    bucket = None
-    for i in range(8):
-        bit = F.when(F.col("v")[i] > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return emb.select(
-        "vec_id",
-        "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("norm"),
-        bucket.cast("int").alias("bucket"),
-    )
-
-
+# The DuckDB twin of _vectors.  Its 8-bit `bucket` (the round-1
+# quantizer key) is read by no query; it stays so the oracle text of
+# every embedding query is unchanged.
 _SQL_NORMED_EMB = """
 normed as (
   select cast(vec_id as bigint) as vec_id,
@@ -2036,32 +2059,14 @@ def _emb_bands() -> list[Column]:
     return bands
 
 
-def _emb_verified(normed: DataFrame) -> DataFrame:
+def _emb_verified(vecs: DataFrame) -> DataFrame:
     """Candidates + exact cosine from two equi-joins back to the
-    normalized vectors (vectors don't ride the 10-way band explosion)."""
-    cand = band_pairs(normed, "vec_id", _emb_bands()).toDF("vec_a", "vec_b")
-    sa = normed.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("norm").alias("norm_a"),
-    )
-    sb = normed.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("norm").alias("norm_b"),
-    )
+    vector table (vectors don't ride the 10-way band explosion)."""
+    cand = band_pairs(vecs, "vec_id", _emb_bands()).toDF("vec_a", "vec_b")
     return (
-        cand.join(sa, "vec_a")
-        .join(sb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                6,
-            ).alias("cosine"),
-        )
+        cand.join(_side(vecs, "vec_a", "a"), "vec_a")
+        .join(_side(vecs, "vec_b", "b"), "vec_b")
+        .select("vec_a", "vec_b", _cosine("a", "b"))
     )
 
 
@@ -2072,8 +2077,8 @@ def q_emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the max observed similarity).  The band equi-join prunes the
     O(n²) cross product — the scale path for pairwise similarity over
     10^9 embeddings; `emb_near_dup_recall` is the quality gate."""
-    normed = _normed_emb(spark, sf_dir).localCheckpoint()
-    return _emb_verified(normed).where(F.col("cosine") >= 0.4)
+    vecs = _vectors(spark, sf_dir).localCheckpoint()
+    return _emb_verified(vecs).where(F.col("cosine") >= 0.4)
 
 
 def _sql_emb_band_expr(b: int) -> str:
@@ -2130,9 +2135,9 @@ def q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from .graph import connected_components
 
-        normed = _normed_emb(spark, sf_dir).localCheckpoint()
-        pairs = _emb_verified(normed).where(F.col("cosine") >= 0.4)
-        nodes = normed.select(F.col("vec_id").alias("node"))
+        vecs = _vectors(spark, sf_dir).localCheckpoint()
+        pairs = _emb_verified(vecs).where(F.col("cosine") >= 0.4)
+        nodes = vecs.select(F.col("vec_id").alias("node"))
         cc = connected_components(
             nodes, pairs.select("vec_a", "vec_b"), "node", ("vec_a", "vec_b")
         )
@@ -2172,36 +2177,19 @@ def q_emb_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket — the embedding twin of ``doc_near_dup_recall``.  Cosines
     are identical doubles on both engines (same sequential dot-product
     fold), so plain threshold comparisons are deterministic."""
-    normed = (
-        _normed_emb(spark, sf_dir)
+    vecs = (
+        _vectors(spark, sf_dir)
         .where(F.col("vec_id") < _EMB_RECALL_SLICE)
         .localCheckpoint()
     )
-    sa = normed.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("norm").alias("norm_a"),
-    )
-    sb = normed.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("norm").alias("norm_b"),
-    )
     exact = (
-        sa.crossJoin(sb)
+        _side(vecs, "vec_a", "a")
+        .crossJoin(_side(vecs, "vec_b", "b"))
         .where(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                6,
-            ).alias("cosine"),
-        )
+        .select("vec_a", "vec_b", _cosine("a", "b"))
         .where(F.col("cosine") >= 0.3)
     )
-    cand = band_pairs(normed, "vec_id", _emb_bands()).toDF("vec_a", "vec_b")
+    cand = band_pairs(vecs, "vec_id", _emb_bands()).toDF("vec_a", "vec_b")
     bucket = F.when(F.col("cosine") >= 0.4, F.lit("c>=0.4")).otherwise(
         F.lit("0.3<=c<0.4")
     )
@@ -2255,10 +2243,8 @@ def q_knn_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     band to agree (probability 1-(1-p³)^10), while each probe still
     touches only same-bucket blocks — the output-sensitive 100-TB path.
     """
-    from pyspark.sql import Window
-
-    normed = _normed_emb(spark, sf_dir).localCheckpoint()
-    bands = _explode_bands(normed, "vec_id", _emb_bands())
+    vecs = _vectors(spark, sf_dir).localCheckpoint()
+    bands = _explode_bands(vecs, "vec_id", _emb_bands())
     probe_bands = bands.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "band", "bk"
     )
@@ -2268,35 +2254,12 @@ def q_knn_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    qside = normed.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    nside = normed.select(
-        F.col("vec_id").alias("neighbor_id"), "v", "norm"
-    )
     scored = (
-        cand.join(qside, "query_id")
-        .join(nside, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v"))
-                / (F.col("qnorm") * F.col("norm")),
-                6,
-            ).alias("cosine"),
-        )
+        cand.join(_side(vecs, "query_id", "q"), "query_id")
+        .join(_side(vecs, "neighbor_id", ""), "neighbor_id")
+        .select("query_id", "neighbor_id", _cosine("q"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return _top_k(scored, "query_id", 3, F.desc("cosine"), "neighbor_id")
 
 
 SQL_KNN_IVF_BUCKETED = f"""
@@ -2316,15 +2279,7 @@ scored as (
   join normed q on q.vec_id = c.query_id
   join normed n on n.vec_id = c.neighbor_id
 ),
-ranked as (
-  select query_id, neighbor_id, cosine,
-         row_number() over (partition by query_id
-                            order by cosine desc, neighbor_id asc) as rank
-  from scored
-)
-select query_id, neighbor_id, cosine, cast(rank as int) as rank
-from ranked where rank <= 3
-"""
+{_SQL_KNN_TOP3}"""
 
 
 def q_embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2369,29 +2324,6 @@ _SIMHASH_ND_BITS = 32  # the 16-bit doc_simhash fingerprint is too
 # the operator sub-quadratic while doc_simhash stays as published
 
 
-def _simhash_nd_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit per-doc simhash (all bits of the md5 word hash voted) —
-    the fingerprint shared by ``doc_simhash_near_dup`` and its recall
-    gate."""
-    docs = _t(spark, sf_dir, "documents")
-    exploded = docs.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(_words()).alias("word"),
-    ).select("doc_id", _word_hash(F.col("word"), 0).alias("h"))
-    bits = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(_SIMHASH_ND_BITS)
-    ]
-    agg = exploded.groupBy("doc_id").agg(*bits)
-    fingerprint = None
-    for b in range(_SIMHASH_ND_BITS):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        fingerprint = bit if fingerprint is None else fingerprint + bit
-    return agg.select("doc_id", fingerprint.cast("bigint").alias("simhash"))
-
-
 def _simhash_bands() -> list[Column]:
     """Band b's key: one int ``bk`` packing (b, 4-bit band value)."""
     return [
@@ -2430,38 +2362,30 @@ def q_doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     that scales to 10^9 docs: band buckets shrink with fingerprint
     width, and the verified output is near-linear in true duplicates.
     """
-    sig = _simhash_nd_sig(spark, sf_dir)
+    sig = _simhash(spark, sf_dir, _SIMHASH_ND_BITS)
     return band_pairs(
         sig, "doc_id", _simhash_bands(), carry=("simhash",),
         verify=lambda cand: _within_hamming(cand, "simhash", 2),
     ).toDF("doc_a", "doc_b", "hamming")
 
 
-SQL_DOC_SIMHASH_NEAR_DUP = f"""
-with exploded as (
-  select cast(doc_id as bigint) as doc_id,
-         unnest(list_filter(string_split(text, ' '), y -> y <> '')) as word
-  from documents
-),
-e as (
-  select doc_id, {_sql_word_hash('word', 0)} as h from exploded
-),
-bits as (
-  select doc_id,
-  {", ".join(
-    f"sum(case when (h >> {b}) & 1 = 1 then 1 else -1 end) as b{b}"
-    for b in range(_SIMHASH_ND_BITS)
-  )}
-  from e group by doc_id
-),
+def _sql_simhash_sig(where: str = "") -> str:
+    """:func:`_sql_simhash_votes` at ``_SIMHASH_ND_BITS`` plus the
+    ``sig`` CTE packing the votes into ``doc_id, simhash``."""
+    packed = " + ".join(
+        f"case when b{b} > 0 then {1 << b} else 0 end"
+        for b in range(_SIMHASH_ND_BITS)
+    )
+    return f"""{_sql_simhash_votes(_SIMHASH_ND_BITS, where)},
 sig as (
   select doc_id,
-    cast({" + ".join(
-      f"case when b{b} > 0 then {1 << b} else 0 end"
-      for b in range(_SIMHASH_ND_BITS)
-    )} as bigint) as simhash
+    cast({packed} as bigint) as simhash
   from bits
-),
+)"""
+
+
+SQL_DOC_SIMHASH_NEAR_DUP = f"""
+with {_sql_simhash_sig()},
 banded as (
   select doc_id, simhash,
          cast(((simhash >> (4 * t.b)) & 15) + 16 * t.b as int) as bk
@@ -2488,7 +2412,7 @@ def q_doc_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     production operator.
     """
     sig = (
-        _simhash_nd_sig(spark, sf_dir)
+        _simhash(spark, sf_dir, _SIMHASH_ND_BITS)
         .where(F.col("doc_id") < _RECALL_SLICE)
         .localCheckpoint()
     )
@@ -2513,30 +2437,7 @@ def q_doc_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DOC_SIMHASH_RECALL = f"""
-with exploded as (
-  select cast(doc_id as bigint) as doc_id,
-         unnest(list_filter(string_split(text, ' '), y -> y <> '')) as word
-  from documents where cast(doc_id as bigint) < {_RECALL_SLICE}
-),
-e as (
-  select doc_id, {_sql_word_hash('word', 0)} as h from exploded
-),
-bits as (
-  select doc_id,
-  {", ".join(
-    f"sum(case when (h >> {b}) & 1 = 1 then 1 else -1 end) as b{b}"
-    for b in range(_SIMHASH_ND_BITS)
-  )}
-  from e group by doc_id
-),
-sig as (
-  select doc_id,
-    cast({" + ".join(
-      f"case when b{b} > 0 then {1 << b} else 0 end"
-      for b in range(_SIMHASH_ND_BITS)
-    )} as bigint) as simhash
-  from bits
-),
+with {_sql_simhash_sig(f" where cast(doc_id as bigint) < {_RECALL_SLICE}")},
 exact as (
   select a.doc_id as doc_a, b.doc_id as doc_b,
          cast(bit_count(xor(a.simhash, b.simhash)) as int) as hamming
@@ -3177,13 +3078,6 @@ KMEANS_NPROBE = 2
 _KM_DIMS = 64
 
 
-def _km_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    )
-
-
 def _km_dist(v, cent: list):
     """‖v−c‖² as dot(v,v) − 2·dot(v,c) + dot(c,c): all three terms are
     the same sequential fold DuckDB's list_dot_product runs, so both
@@ -3214,8 +3108,9 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
 
 
 def _km_lloyd(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
-    """Run KMEANS_ITERS Lloyd iterations; return (centroids, emb)."""
-    emb = _km_emb(spark, sf_dir).localCheckpoint()
+    """Run KMEANS_ITERS Lloyd iterations; return (centroids, emb), with
+    ``emb`` the checkpointed :func:`_vectors` table."""
+    emb = _vectors(spark, sf_dir).localCheckpoint()
     init = {
         r["vec_id"]: r["v"]
         for r in emb.where(F.col("vec_id") < KMEANS_K).collect()
@@ -3267,13 +3162,8 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     union of its NPROBE nearest centroids' inverted lists, then ranks
     by exact cosine (top-3).  At scale the lists live as an Iceberg
     table bucketed by cluster; a probe reads NPROBE/K of the corpus."""
-    from pyspark.sql import Window
-
     centroids, emb = _km_fit(spark, sf_dir)
-    normed = emb.select(
-        "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("norm")
-    )
-    lists = normed.select(
+    lists = emb.select(
         "vec_id", "v", "norm",
         _km_assign_col(F.col("v"), centroids).alias("cluster"),
     ).localCheckpoint()
@@ -3282,40 +3172,21 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dists = F.array(
         *[_km_dist(F.col("v"), c) for c in centroids]
     )
-    probe_clusters = (
+    probe_clusters = _top_k(
         probes.select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.col("norm").alias("qnorm"),
             F.posexplode(dists).alias("cluster", "cdist"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("cdist", "cluster")
-            ),
-        )
-        .where(F.col("crank") <= KMEANS_NPROBE)
-        .select("query_id", "qv", "qnorm", "cluster")
-    )
+        ),
+        "query_id", KMEANS_NPROBE, "cdist", "cluster",
+    ).select("query_id", "qv", "qnorm", "cluster")
     scored = (
         probe_clusters.join(lists, "cluster")
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm")),
-                6,
-            ).alias("cosine"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _cosine("q"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_k(scored, "query_id", 3, F.desc("cosine"), "neighbor_id")
 
 
 def q_knn_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4463,20 +4334,13 @@ def _geo_top_k(cand: DataFrame) -> DataFrame:
     ``cand``, ranked by the squared chord between the probe (qx, qy, qz)
     and the point (x, y, z) — monotone in great-circle distance — then
     by id: ``query_id, neighbor_id, chord_sq, rank``."""
-    from pyspark.sql import Window
-
     dx, dy, dz = (F.col(f"q{c}") - F.col(c) for c in "xyz")
-    w = Window.partitionBy("query_id").orderBy("chord_sq", "neighbor_id")
-    return (
-        cand.where(F.col("event_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("event_id").alias("neighbor_id"),
-            (dx * dx + dy * dy + dz * dz).alias("chord_sq"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= GEO_KNN_K)
+    scored = cand.where(F.col("event_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("event_id").alias("neighbor_id"),
+        (dx * dx + dy * dy + dz * dz).alias("chord_sq"),
     )
+    return _top_k(scored, "query_id", GEO_KNN_K, "chord_sq", "neighbor_id")
 
 
 def _geo_pts_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4695,6 +4559,40 @@ def _gpip_edges(spark: SparkSession) -> DataFrame:
     )
 
 
+def _odd_crossings(
+    cand: DataFrame, edges: DataFrame, on: str, keys: list, x: str, y: str,
+    *aggs: Column,
+) -> DataFrame:
+    """The crossing-number point-in-polygon join, all Catalyst: joins
+    the (point, polygon) rows of ``cand`` to the polygons' ``edges``
+    (``on, x1, y1, x2, y2``) on ``on`` and keeps, one row per ``keys``
+    with ``aggs`` and the crossing count ``nc``, the points (``x, y``)
+    whose rightward ray crosses an odd number of edges."""
+    px, py = F.col(x), F.col(y)
+    # Half-open crossing rule, identical to geometry.points_in_polygon
+    # and to the SQL twins.  The when() guard keeps a horizontal edge
+    # (y1 == y2) from planting a divide-by-zero under ANSI mode (the
+    # default in this Spark build, where double x/0 throws): the
+    # straddle conjunct is false there, but correctness must not depend
+    # on And's evaluation order; when the guard misses, px < NULL is
+    # NULL and false & NULL = false.
+    crosses = ((F.col("y1") > py) != (F.col("y2") > py)) & (
+        px
+        < F.when(
+            F.col("y2") != F.col("y1"),
+            (F.col("x2") - F.col("x1")) * (py - F.col("y1"))
+            / (F.col("y2") - F.col("y1"))
+            + F.col("x1"),
+        )
+    )
+    return (
+        cand.join(edges, on)
+        .groupBy(*keys)
+        .agg(*aggs, F.sum(crosses.cast("int")).alias("nc"))
+        .where(F.col("nc") % 2 == 1)
+    )
+
+
 def q_geo_points_in_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial join: per polygon, count/aggregate the event points it
     contains.  Cell-cover equi-join → broadcast edge join →
@@ -4729,34 +4627,10 @@ def q_geo_points_in_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("lon")).cast("int").alias("tx"),
         F.floor(F.col("lat")).cast("int").alias("ty"),
     )
-    cand = pts.join(F.broadcast(cover), ["tx", "ty"])
-    lat, lon = F.col("lat"), F.col("lon")
-    # Half-open crossing rule, identical to geometry.points_in_polygon
-    # and to the SQL twin.  The when() guard keeps a horizontal edge
-    # (y1 == y2) from planting a divide-by-zero under ANSI mode (the
-    # default in this Spark build, where double x/0 throws): the
-    # straddle conjunct is false there, but correctness must not depend
-    # on And's evaluation order; when the guard misses, lon < NULL is
-    # NULL and false & NULL = false — same shape as _pip_parity_counts.
-    crosses = (
-        (F.col("y1") > lat) != (F.col("y2") > lat)
-    ) & (
-        lon
-        < F.when(
-            F.col("y2") != F.col("y1"),
-            (F.col("x2") - F.col("x1")) * (lat - F.col("y1"))
-            / (F.col("y2") - F.col("y1"))
-            + F.col("x1"),
-        )
-    )
-    parity = (
-        cand.join(F.broadcast(_gpip_edges(spark)), "poly_id")
-        .groupBy("event_id", "poly_id")
-        .agg(
-            F.first("value").alias("value"),
-            F.sum(crosses.cast("int")).alias("nc"),
-        )
-        .where(F.col("nc") % 2 == 1)
+    parity = _odd_crossings(
+        pts.join(F.broadcast(cover), ["tx", "ty"]),
+        F.broadcast(_gpip_edges(spark)), "poly_id", ["event_id", "poly_id"],
+        "lon", "lat", F.first("value").alias("value"),
     )
     per_poly = parity.groupBy("poly_id").agg(
         F.count("*").alias("_n"), F.sum("value").alias("_sv")
@@ -5097,38 +4971,6 @@ def _ppoly_cover_df(spark: SparkSession, polys, id_col: str) -> DataFrame:
     )
 
 
-def _pip_parity_counts(
-    verts: DataFrame, edges: DataFrame, pairs: DataFrame,
-    vid: str, eid: str, out_name: str,
-) -> DataFrame:
-    """Per candidate pair: how many vertices of ``vid``'s polygon fall
-    inside ``eid``'s polygon (crossing-number parity over the edge
-    table, all Catalyst)."""
-    cand = verts.join(pairs, vid)
-    # the when() guard keeps a horizontal edge (y1 == y2) from planting a
-    # divide-by-zero under ANSI mode: the straddle conjunct is false there,
-    # but correctness must not depend on And's evaluation order; when the
-    # guard misses, vx < NULL is NULL and false & NULL = false
-    crosses = (
-        (F.col("y1") > F.col("vy")) != (F.col("y2") > F.col("vy"))
-    ) & (
-        F.col("vx")
-        < F.when(
-            F.col("y2") != F.col("y1"),
-            (F.col("x2") - F.col("x1")) * (F.col("vy") - F.col("y1"))
-            / (F.col("y2") - F.col("y1"))
-            + F.col("x1"),
-        )
-    )
-    parity = (
-        cand.join(edges, eid)
-        .groupBy(vid, eid, "vi")
-        .agg(F.sum(crosses.cast("int")).alias("nc"))
-        .where(F.col("nc") % 2 == 1)
-    )
-    return parity.groupBy(vid, eid).agg(F.count("*").alias(out_name))
-
-
 def q_geo_polygon_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa, pb = _ppoly_sets()
     pairs = (
@@ -5142,8 +4984,16 @@ def q_geo_polygon_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = _ppoly_edges_df(spark, pa, "a_id")
     eb = _ppoly_edges_df(spark, pb, "b_id")
 
-    a_in_b = _pip_parity_counts(va, eb, pairs, "a_id", "b_id", "n_av_in_b")
-    b_in_a = _pip_parity_counts(vb, ea, pairs, "b_id", "a_id", "n_bv_in_a")
+    def inside(verts, edges, vid, eid, out_name):
+        """Per candidate pair: how many vertices of ``vid``'s polygon
+        fall inside ``eid``'s polygon."""
+        odd = _odd_crossings(
+            verts.join(pairs, vid), edges, eid, [vid, eid, "vi"], "vx", "vy"
+        )
+        return odd.groupBy(vid, eid).agg(F.count("*").alias(out_name))
+
+    a_in_b = inside(va, eb, "a_id", "b_id", "n_av_in_b")
+    b_in_a = inside(vb, ea, "b_id", "a_id", "n_bv_in_a")
 
     # proper edge crossings: strict orientation sign flips on both
     # segments (Computational Geometry in C, p. 30 — the same test

@@ -90,14 +90,11 @@ def geocell_event_counts(
     shape of the north rule's "assign every row via the cell index":
     watermark bounds the state store, and the (window, cell) key is
     what a 10^12-row firehose shards its state on."""
-    from .queries import _with_geocell
+    from .queries import _with_geocell, event_lonlat_cols
 
-    ts = F.col("ts").cast("timestamp")
-    pts = events.withColumn("ts", ts).select(
-        "ts",
-        "value",
-        (F.lit(-179.5) + (F.col("event_id") % 359)).alias("lon"),
-        (F.lit(-89.5) + (F.col("user_id") % 179)).alias("lat"),
+    lon, lat = event_lonlat_cols()
+    pts = events.withColumn("ts", F.col("ts").cast("timestamp")).select(
+        "ts", "value", lon.alias("lon"), lat.alias("lat")
     )
     cells = _with_geocell(pts, level, keep=["ts", "value"])
     return (

@@ -74,15 +74,15 @@ def test_star_isolated_nodes_self_label(spark):
 
 def test_auto_bounded_rounds_on_chain(spark):
     """The default (auto) path must not pay O(diameter) rounds: after
-    star_after label rounds it contracts and finishes with
+    STAR_AFTER label rounds it contracts and finishes with
     alternating-star, so a 1000-node chain stays within
-    star_after + O(log n) total rounds and still labels correctly."""
+    STAR_AFTER + O(log n) total rounds and still labels correctly."""
     n = 1000
     nodes = list(range(n))
     edges = [(i, i + 1) for i in range(n - 1)]
     got, rounds = _cc(spark, nodes, edges, "auto")
     assert got == {i: 0 for i in range(n)}
-    assert rounds <= 8 + 12  # star_after + ~log2 rounds + confirmation
+    assert rounds <= 8 + 12  # STAR_AFTER + ~log2 rounds + confirmation
 
 
 def test_auto_matches_label_on_random_graphs(spark):

@@ -41,7 +41,7 @@ def test_verify_images_invariant(spark, images):
 
 
 def test_audio_features_end_to_end(spark):
-    """audio_features decodes real WAV/PCM payloads via mapInPandas and
+    """audio_features decodes real WAV/PCM payloads via engine.map_rows and
     quarantines corrupt containers under on_error='skip'."""
     from demeton_spark import audio as audio_codec
 
