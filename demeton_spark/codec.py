@@ -578,7 +578,6 @@ def encode_tiff_gray16(
     heights_south_up: np.ndarray,
     compression: int = _TIFF_COMPRESSION_NONE,
     predictor: int = 1,
-    zlevel: int = 6,
 ) -> bytes:
     """Minimal little-endian int16 TIFF (one strip), rows north-first —
     the inverse of :func:`decode_tiff_gray16` for tests and sinks.
@@ -599,7 +598,7 @@ def encode_tiff_gray16(
         raise ValueError(f"unsupported predictor {predictor}")
     payload = payload_arr.tobytes()
     if compression in (_TIFF_COMPRESSION_DEFLATE, _TIFF_COMPRESSION_DEFLATE_OLD):
-        payload = zlib.compress(payload, zlevel)
+        payload = zlib.compress(payload, 6)
     elif compression == _TIFF_COMPRESSION_LZW:
         payload = _lzw_encode(payload)
     elif compression == _TIFF_COMPRESSION_PACKBITS:

@@ -27,8 +27,9 @@ from .tiles import DEM_HEIGHT_NONE
 TRANSPARENT = (0, 0, 0, 0)
 
 
-def rgba(r: int, g: int, b: int, a: int = 255) -> tuple[int, int, int, int]:
-    return (int(r) & 0xFF, int(g) & 0xFF, int(b) & 0xFF, int(a) & 0xFF)
+def rgba(r: int, g: int, b: int) -> tuple[int, int, int, int]:
+    """An opaque color."""
+    return (int(r) & 0xFF, int(g) & 0xFF, int(b) & 0xFF, 255)
 
 
 def pack(color: tuple[int, int, int, int]) -> int:

@@ -64,7 +64,6 @@ reduce tasks.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -84,7 +83,9 @@ from .synth import WorldSpec
 from .tiles import (
     DEM_HEIGHT_NONE,
     cells_per_degree,
+    tile_cover,
     tile_name as _tile_name,
+    tile_xy_cols,
 )
 
 # ---------------------------------------------------------------------------
@@ -115,12 +116,11 @@ def parse_caption(images: DataFrame) -> DataFrame:
     """
     images = images.where(F.col("caption").rlike(_CAPTION_PATTERN))
     name = F.regexp_extract("caption", _CAPTION_PATTERN, 1)
-    lat_sign = F.when(F.substring(name, 1, 1) == "N", 1).otherwise(-1)
-    lon_sign = F.when(F.substring(name, 4, 1) == "E", 1).otherwise(-1)
+    tile_x, tile_y = tile_xy_cols(name)
     return images.withColumns({
         "tile_name": name,
-        "tile_y": (lat_sign * F.substring(name, 2, 2).cast("int")).cast("int"),
-        "tile_x": (lon_sign * F.substring(name, 5, 3).cast("int")).cast("int"),
+        "tile_y": tile_y,
+        "tile_x": tile_x,
         "bx": F.regexp_extract("caption", _CAPTION_PATTERN, 2).cast("int"),
         "by": F.regexp_extract("caption", _CAPTION_PATTERN, 3).cast("int"),
     })
@@ -306,20 +306,13 @@ def hillshade_parts(
 # 3. compose: the one stitch + strip placement (J2 mosaic)
 # ---------------------------------------------------------------------------
 
-def _columns(parts: pa.Table | pd.DataFrame, names) -> list[list]:
-    """``names`` columns of an Arrow table or pandas frame, as lists."""
-    if isinstance(parts, pa.Table):
-        return [parts.column(c).to_pylist() for c in names]
-    return [parts[c].tolist() for c in names]
-
-
 def compose_padded(
-    parts: pa.Table | pd.DataFrame, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
+    parts: pa.Table, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
 ) -> tuple[np.ndarray | None, int]:
-    """One tile's parts (PART_SCHEMA rows, as an Arrow table or a pandas
-    frame) → ``(padded, n_blocks)``: the (ts+2k)² int16 array with its
-    blocks stitched into the interior and its neighbors' strips in the
-    k-px halo.
+    """One tile's parts (PART_SCHEMA rows as an Arrow table, or any
+    frame ``pa.table`` reads) → ``(padded, n_blocks)``: the (ts+2k)²
+    int16 array with its blocks stitched into the interior and its
+    neighbors' strips in the k-px halo.
 
     Spark group order is nondeterministic; the reference's merge
     (Dem/Funcs.fs:357-388, §4.3) overwrites in ``(by, bx, image_id)``
@@ -333,8 +326,10 @@ def compose_padded(
     the missing-neighbor value: DEM_HEIGHT_NONE for heights, 0 for
     XTH-packed tiles (offset 0 decodes to missing, with no water bit).
     """
-    part, bxs, bys, ids, ws, hs, fmts, data = _columns(
-        parts, ("part", "bx", "by", "image_id", "w", "h", "fmt", "data"))
+    parts = pa.table(parts)
+    part, bxs, bys, ids, ws, hs, fmts, data = (
+        parts.column(c).to_pylist()
+        for c in ("part", "bx", "by", "image_id", "w", "h", "fmt", "data"))
     n_blocks = part.count("B")
     if n_blocks == 0:
         return None, 0
@@ -674,7 +669,6 @@ def run_tile_shade(
     xth_tiles: DataFrame,
     tile_size: int,
     script: str = TILE_SHADE_SCRIPT,
-    png_level: int | None = None,
 ) -> DataFrame:
     """XTH-packed tiles (heights + water bit) → shaded PNG tiles.
 
@@ -686,7 +680,7 @@ def run_tile_shade(
     shade time, and the water mask feeds the water/wateroutline shader
     steps.
     """
-    steps, registry, lvl, _ = render_setup(script, png_level)
+    steps, registry, lvl, _ = render_setup(script)
     blocks = xth_tiles.select(
         "tile_x", "tile_y", F.lit(0).alias("bx"), F.lit(0).alias("by"),
         F.lit("").alias("image_id"), F.lit(tile_size).alias("w"),
@@ -719,8 +713,8 @@ def run_tile_shade(
 
 def clip_cover(clip_polygon) -> tuple[np.ndarray | None, tuple | None]:
     """Validate a ``(lon, lat)`` clip polygon; return it as an array
-    with its bbox tile cover ``(tx0, ty0, tx1, ty1)`` (inclusive,
-    floor/ceil−1 rule, Dem/Funcs.fs:284-298), or ``(None, None)``.
+    with its bbox tile cover ``(tx0, ty0, tx1, ty1)``
+    (:func:`tiles.tile_cover`), or ``(None, None)``.
 
     Validation runs before any work is scheduled: a self-intersecting
     polygon would silently mis-clip under the crossing-number rule
@@ -733,11 +727,7 @@ def clip_cover(clip_polygon) -> tuple[np.ndarray | None, tuple | None]:
     status = polygon_self_intersects(poly)
     if status != "non_intersecting":
         raise ValueError(f"clip_polygon rejected: {status}")
-    return poly, (
-        int(math.floor(poly[:, 0].min())), int(math.floor(poly[:, 1].min())),
-        int(math.ceil(poly[:, 0].max())) - 1,
-        int(math.ceil(poly[:, 1].max())) - 1,
-    )
+    return poly, tile_cover(*poly.min(axis=0), *poly.max(axis=0))
 
 
 def in_tiles(tx0: int, ty0: int, tx1: int, ty1: int) -> Column:

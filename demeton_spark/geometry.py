@@ -26,6 +26,9 @@ INCHES_PER_METER = 39.3701  # Projections/Common.fs:16
 #: Mercator latitude clamp in radians (Mercator.fs:8-12).
 MERCATOR_MAX_LAT = 1.48442222974533
 
+#: the one floating-point tolerance of the angle and segment predicates
+TOLERANCE = 1e-10
+
 
 def deg_to_rad(deg):
     return np.multiply(deg, math.pi / 180.0)
@@ -51,17 +54,17 @@ def difference_between_angles(angle1, angle2, normalizer):
     return np.where(diff > normalizer / 2.0, normalizer - diff, diff)
 
 
-def mean_of_angles(angles: np.ndarray, tolerance: float = 1e-10) -> float:
+def mean_of_angles(angles: np.ndarray) -> float:
     """Circular mean (Geometry/Common.fs:139-156); NaN when undefined."""
     angles = np.asarray(angles, dtype=np.float64)
     if angles.size == 0:
         return float("nan")
     total_x = float(np.sum(np.cos(angles)))
     total_y = float(np.sum(np.sin(angles)))
-    if abs(total_x) < tolerance and abs(total_y) < tolerance:
+    if abs(total_x) < TOLERANCE and abs(total_y) < TOLERANCE:
         return float("nan")
     mean = math.atan2(total_y, total_x)
-    return 0.0 if abs(mean) < tolerance else mean
+    return 0.0 if abs(mean) < TOLERANCE else mean
 
 
 def geodetic_distance_approx(lon1, lat1, lon2, lat2):
@@ -196,8 +199,8 @@ def area2(p1, p2, p3) -> float:
     )
 
 
-def _left(tolerance: float, a2: float) -> int:
-    if abs(a2) <= tolerance:
+def _left(a2: float) -> int:
+    if abs(a2) <= TOLERANCE:
         return _COLLINEAR
     return _LEFT if a2 > 0.0 else _RIGHT
 
@@ -211,7 +214,7 @@ def _between(left_result: int, p1, p2, p3) -> bool:
     return p1[1] <= p3[1] <= p2[1] or p1[1] >= p3[1] >= p2[1]
 
 
-def segments_intersection_kind(seg1, seg2, tolerance: float = 1e-10) -> str:
+def segments_intersection_kind(seg1, seg2) -> str:
     """Full O'Rourke intersection classification of two segments.
 
     Mirrors doLineSegmentsIntersect (LineSegmentsIntersection.fs:38-124)
@@ -231,10 +234,10 @@ def segments_intersection_kind(seg1, seg2, tolerance: float = 1e-10) -> str:
     if v13 or v24 or v14 or v23:
         return SEG_SHARING_ENDPOINT
 
-    abc = _left(tolerance, area2(p1, p2, p3))
-    abd = _left(tolerance, area2(p1, p2, p4))
-    cda = _left(tolerance, area2(p3, p4, p1))
-    cdb = _left(tolerance, area2(p3, p4, p2))
+    abc = _left(area2(p1, p2, p3))
+    abd = _left(area2(p1, p2, p4))
+    cda = _left(area2(p3, p4, p1))
+    cdb = _left(area2(p3, p4, p2))
     p3_col, p4_col = abc == _COLLINEAR, abd == _COLLINEAR
     p1_col, p2_col = cda == _COLLINEAR, cdb == _COLLINEAR
 
@@ -270,11 +273,11 @@ def segments_intersection_kind(seg1, seg2, tolerance: float = 1e-10) -> str:
     return SEG_ENDPOINT_ON_OTHER
 
 
-def find_segments_intersection(seg1, seg2, tolerance: float = 1e-10):
+def find_segments_intersection(seg1, seg2):
     """Intersection point (if any) of two segments: (kind, point|None).
 
     Parametric O'Rourke form (LineSegmentsIntersection.fs:146-211): solve
-    for s, t; classify each against [0, 1] with tolerance; parallel
+    for s, t; classify each against [0, 1] within ``TOLERANCE``; parallel
     segments fall back to the collinear-overlap analysis.
     """
     (x1, y1), (x2, y2) = seg1
@@ -283,7 +286,7 @@ def find_segments_intersection(seg1, seg2, tolerance: float = 1e-10):
     if p1 == p2 or p3 == p4:
         return SEG_ZERO_LENGTH, None
     denom = x1 * (y4 - y3) + x2 * (y3 - y4) + x4 * (y2 - y1) + x3 * (y1 - y2)
-    if abs(denom) <= tolerance:
+    if abs(denom) <= TOLERANCE:
         # parallel (LineSegmentsIntersection.fs:146-169)
         if (p1 == p3 and p2 == p4) or (p1 == p4 and p2 == p3):
             return SEG_COLLINEAR_OVERLAPPING, p1
@@ -291,7 +294,7 @@ def find_segments_intersection(seg1, seg2, tolerance: float = 1e-10):
             return SEG_SHARING_ENDPOINT, p3
         if p1 == p4 or p2 == p4:
             return SEG_SHARING_ENDPOINT, p4
-        if _left(tolerance, area2(p1, p2, p3)) != _COLLINEAR:
+        if _left(area2(p1, p2, p3)) != _COLLINEAR:
             return SEG_NOT_INTERSECT, None
         for seg, pt in (((p1, p2), p3), ((p1, p2), p4),
                         ((p3, p4), p1), ((p3, p4), p2)):
@@ -304,7 +307,7 @@ def find_segments_intersection(seg1, seg2, tolerance: float = 1e-10):
 
     def status01(v):
         # TolerantMath.determineValue01Status: endpoint / interior / outside
-        if abs(v) <= tolerance or abs(v - 1.0) <= tolerance:
+        if abs(v) <= TOLERANCE or abs(v - 1.0) <= TOLERANCE:
             return "endpoint"
         return "interior" if 0.0 < v < 1.0 else "outside"
 
@@ -319,7 +322,7 @@ def find_segments_intersection(seg1, seg2, tolerance: float = 1e-10):
     return SEG_ENDPOINT_ON_OTHER, point
 
 
-def _neighbor_spike(seg1, seg2, tolerance: float) -> bool:
+def _neighbor_spike(seg1, seg2) -> bool:
     """Adjacent polygon edges double back on each other: they share a
     vertex q and their free endpoints lie on the SAME ray from q
     (collinear, positive dot) — e.g. the (0,0)→(4,0)→(2,0) spike."""
@@ -333,7 +336,7 @@ def _neighbor_spike(seg1, seg2, tolerance: float) -> bool:
         return False
     a = pts1[0] if pts1[1] == shared else pts1[1]
     b = pts2[0] if pts2[1] == shared else pts2[1]
-    if abs(area2(shared, a, b)) > tolerance:
+    if abs(area2(shared, a, b)) > TOLERANCE:
         return False
     dot = (a[0] - shared[0]) * (b[0] - shared[0]) + (a[1] - shared[1]) * (
         b[1] - shared[1]
@@ -341,7 +344,7 @@ def _neighbor_spike(seg1, seg2, tolerance: float) -> bool:
     return dot > 0.0
 
 
-def polygon_self_intersects(vertices, tolerance: float = 1e-10):
+def polygon_self_intersects(vertices):
     """Shamos-Hoey-style sweep detecting polygon self-intersection.
 
     Returns "intersecting" / "non_intersecting" / "invalid" (< 3
@@ -394,10 +397,10 @@ def polygon_self_intersects(vertices, tolerance: float = 1e-10):
                     # neighbors share a vertex q; degenerate iff the
                     # two free endpoints double back along the same ray
                     # from q (collinear with positive dot product)
-                    if _neighbor_spike(seg, oseg, tolerance):
+                    if _neighbor_spike(seg, oseg):
                         return "intersecting"
                     continue
-                k = segments_intersection_kind(seg, oseg, tolerance)
+                k = segments_intersection_kind(seg, oseg)
                 if k in (
                     SEG_INTERSECT_PROPERLY,
                     SEG_COLLINEAR_OVERLAPPING,

@@ -125,14 +125,19 @@ def isoline_segments(heights: np.ndarray, level: float) -> np.ndarray:
     return out[order]
 
 
-def chain_segments(segments: np.ndarray, tol: float = 1e-9) -> list[np.ndarray]:
+#: endpoints of two segments closer than this are the same chain point
+CHAIN_TOL = 1e-9
+
+
+def chain_segments(segments: np.ndarray) -> list[np.ndarray]:
     """Join segments into polylines (closed loops or clipped chains —
     the reference's ClosedIsoline / ClippedIsoline taxonomy,
     MarchingSquares.fs:47-68).  Returns a list of (K, 2) point arrays;
     closed loops repeat their first point at the end."""
     if len(segments) == 0:
         return []
-    key = lambda p: (round(p[0] / tol) * tol, round(p[1] / tol) * tol)  # noqa: E731
+    key = lambda p: (round(p[0] / CHAIN_TOL) * CHAIN_TOL,  # noqa: E731
+                     round(p[1] / CHAIN_TOL) * CHAIN_TOL)
     # segments are emitted with case-table orientation, so a chain may
     # traverse a segment in either direction: index both endpoints
     by_end: dict[tuple, list[int]] = {}
@@ -272,7 +277,6 @@ _MOVE_DIRS = {
     (0, 1): "N", (1, 1): "NE", (1, 0): "E", (1, -1): "SE",
     (0, -1): "S", (-1, -1): "SW", (-1, 0): "W", (-1, 1): "NW",
 }
-_DIR_VECS = {v: k for k, v in _MOVE_DIRS.items()}
 #: doubled-coordinate step length per direction: straight moves hop two
 #: units (edge midpoint → opposite edge midpoint), diagonals one
 _DIR_STEP = {

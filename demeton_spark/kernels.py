@@ -34,7 +34,6 @@ from .colors import ColorScale, mix_colors_np
 from .geometry import (
     EARTH_RADIUS_M,
     deg_to_rad,
-    difference_between_angles,
     geodetic_distance_approx,
     normalize_angle,
 )

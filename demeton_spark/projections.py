@@ -254,18 +254,17 @@ def min_lon_lat_delta(
     width: int,
     height: int,
     invert,
-    samples: int = 64,
 ) -> float:
     """Exact minimum over a sample grid of the per-pixel lon/lat delta
     (MinLonLatDelta.fs:31-47 energy, :80-109 driver).  ``invert`` is a
     vectorized ``(x, y) -> (lon, lat, valid)``.
 
     Replaces the reference's simulated annealing with a direct vectorized
-    scan: ``samples``² evaluations is cheaper than the annealing loop and
-    has no stochastic miss risk.
+    scan: 64² evaluations is cheaper than the annealing loop and has no
+    stochastic miss risk.
     """
-    xs = np.linspace(rect_min_x, rect_min_x + width - 1, samples)
-    ys = np.linspace(rect_min_y, rect_min_y + height - 1, samples)
+    xs = np.linspace(rect_min_x, rect_min_x + width - 1, 64)
+    ys = np.linspace(rect_min_y, rect_min_y + height - 1, 64)
     gx, gy = np.meshgrid(xs, ys)
     lon0, lat0, v0 = invert(gx, gy)
     lon1, lat1, v1 = invert(gx + 1, gy + 1)

@@ -39,9 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .synth import WorldSpec, images_df
-from .tiles import tile_name_sql
-
-SRTM_TS = 3600  # level-0 cells per degree
+from .tiles import SRTM_TILE_SIZE, tile_name_col, tile_name_sql
 
 # Tutorial bbox (reference docs/Tutorial.md:28) used for the cover query
 BBOX = (13.49437, 46.159668, 14.236633, 46.543914)
@@ -234,16 +232,9 @@ def q_tile_assign_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts(spark, sf_dir)
     tx = F.floor(F.col("lon")).cast("int")
     ty = F.floor(F.col("lat")).cast("int")
-    lat_sign = F.when(ty >= 0, F.lit("N")).otherwise(F.lit("S"))
-    lon_sign = F.when(tx >= 0, F.lit("E")).otherwise(F.lit("W"))
-    name = F.concat(
-        lat_sign,
-        F.lpad(F.abs(ty).cast("string"), 2, "0"),
-        lon_sign,
-        F.lpad(F.abs(tx).cast("string"), 3, "0"),
-    )
     return (
-        pts.select(tx.alias("tile_x"), ty.alias("tile_y"), name.alias("tile_name"))
+        pts.select(tx.alias("tile_x"), ty.alias("tile_y"),
+                   tile_name_col(0, tx, ty).alias("tile_name"))
         .groupBy("tile_x", "tile_y", "tile_name")
         .agg(F.count("*").alias("n_events"))
     )
@@ -274,8 +265,6 @@ def q_bbox_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
         levels.withColumn("tile_x", F.explode(F.sequence(min_tx, max_tx)))
         .withColumn("tile_y", F.explode(F.sequence(min_ty, max_ty)))
     )
-    from .tiles import tile_name_col
-
     return df.select(
         "level",
         "tile_x",
@@ -348,8 +337,8 @@ group by 1, 2, 3
 
 def q_tile_mbr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts(spark, sf_dir)
-    cell_x = F.floor(F.col("lon") * SRTM_TS).cast("bigint")
-    cell_y = F.floor(F.col("lat") * SRTM_TS).cast("bigint")
+    cell_x = F.floor(F.col("lon") * SRTM_TILE_SIZE).cast("bigint")
+    cell_y = F.floor(F.col("lat") * SRTM_TILE_SIZE).cast("bigint")
     return (
         pts.select(
             F.floor(F.col("lon")).cast("int").alias("tile_x"),
@@ -371,10 +360,10 @@ SQL_TILE_MBR = f"""
 with pts as ({_PTS_SQL})
 select cast(floor(lon) as int) as tile_x,
        cast(floor(lat) as int) as tile_y,
-       cast(min(floor(lon * {SRTM_TS})) as bigint) as min_cell_x,
-       cast(min(floor(lat * {SRTM_TS})) as bigint) as min_cell_y,
-       cast(max(floor(lon * {SRTM_TS})) as bigint) as max_cell_x,
-       cast(max(floor(lat * {SRTM_TS})) as bigint) as max_cell_y
+       cast(min(floor(lon * {SRTM_TILE_SIZE})) as bigint) as min_cell_x,
+       cast(min(floor(lat * {SRTM_TILE_SIZE})) as bigint) as min_cell_y,
+       cast(max(floor(lon * {SRTM_TILE_SIZE})) as bigint) as max_cell_x,
+       cast(max(floor(lat * {SRTM_TILE_SIZE})) as bigint) as max_cell_y
 from pts
 group by 1, 2
 """
@@ -470,8 +459,8 @@ def q_tile_metadata_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tile_y",
             F.col("tile_x").cast("double").alias("min_lon"),
             F.col("tile_y").cast("double").alias("min_lat"),
-            (F.col("tile_x") * SRTM_TS).cast("bigint").alias("min_cell_x"),
-            (F.col("tile_y") * SRTM_TS).cast("bigint").alias("min_cell_y"),
+            (F.col("tile_x") * SRTM_TILE_SIZE).cast("bigint").alias("min_cell_x"),
+            (F.col("tile_y") * SRTM_TILE_SIZE).cast("bigint").alias("min_cell_y"),
         )
     )
     return assigned.join(F.broadcast(dim), on=["tile_x", "tile_y"], how="inner").select(
@@ -492,8 +481,8 @@ assigned as (
 dim as (
   select cast(x.tile_x as int) as tile_x, cast(y.tile_y as int) as tile_y,
          cast(x.tile_x as double) as min_lon, cast(y.tile_y as double) as min_lat,
-         cast(x.tile_x * {SRTM_TS} as bigint) as min_cell_x,
-         cast(y.tile_y * {SRTM_TS} as bigint) as min_cell_y
+         cast(x.tile_x * {SRTM_TILE_SIZE} as bigint) as min_cell_x,
+         cast(y.tile_y * {SRTM_TILE_SIZE} as bigint) as min_cell_y
   from (select unnest(generate_series(-180, 179)) as tile_x) x,
        (select unnest(generate_series(-90, 89)) as tile_y) y
 )
@@ -4043,7 +4032,6 @@ GEOCELL_PARENT_LEVEL = 5
 
 # Hilbert tables (public S2 scheme; see demeton_spark/geocell.py)
 _GC_IJ_TO_POS = (0, 1, 3, 2, 0, 3, 1, 2, 2, 3, 1, 0, 2, 1, 3, 0)
-_GC_POS_TO_ORIENT = (1, 0, 0, 3)
 
 
 def _with_geocell(

@@ -95,18 +95,13 @@ def split_into_tiles(mbr, tile_px: int):
     return tiles
 
 
-def covering_dem_tiles(proj, rect, tile_size: int, buffer_px: int = 1):
-    """Invert the raster rect corners (+buffer) → lon/lat bounds →
+def covering_dem_tiles(proj, rect, tile_size: int):
+    """Invert the raster rect corners (+1 px buffer) → lon/lat bounds →
     covering level-0 DEM tile keys (ShadeCommand.fs:457-471)."""
     xi, yi, min_x, min_y, w, h = rect
-    xs = np.array(
-        [min_x - buffer_px, min_x - buffer_px,
-         min_x + w + buffer_px, min_x + w + buffer_px], dtype=np.float64
-    )
-    ys = np.array(
-        [min_y - buffer_px, min_y + h + buffer_px,
-         min_y - buffer_px, min_y + h + buffer_px], dtype=np.float64
-    )
+    x0, y0, x1, y1 = min_x - 1, min_y - 1, min_x + w + 1, min_y + h + 1
+    xs = np.array([x0, x0, x1, x1], dtype=np.float64)
+    ys = np.array([y0, y1, y0, y1], dtype=np.float64)
     lon, lat = _invert(proj, xs, ys)
     lon_deg, lat_deg = np.degrees(lon), np.degrees(lat)
     return bounds_to_tiles(
@@ -132,7 +127,6 @@ def render_shaded_raster(
     tile_size: int = 3600,
     raster_tile_px: int = 1000,
     projection=None,
-    png_level: int | None = None,
 ) -> DataFrame:
     """The ``shade`` command: DEM tile table + bbox + scale → projected
     shaded raster tiles.
@@ -141,7 +135,7 @@ def render_shaded_raster(
     ``tile_size`` cells per degree.  Returns one row per raster tile.
     """
     proj = projection or Mercator(map_scale)
-    steps, registry, lvl, _ = render_setup(script, png_level)
+    steps, registry, lvl, _ = render_setup(script)
     rects = {
         (rect[0], rect[1]): rect
         for rect in split_into_tiles(raster_mbr(proj, coverage_points_deg),

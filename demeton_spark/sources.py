@@ -1,23 +1,12 @@
 """Table sources/sinks: the engine's storage-format boundary.
 
 The production posture (BASELINE.json north_rule) is an Iceberg table
-of image+caption rows at 10^12-image scale; this sandbox has no Iceberg
-runtime jar, so the same reader surface is implemented over plain
-parquet (identical DataFrame downstream) and the Iceberg path is a
-format string + catalog config away.  What actually matters for scale
-is encoded here and tested:
-
-- the tile table is PARTITIONED BY tile key columns so bbox queries
-  prune files before any IO (the Spark twin of the reference's
-  "fetch only covering tiles", Dem/Funcs.fs:262-308 +
-  ShadeCommand.fs:457-480 — SURVEY.md §4 row 1);
-- the images table reads with explicit column projection so the binary
-  payload column is never scanned by metadata-only queries
-  (ReadSchema pruning);
-- the Iceberg DDL for the production table records the layout choices
-  (bucket the shuffle key, sort within files) that turn the pipeline's
-  one full-data exchange into a local sort on a real cluster
-  (SCALE.md "what we would change").
+of image+caption rows at 10^12-image scale; without an Iceberg runtime
+the tables here are plain parquet (identical DataFrame downstream).
+What actually matters for scale is encoded here and tested: the tile
+table is PARTITIONED BY ``tile_x`` so bbox queries prune files before
+any IO (the Spark twin of the reference's "fetch only covering tiles",
+Dem/Funcs.fs:262-308 + ShadeCommand.fs:457-480 — SURVEY.md §4 row 1).
 """
 
 from __future__ import annotations
@@ -25,67 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: production DDL for the input table on a real cluster (requires the
-#: iceberg-spark-runtime jar + a catalog; recorded here as the layout
-#: contract, not executed in the sandbox)
-ICEBERG_IMAGES_DDL = """
-CREATE TABLE {catalog}.{db}.images (
-    image_id string,
-    bytes    binary,
-    w        int,
-    h        int,
-    fmt      string,
-    caption  string,
-    phash    bigint
-)
-USING iceberg
-PARTITIONED BY (bucket(1024, image_id))
-TBLPROPERTIES (
-    'write.target-file-size-bytes' = '536870912',
-    'read.split.target-size'       = '134217728'
-)
-"""
-
-ICEBERG_TILES_DDL = """
-CREATE TABLE {catalog}.{db}.tiles (
-    level    int,
-    tile_x   int,
-    tile_y   int,
-    heights  binary
-)
-USING iceberg
-PARTITIONED BY (level, bucket(256, tile_x))
--- sorting within files by (tile_x, tile_y) gives Iceberg min-max
--- pruning on BOTH tile keys for bbox scans
-TBLPROPERTIES ('sort-order' = 'tile_x ASC, tile_y ASC')
-"""
+from .engine import in_tiles
+from .tiles import tile_cover, tile_xy_cols
 
 
-def read_images(
-    spark: SparkSession,
-    location: str,
-    fmt: str = "parquet",
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Read the images table from ``location`` in the given format.
-
-    ``columns`` projects early so Parquet/Iceberg column pruning keeps
-    the multi-KB ``bytes`` payload out of metadata-only scans.
-    """
-    if fmt == "parquet":
-        df = spark.read.parquet(location)
-    elif fmt in ("iceberg", "delta"):
-        # same DataFrame surface; needs the runtime jar + catalog conf
-        df = spark.read.format(fmt).load(location)
-    else:
-        raise ValueError(f"unknown table format {fmt!r}")
-    return df.select(*columns) if columns else df
-
-
-def write_tile_table(
-    tiles: DataFrame, path: str, partition_cols: tuple[str, ...] = ("tile_x",)
-) -> None:
-    """Persist assembled tiles partitioned by tile key columns.
+def write_tile_table(tiles: DataFrame, path: str) -> None:
+    """Persist assembled tiles partitioned by ``tile_x``.
 
     Partitioning by ``tile_x`` (1° longitude bands — at most 360
     directories per level, each holding one column of tiles) keeps the
@@ -94,10 +28,10 @@ def write_tile_table(
     min-max stats on the sorted column.
     """
     (
-        tiles.repartition(*[F.col(c) for c in partition_cols])
+        tiles.repartition("tile_x")
         .sortWithinPartitions("tile_x", "tile_y")
         .write.mode("overwrite")
-        .partitionBy(*partition_cols)
+        .partitionBy("tile_x")
         .parquet(path)
     )
 
@@ -113,19 +47,10 @@ def read_tiles_for_bbox(
     row-group stats for tile_y.
 
     Tile cover uses the reference's floor/ceil−1 rule
-    (Dem/Funcs.fs:262-308): an exact-boundary bbox must not over-cover.
+    (:func:`tiles.tile_cover`): an exact-boundary bbox must not
+    over-cover.
     """
-    import math
-
-    min_lon, min_lat, max_lon, max_lat = bbox
-    tx0, tx1 = math.floor(min_lon), math.ceil(max_lon) - 1
-    ty0, ty1 = math.floor(min_lat), math.ceil(max_lat) - 1
-    return spark.read.parquet(path).where(
-        (F.col("tile_x") >= tx0)
-        & (F.col("tile_x") <= tx1)
-        & (F.col("tile_y") >= ty0)
-        & (F.col("tile_y") <= ty1)
-    )
+    return spark.read.parquet(path).where(in_tiles(*tile_cover(*bbox)))
 
 
 # ---------------------------------------------------------------------------
@@ -146,30 +71,29 @@ TILE_INDEX_JSON_SCHEMA = (
 )
 
 
-def parse_tile_index_geojson(raw: DataFrame, col: str = "value") -> DataFrame:
-    """GeoJSON FeatureCollection strings → available-tile dimension.
+def parse_tile_index_geojson(raw: DataFrame) -> DataFrame:
+    """GeoJSON FeatureCollection strings (column ``value``) →
+    available-tile dimension.
 
     One row per feature: ``(tile_name, tile_x, tile_y, min_lon, min_lat,
     max_lon, max_lat)`` — the name comes from ``properties.ll_tile``
-    (HGT style, parsed with the same sign/zero-pad rules as
-    parseTileName, Dem/Funcs.fs:157-188), the bbox from the polygon
+    (HGT style, parsed by :func:`tiles.tile_xy_cols`), the bbox from the polygon
     ring.  All column expressions; no JSON touches Python.
     """
     feat = raw.select(
         F.explode(
-            F.from_json(F.col(col), TILE_INDEX_JSON_SCHEMA)["features"]
+            F.from_json(F.col("value"), TILE_INDEX_JSON_SCHEMA)["features"]
         ).alias("f")
     )
     name = F.col("f.properties.ll_tile")
-    lat_sign = F.when(F.substring(name, 1, 1) == "N", 1).otherwise(-1)
-    lon_sign = F.when(F.substring(name, 4, 1) == "E", 1).otherwise(-1)
+    tile_x, tile_y = tile_xy_cols(name)
     ring = F.flatten(F.col("f.geometry.coordinates"))
     lons = F.transform(ring, lambda p: p[0])
     lats = F.transform(ring, lambda p: p[1])
     return feat.select(
         name.alias("tile_name"),
-        (lon_sign * F.substring(name, 5, 3).cast("int")).alias("tile_x"),
-        (lat_sign * F.substring(name, 2, 2).cast("int")).alias("tile_y"),
+        tile_x.alias("tile_x"),
+        tile_y.alias("tile_y"),
         F.array_min(lons).alias("min_lon"),
         F.array_min(lats).alias("min_lat"),
         F.array_max(lons).alias("max_lon"),

@@ -27,6 +27,7 @@ live stream.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,40 +49,41 @@ def read_events_stream(
     return reader.parquet(events_dir)
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
+#: the event aggregates' time keys: 1-hour tumbling windows and 1-hour
+#: session gaps, with late data accepted for 2 hours
+WINDOW = "1 hour"
+SESSION_GAP = "1 hour"
+WATERMARK_DELAY = "2 hours"
+
+#: cell level of :func:`geocell_event_counts`
+EVENT_CELL_LEVEL = 8
+
+
+def _window_counts(rows: DataFrame, key: str, sum_value) -> DataFrame:
+    """The tail of every windowed count: watermark ``ts``, then per
+    (tumbling window, ``key``) the event count and ``sum_value`` (an
+    aggregate Column), keyed by ``window_start``."""
+    return (
+        rows.withWatermark("ts", WATERMARK_DELAY)
+        .groupBy(F.window("ts", WINDOW).alias("win"), key)
+        .agg(F.count("*").alias("n_events"), sum_value.alias("sum_value"))
+        .select(F.col("win.start").alias("window_start"), key, "n_events",
+                "sum_value")
+    )
+
+
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window counts per event type with late-data watermark.
 
     Works on both batch and streaming DataFrames (same plan; streaming
     adds state eviction at the watermark).
     """
     ts = F.col("ts").cast("timestamp")
-    return (
-        events.withColumn("ts", ts)
-        .withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration).alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _window_counts(events.withColumn("ts", ts), "event_type",
+                          F.sum("value"))
 
 
-def geocell_event_counts(
-    events: DataFrame,
-    level: int = 8,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
+def geocell_event_counts(events: DataFrame) -> DataFrame:
     """Windowed per-geocell event counts: the streaming face of the
     S2-style cell index (queries.geocell_assign) — each event row is
     cell-encoded by the same Catalyst-only Hilbert chain (stateless
@@ -96,21 +98,8 @@ def geocell_event_counts(
     pts = events.withColumn("ts", F.col("ts").cast("timestamp")).select(
         "ts", "value", lon.alias("lon"), lat.alias("lat")
     )
-    cells = _with_geocell(pts, level, keep=["ts", "value"])
-    return (
-        cells.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration).alias("win"), "cell_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "cell_id",
-            "n_events",
-            "sum_value",
-        )
-    )
+    cells = _with_geocell(pts, EVENT_CELL_LEVEL, keep=["ts", "value"])
+    return _window_counts(cells, "cell_id", F.round(F.sum("value"), 6))
 
 
 def _pip_parity_col(lon, lat, verts):
@@ -141,12 +130,7 @@ def _pip_parity_col(lon, lat, verts):
     return total % 2 == 1
 
 
-def polygon_event_counts(
-    events: DataFrame,
-    polys: list | None = None,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
+def polygon_event_counts(events: DataFrame, polys: list | None = None) -> DataFrame:
     """Windowed per-polygon event counts: streaming points-in-polygons.
 
     Each event row evaluates the crossing-number test against every
@@ -178,34 +162,17 @@ def polygon_event_counts(
     hits = pts.select(
         "ts", "value", F.explode(F.array(*hit_cols)).alias("poly_id")
     ).where(F.col("poly_id").isNotNull())
-    return (
-        hits.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration).alias("win"), "poly_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "poly_id",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _window_counts(hits, "poly_id", F.round(F.sum("value"), 6))
 
 
-def session_counts(
-    events: DataFrame,
-    gap: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """Gap-based session windows per user (the streaming twin of the
     batch ``events_sessionize`` contract query)."""
     ts = F.col("ts").cast("timestamp")
     return (
         events.withColumn("ts", ts)
-        .withWatermark("ts", watermark_delay)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        .withWatermark("ts", WATERMARK_DELAY)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -267,10 +234,10 @@ def buffered_tiles(
     :func:`engine.needed_parts` names for it (``world`` is the inclusive
     world box whose tiles send it halo strips; None for plain mosaics),
     then ``finish(tile_x, tile_y, parts)`` makes its row (an Arrow table
-    in ``schema``) exactly once.  The state then clears to a tombstone,
-    so late duplicates drop (the reference's negative-cache/idempotent
-    import, §2.11); until then, per-tile state is a few compressed
-    blocks, bounded by tile size."""
+    in ``schema``) from the parts as an Arrow table, exactly once.  The
+    state then clears to a tombstone, so late duplicates drop (the
+    reference's negative-cache/idempotent import, §2.11); until then,
+    per-tile state is a few compressed blocks, bounded by tile size."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from .engine import needed_parts
@@ -295,7 +262,8 @@ def buffered_tiles(
                                    for c in _BUFFER_COLUMNS)))
             return
         state.update(_TOMBSTONE)
-        yield finish(tx, ty, buffered).to_pandas()
+        table = pa.Table.from_pandas(buffered, preserve_index=False)
+        yield finish(tx, ty, table).to_pandas()
 
     return parts.groupBy("tile_x", "tile_y").applyInPandasWithState(
         update,

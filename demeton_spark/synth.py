@@ -254,12 +254,12 @@ def audio_clip_row(i: int) -> tuple:
     return f"clip{i:06d}", a, n, rate, wav
 
 
-def audio_df(spark, n_clips: int, num_partitions: int | None = None):
+def audio_df(spark, n_clips: int):
     """Distributed WAV-clip generation: ``spark.range`` → one
     :func:`audio_clip_row` per clip index (``engine.map_rows``)."""
     from .engine import map_rows
 
-    parts = num_partitions or max(8, spark.sparkContext.defaultParallelism)
+    parts = max(8, spark.sparkContext.defaultParallelism)
     return map_rows(
         spark.range(0, n_clips, numPartitions=parts), ("id",),
         lambda i: (audio_clip_row(i),), AUDIO_SCHEMA,

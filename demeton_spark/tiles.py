@@ -145,6 +145,16 @@ def tile_lon_lat_bounds(
     )
 
 
+def tile_cover(
+    min_lon: float, min_lat: float, max_lon: float, max_lat: float
+) -> tuple[int, int, int, int]:
+    """The inclusive level-0 tile box ``(tx0, ty0, tx1, ty1)`` covering a
+    lon/lat bbox: floor of the minimum, ``ceil - 1`` of the maximum, so
+    an exactly tile-aligned bbox does not over-cover (Funcs.fs:284-298)."""
+    return (math.floor(min_lon), math.floor(min_lat),
+            math.ceil(max_lon) - 1, math.ceil(max_lat) - 1)
+
+
 def bounds_to_tiles(
     tile_size: int,
     level: int,
@@ -224,6 +234,16 @@ def tile_name_col(level: "Column | int", tile_x: "Column", tile_y: "Column") -> 
     return F.when(lvl == 0, level0).otherwise(higher)
 
 
+def tile_xy_cols(name: "Column") -> tuple["Column", "Column"]:
+    """``(tile_x, tile_y)`` int columns of a level-0 tile-name column —
+    the inverse of :func:`tile_name_col` at level 0, with
+    parseHgtTileName's sign and zero-pad rules (Funcs.fs:157-188)."""
+    lat_sign = F.when(F.substring(name, 1, 1) == "N", 1).otherwise(-1)
+    lon_sign = F.when(F.substring(name, 4, 1) == "E", 1).otherwise(-1)
+    return (lon_sign * F.substring(name, 5, 3).cast("int"),
+            lat_sign * F.substring(name, 2, 2).cast("int"))
+
+
 def tile_name_sql(tile_x: str, tile_y: str) -> str:
     """ANSI-SQL fragment equivalent of :func:`tile_name_col` at level 0.
 
@@ -252,16 +272,6 @@ class TileId:
     @property
     def key(self) -> int:
         return tile_key(self.level, self.tile_x, self.tile_y)
-
-    @classmethod
-    def from_name(cls, name: str) -> "TileId":
-        return cls(*parse_tile_name(name))
-
-    def min_cell(self, tile_size: int) -> tuple[int, int]:
-        return tile_min_cell(tile_size, self.tile_x, self.tile_y)
-
-    def lon_lat_bounds(self, tile_size: int) -> tuple[float, float, float, float]:
-        return tile_lon_lat_bounds(tile_size, self.level, self.tile_x, self.tile_y)
 
     def parent(self) -> "TileId":
         """Parent tile one level up (Downsampling.fs:37-61 inverted)."""

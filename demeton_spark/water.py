@@ -161,15 +161,19 @@ def component_stats(labels: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def visible_water_bodies(
-    stats: pd.DataFrame, min_area: int = 1250, max_bbox_ratio: float = 10.0
-) -> pd.DataFrame:
-    """Reference visibility rule (WaterBodiesShaders.fs:29-35): a body is
-    shown iff area >= min_area and bbox_area / area < max_bbox_ratio."""
+#: the reference visibility rule (WaterBodiesShaders.fs:29-35): a body
+#: is shown iff area >= MIN_AREA and bbox_area / area < MAX_BBOX_RATIO
+MIN_AREA = 1250
+MAX_BBOX_RATIO = 10.0
+
+
+def visible_water_bodies(stats: pd.DataFrame) -> pd.DataFrame:
+    """The visibility rule (``MIN_AREA``, ``MAX_BBOX_RATIO``) over one
+    tile's component stats."""
     bbox_area = (stats["max_x"] - stats["min_x"] + 1) * (
         stats["max_y"] - stats["min_y"] + 1
     )
-    keep = (stats["area"] >= min_area) & (bbox_area / stats["area"] < max_bbox_ratio)
+    keep = (stats["area"] >= MIN_AREA) & (bbox_area / stats["area"] < MAX_BBOX_RATIO)
     return stats[keep].reset_index(drop=True)
 
 
@@ -338,15 +342,14 @@ def build_xth_tiles(
     water_class_tiles: DataFrame,
     tile_size: int,
     water_size: int,
-    water_class: int = WORLDCOVER_WATER_CLASS,
 ) -> DataFrame:
     """The ``dem-with-water-bodies`` ETL: DEM tiles ⋈ water-class tiles →
     XTH tiles with the water flag packed into the height MSB.
 
     Reference lifecycle (/root/reference/Demeton/Commands/
     DemWithWaterBodiesCommand.fs:192-262): per tile, the WorldCover
-    class raster becomes a water monochrome (class ``water_class`` → 1,
-    WorldCover/Funcs.fs:12-21), majority-downsamples onto the DEM grid
+    class raster becomes a water monochrome (``WORLDCOVER_WATER_CLASS``
+    → 1), majority-downsamples onto the DEM grid
     (WaterBodies/Funcs.fs:9-64), and packs with the heights
     (Xth.encodeWaterBodiesInfoIntoDem).  Tiles absent from the water
     table get an all-land water mask (the reference's ``.none`` negative
@@ -369,21 +372,19 @@ def build_xth_tiles(
             classes = np.frombuffer(wc, dtype=np.uint8).reshape(
                 water_size, water_size
             )
-            mono = (classes == water_class).astype(np.int16)
+            mono = (classes == WORLDCOVER_WATER_CLASS).astype(np.int16)
             mask = resample_majority_binary(mono, tile_size, tile_size).astype(bool)
         yield tx, ty, codec.encode_xth(heights, mask)
 
     return map_tiles(joined, tile_size, pack, XTH_TILE_SCHEMA, extra=("wc",))
 
 
-def visible_components(components: DataFrame,
-                       min_area: int = 1250,
-                       max_bbox_ratio: float = 10.0) -> DataFrame:
+def visible_components(components: DataFrame) -> DataFrame:
     """DataFrame form of the visibility rule (P5) over global components."""
     bbox_area = (F.col("max_cx") - F.col("min_cx") + 1) * (
         F.col("max_cy") - F.col("min_cy") + 1
     )
     return components.where(
-        (F.col("area") >= min_area)
-        & (bbox_area / F.col("area") < max_bbox_ratio)
+        (F.col("area") >= MIN_AREA)
+        & (bbox_area / F.col("area") < MAX_BBOX_RATIO)
     )

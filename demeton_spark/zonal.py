@@ -34,7 +34,7 @@ import math
 from collections.abc import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from demeton_spark.engine import map_tiles
@@ -48,15 +48,15 @@ _PARTIAL_SCHEMA = (
 )
 
 
-def zonal_demo_polygons(n: int = 6) -> list[Polygon]:
+def zonal_demo_polygons() -> list[Polygon]:
     """Deterministic demo polygon family over the contract world
-    (lon ∈ [13, 15), lat ∈ [45, 47)): k-gon approximations of rotated
-    ellipses, k = 3..8.  Vertices are computed HERE (plain Python
+    (lon ∈ [13, 15), lat ∈ [45, 47)): six k-gon approximations of
+    rotated ellipses, k = 3..8.  Vertices are computed HERE (plain Python
     floats) so Spark and the DuckDB oracle consume identical literals.
     """
     out: list[Polygon] = []
-    for p in range(n):
-        k = 3 + p % 6
+    for p in range(6):
+        k = 3 + p
         cx = 13.25 + (p * 37 % 150) / 100.0
         cy = 45.25 + (p * 53 % 150) / 100.0
         r = 0.15 + (p % 4) * 0.1

@@ -51,9 +51,7 @@ def main() -> None:
     from demeton_spark.queries import _km_assign_col, _km_fit
     from demeton_spark.session import build_session
 
-    spark = build_session(
-        app_name="ann-index", master=args.master or "local[8]"
-    )
+    spark = build_session(app_name="ann-index", master=args.master)
     t0 = time.time()
     centroids, emb = _km_fit(spark, args.sf_dir)
 

@@ -56,9 +56,7 @@ def main() -> None:
         write_geojson_lines,
     )
 
-    spark = build_session(
-        app_name="isolines", master=args.master or "local[4]"
-    )
+    spark = build_session(app_name="isolines", master=args.master)
     t0 = time.time()
     tile_size = args.tile_size
     if args.synthetic:

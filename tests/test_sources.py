@@ -1,7 +1,6 @@
-"""Storage boundary: partition pruning on the tile table and column
-pruning on the images table must be visible in the physical plan —
-at 100 TB these are the difference between reading covering tiles and
-reading the world (SURVEY.md §4 row 1)."""
+"""Storage boundary: partition pruning on the tile table must be
+visible in the physical plan — at 100 TB it is the difference between
+reading covering tiles and reading the world (SURVEY.md §4 row 1)."""
 
 import numpy as np
 import pytest
@@ -46,18 +45,6 @@ def test_bbox_exact_boundary_does_not_overcover(spark, tile_table):
     )
     rows = got.select("tile_x", "tile_y").collect()
     assert sorted((r["tile_x"], r["tile_y"]) for r in rows) == [(13, 45)]
-
-
-def test_images_column_projection_prunes_payload(spark, tmp_path):
-    path = str(tmp_path / "images")
-    synth.images_df(spark, SPEC).write.parquet(path)
-    df = sources.read_images(
-        spark, path, columns=["image_id", "phash", "caption"]
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    schema_part = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "bytes" not in schema_part  # payload column never scanned
-    assert df.count() == SPEC.n_rows
 
 
 def test_tile_table_round_trips_heights(spark, tile_table):
