@@ -70,7 +70,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -83,6 +83,7 @@ from .synth import WorldSpec
 from .tiles import (
     DEM_HEIGHT_NONE,
     cells_per_degree,
+    in_tiles,
     tile_cover,
     tile_name as _tile_name,
     tile_xy_cols,
@@ -307,7 +308,7 @@ def hillshade_parts(
 # ---------------------------------------------------------------------------
 
 def compose_padded(
-    parts: pa.Table, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
+    parts: pa.Table | pd.DataFrame, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
 ) -> tuple[np.ndarray | None, int]:
     """One tile's parts (PART_SCHEMA rows as an Arrow table, or any
     frame ``pa.table`` reads) → ``(padded, n_blocks)``: the (ts+2k)²
@@ -728,11 +729,6 @@ def clip_cover(clip_polygon) -> tuple[np.ndarray | None, tuple | None]:
     if status != "non_intersecting":
         raise ValueError(f"clip_polygon rejected: {status}")
     return poly, tile_cover(*poly.min(axis=0), *poly.max(axis=0))
-
-
-def in_tiles(tx0: int, ty0: int, tx1: int, ty1: int) -> Column:
-    """Catalyst predicate: the row's tile lies in the inclusive box."""
-    return F.col("tile_x").between(tx0, tx1) & F.col("tile_y").between(ty0, ty1)
 
 
 def run_hillshade(

@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import in_tiles
-from .tiles import tile_cover, tile_xy_cols
+from .tiles import in_tiles, tile_cover, tile_xy_cols
 
 
 def write_tile_table(tiles: DataFrame, path: str) -> None:

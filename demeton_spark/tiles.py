@@ -155,6 +155,12 @@ def tile_cover(
             math.ceil(max_lon) - 1, math.ceil(max_lat) - 1)
 
 
+def in_tiles(tx0: int, ty0: int, tx1: int, ty1: int) -> "Column":
+    """Catalyst predicate: the row's tile lies in the inclusive box
+    (:func:`tile_cover`)."""
+    return F.col("tile_x").between(tx0, tx1) & F.col("tile_y").between(ty0, ty1)
+
+
 def bounds_to_tiles(
     tile_size: int,
     level: int,
