@@ -6,10 +6,8 @@ the training-data-pipeline extras); ``oracle_sql()`` gives the DuckDB
 twin for EVERY query — the raster queries' synthetic world is
 regenerated in SQL from generate_series (including the projected-raster
 shade geometry and the marching-squares segment/chain taxonomy), and
-the image-dedup and audio-features queries read the same committed
-parquet fixture in both engines (the audio oracle regenerates the
-integer WAV sample series from the materialized generator params,
-checking the from-scratch RIFF decode end-to-end).  Pixel values additionally stay pinned in ``tests/`` against
+the image-dedup queries read the same committed parquet fixture in both
+engines.  Pixel values additionally stay pinned in ``tests/`` against
 numpy oracles and the reference's golden constants.
 """
 
@@ -228,10 +226,10 @@ def _q_hillshade_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the driver's correctness gate checks queries() in ITERATION ORDER
 #: with a bounded budget (r3/r4 stopped at 50 rows), so the window is
 #: ROTATED each round to keep every entry's driver row fresh (VERDICT
-#: r4 item 2): first the 16 entries whose last driver row is r3 (the
+#: r4 item 2): first the 14 entries whose last driver row is r3 (the
 #: r4 reorder pushed them out), then the 10 flagship raster queries,
 #: then the blocks with exactly one driver row (r4: embedding/k-means;
-#: r3+r4: geo).  The tail a bounded window may skip is the 16 entries
+#: r3+r4: geo).  The tail a bounded window may skip is the 12 entries
 #: that are driver-green in THREE consecutive rounds (r2, r3 AND r4) —
 #: the strongest record for omission.
 _FRONT = (
@@ -241,12 +239,10 @@ _FRONT = (
     "doc_decontaminate",
     "doc_filter_pipeline",
     "doc_stratified_sample",
-    "events_value_quantiles",
     "image_phash_dedup",
     "image_phash_near_dup",
     "pair_dedup_clusters",
     "image_dhash",
-    "audio_features",
     "doc_fingerprint",
     "knn_bruteforce",
     "knn_ivf_bucketed",
@@ -282,7 +278,7 @@ _FRONT = (
     "geo_polygon_overlaps",
     "doc_repetition",
     # triple-green (r2+r3+r4) entries kept inside the window: the ones
-    # exercising the most intricate plans (LSH banding, sessionize)
+    # exercising the most intricate plans (LSH banding)
     "doc_minhash",
     "doc_near_dup_pairs",
     "doc_near_dup_recall",
@@ -290,7 +286,6 @@ _FRONT = (
     "doc_dedup_keep_best",
     "doc_simhash",
     "doc_simhash_near_dup",
-    "events_sessionize",
     "tile_assign_events",
 )
 

@@ -6,10 +6,8 @@ Images: ``decode_images`` and ``verify_images`` read the image table's
 block formats through :func:`demeton_spark.codec.decode_block` — the
 reference's three DEM encodings (``png16``, ``hgt``, AW3D ``tiff``)
 plus the engine's ``raw`` strips — the same decoder the tile engine
-uses.  Audio: ``audio_features`` decodes WAV/PCM via the from-scratch
-RIFF codec in :mod:`demeton_spark.audio`.  Any other format, and any
-malformed payload, raises ``ValueError``, which ``on_error='skip'``
-turns into a dropped row.
+uses.  Any other format, and any malformed payload, raises
+``ValueError``, which ``on_error='skip'`` turns into a dropped row.
 
 ``verify_images`` implements the per-row invariant from the build
 target: decoded pixels must hash to the row's ``phash`` (allclose/
@@ -83,40 +81,3 @@ def verify_images(images: DataFrame) -> DataFrame:
         verify, VERIFY_SCHEMA,
     )
 
-
-AUDIO_FEATURES_SCHEMA = (
-    "audio_id string, n_samples long, sample_rate int, duration_ms double, "
-    "rms double, peak int, zero_crossings long, spectral_centroid_hz double"
-)
-#: the ``audio.wav_features`` keys, in AUDIO_FEATURES_SCHEMA order
-_AUDIO_FEATURES = tuple(
-    f.split()[0] for f in AUDIO_FEATURES_SCHEMA.split(", ")[1:]
-)
-
-
-def audio_features(audio: DataFrame, on_error: str = "raise") -> DataFrame:
-    """Per-clip curation features over WAV/PCM ``binary`` payloads.
-
-    Real decode end-to-end: the from-scratch RIFF/WAVE codec in
-    :mod:`demeton_spark.audio` (PCM16 / PCM8 / float32, chunk-walking
-    container) feeds numpy DSP — duration, RMS, peak,
-    zero-crossing count, spectral centroid (rfft).  Expects columns
-    ``(audio_id, bytes)``; ``on_error='skip'`` quarantines corrupt
-    containers the same way :func:`decode_images` does.  Compressed
-    audio (mp3/aac/…) is out of scope — see the module docstring of
-    :mod:`demeton_spark.audio`.
-    """
-    from . import audio as audio_codec
-
-    def features(audio_id, data):
-        try:
-            f = audio_codec.wav_features(data)
-        except ValueError:
-            if on_error == "skip":
-                return
-            raise
-        yield (audio_id, *(f[k] for k in _AUDIO_FEATURES))
-
-    return map_rows(
-        audio, ("audio_id", "bytes"), features, AUDIO_FEATURES_SCHEMA
-    )

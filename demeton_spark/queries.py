@@ -17,7 +17,6 @@ Operator coverage map (SURVEY.md §2):
   A6  MBR aggregate                → tile_mbr
   sorts/limits                     → top_revenue_orders
   hash agg / joins                 → pricing_summary, region_rollup
-  SQL windows (engine extras)      → events_top_event, events_sessionize
   dedup family                     → doc_exact_dedup, doc_minhash,
                                      doc_near_dup_pairs, doc_near_dup_recall,
                                      doc_dedup_clusters, doc_simhash,
@@ -586,80 +585,6 @@ join nation on r_regionkey = n_regionkey
 join customer on n_nationkey = c_nationkey
 join orders on c_custkey = o_custkey
 group by r_name, n_name
-"""
-
-
-# --- SQL windows over events (engine extras, SURVEY.md §2.5) ------------------
-
-def q_events_top_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("first_event_id"),
-            F.col("event_type").alias("first_event_type"),
-        )
-    )
-
-
-SQL_EVENTS_TOP_EVENT = """
-select user_id, event_id as first_event_id, event_type as first_event_type
-from (
-  select user_id, event_id, event_type,
-         row_number() over (partition by user_id order by ts asc, event_id asc) as rn
-  from events
-) t where rn = 1
-"""
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (watermark/session-window analogue)."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        # ts is TIMESTAMP_NTZ in the parquet; session tz is pinned to UTC
-        # (session.py) so this cast matches DuckDB's naive epoch_us()
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts_us"), F.asc("event_id"))
-    gap = F.col("ts_us") - F.lag("ts_us", 1).over(w)
-    new_session = F.when(gap.isNull() | (gap > 3_600_000_000), 1).otherwise(0)
-    sessions = ev.withColumn("new_s", new_session).withColumn(
-        "session_id", F.sum("new_s").over(w)
-    )
-    return sessions.groupBy("user_id").agg(
-        F.max("session_id").cast("bigint").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-    )
-
-
-SQL_EVENTS_SESSIONIZE = """
-with ev as (
-  select user_id, event_id, epoch_us(ts) as ts_us from events
-),
-flagged as (
-  select user_id, event_id, ts_us,
-    case when lag(ts_us) over w is null
-           or ts_us - lag(ts_us) over w > 3600000000 then 1 else 0 end as new_s
-  from ev
-  window w as (partition by user_id order by ts_us asc, event_id asc)
-),
-sess as (
-  select user_id,
-         sum(new_s) over (partition by user_id order by ts_us asc, event_id asc
-                          rows unbounded preceding) as session_id
-  from flagged
-)
-select user_id, cast(max(session_id) as bigint) as n_sessions,
-       cast(count(*) as bigint) as n_events
-from sess group by user_id
 """
 
 
@@ -1602,44 +1527,6 @@ select cast(doc_id as bigint) as doc_id, source, lang,
 from documents
 where {_sql_word_hash("cast(doc_id as varchar)", 7)} % 100
       < 10 + ({_SQL_SRCNUM} * 7) % 80
-"""
-
-
-# --- exact grouped quantiles --------------------------------------------------
-
-
-def q_events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolation quantiles of event value per type
-    (the §2.4 aggregation family's order-statistics member).  Exact
-    percentile (sort-based) rather than a sketch so the DuckDB twin
-    (quantile_cont) matches to rounding; at 10^12 rows the same query
-    swaps in approx_percentile with a disclosed error bound."""
-    ev = _t(spark, sf_dir, "events")
-    q = F.expr("percentile(value, array(0.25D, 0.5D, 0.75D))")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            q.alias("_q"),
-        )
-        .select(
-            "event_type",
-            "n",
-            F.round(F.col("_q")[0], 6).alias("p25"),
-            F.round(F.col("_q")[1], 6).alias("p50"),
-            F.round(F.col("_q")[2], 6).alias("p75"),
-        )
-    )
-
-
-SQL_EVENTS_VALUE_QUANTILES = """
-select event_type,
-       cast(count(*) as bigint) as n,
-       round(quantile_cont(value, 0.25), 6) as p25,
-       round(quantile_cont(value, 0.5), 6) as p50,
-       round(quantile_cont(value, 0.75), 6) as p75
-from events
-group by event_type
 """
 
 
@@ -2843,180 +2730,13 @@ group by 1
 SQL_PAIR_DEDUP_CLUSTERS = sql_pair_dedup_clusters()
 
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio curation features over real WAV/PCM decode.
-
-    The clips table (multimodal extra — the reference has no audio
-    path) carries opaque ``binary`` WAV payloads; the Spark side
-    decodes them with the from-scratch RIFF codec
-    (:mod:`demeton_spark.audio`) inside one Arrow row map and
-    reports the corpus-curation feature set.  The DuckDB oracle cannot
-    decode WAV — instead the generator params ``(a, n, rate)``
-    materialized next to the bytes let it regenerate the exact integer
-    sample series (``((a·(t+7)·(t+13)) mod 4001) − 2000``) and compute
-    the same features in SQL, so decode + DSP are both checked
-    end-to-end.  Sample values are integers, so sums are exact in
-    float64 and rms matches bit-for-bit before the 6-decimal round.
-    The spectral centroid is not SQL-expressible (rfft) and is pinned
-    against closed-form tones in tests/test_audio.py instead.  At
-    10^10 clips this is a linear embarrassingly-parallel scan — no
-    shuffle at all.
-    """
-    from demeton_spark import multimodal
-    from demeton_spark.synth import ensure_contract_audio
-
-    clips = spark.read.parquet(ensure_contract_audio(spark, sf_of(sf_dir)))
-    feats = multimodal.audio_features(clips.select("audio_id", "bytes"))
-    return feats.select(
-        "audio_id",
-        F.col("n_samples").cast("bigint").alias("n_samples"),
-        "sample_rate",
-        "duration_ms",
-        F.round("rms", 6).alias("rms"),
-        "peak",
-        F.col("zero_crossings").cast("bigint").alias("zero_crossings"),
-    )
-
-
-def sql_audio_features(sf: float = 0.01) -> str:
-    return f"""
-with clips as (
-  select audio_id, a, n, rate
-  from read_parquet('/root/repo/data/synth_audio/sf{sf}/*.parquet')
-),
-samples as (
-  select c.audio_id, c.n, c.rate, u.t,
-         cast(((c.a * (u.t + 7) * (u.t + 13)) % 4001) - 2000 as double) as s
-  from clips c, unnest(range(0, cast(c.n as bigint))) as u(t)
-),
-base as (
-  select audio_id,
-         cast(count(*) as bigint) as n_samples,
-         cast(any_value(rate) as int) as sample_rate,
-         count(*) * 1000.0 / any_value(rate) as duration_ms,
-         round(sqrt(avg(s * s)), 6) as rms,
-         cast(max(abs(s)) as int) as peak
-  from samples group by audio_id
-),
-zc as (
-  select audio_id,
-         cast(coalesce(sum(case when s * prev < 0 then 1 else 0 end), 0) as bigint)
-           as zero_crossings
-  from (
-    select audio_id, s,
-           lag(s) over (partition by audio_id order by t) as prev
-    from samples where s <> 0
-  ) group by audio_id
-)
-select b.audio_id, b.n_samples, b.sample_rate, b.duration_ms, b.rms, b.peak,
-       z.zero_crossings
-from base b join zc z using (audio_id)
-"""
-
-
-SQL_AUDIO_FEATURES = sql_audio_features()
-
 #: fixture-pinned oracles the driver checks at sf0.01; oracle_check
 #: regenerates these per-sf so the gate stays portable
 FIXTURE_ORACLES = {
     "image_phash_dedup": sql_image_phash_dedup,
     "image_dhash": sql_image_dhash,
     "pair_dedup_clusters": sql_pair_dedup_clusters,
-    "audio_features": sql_audio_features,
 }
-
-
-def q_events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windows per event type — the SAME operator the
-    streaming path runs (`streaming.windowed_event_counts` works on
-    batch and stream alike); here it is oracle-checked in batch mode
-    against DuckDB's time_bucket."""
-    from .streaming import windowed_event_counts
-
-    ev = _t(spark, sf_dir, "events")
-    out = windowed_event_counts(ev)
-    return out.select(
-        F.col("window_start").cast("timestamp_ntz").alias("window_start"),
-        "event_type",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.round("sum_value", 6).alias("sum_value"),
-    )
-
-
-SQL_EVENTS_WINDOWED_COUNTS = """
-select time_bucket(interval '1 hour', cast(ts as timestamp)) as window_start,
-       event_type,
-       cast(count(*) as bigint) as n_events,
-       round(sum(value), 6) as sum_value
-from events
-group by 1, 2
-"""
-
-
-def q_events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based session windows (1-hour gap) per user — the SAME
-    operator the streaming path runs (`streaming.session_counts`);
-    batch mode oracle-checked against DuckDB gaps-and-islands."""
-    from .streaming import session_counts
-
-    ev = _t(spark, sf_dir, "events")
-    out = session_counts(ev)
-    return out.select(
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-        F.col("n_events").cast("bigint").alias("n_events"),
-    )
-
-
-SQL_EVENTS_SESSION_WINDOWS = """
-with marked as (
-  select cast(user_id as bigint) as user_id, cast(ts as timestamp) as ts,
-         case when ts - lag(ts) over (partition by user_id order by ts)
-                   > interval '1 hour' or
-                   lag(ts) over (partition by user_id order by ts) is null
-              then 1 else 0 end as new_session
-  from events
-),
-ids as (
-  select user_id, ts,
-         sum(new_session) over (partition by user_id order by ts
-                                rows unbounded preceding) as session_id
-  from marked
-)
-select user_id,
-       min(ts) as session_start,
-       max(ts) + interval '1 hour' as session_end,
-       cast(count(*) as bigint) as n_events
-from ids
-group by user_id, session_id
-"""
-
-
-def q_user_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user (count, sum, max) over event values — the SAME operator
-    the streaming path runs (`streaming.running_user_stats` works on
-    batch and stream alike; the streaming equivalence is pinned in
-    tests/test_streaming.py)."""
-    from .streaming import running_user_stats
-
-    out = running_user_stats(_t(spark, sf_dir, "events"))
-    return out.select(
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.round("sum_value", 6).alias("sum_value"),
-        F.round("max_value", 6).alias("max_value"),
-    )
-
-
-SQL_USER_VALUE_STATS = """
-select cast(user_id as bigint) as user_id,
-       cast(count(*) as bigint) as n_events,
-       round(sum(value), 6) as sum_value,
-       round(max(value), 6) as max_value
-from events
-group by user_id
-"""
 
 
 def q_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5151,11 +4871,6 @@ QUERIES = {
     "pricing_summary": q_pricing_summary,
     "top_revenue_orders": q_top_revenue_orders,
     "region_rollup": q_region_rollup,
-    "events_top_event": q_events_top_event,
-    "events_sessionize": q_events_sessionize,
-    "events_windowed_counts": q_events_windowed_counts,
-    "events_session_windows": q_events_session_windows,
-    "user_value_stats": q_user_value_stats,
     "doc_exact_dedup": q_doc_exact_dedup,
     "doc_token_stats": q_doc_token_stats,
     "doc_lang_quality": q_doc_lang_quality,
@@ -5172,12 +4887,10 @@ QUERIES = {
     "doc_decontaminate": q_doc_decontaminate,
     "doc_filter_pipeline": q_doc_filter_pipeline,
     "doc_stratified_sample": q_doc_stratified_sample,
-    "events_value_quantiles": q_events_value_quantiles,
     "image_phash_dedup": q_image_phash_dedup,
     "image_phash_near_dup": q_image_phash_near_dup,
     "pair_dedup_clusters": q_pair_dedup_clusters,
     "image_dhash": q_image_dhash,
-    "audio_features": q_audio_features,
     "doc_fingerprint": q_doc_fingerprint,
     "knn_bruteforce": q_knn_bruteforce,
     "knn_ivf_bucketed": q_knn_ivf_bucketed,
@@ -5210,11 +4923,6 @@ ORACLES = {
     "pricing_summary": SQL_PRICING_SUMMARY,
     "top_revenue_orders": SQL_TOP_REVENUE_ORDERS,
     "region_rollup": SQL_REGION_ROLLUP,
-    "events_top_event": SQL_EVENTS_TOP_EVENT,
-    "events_sessionize": SQL_EVENTS_SESSIONIZE,
-    "events_windowed_counts": SQL_EVENTS_WINDOWED_COUNTS,
-    "events_session_windows": SQL_EVENTS_SESSION_WINDOWS,
-    "user_value_stats": SQL_USER_VALUE_STATS,
     "doc_exact_dedup": SQL_DOC_EXACT_DEDUP,
     "doc_token_stats": SQL_DOC_TOKEN_STATS,
     "doc_lang_quality": SQL_DOC_LANG_QUALITY,
@@ -5231,13 +4939,11 @@ ORACLES = {
     "doc_decontaminate": SQL_DOC_DECONTAMINATE,
     "doc_filter_pipeline": SQL_DOC_FILTER_PIPELINE,
     "doc_stratified_sample": SQL_DOC_STRATIFIED_SAMPLE,
-    "events_value_quantiles": SQL_EVENTS_VALUE_QUANTILES,
     "doc_fingerprint": SQL_DOC_FINGERPRINT,
     "image_phash_near_dup": SQL_IMAGE_PHASH_NEAR_DUP,
     "image_phash_dedup": SQL_IMAGE_PHASH_DEDUP,
     "pair_dedup_clusters": SQL_PAIR_DEDUP_CLUSTERS,
     "image_dhash": SQL_IMAGE_DHASH,
-    "audio_features": SQL_AUDIO_FEATURES,
     "knn_bruteforce": SQL_KNN_BRUTEFORCE,
     "knn_ivf_bucketed": SQL_KNN_IVF_BUCKETED,
     "knn_ivf_recall": SQL_KNN_IVF_RECALL,

@@ -3,11 +3,10 @@
 The reference is batch-only; its incremental behaviors (negative cache,
 resumable import) map to the checkpoint manifest in ``engine.py``.  For
 true stream processing the engine exposes watermarked tumbling-window
-aggregation and gap-based session windows over an events stream, plus a
+counts per geocell and per polygon over an events stream, plus a
 file-source factory so the same parquet layout works batch or
-streaming.  The window, session and per-user aggregates keep their
-state Spark-native (``window`` / ``session_window`` + watermark, or a
-plain update-mode aggregate).  Two operators keep Python state through
+streaming.  The window counts keep their state Spark-native
+(``window`` + watermark).  Two operators keep Python state through
 ``applyInPandasWithState``: ``buffered_tiles`` (a tile's parts until
 ``engine.needed_parts`` are in, then a tombstone) and
 ``streaming_exact_dedup`` (seen hashes).  The tile operator carries no
@@ -49,10 +48,9 @@ def read_events_stream(
     return reader.parquet(events_dir)
 
 
-#: the event aggregates' time keys: 1-hour tumbling windows and 1-hour
-#: session gaps, with late data accepted for 2 hours
+#: the event aggregates' time key: 1-hour tumbling windows, with late
+#: data accepted for 2 hours
 WINDOW = "1 hour"
-SESSION_GAP = "1 hour"
 WATERMARK_DELAY = "2 hours"
 
 #: cell level of :func:`geocell_event_counts`
@@ -70,17 +68,6 @@ def _window_counts(rows: DataFrame, key: str, sum_value) -> DataFrame:
         .select(F.col("win.start").alias("window_start"), key, "n_events",
                 "sum_value")
     )
-
-
-def windowed_event_counts(events: DataFrame) -> DataFrame:
-    """Tumbling-window counts per event type with late-data watermark.
-
-    Works on both batch and streaming DataFrames (same plan; streaming
-    adds state eviction at the watermark).
-    """
-    ts = F.col("ts").cast("timestamp")
-    return _window_counts(events.withColumn("ts", ts), "event_type",
-                          F.sum("value"))
 
 
 def geocell_event_counts(events: DataFrame) -> DataFrame:
@@ -163,36 +150,6 @@ def polygon_event_counts(events: DataFrame, polys: list | None = None) -> DataFr
         "ts", "value", F.explode(F.array(*hit_cols)).alias("poly_id")
     ).where(F.col("poly_id").isNotNull())
     return _window_counts(hits, "poly_id", F.round(F.sum("value"), 6))
-
-
-def session_counts(events: DataFrame) -> DataFrame:
-    """Gap-based session windows per user (the streaming twin of the
-    batch ``events_sessionize`` contract query)."""
-    ts = F.col("ts").cast("timestamp")
-    return (
-        events.withColumn("ts", ts)
-        .withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum, max) over ``value``: one built-in
-    aggregate, which a stream in update mode re-emits for every user a
-    micro-batch touches (state is one small row per user in Spark's
-    checkpointed state store)."""
-    return events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value").alias("sum_value"),
-        F.max("value").alias("max_value"),
-    )
 
 
 #: input schema of the images table (BASELINE.json input_hint) for the

@@ -224,68 +224,6 @@ def ensure_contract_images(spark, sf: float) -> str:
     return path
 
 
-AUDIO_SCHEMA = "audio_id string, a int, n int, rate int, bytes binary"
-
-
-def audio_clip_params(i: int) -> tuple[int, int, int]:
-    """Per-clip generator parameters ``(a, n, rate)`` for clip index
-    ``i``.  Pure integer arithmetic so the DuckDB oracle can regenerate
-    the exact sample series: ``s_t = ((a·(t+7)·(t+13)) mod 4001) − 2000``
-    — no trig, no float rounding mode to disagree about."""
-    a = 3 + 2 * (i % 50)
-    n = 900 + (i * 37) % 300
-    rate = 8000 if i % 2 == 0 else 16000
-    return a, n, rate
-
-
-def audio_clip_samples(a: int, n: int) -> np.ndarray:
-    t = np.arange(n, dtype=np.int64)
-    return (((a * (t + 7) * (t + 13)) % 4001) - 2000).astype(np.int16)
-
-
-def audio_clip_row(i: int) -> tuple:
-    """Clip ``i`` as one AUDIO_SCHEMA row: its WAV/PCM16-mono payload
-    plus the integer generator params the SQL oracle needs to
-    regenerate the series."""
-    from . import audio as audio_codec
-
-    a, n, rate = audio_clip_params(i)
-    wav = audio_codec.encode_wav(audio_clip_samples(a, n), rate)
-    return f"clip{i:06d}", a, n, rate, wav
-
-
-def audio_df(spark, n_clips: int):
-    """Distributed WAV-clip generation: ``spark.range`` → one
-    :func:`audio_clip_row` per clip index (``engine.map_rows``)."""
-    from .engine import map_rows
-
-    parts = max(8, spark.sparkContext.defaultParallelism)
-    return map_rows(
-        spark.range(0, n_clips, numPartitions=parts), ("id",),
-        lambda i: (audio_clip_row(i),), AUDIO_SCHEMA,
-    )
-
-
-def audio_clips_for_sf(sf: float) -> int:
-    return max(50, int(round(20000 * sf)))
-
-
-def ensure_contract_audio(spark, sf: float) -> str:
-    """Materialize (once) the sf-scaled contract audio table as parquet
-    and return its path.  The Spark contract query decodes the WAV
-    ``bytes`` column for real; the DuckDB oracle regenerates the sample
-    series from the integer params ``(a, n, rate)`` carried alongside —
-    both read THIS file, so the feature aggregation is checked over
-    identical clips."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "data", "synth_audio", f"sf{sf}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        audio_df(spark, audio_clips_for_sf(sf)).write.mode("overwrite").parquet(path)
-    return path
-
-
 def expected_tile_heights(spec: WorldSpec, tx: int, ty: int) -> np.ndarray:
     """Oracle: the fully assembled tile, computed single-node in numpy."""
     min_cx, min_cy = tile_min_cell(spec.tile_size, tx, ty)

@@ -1,5 +1,5 @@
 """Multimodal plumbing: real png16/hgt/tiff decode, per-row phash/caption
-invariant, audio features, and quarantine routing."""
+invariant, and quarantine routing."""
 
 import numpy as np
 import pytest
@@ -38,30 +38,6 @@ def test_verify_images_invariant(spark, images):
     assert agg["n"] == SPEC.n_rows
     assert agg["p_ok"] == SPEC.n_rows  # decoded pixels hash to phash
     assert agg["c_ok"] == SPEC.n_rows
-
-
-def test_audio_features_end_to_end(spark):
-    """audio_features decodes real WAV/PCM payloads via engine.map_rows and
-    quarantines corrupt containers under on_error='skip'."""
-    from demeton_spark import audio as audio_codec
-
-    t = np.arange(8000)
-    tone = np.round(
-        12000.0 * np.sin(2 * np.pi * 440.0 * t / 8000.0)
-    ).astype(np.int16)
-    rows = [
-        ("a0", bytearray(audio_codec.encode_wav(tone, 8000))),
-        ("bad", bytearray(b"OggS" + b"\x00" * 64)),
-    ]
-    df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-    out = {r["audio_id"]: r for r in multimodal.audio_features(df, on_error="skip").collect()}
-    assert set(out) == {"a0"}  # corrupt row quarantined
-    r = out["a0"]
-    assert r["n_samples"] == 8000 and r["sample_rate"] == 8000
-    assert r["duration_ms"] == 1000.0
-    assert abs(r["spectral_centroid_hz"] - 440.0) < 2.0
-    with pytest.raises(Exception):  # raise mode surfaces the decode error
-        multimodal.audio_features(df).collect()
 
 
 def test_decode_tiff_format(spark):

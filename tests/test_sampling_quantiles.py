@@ -1,14 +1,10 @@
-"""Deterministic stratified sampling + exact grouped quantiles."""
+"""Deterministic stratified sampling."""
 
 import hashlib
 
 import duckdb
-import numpy as np
 
-from demeton_spark.queries import (
-    q_doc_stratified_sample,
-    q_events_value_quantiles,
-)
+from demeton_spark.queries import q_doc_stratified_sample
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,20 +27,6 @@ def test_sample_is_deterministic_hash_gate(spark):
     got2 = {r["doc_id"] for r in q_doc_stratified_sample(spark, SF_DIR).collect()}
     assert got1 == got2 == want
     assert 0 < len(want) < len(docs)
-
-
-def test_quantiles_match_numpy(spark):
-    rows = q_events_value_quantiles(spark, SF_DIR).collect()
-    vals = duckdb.sql(
-        f"select event_type, value from read_parquet('{SF_DIR}/events.parquet')"
-    ).df()
-    assert len(rows) == vals["event_type"].nunique()
-    for r in rows:
-        v = vals[vals["event_type"] == r["event_type"]]["value"].to_numpy()
-        assert r["n"] == len(v)
-        for p, col in ((25, "p25"), (50, "p50"), (75, "p75")):
-            assert abs(r[col] - np.percentile(v, p)) < 1e-6, (r["event_type"], p)
-        assert r["p25"] <= r["p50"] <= r["p75"]
 
 
 def test_emb_dedup_clusters_mass_and_transitivity(spark):

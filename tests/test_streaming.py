@@ -1,6 +1,6 @@
 """Structured Streaming: availableNow backfill over a parquet events
-dir must agree with the identical batch plan (windowed counts and
-session windows share one code path)."""
+dir must agree with the identical batch plan (the geocell and polygon
+windowed counts share one code path)."""
 
 import datetime as dt
 
@@ -30,95 +30,6 @@ def events_dir(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("events_stream") / "events")
     spark.createDataFrame(rows, streaming.EVENTS_SCHEMA).coalesce(1).write.parquet(path)
     return path
-
-
-def test_windowed_counts_stream_equals_batch(spark, events_dir, tmp_path):
-    stream_in = streaming.read_events_stream(spark, events_dir)
-    assert stream_in.isStreaming
-    got = streaming.run_to_memory(
-        streaming.windowed_event_counts(stream_in),
-        "win_counts",
-        str(tmp_path / "ckpt1"),
-        output_mode="complete",
-    ).collect()
-
-    batch = streaming.windowed_event_counts(
-        spark.read.schema(streaming.EVENTS_SCHEMA).parquet(events_dir)
-    ).collect()
-
-    key = lambda r: (r["window_start"], r["event_type"])  # noqa: E731
-    assert sorted(
-        (key(r), r["n_events"], r["sum_value"]) for r in got
-    ) == sorted((key(r), r["n_events"], r["sum_value"]) for r in batch)
-    assert len(batch) > 0
-
-
-def test_session_windows_stream_equals_batch(spark, events_dir, tmp_path):
-    stream_in = streaming.read_events_stream(
-        spark, events_dir, max_files_per_trigger=1
-    )
-    got = streaming.run_to_memory(
-        streaming.session_counts(stream_in),
-        "sess_counts",
-        str(tmp_path / "ckpt2"),
-        output_mode="complete",
-    ).collect()
-
-    batch = streaming.session_counts(
-        spark.read.schema(streaming.EVENTS_SCHEMA).parquet(events_dir)
-    ).collect()
-
-    canon = lambda rows: sorted(  # noqa: E731
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in rows
-    )
-    assert canon(got) == canon(batch)
-    # each user has exactly 2 sessions (>1h gap splits)
-    per_user = {}
-    for r in batch:
-        per_user.setdefault(r["user_id"], 0)
-        per_user[r["user_id"]] += 1
-    assert per_user == {1: 2, 2: 2}
-
-
-def test_stateful_running_user_stats(spark, events_dir, tmp_path):
-    """applyInPandasWithState custom operator: the final per-user state
-    after draining the stream equals the batch aggregate."""
-    from pyspark.sql import functions as F
-
-    stream_in = streaming.read_events_stream(spark, events_dir)
-    out = streaming.run_to_memory(
-        streaming.running_user_stats(stream_in),
-        "user_stats",
-        str(tmp_path / "ckpt3"),
-        output_mode="update",
-    )
-    # update mode re-emits per batch: keep the last emission per user
-    last = (
-        out.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("sum_value").alias("sum_value"),
-            F.max("max_value").alias("max_value"),
-        )
-        .collect()
-    )
-    batch = (
-        spark.read.schema(streaming.EVENTS_SCHEMA)
-        .parquet(events_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-            F.max("value").alias("max_value"),
-        )
-        .collect()
-    )
-    canon = lambda rows: sorted(  # noqa: E731
-        (r["user_id"], r["n_events"], round(r["sum_value"], 9), r["max_value"])
-        for r in rows
-    )
-    assert canon(last) == canon(batch)
 
 
 def test_streaming_tile_assembly_spans_micro_batches(spark, tmp_path):

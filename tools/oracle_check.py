@@ -3,7 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet tables, comparing row count, column names,
 and an order-insensitive value hash (columns sorted by name, rows
-sorted, values canonicalized).  Usage:
+sorted, values canonicalized).  A query without an oracle fails, and a
+query name that ``queries()`` does not list is an error.  Usage:
 
     PYTHONPATH=/root/repo python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -66,6 +67,11 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from demeton_spark.session import build_session
 
+    queries = entrymod.queries()
+    unknown = sorted(only - queries.keys())
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = build_session(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
@@ -73,7 +79,6 @@ def main() -> int:
             f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     # fixture-pinned oracles carry the driver's sf0.01 parquet path in
     # their contract strings; regenerate them for the sf under test
@@ -95,7 +100,8 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"okNW {name}: rows-only ({len(spark_pdf)} rows, no oracle)")
+            print(f"FAIL {name}: no oracle ({len(spark_pdf)} rows)")
+            failures += 1
             continue
         try:
             duck_pdf = con.sql(oracles[name]).df()
