@@ -17,9 +17,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from demeton_spark.geometry import MapScale
 from demeton_spark.queries import (
-    _CQ, LCC_CONTRACT_SPEC, ORACLES, QUERIES, contract_tiles,
+    _CLIP_POLY, _CQ, _ISO_LEVELS, _SR_PTS, _SR_PX, LCC_CONTRACT_SPEC,
+    ORACLES, QUERIES, contract_tiles,
 )
+
+#: the map scale both projected-raster contract queries render at (the
+#: DuckDB twins' ``_SR_PSF``)
+_SR_SCALE = MapScale(5_000_000, 96)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -85,7 +91,7 @@ def _q_tile_isolines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from demeton_spark.isolines import tile_isolines
 
-    out = tile_isolines(contract_tiles(spark), _CQ.tile_size, [550.0, 650.0])
+    out = tile_isolines(contract_tiles(spark), _CQ.tile_size, _ISO_LEVELS)
     return out.select(
         "tile_x", "tile_y", "level", "n_segments", "n_closed", "n_clipped",
         F.round("total_len", 6).alias("total_len"),
@@ -134,7 +140,7 @@ def _q_tile_isoline_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demeton_spark.isolines import tile_case_histogram
 
     return tile_case_histogram(
-        contract_tiles(spark), _CQ.tile_size, [550.0, 650.0]
+        contract_tiles(spark), _CQ.tile_size, _ISO_LEVELS
     )
 
 
@@ -147,7 +153,7 @@ def _q_tile_posterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_isolines.py (chain topology isn't SQL-expressible)."""
     from demeton_spark.isolines import tile_posterize
 
-    out = tile_posterize(contract_tiles(spark), _CQ.tile_size, [550.0, 650.0])
+    out = tile_posterize(contract_tiles(spark), _CQ.tile_size, _ISO_LEVELS)
     return out.select(
         "tile_x", "tile_y", "class_id", "n_px",
         "min_x", "min_y", "max_x", "max_y",
@@ -161,13 +167,11 @@ def _q_shade_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     same literals and recounts shaded_px per pixel via the bilinear
     4-corner NaN rule; pixel VALUES stay pinned in
     tests/test_render.py."""
-    from demeton_spark.geometry import MapScale
     from demeton_spark.render import render_shaded_raster
 
-    pts = [(13.2, 45.2), (14.8, 45.2), (13.2, 46.8), (14.8, 46.8)]
     out = render_shaded_raster(
-        spark, contract_tiles(spark), pts, MapScale(5_000_000, 96),
-        tile_size=_CQ.tile_size, raster_tile_px=64,
+        spark, contract_tiles(spark), _SR_PTS, _SR_SCALE,
+        tile_size=_CQ.tile_size, raster_tile_px=_SR_PX,
     )
     return out.select(
         "rt_x", "rt_y", "width", "height", "shaded_px", "total_px",
@@ -185,16 +189,13 @@ def _q_shade_raster_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative latitude as a per-row recursive CTE — and recounts
     shaded_px per pixel; LCC formulas are additionally pinned against
     cs2cs control points in tests/test_projections.py."""
-    from demeton_spark.geometry import MapScale
     from demeton_spark.projections import create_projection
     from demeton_spark.render import render_shaded_raster
 
-    pts = [(13.2, 45.2), (14.8, 45.2), (13.2, 46.8), (14.8, 46.8)]
-    scale = MapScale(5_000_000, 96)
     out = render_shaded_raster(
-        spark, contract_tiles(spark), pts, scale, tile_size=_CQ.tile_size,
-        raster_tile_px=64,
-        projection=create_projection(LCC_CONTRACT_SPEC, scale),
+        spark, contract_tiles(spark), _SR_PTS, _SR_SCALE,
+        tile_size=_CQ.tile_size, raster_tile_px=_SR_PX,
+        projection=create_projection(LCC_CONTRACT_SPEC, _SR_SCALE),
     )
     return out.select(
         "rt_x", "rt_y", "width", "height", "shaded_px", "total_px",
@@ -216,7 +217,7 @@ def _q_hillshade_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaded = run_hillshade(
         spark, images_df(spark, _CQ, num_partitions=1), _CQ.tile_size,
         script="elecolor|+igor",
-        clip_polygon=[(13.1, 45.1), (13.95, 45.5), (13.4, 45.95)],
+        clip_polygon=_CLIP_POLY,
     )
     return shaded.select(
         "tile_x", "tile_y", "tile_name", "shaded_px", "total_px"

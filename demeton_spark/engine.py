@@ -67,7 +67,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -238,13 +237,6 @@ _CUT_COLUMNS = ("tile_x", "tile_y", "image_id", "fmt", "data", "w", "h",
                 "bx", "by")
 
 
-def block_strips(pdf: pd.DataFrame, tile_size: int, halo: int) -> pd.DataFrame:
-    """Image rows (with their ``bytes``) → the k-px strip rows
-    (PART_SCHEMA) their border blocks donate to neighbor tiles."""
-    cols = [pdf["bytes" if c == "data" else c] for c in _CUT_COLUMNS]
-    return pd.DataFrame(_cut_strips(zip(*cols), tile_size, halo))
-
-
 def emit_parts(
     batch: pa.RecordBatch, tile_size: int, halo: int
 ) -> Iterator[pa.RecordBatch]:
@@ -308,29 +300,30 @@ def hillshade_parts(
 # ---------------------------------------------------------------------------
 
 def compose_padded(
-    parts: pa.Table | pd.DataFrame, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
+    parts: pa.Table, ts: int, k: int, fill: int = DEM_HEIGHT_NONE
 ) -> tuple[np.ndarray | None, int]:
-    """One tile's parts (PART_SCHEMA rows as an Arrow table, or any
-    frame ``pa.table`` reads) → ``(padded, n_blocks)``: the (ts+2k)²
-    int16 array with its blocks stitched into the interior and its
-    neighbors' strips in the k-px halo.
+    """One tile's parts (PART_SCHEMA rows as an Arrow table) →
+    ``(padded, n_blocks)``: the (ts+2k)² int16 array with its blocks
+    stitched into the interior and its neighbors' strips in the k-px
+    halo.
 
     Spark group order is nondeterministic; the reference's merge
     (Dem/Funcs.fs:357-388, §4.3) overwrites in ``(by, bx, image_id)``
     order, so the part with the largest ``image_id`` at each
     ``(part, bx, by)`` position is the one visible.  Only those winners
-    are decoded: duplicate-heavy ("land") tiles cost one decode per
-    position however many copies arrived, and duplicate edge blocks
-    resolve identically on both sides of a tile boundary.  ``n_blocks``
-    counts every block row received (input lineage); a group with none
-    (strips sent past the world edge) gives ``(None, 0)``.  ``fill`` is
-    the missing-neighbor value: DEM_HEIGHT_NONE for heights, 0 for
-    XTH-packed tiles (offset 0 decodes to missing, with no water bit).
+    are copied out of Arrow and decoded: duplicate-heavy ("land") tiles
+    cost one copy and one decode per position however many copies
+    arrived, and duplicate edge blocks resolve identically on both
+    sides of a tile boundary.  ``n_blocks`` counts every block row
+    received (input lineage); a group with none (strips sent past the
+    world edge) gives ``(None, 0)``.  ``fill`` is the missing-neighbor
+    value: DEM_HEIGHT_NONE for heights, 0 for XTH-packed tiles (offset
+    0 decodes to missing, with no water bit).
     """
-    parts = pa.table(parts)
-    part, bxs, bys, ids, ws, hs, fmts, data = (
+    part, bxs, bys, ids, ws, hs, fmts = (
         parts.column(c).to_pylist()
-        for c in ("part", "bx", "by", "image_id", "w", "h", "fmt", "data"))
+        for c in ("part", "bx", "by", "image_id", "w", "h", "fmt"))
+    data = parts.column("data")
     n_blocks = part.count("B")
     if n_blocks == 0:
         return None, 0
@@ -344,8 +337,9 @@ def compose_padded(
         w, h, bx, by = ws[i], hs[i], bxs[i], bys[i]
         dx, dy = _HALO_PARTS.get(part[i], (0, 0))
         region = padded[_place(dy, by, h, ts, k), _place(dx, bx, w, ts, k)]
-        cells = (codec.decode_block(fmts[i], data[i], w) if part[i] == "B"
-                 else np.frombuffer(data[i], dtype="<i2"))
+        payload = data[i].as_py()
+        cells = (codec.decode_block(fmts[i], payload, w) if part[i] == "B"
+                 else np.frombuffer(payload, dtype="<i2"))
         region[...] = cells.reshape(region.shape)
     return padded, n_blocks
 
@@ -693,14 +687,10 @@ def run_tile_shade(
         packed, n_blocks = compose_padded(parts, tile_size, 1, fill=0)
         if packed is None:
             return _SHADED_ARROW.empty_table()
-        packed_u = packed.view(np.uint16)
-        offs = (packed_u & 0x7FFF).astype(np.int32)
-        heights = np.where(
-            offs == 0, DEM_HEIGHT_NONE, offs + codec._XTH_MIN_HEIGHT
-        ).astype(np.int16)
+        heights, water = codec.decode_xth(packed, tile_size + 2)
         return render_tile(
             heights, tile_x, tile_y, tile_size, steps, registry, lvl,
-            water=(packed_u[1:-1, 1:-1] >> 15).astype(bool), n_blocks=n_blocks,
+            water=water[1:-1, 1:-1], n_blocks=n_blocks,
         )
 
     return reduce_tiles(

@@ -7,11 +7,11 @@ unifying per-tile water-body labels across tile boundaries.
 
 Each round joins the current labels onto the (symmetric) edge list,
 takes the min neighbor label per node, and ``localCheckpoint``s to cut
-lineage.  Convergence in O(diameter) rounds; on the label-propagation
-graphs we build (dense similarity clusters, tile adjacency) the
-diameter is small.  At cluster scale the labels table shuffles on node
-id each round — the edge list is persisted once so rounds only pay the
-join.
+lineage.  On the graphs we build (dense similarity clusters, tile
+adjacency) the diameter is small; a graph still changing after
+``STAR_AFTER`` rounds finishes by O(log n) alternating-star contraction.
+At cluster scale the labels table shuffles on node id each round — the
+edge list is persisted once so rounds only pay the join.
 """
 
 from __future__ import annotations
@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 #: rounds used by the most recent connected_components call (for tests
 #: and round-count telemetry)
 LAST_ROUNDS = 0
-#: round cap of every propagation or star loop
+#: round cap of the alternating-star loop
 MAX_ITERATIONS = 25
-#: label-propagation rounds ``"auto"`` runs before it contracts
+#: label-propagation rounds run before the graph contracts to star
 STAR_AFTER = 8
 
 
@@ -33,7 +33,6 @@ def connected_components(
     edges: DataFrame,
     node_col: str = "node",
     edge_cols: tuple[str, str] = ("a", "b"),
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Label every node with the min node id of its component.
 
@@ -41,25 +40,14 @@ def connected_components(
     ``edges``: columns ``edge_cols`` (undirected; both orientations are
     derived here).  Returns ``(node, label)``.
 
-    ``algorithm``:
-      - ``"auto"`` (default) — min-label propagation for up to
-        ``STAR_AFTER`` rounds (the common low-diameter case: duplicate
-        clusters, tile adjacency converge in a handful), then, if not
-        yet converged, contract nodes to their current labels and
-        finish with alternating-star — so a pathological high-diameter
-        graph costs O(STAR_AFTER + log n) rounds, never O(diameter).
-      - ``"label"`` — pure min-label propagation, O(diameter) rounds
-        (capped at ``MAX_ITERATIONS``).
-      - ``"star"`` — alternating large-star/small-star contraction
-        (Kiveris et al., "Connected Components in MapReduce and
-        Beyond"), O(log n) rounds; the scale path for chain- or
-        tree-shaped graphs whose diameter grows with n.
+    Min-label propagation runs for up to ``STAR_AFTER`` rounds (the
+    common low-diameter case: duplicate clusters, tile adjacency
+    converge in a handful); if not yet converged, nodes contract to
+    their current labels and alternating large-star/small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond")
+    finishes — so a pathological high-diameter graph costs
+    O(STAR_AFTER + log n) rounds, never O(diameter).
     """
-    if algorithm == "star":
-        return _cc_star(nodes, edges, node_col, edge_cols)
-    if algorithm not in ("label", "auto"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    label_cap = MAX_ITERATIONS if algorithm == "label" else STAR_AFTER
     global LAST_ROUNDS
     ea, eb = edge_cols
     # Narrow the loop's width by repartitioning the INPUTS once, not by
@@ -85,7 +73,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for it in range(label_cap):
+    for it in range(STAR_AFTER):
         LAST_ROUNDS = it + 1
         nbr_min = (
             sym.join(labels, sym.dst == labels.node)
@@ -108,10 +96,10 @@ def connected_components(
         if changed == 0:
             converged = True
             break
-    if converged or algorithm == "label":
+    if converged:
         sym.unpersist()
         return labels
-    # auto escape hatch: diameter exceeded STAR_AFTER rounds.  Contract
+    # escape hatch: diameter exceeded STAR_AFTER rounds.  Contract
     # every node to its current label (labels are node ids within the
     # same component, so component minima are preserved), finish the
     # contracted graph with O(log n)-round alternating-star, then map

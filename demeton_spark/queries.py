@@ -368,35 +368,69 @@ group by 1, 2
 """
 
 
-# --- J9: point-in-polygon clip (convex polygon via half-plane tests) ---------
+# --- J9: point-in-polygon clip (crossing-number test) ------------------------
 
 #: test polygon: a triangle over Europe (deterministic, off-grid vertices)
 _TRI = ((-10.5, 35.25), (30.25, 40.5), (5.5, 70.75))
 
 
-def _pip_triangle(lon, lat):
-    """Point-in-triangle via three edge cross-product sign tests (the
-    SQL-expressible convex case of geometry.points_in_polygon; the
-    general vectorized crossing-number kernel is the numpy path,
-    reference Geometry/Funcs.fs:9-33 orientation tests)."""
-    import operator
+def _pip_parity_col(lon, lat, verts):
+    """Crossing-number parity as ONE stateless Catalyst expression (the
+    same arithmetic as geometry.points_in_polygon, unrolled over the
+    polygon's literal vertices) — no join, no aggregation, so it runs
+    unchanged under Structured Streaming."""
+    total = F.lit(0)
+    j = len(verts) - 1
+    for i in range(len(verts)):
+        xi, yi = verts[i]
+        xj, yj = verts[j]
+        j = i
+        if yj == yi:
+            # horizontal edge: the straddle conjunct is identically
+            # false, and emitting the term would plant a literal
+            # divide-by-zero in the plan whose safety depended on
+            # And's evaluation order under ANSI mode — skip it at
+            # plan-build time instead (vertices are Python literals)
+            continue
+        crosses = ((F.lit(yi) > lat) != (F.lit(yj) > lat)) & (
+            lon
+            < (F.lit(xj) - F.lit(xi)) * (lat - F.lit(yi))
+            / (F.lit(yj) - F.lit(yi))
+            + F.lit(xi)
+        )
+        total = total + F.when(crosses, 1).otherwise(0)
+    return total % 2 == 1
 
-    sides = []
-    pts = list(_TRI)
-    for (x1, y1), (x2, y2) in zip(pts, pts[1:] + pts[:1]):
-        cross = (F.lit(x2) - F.lit(x1)) * (lat - F.lit(y1)) - (
-            F.lit(y2) - F.lit(y1)
-        ) * (lon - F.lit(x1))
-        sides.append(cross >= 0)
-    import functools
 
-    return functools.reduce(operator.and_, sides)
+def _sql_pip_expr(px: str, py: str, verts) -> str:
+    """Crossing-number point-in-polygon as SQL, term-for-term the same
+    arithmetic as geometry.points_in_polygon (identical IEEE doubles on
+    both engines; no horizontal edges in the contract polygon, so the
+    x_at division is always well-defined)."""
+    def d(v: float) -> str:
+        # bare decimal literals parse as DECIMAL in DuckDB; force the
+        # IEEE double the numpy kernel uses
+        return f"cast({v!r} as double)"
+
+    terms = []
+    n = len(verts)
+    j = n - 1
+    for i in range(n):
+        xi, yi = verts[i]
+        xj, yj = verts[j]
+        terms.append(
+            f"(case when (({d(yi)} > {py}) <> ({d(yj)} > {py})) and "
+            f"({px} < (({d(xj)} - {d(xi)}) * ({py} - {d(yi)}) / "
+            f"({d(yj)} - {d(yi)}) + {d(xi)})) then 1 else 0 end)"
+        )
+        j = i
+    return "((" + " + ".join(terms) + ") % 2 = 1)"
 
 
 def q_polygon_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip event points to a polygon, roll up per tile (J9 + J1)."""
     pts = _pts(spark, sf_dir)
-    inside = pts.where(_pip_triangle(F.col("lon"), F.col("lat")))
+    inside = pts.where(_pip_parity_col(F.col("lon"), F.col("lat"), _TRI))
     return (
         inside.select(
             F.floor(F.col("lon")).cast("int").alias("tile_x"),
@@ -407,23 +441,13 @@ def q_polygon_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_pip_triangle() -> str:
-    pts = list(_TRI)
-    terms = []
-    for (x1, y1), (x2, y2) in zip(pts, pts[1:] + pts[:1]):
-        terms.append(
-            f"(({x2} - {x1}) * (lat - {y1}) - ({y2} - {y1}) * (lon - {x1})) >= 0"
-        )
-    return " and ".join(terms)
-
-
 SQL_POLYGON_CLIP = f"""
 with pts as ({_PTS_SQL})
 select cast(floor(lon) as int) as tile_x,
        cast(floor(lat) as int) as tile_y,
        cast(count(*) as bigint) as n_inside
 from pts
-where {_sql_pip_triangle()}
+where {_sql_pip_expr("lon", "lat", _TRI)}
 group by 1, 2
 """
 
@@ -3195,31 +3219,6 @@ group by tx, ty
 """
 
 
-def _sql_pip_expr(px: str, py: str, verts) -> str:
-    """Crossing-number point-in-polygon as SQL, term-for-term the same
-    arithmetic as geometry.points_in_polygon (identical IEEE doubles on
-    both engines; no horizontal edges in the contract polygon, so the
-    x_at division is always well-defined)."""
-    def d(v: float) -> str:
-        # bare decimal literals parse as DECIMAL in DuckDB; force the
-        # IEEE double the numpy kernel uses
-        return f"cast({v!r} as double)"
-
-    terms = []
-    n = len(verts)
-    j = n - 1
-    for i in range(n):
-        xi, yi = verts[i]
-        xj, yj = verts[j]
-        terms.append(
-            f"(case when (({d(yi)} > {py}) <> ({d(yj)} > {py})) and "
-            f"({px} < (({d(xj)} - {d(xi)}) * ({py} - {d(yi)}) / "
-            f"({d(yj)} - {d(yi)}) + {d(xi)})) then 1 else 0 end)"
-        )
-        j = i
-    return "((" + " + ".join(terms) + ") % 2 = 1)"
-
-
 _CLIP_POLY = [(13.1, 45.1), (13.95, 45.5), (13.4, 45.95)]
 
 # Clipped flagship: tiles prune to the polygon's floor/ceil−1 bbox
@@ -3272,6 +3271,8 @@ cross join (select unnest(generate_series({_CQ.lat0},
 # heights via three self-joins, case index = the same 4-bit corner code
 # the segment extractor uses (any missing corner → 0; uniform 0/15
 # excluded), counted per (tile, level).
+_ISO_LEVELS = [550.0, 650.0]
+
 SQL_TILE_ISOLINE_CASES = f"""
 with {_sql_synth_world()},
 corners as (
@@ -3295,7 +3296,7 @@ cases as (
             + (case when tr_ >= lvl then 4 else 0 end)
             + (case when tl >= lvl then 8 else 0 end) end as case_id
   from corners
-  cross join (select unnest([550.0, 650.0]) as lvl) L
+  cross join (select unnest({_ISO_LEVELS!r}) as lvl) L
 )
 select cast(tx as int) as tile_x, cast(ty as int) as tile_y, level,
        cast(case_id as int) as case_id,
@@ -3615,7 +3616,6 @@ from rects r left join shaded s on r.xi = s.xi and r.yi = s.yi
 # endpoint has degree ≤ 2 here, which makes greedy chaining equal to
 # connected components; chain GEOMETRY stays pinned in
 # tests/test_isolines.py).
-_ISO_LEVELS = [550.0, 650.0]
 
 SQL_TILE_ISOLINES = f"""
 with recursive {_sql_synth_world()},

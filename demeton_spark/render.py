@@ -40,7 +40,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import codec, kernels, pipeline
-from .engine import _schema, reduce_tiles, render_setup, tile_heights
+from .engine import (
+    SHADE_BAND_ROWS, _schema, reduce_tiles, render_setup, tile_heights,
+)
 from .geometry import MapScale, Mercator
 from .tiles import DEM_HEIGHT_NONE, bounds_to_tiles, cells_per_degree
 
@@ -49,8 +51,6 @@ RENDERED_SCHEMA = _schema(
     "png binary, shaded_px long, total_px long, n_dem_tiles int"
 )
 _RENDERED_ARROW = to_arrow_schema(RENDERED_SCHEMA)
-
-RENDER_BAND_ROWS = 128
 
 
 def raster_mbr(proj, coverage_points_deg) -> tuple[int, int, int, int]:
@@ -181,8 +181,8 @@ def render_shaded_raster(
         scan, out = codec.rgba_scanlines(h, w)
         shaded = 0
         xs = np.arange(min_x, min_x + w, dtype=np.float64)
-        for r0 in range(0, h, RENDER_BAND_ROWS):
-            r1 = min(r0 + RENDER_BAND_ROWS, h)
+        for r0 in range(0, h, SHADE_BAND_ROWS):
+            r1 = min(r0 + SHADE_BAND_ROWS, h)
             ys = np.arange(min_y + r0, min_y + r1, dtype=np.float64)
             gx, gy = np.meshgrid(xs, ys)
             # 3×3 neighborhood: inverse-project, bilinear heights

@@ -89,34 +89,6 @@ def geocell_event_counts(events: DataFrame) -> DataFrame:
     return _window_counts(cells, "cell_id", F.round(F.sum("value"), 6))
 
 
-def _pip_parity_col(lon, lat, verts):
-    """Crossing-number parity as ONE stateless Catalyst expression (the
-    same arithmetic as geometry.points_in_polygon, unrolled over the
-    polygon's literal vertices) — no join, no aggregation, so it runs
-    unchanged under Structured Streaming."""
-    total = F.lit(0)
-    j = len(verts) - 1
-    for i in range(len(verts)):
-        xi, yi = verts[i]
-        xj, yj = verts[j]
-        j = i
-        if yj == yi:
-            # horizontal edge: the straddle conjunct is identically
-            # false, and emitting the term would plant a literal
-            # divide-by-zero in the plan whose safety depended on
-            # And's evaluation order under ANSI mode — skip it at
-            # plan-build time instead (vertices are Python literals)
-            continue
-        crosses = ((F.lit(yi) > lat) != (F.lit(yj) > lat)) & (
-            lon
-            < (F.lit(xj) - F.lit(xi)) * (lat - F.lit(yi))
-            / (F.lit(yj) - F.lit(yi))
-            + F.lit(xi)
-        )
-        total = total + F.when(crosses, 1).otherwise(0)
-    return total % 2 == 1
-
-
 def polygon_event_counts(events: DataFrame, polys: list | None = None) -> DataFrame:
     """Windowed per-polygon event counts: streaming points-in-polygons.
 
@@ -133,7 +105,7 @@ def polygon_event_counts(events: DataFrame, polys: list | None = None) -> DataFr
         from .zonal import zonal_demo_polygons
 
         polys = zonal_demo_polygons()
-    from .queries import pelev_lonlat_cols
+    from .queries import _pip_parity_col, pelev_lonlat_cols
 
     ts = F.col("ts").cast("timestamp")
     lon, lat = pelev_lonlat_cols()

@@ -9,9 +9,11 @@ single merged array (the reference's merged-HeightsArray path,
 import re
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from demeton_spark import codec, engine, pyramid, render, synth
 from demeton_spark.geometry import MapScale
@@ -80,9 +82,10 @@ def test_contract_tiles_match_numpy_oracle(spark):
         assert heights == expected.astype("<i2").tobytes(), (tx, ty)
 
 
-def _world_parts(spec: WorldSpec, k: int) -> pd.DataFrame:
-    """Every block of ``spec``'s world as a raw int16 "B" part plus the
-    k-px strips the engine's strip cutter emits from them."""
+def _world_blocks_batch(spec: WorldSpec, large: bool = False):
+    """Every block of ``spec``'s world as a raw int16 "B" part, in one
+    Arrow batch of the PART_SCHEMA columns (large string/binary types
+    when ``large``)."""
     world = synth.expected_world_heights(spec)
     ts, bs = spec.tile_size, spec.block_size
     rows = []
@@ -93,16 +96,25 @@ def _world_parts(spec: WorldSpec, k: int) -> pd.DataFrame:
                     y0, x0 = ty * ts + by * bs, tx * ts + bx * bs
                     rows.append({
                         "tile_x": spec.lon0 + tx, "tile_y": spec.lat0 + ty,
-                        "bx": bx, "by": by, "image_id": f"img{len(rows):04d}",
+                        "part": "B", "bx": bx, "by": by,
+                        "image_id": f"img{len(rows):04d}",
                         "w": bs, "h": bs, "fmt": "raw",
-                        "bytes": world[y0 : y0 + bs, x0 : x0 + bs].tobytes(),
+                        "data": world[y0 : y0 + bs, x0 : x0 + bs].tobytes(),
                     })
-    blocks = pd.DataFrame(rows)
-    return pd.concat(
-        [blocks.rename(columns={"bytes": "data"}).assign(part="B"),
-         engine.block_strips(blocks, ts, k)],
-        ignore_index=True,
-    )
+    schema = pa.schema([
+        (f.name, {pa.string(): pa.large_string(),
+                  pa.binary(): pa.large_binary()}.get(f.type, f.type)
+         if large else f.type)
+        for f in to_arrow_schema(engine.PART_SCHEMA)
+    ])
+    return pa.RecordBatch.from_pylist(rows, schema=schema)
+
+
+def _world_parts(spec: WorldSpec, k: int) -> pa.Table:
+    """The world's "B" parts plus the k-px strips the engine's map-side
+    emitter cuts from them, as one Arrow table."""
+    return pa.Table.from_batches(
+        engine.emit_parts(_world_blocks_batch(spec), spec.tile_size, k))
 
 
 @pytest.mark.parametrize(
@@ -112,13 +124,13 @@ def _world_parts(spec: WorldSpec, k: int) -> pd.DataFrame:
 def test_compose_padded_pads_with_neighbors(k, fill):
     """Blocks + neighbor strips compose into the (ts+2k)² padded tile:
     halo from the neighbors where they exist, ``fill`` past the world
-    edge.  Spark-free: the strips come from the engine's own cutter."""
+    edge.  Spark-free: the strips come from the engine's own emitter."""
     parts = _world_parts(SPEC, k)
     ts = SPEC.tile_size
     world = synth.expected_world_heights(SPEC)
     # tile (13,45) is the SW tile: its north pad rows must equal the
     # south edge rows of tile (13,46); its west pad must be fill.
-    sw = parts[(parts["tile_x"] == 13) & (parts["tile_y"] == 45)]
+    sw = parts.filter((pc.field("tile_x") == 13) & (pc.field("tile_y") == 45))
     p, n_blocks = engine.compose_padded(sw, ts, k, fill)
     assert p.shape == (ts + 2 * k, ts + 2 * k)
     assert n_blocks == SPEC.blocks_per_tile
@@ -129,16 +141,20 @@ def test_compose_padded_pads_with_neighbors(k, fill):
     assert np.all(p[:, :k] == fill)  # world edge: west
     # NE corner from the diagonal neighbor
     assert np.array_equal(p[-k:, -k:], world[ts : ts + k, ts : ts + k])
-    # a losing duplicate (earlier image_id) is never visible
-    loser = sw[sw["part"] == "B"].iloc[[0]].assign(
-        image_id="img",
-        data=np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes(),
-    )
-    p2, n2 = engine.compose_padded(pd.concat([sw, loser]), ts, k, fill)
-    assert np.array_equal(p2, p) and n2 == n_blocks + 1
+    # a losing duplicate (earlier image_id) is never visible, whether it
+    # arrives before or after the winner
+    loser = sw.filter(pc.field("part") == "B").slice(0, 1)
+    sevens = np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes()
+    for col, v in (("image_id", "img"), ("data", sevens)):
+        i = loser.schema.get_field_index(col)
+        loser = loser.set_column(
+            i, col, pa.array([v], loser.schema.field(i).type))
+    for both in ([sw, loser], [loser, sw]):
+        p2, n2 = engine.compose_padded(pa.concat_tables(both), ts, k, fill)
+        assert np.array_equal(p2, p) and n2 == n_blocks + 1
     # strips sent past the world edge compose to nothing
-    west = parts[parts["tile_x"] == 12]
-    assert len(west) > 0
+    west = parts.filter(pc.field("tile_x") == 12)
+    assert west.num_rows > 0
     assert engine.compose_padded(west, ts, k, fill) == (None, 0)
 
 
@@ -684,68 +700,23 @@ def test_empty_input_produces_no_tiles(spark):
     assert engine.run_hillshade(spark, empty, 30).count() == 0
 
 
-def _world_blocks_batch(spec: WorldSpec, large: bool = False):
-    """The "B" parts of ``_world_parts`` as one Arrow batch of the
-    PART_SCHEMA columns (large string/binary types when ``large``)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    parts = _world_parts(spec, 1)
-    blocks = parts[parts["part"] == "B"][list(engine.PART_SCHEMA.fieldNames())]
-    schema = pa.schema([
-        (f.name, {pa.string(): pa.large_string(),
-                  pa.binary(): pa.large_binary()}.get(f.type, f.type)
-         if large else f.type)
-        for f in to_arrow_schema(engine.PART_SCHEMA)
-    ])
-    return pa.RecordBatch.from_pandas(blocks, schema=schema,
-                                      preserve_index=False)
-
-
 @pytest.mark.parametrize("large", [False, True], ids=["string", "large"])
 @pytest.mark.parametrize("k", [1, 2])
 def test_emit_parts_passes_blocks_through_and_cuts_strips(k, large):
     """Spark-free: the map-side emitter returns its input batch as the
-    "B" parts, byte for byte, then the strips ``block_strips`` cuts from
-    the same rows, in a batch of the input's own Arrow schema."""
+    "B" parts, byte for byte, then the strips its border blocks donate,
+    in a batch of the input's own Arrow schema."""
     spec = WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=1,
                      tile_size=30, block_size=10)
     batch = _world_blocks_batch(spec, large)
     out = list(engine.emit_parts(batch, spec.tile_size, k))
     assert len(out) == 2 and out[0].equals(batch)
-    assert out[1].schema == batch.schema
-    blocks = batch.to_pandas().rename(columns={"data": "bytes"})
-    expected = engine.block_strips(blocks, spec.tile_size, k)
-    pd.testing.assert_frame_equal(
-        out[1].to_pandas(), expected[list(engine.PART_SCHEMA.fieldNames())],
-        check_dtype=False,
-    )
+    strips = out[1]
+    assert strips.schema == batch.schema
     # each tile's interior block (1, 1) donates nothing
-    assert len(expected) and not (
-        (expected["bx"] == 1) & (expected["by"] == 1)).any()
-
-
-@pytest.mark.parametrize("k", [1, 2])
-def test_compose_padded_arrow_equals_pandas(k):
-    """Spark-free: ``compose_padded`` on the parts as an Arrow table
-    (what the reduce UDF receives) equals the pandas result, including
-    a losing duplicate that arrives last."""
-    import pyarrow as pa
-
-    parts = _world_parts(SPEC, k)
-    sw = parts[(parts["tile_x"] == 13) & (parts["tile_y"] == 45)]
-    loser = sw[sw["part"] == "B"].iloc[[0]].assign(
-        image_id="img",
-        data=np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes(),
-    )
-    for frame in (sw, pd.concat([sw, loser]), pd.concat([loser, sw])):
-        want, n_want = engine.compose_padded(frame, SPEC.tile_size, k)
-        got, n_got = engine.compose_padded(
-            pa.Table.from_pandas(frame, preserve_index=False),
-            SPEC.tile_size, k,
-        )
-        assert np.array_equal(got, want) and n_got == n_want
-    assert n_got == SPEC.blocks_per_tile + 1
+    assert strips.num_rows and not any(
+        (bx, by) == (1, 1) for bx, by in zip(
+            strips.column("bx").to_pylist(), strips.column("by").to_pylist()))
 
 
 def _file_scans(df) -> int:

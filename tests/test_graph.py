@@ -1,17 +1,20 @@
-"""Connected components: min-label propagation vs large-star/small-star
-contraction — identical labels, logarithmic rounds on chains."""
+"""Connected components: min-label propagation that contracts to
+large-star/small-star — union-find labels, logarithmic rounds on
+chains."""
 
 import random
 
 from demeton_spark import graph
 
 
-def _cc(spark, nodes, edges, algorithm):
+def _cc(spark, nodes, edges, cc=graph.connected_components):
+    """``cc`` (the public entry, or ``graph._cc_star`` on its own) over
+    the given graph → ``({node: label}, rounds)``."""
     ndf = spark.createDataFrame([(n,) for n in nodes], "node long")
     edf = spark.createDataFrame(edges or [(0, 0)], "a long, b long")
     if not edges:
         edf = edf.where("a != a")  # empty edge frame with the schema
-    out = graph.connected_components(ndf, edf, algorithm=algorithm)
+    out = cc(ndf, edf, "node", ("a", "b"))
     return {r["node"]: r["label"] for r in out.collect()}, graph.LAST_ROUNDS
 
 
@@ -43,32 +46,23 @@ def test_star_matches_label_on_random_graphs(spark):
             (rng.randrange(40), rng.randrange(40)) for _ in range(25 + trial * 10)
         ]
         want = _expected(nodes, edges)
-        got_label, _ = _cc(spark, nodes, edges, "label")
-        got_star, _ = _cc(spark, nodes, edges, "star")
-        assert got_label == want
+        got_star, _ = _cc(spark, nodes, edges, graph._cc_star)
         assert got_star == want
 
 
 def test_star_beats_label_on_chain(spark):
-    """A 1000-node chain has diameter 999: min-label needs O(diameter)
-    rounds (capped), large-star/small-star converges in O(log n)."""
+    """A 1000-node chain has diameter 999: min-label would need
+    O(diameter) rounds, large-star/small-star converges in O(log n)."""
     n = 1000
     nodes = list(range(n))
     edges = [(i, i + 1) for i in range(n - 1)]
-    got_star, star_rounds = _cc(spark, nodes, edges, "star")
+    got_star, star_rounds = _cc(spark, nodes, edges, graph._cc_star)
     assert got_star == {i: 0 for i in range(n)}
     assert star_rounds <= 12  # ~log2(1000) + fixpoint confirmation
-    # label propagation on a short chain segment takes ~diameter rounds
-    m = 40
-    _, label_rounds = _cc(
-        spark, list(range(m)), [(i, i + 1) for i in range(m - 1)], "label"
-    )
-    assert label_rounds >= m // 2  # doubles per round at best? no: +1/round
-    assert star_rounds < label_rounds
 
 
 def test_star_isolated_nodes_self_label(spark):
-    got, _ = _cc(spark, [5, 9, 11], [(9, 11)], "star")
+    got, _ = _cc(spark, [5, 9, 11], [(9, 11)], graph._cc_star)
     assert got == {5: 5, 9: 9, 11: 11} | {11: 9}
 
 
@@ -80,7 +74,7 @@ def test_auto_bounded_rounds_on_chain(spark):
     n = 1000
     nodes = list(range(n))
     edges = [(i, i + 1) for i in range(n - 1)]
-    got, rounds = _cc(spark, nodes, edges, "auto")
+    got, rounds = _cc(spark, nodes, edges)
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 8 + 12  # STAR_AFTER + ~log2 rounds + confirmation
 
@@ -90,5 +84,5 @@ def test_auto_matches_label_on_random_graphs(spark):
     nodes = list(range(40))
     edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
     want = _expected(nodes, edges)
-    got, _ = _cc(spark, nodes, edges, "auto")
+    got, _ = _cc(spark, nodes, edges)
     assert got == want

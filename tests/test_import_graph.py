@@ -46,3 +46,30 @@ def test_walker_sees_imports_inside_functions():
         "    from demeton_spark.gif import decode\n"
     )
     assert _package_imports(source) == [(2, "jpeg"), (3, "vp8l"), (4, "gif")]
+
+
+def _codec_private_reads(source: str) -> list[tuple[int, str]]:
+    """``(line, name)`` for each ``codec._X`` attribute read and each
+    ``from .codec import _X`` in ``source``."""
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if (isinstance(node, ast.Attribute) and node.attr.startswith("_")
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "codec"):
+            found.append((node.lineno, node.attr))
+        elif (isinstance(node, ast.ImportFrom)
+              and (node.module or "").split(".")[-1] == "codec"):
+            found.extend((node.lineno, a.name) for a in node.names
+                         if a.name.startswith("_"))
+    return found
+
+
+def test_formats_stay_in_codec():
+    """Bit layouts and format constants are ``codec``'s own: no other
+    package module reads a ``codec._…`` name."""
+    reads = [
+        f"{path.name}:{line}: codec.{name}"
+        for path in sorted(PACKAGE.glob("*.py")) if path.name != "codec.py"
+        for line, name in _codec_private_reads(path.read_text())
+    ]
+    assert not reads, reads

@@ -24,7 +24,7 @@ def _defaulted_params(source: str) -> int:
 def test_public_option_count_is_pinned():
     assert sum(
         _defaulted_params(path.read_text()) for path in PACKAGE.glob("*.py")
-    ) == 93
+    ) == 92
 
 
 def test_counter_reads_defaults_of_public_functions_only():

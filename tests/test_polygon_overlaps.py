@@ -92,7 +92,7 @@ def test_catalyst_pip_parity_matches_numpy_on_random_polygons(spark):
     job evaluates every (point, polygon) cell."""
     import pyspark.sql.functions as F
 
-    from demeton_spark.streaming import _pip_parity_col
+    from demeton_spark.queries import _pip_parity_col
 
     rng = np.random.default_rng(7)
     polys = []
