@@ -143,12 +143,11 @@ def test_compose_padded_pads_with_neighbors(k, fill):
     assert np.array_equal(p[-k:, -k:], world[ts : ts + k, ts : ts + k])
     # a losing duplicate (earlier image_id) is never visible, whether it
     # arrives before or after the winner
-    loser = sw.filter(pc.field("part") == "B").slice(0, 1)
-    sevens = np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes()
-    for col, v in (("image_id", "img"), ("data", sevens)):
-        i = loser.schema.get_field_index(col)
-        loser = loser.set_column(
-            i, col, pa.array([v], loser.schema.field(i).type))
+    block = sw.filter(pc.field("part") == "B").slice(0, 1).to_pylist()[0]
+    loser = pa.Table.from_pylist([block | {
+        "image_id": "img",
+        "data": np.full((SPEC.block_size,) * 2, 7, "<i2").tobytes(),
+    }], schema=sw.schema)
     for both in ([sw, loser], [loser, sw]):
         p2, n2 = engine.compose_padded(pa.concat_tables(both), ts, k, fill)
         assert np.array_equal(p2, p) and n2 == n_blocks + 1
